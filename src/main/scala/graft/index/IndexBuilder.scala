@@ -232,8 +232,7 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
     // keep Spark's spill-capable default.
     val aggFallbackKey = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
     val aggFallbackPrev = spark.conf.getOption(aggFallbackKey)
-    spark.conf.set(aggFallbackKey,
-      sys.env.getOrElse("SPARK_GRAFT_AGG_FALLBACK", (4 << 20).toString))
+    spark.conf.set(aggFallbackKey, (4 << 20).toString)
     // let AQE coalesce the partitions of CACHED plans too (the build's
     // partial→range-shuffle→persist pattern everywhere): without this,
     // every persisted exchange keeps the full spark.sql.shuffle.partitions
@@ -959,6 +958,12 @@ object IndexBuilder extends Serializable {
     * (older builds capped at prox ≤ 4 and must use the fallback paths). */
   val PrefixPairsProx7Marker = "_graft_prefix_pairs_prox7"
 
+  /** Distinct-key cap at which [[pairProximityPartials]] and
+    * [[wordPositionPartials]] flush their per-partition map: 4M packed-long
+    * keys stay within a task's executor memory share while keeping the
+    * flushed partial runs few. */
+  val PartialFlushKeys: Int = 4 << 20
+
   /** Group doc-contiguous DwpRow iterators by docid without shuffling. */
   def groupConsecutive(it: Iterator[DwpRow]): Iterator[(Int, Seq[DwpRow])] =
     new Iterator[(Int, Seq[DwpRow])] {
@@ -1181,8 +1186,7 @@ object IndexBuilder extends Serializable {
     */
   def pairProximityPartials(
       it: Iterator[DwpRow],
-      flushKeys: Int = sys.env.getOrElse("SPARK_GRAFT_PAIR_FLUSH_KEYS",
-        (4 << 20).toString).toInt): Iterator[(String, String, Int, Array[Byte])] = {
+      flushKeys: Int = PartialFlushKeys): Iterator[(String, String, Int, Array[Byte])] = {
     val intern = new mutable.AnyRefMap[String, Int]()
     val internWords = new mutable.ArrayBuffer[String]()
     // per-key docid buffer: docids arrive strictly ascending (doc-contiguous
@@ -1250,8 +1254,7 @@ object IndexBuilder extends Serializable {
     * shuffle of pre-merged partials. */
   def wordPositionPartials(
       it: Iterator[DwpRow],
-      flushKeys: Int = sys.env.getOrElse("SPARK_GRAFT_PAIR_FLUSH_KEYS",
-        (4 << 20).toString).toInt): Iterator[(String, Int, Array[Byte])] = {
+      flushKeys: Int = PartialFlushKeys): Iterator[(String, Int, Array[Byte])] = {
     val intern = new mutable.AnyRefMap[String, Int]()
     val internWords = new mutable.ArrayBuffer[String]()
     val agg = new mutable.LongMap[IntBuf]()

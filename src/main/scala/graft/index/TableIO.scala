@@ -19,8 +19,7 @@ object TableIO {
     * every row. 4 MB groups keep each footer interval tight on the tables'
     * (key, docid) sort order — serving point reads and the cells' pair
     * bitmap fetches decode only the groups whose interval matches. */
-  val RowGroupBytes: Int =
-    sys.env.get("SPARK_GRAFT_ROW_GROUP_BYTES").map(_.toInt).getOrElse(4 << 20)
+  val RowGroupBytes: Int = 4 << 20
 
   /** Page-row cap for the forward index (doc_word_positions). The word
     * column is sorted + RLE'd so tiny that at the default page sizing one
@@ -30,8 +29,7 @@ object TableIO {
     * per-page word [min,max] the effective pruning unit: a word band
     * decodes ~1–2 pages (~1–2k rows) instead of ~400k. Costs ~0.4% file
     * size in page headers; full-scan throughput unchanged (measured). */
-  val DwpPageRows: Int =
-    sys.env.get("SPARK_GRAFT_DWP_PAGE_ROWS").map(_.toInt).getOrElse(1024)
+  val DwpPageRows: Int = 1024
 
   /** Marker file: present in a doc_word_positions dir whose files were
     * written under [[DwpPageRows]] — the serving direct point reader keys

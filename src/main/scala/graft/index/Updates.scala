@@ -140,7 +140,7 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
     * auto-`rewrite_data_files` role) so `inc-` appends and touched-file
     * merge fragments can't grow file counts without bound across many
     * small batches. 0 disables (explicit `compact` / CLI only); the
-    * default follows SPARK_GRAFT_AUTO_COMPACT (64 files). Amortized: a
+    * default is [[Updates.DefaultAutoCompactFiles]] (64 files). Amortized: a
     * batch only pays for tables it itself fragmented past the threshold,
     * and a compacted table restarts the count near 1. */
   def addDocuments(dir: String, newDocs: DataFrame, replace: Boolean = true,
@@ -369,8 +369,8 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
 
 object Updates {
   /** File-count threshold above which [[Updates.addDocuments]] compacts a
-    * table in the same batch; SPARK_GRAFT_AUTO_COMPACT overrides, 0 turns
-    * the automatic pass off. */
-  val DefaultAutoCompactFiles: Int =
-    sys.env.get("SPARK_GRAFT_AUTO_COMPACT").map(_.toInt).getOrElse(64)
+    * table in the same batch. 64 files: an open reads one footer per file,
+    * so this bounds that cost while a compaction stays rare across small
+    * batches. Callers pass `autoCompactFiles = 0` to turn the pass off. */
+  val DefaultAutoCompactFiles: Int = 64
 }

@@ -37,11 +37,6 @@ import org.apache.parquet.io.api.Binary
   */
 object DirectParquet {
 
-  /** Kill switch: SPARK_GRAFT_DIRECT_READS=0 routes every point read back
-    * through the Spark scan path. */
-  val enabled: Boolean =
-    !sys.env.get("SPARK_GRAFT_DIRECT_READS").contains("0")
-
   /** Observability: completed direct reads / failed-and-fell-back reads
     * (specs pin that point reads actually run direct, not silently on the
     * Spark fallback). */
@@ -52,6 +47,18 @@ object DirectParquet {
     * docid-restricted point read of a fat word run decodes its wanted
     * PAGES, not the run. */
   val rowsDecoded = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Fault seam: when set, the next [[scanBands]] throws inside its guard
+    * (and clears the flag), so specs can drive the Spark-scan fallback on
+    * a live handle. Set only through [[withFailingRead]]. */
+  private val failNextRead = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  /** Test hook: run `f` with the next direct read forced to fail; the
+    * flag is cleared in `finally` even when no read consumed it. */
+  private[search] def withFailingRead[A](f: => A): A = {
+    failNextRead.set(true)
+    try f finally failNextRead.set(false)
+  }
 
   private val conf = new Configuration(false) // local FS only — no cluster conf
 
@@ -140,34 +147,33 @@ object DirectParquet {
       bands: Seq[(Array[Byte], Array[Byte])]): Int =
     footers.overlapping(bands).length
 
-  /** Read every row of the row groups overlapping `bands`, handing each
-    * decoded Group to `each`. Returns false when the direct read could not
-    * run (caller falls back to the Spark scan). Exceptions propagate as
-    * false too — the Spark path is the source of truth. */
   /** Decode pool: row-group decode is CPU-bound (snappy + Group assembly),
     * so multi-file reads fan out here instead of running single-threaded.
-    * Sized cores/2 (min 4, max 16): MtColdProfile at 300k docs / 8 cold
-    * clients (disjoint-range baseline, honest sampling) measured 8-client
-    * p50 243 / 173 / 150 ms at 8 / 12 / 16 threads (queueing ×2.28 /
-    * ×1.82 / ×1.57 over the single-client floor) with single-client
-    * latency flat, and no further gain at 32 — the pool, not IO, was
-    * queueing one client's read behind another's (background fills are
-    * already routed OFF this pool — NOTES_ROUND5 #13b, #43). */
+    * Sized cores/2, at least 4 and at most 16 threads: at 300k docs with
+    * 8 concurrent cold clients the 8-client p50 fell 243 / 173 / 150 ms at
+    * 8 / 12 / 16 threads with single-client latency flat, and 32 threads
+    * gained nothing more — the pool, not IO, was queueing one client's
+    * read behind another's (background fills run OFF this pool —
+    * NOTES_ROUND5 #13b, #43). */
   private val decodeEc: scala.concurrent.ExecutionContext =
     scala.concurrent.ExecutionContext.fromExecutorService(
       java.util.concurrent.Executors.newFixedThreadPool(
-        sys.env.get("SPARK_GRAFT_DECODE_THREADS").map(_.toInt).getOrElse(
-          math.min(16, math.max(4, Runtime.getRuntime.availableProcessors() / 2))),
+        math.min(16, math.max(4, Runtime.getRuntime.availableProcessors() / 2)),
         (r: Runnable) => {
           val t = new Thread(r, "graft-direct-decode"); t.setDaemon(true); t
         }))
 
+  /** Read every row of the row groups overlapping `bands`, handing each
+    * decoded Group to `each`. Returns false when the direct read could not
+    * run (caller falls back to the Spark scan). Exceptions propagate as
+    * false too — the Spark path is the source of truth. */
   def scanBands(footers: TableFooters, bands: Seq[(Array[Byte], Array[Byte])],
       secondBand: Option[(String, Array[Byte], Array[Byte])] = None,
       intPoints: Option[(String, Array[Int])] = None)
       (each: Group => Unit): Boolean = {
-    if (!enabled) return false
     try {
+      if (failNextRead.compareAndSet(true, false))
+        throw new java.io.IOException("injected direct-read fault")
       val byFile = footers.overlapping(bands).groupBy(_.file).toSeq.sortBy(_._1)
       // band predicate pushed into parquet-mr's filtered reads: column
       // indexes prune PAGES inside a row group and the record reader skips
@@ -207,10 +213,11 @@ object DirectParquet {
       // the read to a Spark fallback; treat it as "no restriction" instead —
       // callers re-check docids at assembly, so this is prune-only anyway.
       // The OR tree must be BALANCED (depth log n): parquet-mr evaluates
-      // predicates recursively, and a left-deep fold over a large
-      // env-raised point set (SPARK_GRAFT_DWP_DOC_POINTS_MAX) would throw
-      // StackOverflowError — which NonFatal does NOT catch, killing the
-      // decode-pool thread under an Await with no timeout.
+      // predicates recursively, and a left-deep fold over a large point
+      // set (callers cap it at GraftIndex.DwpDocPointsMax = 256, but the
+      // reader takes any size) would throw StackOverflowError — which
+      // NonFatal does NOT catch, killing the decode-pool thread under an
+      // Await with no timeout.
       def balancedOr(ps: IndexedSeq[FilterPredicate], lo: Int, hi: Int): FilterPredicate =
         if (hi - lo == 1) ps(lo)
         else { val mid = (lo + hi) >>> 1
@@ -234,7 +241,6 @@ object DirectParquet {
       // later groups out from under the read (the old per-index addressing
       // silently dropped them — see DirectReadSpec "pruned leading").
       def readGroups(file: String, blocks: Seq[BlockMetaData]): Unit = {
-        val t0 = System.nanoTime()
         val in = HadoopInputFile.fromPath(new Path(file), conf)
         import scala.jdk.CollectionConverters._
         val restricted = new ParquetMetadata(footers.fileMeta(file), blocks.asJava)
@@ -251,21 +257,11 @@ object DirectParquet {
             .useStatsFilter(false).useDictionaryFilter(false)
             .useBloomFilter(false).build(),
           in.newStream())
-        val tOpen = System.nanoTime()
         try {
           val schema = restricted.getFileMetaData.getSchema
           val colIO = new ColumnIOFactory().getColumnIO(schema)
-          if (graft.search.Search.trace) // once per chunk, not per group
-            System.err.println(
-              f"[graft-trace] direct-read open=${(tOpen - t0) / 1e6}%.1f ms groups=${blocks.length}")
-          var gi = 0
           var pages = r.readNextFilteredRowGroup()
           while (pages != null) {
-            if (graft.search.Search.trace) {
-              System.err.println(f"[graft-trace] direct-read " +
-                f"group($gi)=${(System.nanoTime() - tOpen) / 1e6}%.1f ms rows=${pages.getRowCount}")
-              gi += 1
-            }
             // page pruning only: the band predicate computed the row
             // ranges above (column index), but it is NOT re-evaluated
             // per record — an OR of hundreds of point bands costs

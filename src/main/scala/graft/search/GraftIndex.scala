@@ -118,24 +118,22 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     // prime the direct point readers' footer indexes (one-time ~100–300 ms
     // of footer reads per table on first touch otherwise — the measured
     // first-cold-query tax) — overlapped on the fetch pool
-    Search.traced("prewarm-footers") {
-      import scala.concurrent.Future
-      implicit val ec: scala.concurrent.ExecutionContext = GraftIndex.fetchEc
-      val tables = Seq(
-        T.WordDocids -> "word", T.ExactWordDocids -> "word",
-        T.WordPrefixDocids -> "prefix", T.ExactWordPrefixDocids -> "prefix",
-        T.DocWordPositions -> "word", T.WordPairProximityDocids -> "w1",
-        T.WordPrefixPairProximityDocids -> "prefix",
-        T.PrefixWordPairProximityDocids -> "prefix",
-        T.WordPositionDocids -> "word", T.WordPrefixPositionDocids -> "prefix")
-      val fs = tables.filter(t => new java.io.File(s"$dir/${t._1}").exists())
-        .map { case (t, k) => Future(footersFor(t, k)) }
-      fs.foreach(f =>
-        scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
-    }
+    import scala.concurrent.Future
+    implicit val ec: scala.concurrent.ExecutionContext = GraftIndex.fetchEc
+    val tables = Seq(
+      T.WordDocids -> "word", T.ExactWordDocids -> "word",
+      T.WordPrefixDocids -> "prefix", T.ExactWordPrefixDocids -> "prefix",
+      T.DocWordPositions -> "word", T.WordPairProximityDocids -> "w1",
+      T.WordPrefixPairProximityDocids -> "prefix",
+      T.PrefixWordPairProximityDocids -> "prefix",
+      T.WordPositionDocids -> "word", T.WordPrefixPositionDocids -> "prefix")
+    val fs = tables.filter(t => new java.io.File(s"$dir/${t._1}").exists())
+      .map { case (t, k) => Future(footersFor(t, k)) }
+    fs.foreach(f =>
+      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
     // (searchable fid, word count) bitmaps — the exactness strata's rank-0
     // reads; the whole serving key space in one pruned scan
-    Search.traced("prewarm-fwc")(prewarmFidWordCounts())
+    prewarmFidWordCounts()
     def takeWithin(perEntry: Long, budget: Long): Seq[String] = {
       var used = 0L
       byDf.takeWhile { case (_, df) =>
@@ -150,26 +148,18 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     // cold fetch + async back-fill now serve in ~100 ms on first touch.
     // The Zipf head (which the drain hits constantly) still prewarms.
     val dHead = takeWithin(40L, dwpCache.budgetBytes / 2).take(256)
-    Search.traced(s"prewarm-postings(${pHead.length})") {
-      pHead.grouped(512).foreach(postingCache.get)
-    }
-    Search.traced(s"prewarm-dwp(${dHead.length})") {
-      // the fill cost is driver-side collect DESERIALIZATION (positions
-      // arrays), which is single-threaded per job — overlap several
-      // smaller fills on the fetch pool instead of one giant collect
-      import scala.concurrent.Future
-      implicit val ec: scala.concurrent.ExecutionContext = GraftIndex.fetchEc
-      val fills = dHead.grouped(math.max(32, dHead.length / 8 + 1)).toSeq
-        .map(b => Future(dwpCache.get(b, Nil)))
-      fills.foreach(f =>
-        scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
-    }
-    Search.traced(s"prewarm-bitmaps(${byDf.length})") {
-      byDf.map(_._1).grouped(1024).foreach { b =>
-        bitmapCache.get("w", b)(ks => bitmapRowsT(T.WordDocids, wordDocids, ks))
-        bitmapCache.get("e", b)(ks =>
-          bitmapRowsT(T.ExactWordDocids, exactWordDocids, ks))
-      }
+    pHead.grouped(512).foreach(postingCache.get)
+    // the fill cost is driver-side collect DESERIALIZATION (positions
+    // arrays), which is single-threaded per job — overlap several
+    // smaller fills on the fetch pool instead of one giant collect
+    val fills = dHead.grouped(math.max(32, dHead.length / 8 + 1)).toSeq
+      .map(b => Future(dwpCache.get(b, Nil)))
+    fills.foreach(f =>
+      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
+    byDf.map(_._1).grouped(1024).foreach { b =>
+      bitmapCache.get("w", b)(ks => bitmapRowsT(T.WordDocids, wordDocids, ks))
+      bitmapCache.get("e", b)(ks =>
+        bitmapRowsT(T.ExactWordDocids, exactWordDocids, ks))
     }
     // prefix structures: milli treats the LAST query word as a prefix, so
     // keystroke-style serving traffic hits the prefix tables on almost
@@ -185,13 +175,11 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
       val pfxs = pd.map(_._1)
       headPfxs = pfxs
-      Search.traced(s"prewarm-prefix-bitmaps(${pfxs.length})") {
-        pfxs.grouped(1024).foreach { b =>
-          bitmapCache.get("p", b)(ks =>
-            bitmapRowsT(T.WordPrefixDocids, wordPrefixDocids, ks, "prefix"))
-          bitmapCache.get("q", b)(ks =>
-            bitmapRowsT(T.ExactWordPrefixDocids, exactWordPrefixDocids, ks, "prefix"))
-        }
+      pfxs.grouped(1024).foreach { b =>
+        bitmapCache.get("p", b)(ks =>
+          bitmapRowsT(T.WordPrefixDocids, wordPrefixDocids, ks, "prefix"))
+        bitmapCache.get("q", b)(ks =>
+          bitmapRowsT(T.ExactWordPrefixDocids, exactWordPrefixDocids, ks, "prefix"))
       }
       dictIndex.foreach { case (ws, cum, _) =>
         var used = 0L
@@ -209,9 +197,7 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
           }
         }
         val ks = keep.result()
-        Search.traced(s"prewarm-prefix-dwp(${ks.length})") {
-          ks.grouped(64).foreach(b => dwpCache.get(Nil, b))
-        }
+        ks.grouped(64).foreach(b => dwpCache.get(Nil, b))
       }
     }
     // pair-proximity bitmaps for head × head word pairs — the proximity
@@ -219,10 +205,8 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     // as Absent, so cold multi-word head queries skip their first-touch
     // pair fetch entirely)
     val pairHead = byDf.map(_._1).take(32)
-    Search.traced("prewarm-pairs") {
-      pairProxBitmaps(
-        for (a <- pairHead; b <- pairHead if a != b) yield (a, b))
-    }
+    pairProxBitmaps(
+      for (a <- pairHead; b <- pairHead if a != b) yield (a, b))
     // precomputed prefix-pair heads (#8/#9): trailing-prefix queries drain
     // prox cells against (query word, prefix) rows — prewarm head-word ×
     // head-prefix combinations on both sides so those cells assemble with
@@ -244,63 +228,61 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     // compilation — measured at several hundred ms on the first 3-word
     // query otherwise. Uses the dictionary head, so it doubles as cache
     // warmup for the hottest query shapes.
-    Search.traced("prewarm-jit") {
-      // head word + two MID-dictionary words: big enough intersection to
-      // exercise the sweep and rankers, small enough that the warmup drain
-      // ranks hundreds of docs, not a stop-word-pair cell's tens of
-      // thousands (the very first version used the top-3 head words and
-      // spent ~2-3 s draining a 55k-doc cell)
-      val ws = byDf.map(_._1)
-      // shapes matter: the 2-word query uses MID words (a stop-word pair's
-      // exact prox cell holds tens of thousands of docs and the warmup
-      // would rank them all), while the 3-word query NEEDS the head word
-      // so its reduced-branch drain ranks a few hundred docs THROUGH THE
-      // PLANE SWEEP (3-word cells drop the prox dim, so these docs sweep
-      // per-doc — the code path a first real 3-word query would otherwise
-      // JIT at ~200 ms wall)
-      val mid1 = ws.lift(ws.length.min(40) - 1)
-      val mid2 = ws.lift(ws.length.min(80) - 1)
-      val s = new Search(this)
-      // a few repetitions: one pass leaves the rankers at C1 — the first
-      // REAL multi-word query then pays the C2 compile of the attribute/
-      // exactness per-doc loops (measured ~900 ms of summed thread CPU in
-      // the drain's parMap). QUERY-MAJOR loops, not round-robin: reps of
-      // the same query hit the restricted-fetch memo / landed back-fills
-      // (the memo holds ONE entry, so interleaving two queries re-paid
-      // the fetch every rep — measured ~1.5 s × reps on the 3-word shape).
-      try {
-        (mid1, mid2) match {
-          case (Some(a), Some(b)) if a != b =>
-            (0 until 5).foreach { _ =>
-              s.execute(SearchRequest(query = Some(s"$a $b "),
-                limit = 20, exhaustive = false))
-            }
-          case _ => ()
-        }
-        (ws.headOption, mid1, mid2) match {
-          case (Some(h), Some(a), Some(b)) if h != a && a != b =>
-            (0 until 5).foreach { _ =>
-              s.execute(SearchRequest(query = Some(s"$h $a $b "),
-                limit = 20, exhaustive = false))
-            }
-          case _ => ()
-        }
-        // trailing-PREFIX shape: a last word with no trailing space takes
-        // the ngram-tolerant + prefix-extension branches (wide derivation
-        // material → per-doc attribute/exactness rank, prefix-pair point
-        // reads, the restricted direct dwp fetch) — none of which the two
-        // space-terminated shapes above touch; a first real trailing-
-        // prefix query otherwise pays their C2 at several hundred ms
-        (mid1, mid2) match {
-          case (Some(a), Some(b)) if a != b && b.length >= 2 =>
-            (0 until 5).foreach { _ =>
-              s.execute(SearchRequest(query = Some(s"$a ${b.dropRight(1)}"),
-                limit = 20, exhaustive = false))
-            }
-          case _ => ()
-        }
-      } catch { case scala.util.control.NonFatal(_) => () }
-    }
+    // head word + two MID-dictionary words: big enough intersection to
+    // exercise the sweep and rankers, small enough that the warmup drain
+    // ranks hundreds of docs, not a stop-word-pair cell's tens of
+    // thousands (the very first version used the top-3 head words and
+    // spent ~2-3 s draining a 55k-doc cell)
+    val ws = byDf.map(_._1)
+    // shapes matter: the 2-word query uses MID words (a stop-word pair's
+    // exact prox cell holds tens of thousands of docs and the warmup
+    // would rank them all), while the 3-word query NEEDS the head word
+    // so its reduced-branch drain ranks a few hundred docs THROUGH THE
+    // PLANE SWEEP (3-word cells drop the prox dim, so these docs sweep
+    // per-doc — the code path a first real 3-word query would otherwise
+    // JIT at ~200 ms wall)
+    val mid1 = ws.lift(ws.length.min(40) - 1)
+    val mid2 = ws.lift(ws.length.min(80) - 1)
+    val s = new Search(this)
+    // a few repetitions: one pass leaves the rankers at C1 — the first
+    // REAL multi-word query then pays the C2 compile of the attribute/
+    // exactness per-doc loops (measured ~900 ms of summed thread CPU in
+    // the drain's parMap). QUERY-MAJOR loops, not round-robin: reps of
+    // the same query hit the restricted-fetch memo / landed back-fills
+    // (the memo holds ONE entry, so interleaving two queries re-paid
+    // the fetch every rep — measured ~1.5 s × reps on the 3-word shape).
+    try {
+      (mid1, mid2) match {
+        case (Some(a), Some(b)) if a != b =>
+          (0 until 5).foreach { _ =>
+            s.execute(SearchRequest(query = Some(s"$a $b "),
+              limit = 20, exhaustive = false))
+          }
+        case _ => ()
+      }
+      (ws.headOption, mid1, mid2) match {
+        case (Some(h), Some(a), Some(b)) if h != a && a != b =>
+          (0 until 5).foreach { _ =>
+            s.execute(SearchRequest(query = Some(s"$h $a $b "),
+              limit = 20, exhaustive = false))
+          }
+        case _ => ()
+      }
+      // trailing-PREFIX shape: a last word with no trailing space takes
+      // the ngram-tolerant + prefix-extension branches (wide derivation
+      // material → per-doc attribute/exactness rank, prefix-pair point
+      // reads, the restricted direct dwp fetch) — none of which the two
+      // space-terminated shapes above touch; a first real trailing-
+      // prefix query otherwise pays their C2 at several hundred ms
+      (mid1, mid2) match {
+        case (Some(a), Some(b)) if a != b && b.length >= 2 =>
+          (0 until 5).foreach { _ =>
+            s.execute(SearchRequest(query = Some(s"$a ${b.dropRight(1)}"),
+              limit = 20, exhaustive = false))
+          }
+        case _ => ()
+      }
+    } catch { case scala.util.control.NonFatal(_) => () }
     // quiesce: the warmup's async complete fills must not contend with the
     // first real queries (or a benchmark's cold samples)
     dwpCache.awaitFills()
@@ -827,7 +809,6 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     * source of truth). */
   private def bitmapRowsDirect(tableName: String, keys: Seq[String],
       keyCol: String): Option[Map[String, RoaringBitmap]] = {
-    if (!DirectParquet.enabled) return None
     val fts = footersFor(tableName, keyCol)
     val want = keys.toSet
     val out = Map.newBuilder[String, RoaringBitmap]
@@ -875,14 +856,14 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     * keep the Spark scan: their word-column pages span whole row groups,
     * so a direct read would decode ~400k rows per touched group. */
   private[search] lazy val dwpDirectPaged: Boolean =
-    DirectParquet.enabled && new java.io.File(
+    new java.io.File(
       s"$dir/${T.DocWordPositions}", graft.index.TableIO.DwpPageMarker).exists()
 
   /** Page-row cap the committed forward index was actually WRITTEN under
-    * (marker content; legacy empty markers → the then-only 1024). The
-    * volume gate must price decodes with the build-time value: a dir
-    * built under SPARK_GRAFT_DWP_PAGE_ROWS=16k served with default 1k
-    * would otherwise under-estimate page-bounded decodes 16×. */
+    * (marker content; legacy empty markers → 1024). The volume gate must
+    * price decodes with the build-time value, not today's
+    * [[graft.index.TableIO.DwpPageRows]] (1024): a dir written with 16k-row
+    * pages would otherwise under-estimate page-bounded decodes 16×. */
   private[search] lazy val dwpPageRows: Long =
     graft.index.TableIO.readPageMarker(
       s"$dir/${T.DocWordPositions}", graft.index.TableIO.DwpPageMarker)
@@ -890,7 +871,7 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
 
   /** Pair-table twin of [[dwpDirectPaged]]. */
   private[search] lazy val pairDirectPaged: Boolean =
-    DirectParquet.enabled && new java.io.File(
+    new java.io.File(
       s"$dir/${T.WordPairProximityDocids}",
       graft.index.TableIO.PairPageMarker).exists()
 
@@ -977,7 +958,6 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     * cache's NUL-separated format. */
   private def directPairRows(lefts: Seq[String], rights: Seq[String],
       missSet: Set[String]): Option[Map[String, RoaringBitmap]] = {
-    if (!DirectParquet.enabled) return None
     val nul = 0.toChar
     val rightSet = rights.toSet
     val fts = footersFor(T.WordPairProximityDocids, "w1")
@@ -1003,9 +983,7 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
       ("w2", lo, hi)
     }
     val out = Map.newBuilder[String, RoaringBitmap]
-    var rows = 0L
     val ok = DirectParquet.scanBands(fts, bands, Some(second)) { g =>
-      rows += 1
       val b = g.getString("w2", 0)
       if (rightSet(b)) {
         val k = s"${g.getString("w1", 0)}$nul$b$nul${g.getInteger("prox", 0)}"
@@ -1013,8 +991,6 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
           out += k -> Bitmaps.cboDeserialize(g.getBinary("docids", 0).getBytes)
       }
     }
-    if (Search.trace)
-      System.err.println(s"[graft-trace] pair-direct groups=$nGroups rows=$rows ok=$ok")
     if (ok) Some(out.result()) else None
   }
 
@@ -1043,7 +1019,6 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     * distributed aggregation) or the direct read fails. */
   private def directPrefixUnion(p: String,
       maxGroups: Int = 8): Option[RoaringBitmap] = {
-    if (!DirectParquet.enabled) return None
     val band = Seq(DirectParquet.prefixBand(p))
     val acc = new RoaringBitmap()
     val ok = Seq(T.WordDocids, T.ExactWordDocids).forall { t =>
@@ -1216,8 +1191,7 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
       val rights = dictWords(parts.map(_(1)).distinct)
       val missSet = misses.toSet
       if (lefts.isEmpty || rights.isEmpty) Map.empty[String, RoaringBitmap]
-      else Search.traced(s"pair-fetch(l=${lefts.length},r=${rights.length})")(
-        directPairRows(lefts, rights, missSet)).getOrElse {
+      else directPairRows(lefts, rights, missSet).getOrElse {
         pairProx.where($"w1".isin(lefts: _*) && $"w2".isin(rights: _*))
         .select($"w1", $"w2", $"prox", $"docids")
         .as[(String, String, Int, Array[Byte])].collect()
@@ -1286,31 +1260,29 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
         val pfxs = live.map(_._2).distinct
         val want = live.map(it => (it._1, it._2)).toSet
         // direct footer-pruned read (tables are prefix-sorted) first
-        val direct: Option[Seq[(String, RoaringBitmap)]] =
-          if (!DirectParquet.enabled) None
-          else {
-            val wordSet = words.toSet
-            val fts = footersFor(tblName, "prefix")
-            val out = Seq.newBuilder[(String, RoaringBitmap)]
-            // conjunctive page band over the words' span (same argument as
-            // directPairRows: wanted rows have wordCol ∈ wordSet ⊆ span;
-            // byte-ordered — see DirectParquet.spanBand)
-            val second = {
-              val (lo, hi) = DirectParquet.spanBand(words)
-              (wordCol, lo, hi)
-            }
-            val ok = DirectParquet.scanBands(fts,
-              DirectParquet.keyBands(pfxs), Some(second)) { g =>
-              val w = g.getString(wordCol, 0)
-              if (wordSet(w)) {
-                val p = g.getString("prefix", 0)
-                if (want((w, p)))
-                  out += yKey(w, p, sideTag, g.getInteger("prox", 0)) ->
-                    Bitmaps.cboDeserialize(g.getBinary("docids", 0).getBytes)
-              }
-            }
-            if (ok) Some(out.result()) else None
+        val direct: Option[Seq[(String, RoaringBitmap)]] = {
+          val wordSet = words.toSet
+          val fts = footersFor(tblName, "prefix")
+          val out = Seq.newBuilder[(String, RoaringBitmap)]
+          // conjunctive page band over the words' span (same argument as
+          // directPairRows: wanted rows have wordCol ∈ wordSet ⊆ span;
+          // byte-ordered — see DirectParquet.spanBand)
+          val second = {
+            val (lo, hi) = DirectParquet.spanBand(words)
+            (wordCol, lo, hi)
           }
+          val ok = DirectParquet.scanBands(fts,
+            DirectParquet.keyBands(pfxs), Some(second)) { g =>
+            val w = g.getString(wordCol, 0)
+            if (wordSet(w)) {
+              val p = g.getString("prefix", 0)
+              if (want((w, p)))
+                out += yKey(w, p, sideTag, g.getInteger("prox", 0)) ->
+                  Bitmaps.cboDeserialize(g.getBinary("docids", 0).getBytes)
+            }
+          }
+          if (ok) Some(out.result()) else None
+        }
         direct.map(_.iterator).getOrElse {
           tbl.where(col(wordCol).isin(words: _*) && col("prefix").isin(pfxs: _*))
             .select(col(wordCol), col("prefix"), col("prox"), col("docids"))
@@ -1412,7 +1384,6 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     * own pages). None → caller runs the Spark aggregation. */
   private def directPrefixPairRanged(word: String, prefix: String,
       prefixIsRight: Boolean, side: String): Option[Map[String, RoaringBitmap]] = {
-    if (!DirectParquet.enabled) return None
     val fts = footersFor(T.WordPairProximityDocids, "w1")
     val (bands, second) =
       if (prefixIsRight) {
@@ -1528,17 +1499,16 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
           DirectParquet.keyBands(Seq(k))) <= GraftIndex.PosMaxGroupsPerKey)
       val okSet = ok.toSet
       val fetched: Boolean = ok.isEmpty || {
-        Search.traced(s"pos-fetch($tag=${ok.length})")(
-          DirectParquet.scanBands(fts, DirectParquet.keyBands(ok)) { g =>
-            val k = g.getString(keyCol, 0)
-            if (okSet(k))
-              out.getOrElseUpdate(k,
-                scala.collection.mutable.ArrayBuffer.empty) +=
-                ((g.getInteger("position", 0),
-                  Bitmaps.cboDeserialize(g.getBinary("docids", 0).getBytes)))
-          })
+        DirectParquet.scanBands(fts, DirectParquet.keyBands(ok)) { g =>
+          val k = g.getString(keyCol, 0)
+          if (okSet(k))
+            out.getOrElseUpdate(k,
+              scala.collection.mutable.ArrayBuffer.empty) +=
+              ((g.getInteger("position", 0),
+                Bitmaps.cboDeserialize(g.getBinary("docids", 0).getBytes)))
+        }
       } || {
-        // Spark fallback (direct reader off / failed): same rows, one scan
+        // Spark fallback (direct read failed): same rows, one scan
         out.clear()
         df.where(col(keyCol).isin(ok: _*))
           .select(col(keyCol), col("position"), col("docids"))
@@ -1705,9 +1675,7 @@ object GraftIndex {
     * crossover: the pool decodes ~1.5M rows/s (412k-row fetch ≈ 285 ms
     * vs the same Spark scan's 646 ms), so up to ~1M rows the direct read
     * wins; beyond it the fully-parallel scan does. */
-  private[search] var DwpDirectMaxRows: Long = // var: specs clamp the gate
-    sys.env.get("SPARK_GRAFT_DWP_DIRECT_MAX_ROWS").map(_.toLong)
-      .getOrElse(1L << 20)
+  private[search] var DwpDirectMaxRows: Long = 1L << 20 // var: specs clamp the gate
 
   /** Test hook: run `f` with the direct-read volume gate clamped, restore
     * guaranteed — specs must use this instead of assigning the var (a
@@ -1724,8 +1692,7 @@ object GraftIndex {
     * (the column-index In evaluation is O(pages × log points) per touched
     * group — cheap for a drain page's ~20–60 docs, not for a 8k-doc
     * verification slice). */
-  private[search] val DwpDocPointsMax: Int =
-    sys.env.get("SPARK_GRAFT_DWP_DOC_POINTS_MAX").map(_.toInt).getOrElse(256)
+  private[search] val DwpDocPointsMax: Int = 256
 
   /** Driver-pinned per-field sort values: min/max numeric value and min/max
     * string norm per docid (keep-first facet-sort semantics: asc reads the

@@ -234,15 +234,9 @@ final class DwpCache(index: GraftIndex, maxBytes: Long = 256L << 20) {
     // predicate below never footer-prunes, so the Spark path pays a full
     // forward-index scan per cold miss batch — the measured cold-rank
     // floor. Rows must come back docid-sorted per word; callers sort.
-    val t0 = System.nanoTime()
     (if (allowDirect) index.directDwpRows(inWords, rangedP, docFilter)
      else None) match {
-      case Some(rows) =>
-        if (Search.trace) System.err.println(
-          f"[graft-trace] dwp-direct(w=${inWords.length},p=${rangedP.length}," +
-          f"docs=${docFilter.map(_.length).getOrElse(-1)},rows=${rows.length}) " +
-          f"${(System.nanoTime() - t0) / 1e6}%.2f ms")
-        return rows
+      case Some(rows) => return rows
       case None => ()
     }
     val in = if (inWords.nonEmpty) Seq(col("word").isin(inWords: _*)) else Nil
@@ -264,11 +258,8 @@ final class DwpCache(index: GraftIndex, maxBytes: Long = 256L << 20) {
         val candDf = spark.createDataset(ds.toSeq).toDF("docid")
         base.join(broadcast(candDf), Seq("docid"), "left_semi")
     }
-    Search.traced(s"dwp-scan(w=${liveW.length},p=${rangedP.length}," +
-        s"in=${inWords.length},docs=${docFilter.map(_.length).getOrElse(-1)})") {
-      restricted.select(col("docid"), col("word"), col("positions"))
-        .as[(Int, String, Array[Int])].collect()
-    }
+    restricted.select(col("docid"), col("word"), col("positions"))
+      .as[(Int, String, Array[Int])].collect()
   }
 
   /** Fetched rows → per-word / per-prefix docid-sorted arrays (the rank
@@ -443,8 +434,7 @@ final class DwpCache(index: GraftIndex, maxBytes: Long = 256L << 20) {
 object PostingCache {
   /** Max time a background complete fill waits for in-flight queries to
     * drain before running anyway (see the filler task in
-    * [[DwpCache.getForDocs]]). */
-  val FillDeferMaxNs: Long =
-    sys.env.get("SPARK_GRAFT_FILL_DEFER_MS").map(_.toLong)
-      .getOrElse(2000L) * 1000000L
+    * [[DwpCache.getForDocs]]): 2 s, well past a cold query's ranking tail,
+    * yet short enough that a busy handle's fills still land. */
+  val FillDeferMaxNs: Long = 2000L * 1000000L
 }

@@ -101,7 +101,7 @@ object RankCells {
     if (dims.isEmpty || bucket.isEmpty) return None
     val leaves = index.treeLeaves(branch)
     if (leaves.isEmpty || hasPhrase(branch)) return None
-    val lt = Search.traced("cell-leaf-tables")(index.leafTables(leaves, der))
+    val lt = index.leafTables(leaves, der)
 
     // cells of one dim, paired with the component value each proves (the
     // remainder appended by withRemainder gets −1 = unknown); `bound` =
@@ -109,15 +109,13 @@ object RankCells {
     final case class DimCells(cells: IndexedSeq[RoaringBitmap], bound: Boolean)
     def dimCells(c: Criterion): Option[DimCells] = c match {
       case Criterion.Typo =>
-        Some(DimCells(cellsOf(Search.traced("cell-typo-cums")(
-          typoCums(lt, der, branch))), bound = false))
+        Some(DimCells(cellsOf(typoCums(lt, der, branch)), bound = false))
       case Criterion.Proximity =>
-        Search.traced("cell-prox-cums")(proxCums(index, der, lt, branch))
+        proxCums(index, der, lt, branch)
           .map(cs => DimCells(cellsOf(cs), bound = false))
           .orElse {
             if (bucket.getLongCardinality < BoundCellMinBucket) None
-            else Search.traced("cell-prox-bound-cums")(
-              proxBoundCums(index, der, lt, branch))
+            else proxBoundCums(index, der, lt, branch)
               .map { cs => boundDrains.incrementAndGet()
                 DimCells(cellsOf(cs), bound = true) }
           }
@@ -587,10 +585,9 @@ object RankCells {
   val exactDrains = new java.util.concurrent.atomic.AtomicLong()
 
   /** Cell-refinement engagement floor: a (typo, prox)-labeled cell below
-    * this many docs ranks per-doc (measured cheaper than strata algebra).
-    * Var for specs; env override for measurement A/Bs. */
-  private[search] var RefineMinDocs: Long =
-    sys.env.get("SPARK_GRAFT_REFINE_MIN_DOCS").map(_.toLong).getOrElse(4096L)
+    * 4096 docs ranks per-doc, which measured cheaper than strata algebra
+    * at that size. A var so specs can force either route. */
+  private[search] var RefineMinDocs: Long = 4096L
 
   /** Strata-per-group cap: a group whose material spreads over more
     * distinct first positions than this refuses refinement (bounded
@@ -605,9 +602,10 @@ object RankCells {
     * material refines a 63k-doc cell in ~9 ms (both measured, 300k docs).
     * Wide-material cells refuse refinement UNLESS the cell exceeds the
     * remaining drain budget (`forced`), where refinement is the only
-    * alternative to a distributed abort. */
-  private[search] var AttrCheapMaterialWords: Int =
-    sys.env.get("SPARK_GRAFT_ATTR_CHEAP_WORDS").map(_.toInt).getOrElse(64)
+    * alternative to a distributed abort. 64 words sits between those two
+    * measured shapes (≤ 3 and ~200 words). A var so specs can force
+    * either route. */
+  private[search] var AttrCheapMaterialWords: Int = 64
 
   /** Enumerated-extension cap for non-dict prefixes in a group. */
   private val AttrMaxMaterialWords = 256

@@ -127,21 +127,6 @@ object Ranker extends Serializable {
     * plane sweep with the value a (typo, prox) drain CELL already proved
     * for this doc (RankCells — the cells are exact, so the component is
     * identical; this removes the dominant per-doc cost on big cells). */
-  /** Per-component rank-stage nanos, populated only when SPARK_GRAFT_TRACE
-    * is on (the drain prints them after each rank stage). */
-  object Prof {
-    val resolve = new java.util.concurrent.atomic.LongAdder
-    val typo = new java.util.concurrent.atomic.LongAdder
-    val prox = new java.util.concurrent.atomic.LongAdder
-    val attr = new java.util.concurrent.atomic.LongAdder
-    val exact = new java.util.concurrent.atomic.LongAdder
-    def reset(): Unit = Seq(resolve, typo, prox, attr, exact).foreach(_.reset())
-    def summary: String =
-      f"resolve ${resolve.sum / 1e6}%.1f typo ${typo.sum / 1e6}%.1f " +
-        f"prox ${prox.sum / 1e6}%.1f attr ${attr.sum / 1e6}%.1f " +
-        f"exact ${exact.sum / 1e6}%.1f ms"
-  }
-
   def rankVectorAt(
       doc: DocData,
       branch: Op,
@@ -160,32 +145,16 @@ object Ranker extends Serializable {
         * −1 compute per-doc. */
       knownAttr: Long = RankCells.AttrUnknown,
       knownExact: Int = -1): (Int, Int, Int, Long, Int) = {
-    if (!Search.trace) {
-      val d = der.resolveFor(doc, prefixKeys)
-      (wordsBucket,
-        if (knownTypo >= 0) knownTypo
-        else minTypos(branch, doc, d).getOrElse(Int.MaxValue),
-        if (knownProx >= 0) knownProx
-        else proximityBucket(branch, doc, d),
-        if (knownAttr != RankCells.AttrUnknown) knownAttr
-        else attributeRank(flat, doc, d),
-        if (knownExact >= 0) knownExact
-        else exactnessRank(exactParts, doc, searchableFids))
-    } else {
-      @inline def t[A](acc: java.util.concurrent.atomic.LongAdder)(f: => A): A = {
-        val t0 = System.nanoTime(); val r = f; acc.add(System.nanoTime() - t0); r
-      }
-      val d = t(Prof.resolve)(der.resolveFor(doc, prefixKeys))
-      (wordsBucket,
-        if (knownTypo >= 0) knownTypo
-        else t(Prof.typo)(minTypos(branch, doc, d).getOrElse(Int.MaxValue)),
-        if (knownProx >= 0) knownProx
-        else t(Prof.prox)(proximityBucket(branch, doc, d)),
-        if (knownAttr != RankCells.AttrUnknown) knownAttr
-        else t(Prof.attr)(attributeRank(flat, doc, d)),
-        if (knownExact >= 0) knownExact
-        else t(Prof.exact)(exactnessRank(exactParts, doc, searchableFids)))
-    }
+    val d = der.resolveFor(doc, prefixKeys)
+    (wordsBucket,
+      if (knownTypo >= 0) knownTypo
+      else minTypos(branch, doc, d).getOrElse(Int.MaxValue),
+      if (knownProx >= 0) knownProx
+      else proximityBucket(branch, doc, d),
+      if (knownAttr != RankCells.AttrUnknown) knownAttr
+      else attributeRank(flat, doc, d),
+      if (knownExact >= 0) knownExact
+      else exactnessRank(exactParts, doc, searchableFids))
   }
 
   // ---------------------------------------------------------------- match

@@ -98,9 +98,8 @@ object Search {
     * ~14 MB and passes untouched; a position-heavy stop word whose rows
     * average hundreds of positions is priced by its BYTES, not its row
     * count — the cleaner long-term shape of the serve gate (round-4
-    * notes). Overridable per process for bench experiments. */
-  val MaxLocalBytes: Long =
-    sys.env.get("SPARK_GRAFT_MAX_LOCAL_BYTES").map(_.toLong).getOrElse(64L << 20)
+    * notes). */
+  val MaxLocalBytes: Long = 64L << 20
 
   /** Drain cap for the cell-path admission that BYPASSES the volume gate
     * (Words-led phrase-free queries): at most this many docs may rank
@@ -108,12 +107,7 @@ object Search {
     * what the parallel per-doc ranker clears in tens of ms (the 63.7k-doc
     * worst rung ranks in ~15 ms); the docid-restricted forward fetch
     * collects ≤ words × cap rows — bounded at any corpus size. */
-  val MaxLocalDrain: Long =
-    sys.env.get("SPARK_GRAFT_MAX_LOCAL_DRAIN").map(_.toLong).getOrElse(1L << 17)
-
-  /** SPARK_GRAFT_TRACE=1 prints local-path stage timings to stderr. */
-  private[search] val trace: Boolean =
-    sys.env.get("SPARK_GRAFT_TRACE").contains("1")
+  val MaxLocalDrain: Long = 1L << 17
 
   /** Shared CPU pool for the local rank drain (daemon threads; the pool is
     * bounded so concurrent serving clients share the cores fairly). */
@@ -150,14 +144,6 @@ object Search {
     }
     out
   }
-  @inline private[search] def traced[A](label: => String)(f: => A): A =
-    if (!trace) f
-    else {
-      val t0 = System.nanoTime()
-      val a = f
-      System.err.println(f"[graft-trace] $label ${(System.nanoTime() - t0) / 1e6}%.2f ms")
-      a
-    }
 
   /** Per-criterion doc comparators for the LOCAL sort path, built from the
     * driver-pinned facet/geo value maps. None when any referenced field
@@ -311,7 +297,7 @@ class Search(index: GraftIndex,
             Right(FilterEvaluator.candidates(index, FilterParser.parse(f)))
         }
       }
-    val deleted = Search.traced("deleted-bitmap")(index.deletedDocids)
+    val deleted = index.deletedDocids
 
     // emptiness test only — the query string itself must keep its trailing
     // whitespace: primitiveQuery marks the last word as a prefix only when
@@ -322,8 +308,7 @@ class Search(index: GraftIndex,
       case None =>
         executeNoQuery(criteria, filterDf, deleted, distinctField, req)
       case Some(q) =>
-        Search.traced("execute-query")(
-          executeQuery(q, criteria, filterDf, deleted, distinctField, req))
+        executeQuery(q, criteria, filterDf, deleted, distinctField, req)
     }
   }
 
@@ -384,23 +369,19 @@ class Search(index: GraftIndex,
       req: SearchRequest): SearchResult = {
 
     // 1. primitive query + tree (driver)
-    val parts = Search.traced("primitive-query") {
-      QueryTree.primitiveQuery(q, settings.stopWords, req.wordsLimit)
-    }
+    val parts = QueryTree.primitiveQuery(q, settings.stopWords, req.wordsLimit)
     if (parts.isEmpty)
       return executeNoQuery(criteria, filterDf, deleted, distinctField, req)
     val queryWords = parts.collect { case PWord(w, _) => w }
-    val ctx = Search.traced("prime-ctx") { index.primedQueryContext(queryWords) }
-    val tree = Search.traced("tree-build") {
-      QueryTree.build(ctx, req.strategy, req.authorizeTypos, parts).get
-    }
+    val ctx = index.primedQueryContext(queryWords)
+    val tree = QueryTree.build(ctx, req.strategy, req.authorizeTypos, parts).get
     val branches = QueryTree.wordsBranches(tree)
 
     // 2. derivations for every key of every branch (one term_dict scan);
     // 0-typo prefix keys stay un-enumerated and become scan range
     // predicates below
     val allKeys = branches.flatMap(Ranker.derivationKeys).toSet
-    val derivations = Search.traced("derivations") { index.derivations(allKeys) }
+    val derivations = index.derivations(allKeys)
     val relevantWords: Seq[String] =
       (derivations.map.values.flatten.map(_._1) ++
         allKeys.collect { case (w, false, 0) => w }).toSeq.distinct
@@ -489,11 +470,6 @@ class Search(index: GraftIndex,
     // level-0 band fetches regardless of field cardinality. Candidates
     // must resolve to a bitmap (phrase-free) and any filter must be a
     // cached bitmap; deeper criteria cascades keep the distributed path.
-    if (Search.trace) System.err.println(
-      s"[graft-trace] sort-led outer gate: cmpsEmpty=${localSortCmps.isEmpty} " +
-      s"mlp=$maxLocalPostings distinct=$distinctField " +
-      s"phraseFree=${branches.forall(b => !QueryTree.hasPhrase(b))} " +
-      s"filtLeft=${filterDf.forall(_.isLeft)}")
     if (localSortCmps.isEmpty && maxLocalPostings > 0 && distinctField.isEmpty &&
         branches.forall(b => !QueryTree.hasPhrase(b)) && filterDf.forall(_.isLeft)) {
       // sort-LED criteria: a leading Sort/Asc/Desc followed by any cascade
@@ -509,14 +485,10 @@ class Search(index: GraftIndex,
         case Criterion.Desc(f) +: rest => Some((f, false, rest))
         case _ => None
       }
-      if (Search.trace) System.err.println(
-        s"[graft-trace] sort-led gate: criteria=$criteria sortLed=$sortLed")
       sortLed.filter(_._3.forall {
         case Criterion.Sort | Criterion.Asc(_) | Criterion.Desc(_) => false
         case _ => true // a second sort level would need comparators we lack
       }).foreach { case (f, asc, rest) =>
-        if (Search.trace) System.err.println(
-          s"[graft-trace] sort-led resolve: ${index.resolveTreeBitmap(tree, derivations).isDefined}")
         index.resolveTreeBitmap(tree, derivations).foreach { cand =>
           cand.andNot(deleted)
           filterDf.foreach {
@@ -730,7 +702,7 @@ class Search(index: GraftIndex,
     val branchPrefixKeys: Vector[Seq[(String, Boolean, Int)]] =
       branches.map(b => Ranker.derivationKeys(b).filter(_._2).toSeq)
     val needFwc = criteria.contains(Criterion.Exactness)
-    val branchBms: Option[Vector[RoaringBitmap]] = Search.traced("branch-bitmaps") {
+    val branchBms: Option[Vector[RoaringBitmap]] = {
       val bms = branches.map(b => index.resolveTreeBitmap(b, derivations))
       if (bms.contains(None)) None else Some(bms.map(_.get))
     }
@@ -891,16 +863,13 @@ class Search(index: GraftIndex,
               // drain budget and aborts the query to the distributed path —
               // wide-material algebra (normally refused) still beats that
               val forced = c.docs.getLongCardinality > drainCap - drained
-              Search.traced(s"attr-cells(${c.docs.getLongCardinality})") {
-                RankCells.attrCells(index, derivations, flats(bi), c, forced)
-              } match {
+              RankCells.attrCells(index, derivations, flats(bi), c, forced) match {
                 case Some(cs) => cs.flatMap(refineCell(_, bi))
                 case None     => Iterator.single(c)
               }
             case Some(Criterion.Exactness) =>
-              Search.traced(s"exact-cells(${c.docs.getLongCardinality})") {
-                RankCells.exactCells(index, exactParts, searchableFids, c)
-              }.getOrElse(Iterator.single(c))
+              RankCells.exactCells(index, exactParts, searchableFids, c)
+                .getOrElse(Iterator.single(c))
             case _ => Iterator.single(c)
           }
         // resumable flattened cell stream across buckets (lazy: a bucket's
@@ -911,10 +880,8 @@ class Search(index: GraftIndex,
             val cellIt: Iterator[RankCells.Cell] =
               if (cellDims.isEmpty || b.getLongCardinality <= math.max(64L, take - drained))
                 Iterator.single(RankCells.Cell(b, -1, -1))
-              else Search.traced(s"cells(bucket $bi)") {
-                RankCells.cellIterator(index, branches(bi), derivations, cellDims, b)
-                  .getOrElse(Iterator.single(RankCells.Cell(b, -1, -1)))
-              }
+              else RankCells.cellIterator(index, branches(bi), derivations, cellDims, b)
+                .getOrElse(Iterator.single(RankCells.Cell(b, -1, -1)))
             cellIt.flatMap(refineCell(_, bi)).map(c => (c, bi))
           }.buffered
         def drainOne(): Unit = {
@@ -1003,15 +970,11 @@ class Search(index: GraftIndex,
                 (relevantWords.filter(neededWordSet) ++
                   exactWords.filterNot(w => fetchP.exists(w.startsWith)))
                   .distinct, sliceBm)
-              if (Search.trace) System.err.println(
-                s"[graft-trace] rank-fetch fetchW=$fetchW fetchP=$fetchP " +
-                  s"usedKeys=$usedKeys")
-              val (wRows, pRows) = Search.traced("dwp-fetch") {
-                // docid-restricted cold fetch for heavy words (async
-                // complete fill warms the cache behind this query) — the
-                // drain only needs positions for the CHOSEN docs
+              // docid-restricted cold fetch for heavy words (async
+              // complete fill warms the cache behind this query) — the
+              // drain only needs positions for the CHOSEN docs
+              val (wRows, pRows) =
                 index.dwpCache.getForDocs(fetchW, fetchP, sliceIds.toArray)
-              }
               (wRows.valuesIterator ++ pRows.valuesIterator).toArray
             }
           val fetched = fetchFwc(sliceIds.toSeq)
@@ -1022,42 +985,36 @@ class Search(index: GraftIndex,
           // independent of the total cached row count — build its DocData
           // inline and rank it with the KNOWN bucket; the drain is
           // embarrassingly parallel and fans out over the driver's cores
-          if (Search.trace) Ranker.Prof.reset()
-          val out = Search.traced(s"rank(${until - from} docs)") {
-            Search.parMap(until - from) { k =>
-              val i = from + k
-              val d = chosenIds(i)
-              if (provenAt(i))
-                // label-only assembly: inactive components carry their
-                // sentinel (−1 / AttrUnknown) — `ord` never reads them
-                d -> ((chosenBuckets(i), chosenTypo(i), chosenProx(i),
-                  chosenAttr(i), chosenExact(i)))
-              else {
-                val pos = scala.collection.mutable.HashMap.empty[String, Array[Int]]
-                arrays.foreach { a =>
-                  var lo = 0
-                  var hi = a.length
-                  while (lo < hi) { // first row with docid >= d
-                    val mid = (lo + hi) >>> 1
-                    if (a(mid)._1 < d) lo = mid + 1 else hi = mid
-                  }
-                  while (lo < a.length && a(lo)._1 == d) {
-                    pos.update(a(lo)._2, a(lo)._3)
-                    lo += 1
-                  }
+          Search.parMap(until - from) { k =>
+            val i = from + k
+            val d = chosenIds(i)
+            if (provenAt(i))
+              // label-only assembly: inactive components carry their
+              // sentinel (−1 / AttrUnknown) — `ord` never reads them
+              d -> ((chosenBuckets(i), chosenTypo(i), chosenProx(i),
+                chosenAttr(i), chosenExact(i)))
+            else {
+              val pos = scala.collection.mutable.HashMap.empty[String, Array[Int]]
+              arrays.foreach { a =>
+                var lo = 0
+                var hi = a.length
+                while (lo < hi) { // first row with docid >= d
+                  val mid = (lo + hi) >>> 1
+                  if (a(mid)._1 < d) lo = mid + 1 else hi = mid
                 }
-                val bi = chosenBuckets(i)
-                val doc = Ranker.DocData(pos, fwcOf(d))
-                d -> Ranker.rankVectorAt(doc, branches(bi), bi, derivations,
-                  exactParts, searchableFids, flats(bi), branchPrefixKeys(bi),
-                  knownTypo = chosenTypo(i), knownProx = chosenProx(i),
-                  knownAttr = chosenAttr(i), knownExact = chosenExact(i))
+                while (lo < a.length && a(lo)._1 == d) {
+                  pos.update(a(lo)._2, a(lo)._3)
+                  lo += 1
+                }
               }
+              val bi = chosenBuckets(i)
+              val doc = Ranker.DocData(pos, fwcOf(d))
+              d -> Ranker.rankVectorAt(doc, branches(bi), bi, derivations,
+                exactParts, searchableFids, flats(bi), branchPrefixKeys(bi),
+                knownTypo = chosenTypo(i), knownProx = chosenProx(i),
+                knownAttr = chosenAttr(i), knownExact = chosenExact(i))
             }
           }
-          if (Search.trace)
-            System.err.println(s"[graft-trace] rank-components ${Ranker.Prof.summary}")
-          out
         }
         val rankedBuf = scala.collection.mutable.ArrayBuffer.empty[R]
         var rankedUpTo = 0
@@ -1161,9 +1118,7 @@ class Search(index: GraftIndex,
         // partitions them by docid); the distinct-adjusted candidate count
         // is the kept count over ALL candidates (wordsFirst was disabled,
         // so `ranked` covers every bucket)
-        val sortedAll = Search.traced(s"distinct-sort(${ranked.length})") {
-          ranked.sorted(ord)
-        }
+        val sortedAll = ranked.sorted(ord)
         val seen = new java.util.HashSet[String]()
         val ids = Vector.newBuilder[Int]
         var kept = 0L
@@ -1181,7 +1136,7 @@ class Search(index: GraftIndex,
         // comparisons for the common case (most candidates never displace
         // the heap head)
         val k = take
-        val page = Search.traced(s"topk(${ranked.length})") {
+        val page =
           if (k == 0) Array.empty[(Int, (Int, Int, Int, Long, Int))]
           else if (ranked.length <= math.max(k * 4, 64)) ranked.sorted(ord)
           else {
@@ -1194,7 +1149,6 @@ class Search(index: GraftIndex,
             val arr = heap.toArray(Array.empty[(Int, (Int, Int, Int, Long, Int))])
             arr.sorted(ord)
           }
-        }
         Some(SearchResult(
           page.iterator.map(_._1).slice(req.offset, req.offset + req.limit).toSeq,
           totalCandidates))

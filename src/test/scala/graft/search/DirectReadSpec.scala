@@ -15,7 +15,6 @@ class DirectReadSpec extends AnyFunSuite with Matchers {
   private lazy val index = Fixture.buildIndex(TestSpark.spark)
 
   test("direct point reads engage and fall back zero times on fixture queries") {
-    assume(DirectParquet.enabled)
     val before = DirectParquet.reads.get()
     val fbBefore = DirectParquet.fallbacks.get()
     val search = new Search(index)
@@ -31,7 +30,6 @@ class DirectReadSpec extends AnyFunSuite with Matchers {
   }
 
   test("point reads hit groups beyond a pruned leading row group") {
-    assume(DirectParquet.enabled)
     // A key-sorted file with MANY row groups, point-read on keys whose
     // groups sit in the middle/end of the file: parquet-mr filters the
     // reader's block list at open (stats/dictionary row-group filtering),
@@ -77,7 +75,6 @@ class DirectReadSpec extends AnyFunSuite with Matchers {
   }
 
   test("rank results identical with direct reads vs a fresh Spark-only handle") {
-    assume(DirectParquet.enabled)
     // fresh handles so both sides fetch cold through their own route:
     // `direct` uses the point reader, `sparkOnly` has it disabled via a
     // poisoned footer dir (nonexistent table names can't be faked, so we
@@ -99,6 +96,37 @@ class DirectReadSpec extends AnyFunSuite with Matchers {
       }
   }
 
+  test("a failing direct read falls back to the Spark scan with the same answers") {
+    // a fresh, unwarmed handle: its first query reads candidate bitmaps and
+    // forward rows cold, so the injected fault lands on a live direct read
+    val spark = TestSpark.spark
+    def fresh() = GraftIndex(spark, index.dir, index.settings)
+    val live = fresh()
+    val search = new Search(live)
+    val dist = new Search(fresh(), maxLocalPostings = 0)
+    val terms = Seq("hello", "world")
+    val bm25Want = new Bm25(fresh()).topK(terms, 5)
+    withClue("fixture BM25 query must score: ")(bm25Want should not be empty)
+    val fb0 = DirectParquet.fallbacks.get()
+    Seq(Fixture.TestQuery, "hello ", "worl", "brwon ").zipWithIndex.foreach {
+      case (q, i) =>
+        val req = SearchRequest(query = Some(q), limit = 17,
+          strategy = MatchingStrategy.Last, exhaustive = true)
+        val a = DirectParquet.withFailingRead(search.execute(req))
+        if (i == 0)
+          withClue("the injected fault never reached a direct read: ")(
+            DirectParquet.fallbacks.get() should be > fb0)
+        val b = dist.execute(req)
+        withClue(s"query '$q': ") {
+          a.documentsIds shouldBe b.documentsIds
+          a.candidates shouldBe b.candidates
+        }
+    }
+    val bm25Got = DirectParquet.withFailingRead(new Bm25(live).topK(terms, 5))
+    bm25Got.map(_._1).toSeq shouldBe bm25Want.map(_._1).toSeq
+    bm25Got.zip(bm25Want).foreach { case ((_, x), (_, y)) => x shouldBe y +- 1e-9 }
+  }
+
   test("spanBand orders by UTF-8 bytes, not UTF-16 strings") {
     // the tokenizer emits BOTH supplementary-plane Han unigrams (surrogate
     // pairs, which sort LOW in UTF-16) and BMP words ≥ U+E000 (compat
@@ -115,7 +143,6 @@ class DirectReadSpec extends AnyFunSuite with Matchers {
   }
 
   test("broad-prefix prox rows resolve via the direct ranged read, zero Spark aggregations") {
-    assume(DirectParquet.enabled)
     val spark = TestSpark.spark
     import spark.implicits._
     // a length-3 prefix with 80 dictionary extensions: too long for the
@@ -175,7 +202,6 @@ class DirectReadSpec extends AnyFunSuite with Matchers {
   }
 
   test("docid point set prunes a fat word run to the wanted pages") {
-    assume(DirectParquet.enabled)
     // dwp-shaped table: ONE word whose run spans ~20 fine pages; a
     // restricted read of 2 scattered docids must decode ~2 pages, not the
     // run. intPoints is page-prune-only: the callback re-checks docids.
@@ -207,7 +233,6 @@ class DirectReadSpec extends AnyFunSuite with Matchers {
   }
 
   test("docid points keep frequent-word restricted fetches direct past the volume gate") {
-    assume(DirectParquet.enabled)
     val spark = TestSpark.spark
     val stg = graft.index.IndexSettings(searchableFields = Seq("text"))
     val dir = graft.TestSpark.tempDir("direct-docpoints-idx")

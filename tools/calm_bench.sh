@@ -26,7 +26,9 @@ out, tmp, pre, post = sys.argv[1:5]
 d = json.load(open(tmp))
 d["probe_cores_pre"] = float(pre)
 d["probe_cores_post"] = float(post)
-json.dump(d, open(out, "w"), indent=1)
+with open(out, "w") as f:
+    json.dump(d, f, indent=1)
+    f.write("\n")
 print(f"total {d['value']}  probe {pre}->{post}")
 for k, v in sorted(d['queries'].items(), key=lambda x: -x[1])[:12]:
     print(f"{k:28s}{v:8.3f}")
