@@ -177,12 +177,9 @@ object Main {
       var index = GraftIndex(spark, dir, settings)
       index.warm()
       // pre-populate the serving caches for the dictionary head (Zipf:
-      // most traffic); SPARK_GRAFT_PREWARM=0 disables
-      val prewarm = sys.env.get("SPARK_GRAFT_PREWARM").map(_.toInt).getOrElse(4096)
-      if (prewarm > 0) index.warmServing(prewarm)
-      val mlp = sys.env.get("SPARK_GRAFT_MAX_LOCAL_POSTINGS").map(_.toLong)
-        .getOrElse(graft.search.Search.DefaultMaxLocalPostings)
-      var search = new Search(index, mlp)
+      // most traffic)
+      index.warmServing()
+      var search = new Search(index)
       var bm25 = new graft.search.Bm25(index)
       println("[graft] serving (warm); '<query>' | 'bm25:t1,t2' | 'filter:<dsl>|<q>' " +
         "| 'sort:<f>:<asc|desc>|<q>' | 'geo:<lat>,<lng>|<q>' | ':quit'")
@@ -197,8 +194,8 @@ object Main {
             index = GraftIndex(spark, dir,
               graft.index.SettingsIO.load(dir).getOrElse(settings))
             index.warm()
-            if (prewarm > 0) index.warmServing(prewarm)
-            search = new Search(index, mlp)
+            index.warmServing()
+            search = new Search(index)
             bm25 = new graft.search.Bm25(index)
             println("[graft] index updated — rotated to a fresh warmed handle")
           }

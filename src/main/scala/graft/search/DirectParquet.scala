@@ -48,16 +48,16 @@ object DirectParquet {
     * PAGES, not the run. */
   val rowsDecoded = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Fault seam: when set, the next [[scanBands]] throws inside its guard
-    * (and clears the flag), so specs can drive the Spark-scan fallback on
-    * a live handle. Set only through [[withFailingRead]]. */
-  private val failNextRead = new java.util.concurrent.atomic.AtomicBoolean(false)
+  /** Fault seam: the next [[scanBands]] over this table throws inside its
+    * guard (and clears the seam), so specs can drive one read site's
+    * Spark-scan fallback on a live handle. Set only via [[withFailingRead]]. */
+  private val failNextRead = new java.util.concurrent.atomic.AtomicReference[String]()
 
-  /** Test hook: run `f` with the next direct read forced to fail; the
-    * flag is cleared in `finally` even when no read consumed it. */
-  private[search] def withFailingRead[A](f: => A): A = {
-    failNextRead.set(true)
-    try f finally failNextRead.set(false)
+  /** Test hook: run `f` with the next direct read of `table` (a directory
+    * name) forced to fail; cleared in `finally` even when no read ran. */
+  private[search] def withFailingRead[A](table: String)(f: => A): A = {
+    failNextRead.set(table)
+    try f finally failNextRead.set(null)
   }
 
   private val conf = new Configuration(false) // local FS only — no cluster conf
@@ -91,6 +91,7 @@ object DirectParquet {
     * never re-read a footer. */
   final class TableFooters(dir: String, keyCol: String) {
     private[DirectParquet] def keyColName: String = keyCol
+    private[DirectParquet] val table: String = new java.io.File(dir).getName
     private[DirectParquet] val fileMeta =
       scala.collection.mutable.HashMap.empty[String, FileMetaData]
     private[DirectParquet] val groups: Array[RowGroup] = {
@@ -172,7 +173,8 @@ object DirectParquet {
       intPoints: Option[(String, Array[Int])] = None)
       (each: Group => Unit): Boolean = {
     try {
-      if (failNextRead.compareAndSet(true, false))
+      val failing = failNextRead.get()
+      if (failing == footers.table && failNextRead.compareAndSet(failing, null))
         throw new java.io.IOException("injected direct-read fault")
       val byFile = footers.overlapping(bands).groupBy(_.file).toSeq.sortBy(_._1)
       // band predicate pushed into parquet-mr's filtered reads: column

@@ -217,40 +217,23 @@ object FacetLevels {
   }
 
   /** Sort `candidates` by `field` through the level trees — milli's
-    * `ascending/descending_facet_sort` keep-first walk: number values
-    * first, then strings (both directions), docs without the field last;
-    * ascending ranks a doc at its MIN value, descending at its MAX; ties
-    * within one value bucket stay in ascending-docid order (the bitmap
-    * iteration order = the comparator paths' final docid tie-break).
+    * `ascending/descending_facet_sort` keep-first walk — as ORDERED VALUE
+    * GROUPS: disjoint keep-first bitmaps of `candidates` in sort order
+    * (numbers first, then strings, both directions; milli's criterion
+    * yields (value, docids) buckets the same way,
+    * facet_sort_ascending.rs:14-31), the final group being the docs without
+    * the field (rank last, both directions). Ascending ranks a doc at its
+    * MIN value, descending at its MAX; within a group, ascending-docid
+    * order is the comparator paths' final tie-break, and sort-LED criteria
+    * cascades order WITHIN each group via the remaining criteria — milli's
+    * criterion nesting.
     *
     * Walks ONLY until `take` docs are covered, descending only into groups
     * that still intersect the remaining candidates — O(take · levels)
-    * level-0 band fetches, independent of field cardinality. None when the
-    * fetch budget runs out (caller keeps the distributed sort) or neither
-    * level table has the field. Mutates nothing; `candidates` is cloned. */
-  def sortedPage(index: GraftIndex, field: String, asc: Boolean,
-      candidates: RoaringBitmap, take: Int,
-      fetchBudget: Int = 64): Option[Seq[Int]] = {
-    sortedGroups(index, field, asc, candidates, take, fetchBudget).map {
-      groups =>
-        val out = Seq.newBuilder[Int]
-        var n = 0
-        groups.iterator.takeWhile(_ => n < take).foreach { g =>
-          val it = g.getIntIterator
-          while (it.hasNext && n < take) { out += it.next(); n += 1 }
-        }
-        out.result()
-    }
-  }
-
-  /** The walk underneath [[sortedPage]], exposed as ORDERED VALUE GROUPS:
-    * disjoint keep-first bitmaps of `candidates` in sort order (numbers
-    * then strings; milli's criterion yields (value, docids) buckets the
-    * same way, facet_sort_ascending.rs:14-31), the final group being the
-    * docs without the field (rank last, both directions). Sort-LED
-    * criteria cascades consume these groups and order WITHIN each via the
-    * remaining criteria — milli's criterion nesting. Walks only until
-    * `take` docs are covered; the trailing groups simply never enumerate. */
+    * level-0 band fetches, independent of field cardinality; the trailing
+    * groups never enumerate. None when the fetch budget runs out (caller
+    * keeps the distributed sort) or neither level table has the field.
+    * Mutates nothing; `candidates` is cloned. */
   def sortedGroups(index: GraftIndex, field: String, asc: Boolean,
       candidates: RoaringBitmap, take: Int,
       fetchBudget: Int = 64): Option[Seq[RoaringBitmap]] = {

@@ -7,6 +7,8 @@ import org.roaringbitmap.RoaringBitmap
 import graft.core.Bitmaps
 import QueryTree._
 
+import scala.jdk.CollectionConverters._
+
 /** Ranking rule (criterion) list entries — `milli/src/criterion.rs`. */
 sealed trait Criterion
 object Criterion {
@@ -270,6 +272,15 @@ class Search(index: GraftIndex,
 
   private def executeImpl(req: SearchRequest): SearchResult = {
     index.checkFresh() // stale-handle guard: caches pin the opened version
+    prepare(req) match {
+      case Some(p) => routes(p).iterator.flatMap(run(p, _)).next()
+      case None    => executeNoQuery(req)
+    }
+  }
+
+  /** Criteria, distinct field, resolved filter and tombstones of `req`. */
+  private def context(req: SearchRequest)
+      : (Seq[Criterion], Option[String], Search.Filt, RoaringBitmap) = {
     val criteria: Seq[Criterion] =
       req.criteriaOverride.getOrElse(settings.criteria.map(Criterion.parse))
     val distinctField = req.distinctOverride.getOrElse(settings.distinctField)
@@ -297,20 +308,65 @@ class Search(index: GraftIndex,
             Right(FilterEvaluator.candidates(index, FilterParser.parse(f)))
         }
       }
-    val deleted = index.deletedDocids
+    (criteria, distinctField, filterDf, index.deletedDocids)
+  }
 
+  /** A request with query words, prepared for its routes: primitive query,
+    * tree and derivations (driver); None when the query has no words. */
+  private[search] def prepare(req: SearchRequest): Option[Prepared] = {
     // emptiness test only — the query string itself must keep its trailing
     // whitespace: primitiveQuery marks the last word as a prefix only when
     // the query ends MID-WORD (reference query_tree.rs — "w96 " means the
     // word is finished, no prefix expansion), and a trim here would silently
     // re-prefix it
-    req.query.filter(_.trim.nonEmpty) match {
-      case None =>
-        executeNoQuery(criteria, filterDf, deleted, distinctField, req)
-      case Some(q) =>
-        executeQuery(q, criteria, filterDf, deleted, distinctField, req)
-    }
+    val parts = req.query.filter(_.trim.nonEmpty)
+      .map(QueryTree.primitiveQuery(_, settings.stopWords, req.wordsLimit))
+      .getOrElse(Nil)
+    if (parts.isEmpty) return None
+    val (criteria, distinctField, filterDf, deleted) = context(req)
+    val queryWords = parts.collect { case PWord(w, _) => w }
+    val ctx = index.primedQueryContext(queryWords)
+    val tree = QueryTree.build(ctx, req.strategy, req.authorizeTypos, parts).get
+    val branches = QueryTree.wordsBranches(tree).toVector
+
+    // derivations for every key of every branch (one term_dict scan);
+    // 0-typo prefix keys stay un-enumerated and become scan range
+    // predicates
+    val allKeys = branches.flatMap(Ranker.derivationKeys).toSet
+    val derivations = index.derivations(allKeys)
+    val relevantWords: Seq[String] =
+      (derivations.map.values.flatten.map(_._1) ++
+        allKeys.collect { case (w, false, 0) => w }).toSeq.distinct
+    val prefixWords: Seq[String] =
+      allKeys.collect { case (w, true, _) => w }.toSeq
+        // drop prefixes already covered by a shorter one
+        .sortBy(_.length)
+        .foldLeft(Vector.empty[String]) { (acc, p) =>
+          if (acc.exists(p.startsWith)) acc else acc :+ p
+        }
+    Some(Prepared(req, criteria, distinctField, filterDf, deleted, parts, tree,
+      branches, derivations, relevantWords, prefixWords,
+      Ranker.exactParts(parts, ctx.synonyms), settings.searchableFields.indices))
   }
+
+  /** The planned routes of a prepared query; the probes read this index. */
+  private[search] def routes(p: Prepared): LazyList[Planner.Route] =
+    Planner.routes(p, maxLocalPostings, maxLocalDrain, new Planner.Probes {
+      def distinctPin(field: String) = index.sortValuesLocal(field).map(_.strMin)
+      def postings = index.estimatePostings(p.relevantWords, p.prefixWords)
+      def postingBytes = index.estimatePostingBytes(p.relevantWords, p.prefixWords)
+      def sortComparators =
+        Search.localSortComparators(index, p.criteria, p.req.sortCriteria)
+    })
+
+  /** Run one route; None = refused, the next route answers. */
+  private[search] def run(p: Prepared, route: Planner.Route): Option[SearchResult] =
+    route match {
+      case Planner.NoRank(distinct) => executeNoRank(p, distinct)
+      case r: Planner.SortLed => executeSortLed(p, r)
+      case r: Planner.Local   => executeQueryLocal(p, r)
+      case Planner.Distributed => Some(executeDistributed(p))
+    }
 
   /** Apply the filter (bitmap predicate or semi-join) + tombstone predicate
     * to any docid-keyed plan. Bitmap operands are foldable literals —
@@ -333,12 +389,8 @@ class Search(index: GraftIndex,
 
   // ------------------------------------------------------------- no query
 
-  private def executeNoQuery(
-      criteria: Seq[Criterion],
-      filterDf: Search.Filt,
-      deleted: RoaringBitmap,
-      distinctField: Option[String],
-      req: SearchRequest): SearchResult = {
+  private def executeNoQuery(req: SearchRequest): SearchResult = {
+    val (criteria, distinctField, filterDf, deleted) = context(req)
     val docids0 = applyFilter(index.documents.select($"docid"), filterDf, deleted)
     // exhaustive counting + top-k are two actions over the same filter
     // plan: persist so it runs once
@@ -360,220 +412,49 @@ class Search(index: GraftIndex,
 
   // ---------------------------------------------------------------- query
 
-  private def executeQuery(
-      q: String,
-      criteria: Seq[Criterion],
-      filterDf: Search.Filt,
-      deleted: RoaringBitmap,
-      distinctField: Option[String],
-      req: SearchRequest): SearchResult = {
-
-    // 1. primitive query + tree (driver)
-    val parts = QueryTree.primitiveQuery(q, settings.stopWords, req.wordsLimit)
-    if (parts.isEmpty)
-      return executeNoQuery(criteria, filterDf, deleted, distinctField, req)
-    val queryWords = parts.collect { case PWord(w, _) => w }
-    val ctx = index.primedQueryContext(queryWords)
-    val tree = QueryTree.build(ctx, req.strategy, req.authorizeTypos, parts).get
-    val branches = QueryTree.wordsBranches(tree)
-
-    // 2. derivations for every key of every branch (one term_dict scan);
-    // 0-typo prefix keys stay un-enumerated and become scan range
-    // predicates below
-    val allKeys = branches.flatMap(Ranker.derivationKeys).toSet
-    val derivations = index.derivations(allKeys)
-    val relevantWords: Seq[String] =
-      (derivations.map.values.flatten.map(_._1) ++
-        allKeys.collect { case (w, false, 0) => w }).toSeq.distinct
-    val prefixWords: Seq[String] =
-      allKeys.collect { case (w, true, _) => w }.toSeq
-        // drop prefixes already covered by a shorter one
-        .sortBy(_.length)
-        .foldLeft(Vector.empty[String]) { (acc, p) =>
-          if (acc.exists(p.startsWith)) acc else acc :+ p
-        }
-
-    val exactParts = Ranker.exactParts(parts, ctx.synonyms)
-    val searchableFids = settings.searchableFields.indices
-
-    // no-rank fast path (criteria empty, no sort): resolve the query tree
-    // with bitmap algebra over word_docids / word_prefix_docids point
-    // reads — ONE pre-unioned row per prefix instead of scanning every
-    // extension's posting rows (milli criteria/mod.rs:590-637). Trees with
-    // phrases need positions and fall through; maxLocalPostings == 0 pins
-    // the distributed scan path (tests / forced-distributed callers).
-    // Distinct stays on the fast path when its min-norm map pins AND the
-    // filter is absent/bitmap-cached (docid order IS the rank order here,
-    // so a keep-first walk is the window's row_number==1 exactly); the walk
-    // is O(candidates) — bounded to ≤ 4M candidates.
-    if (criteria.isEmpty && req.sortCriteria.isEmpty && maxLocalPostings > 0) {
-      val distinctPin: Option[java.util.HashMap[Integer, String]] =
-        distinctField.flatMap(f => index.sortValuesLocal(f).map(_.strMin))
-      val distinctOk = distinctField.isEmpty ||
-        (distinctPin.isDefined && !filterDf.exists(_.isRight))
-      if (distinctOk) {
-        index.resolveTreeBitmap(tree, derivations) match {
-          case Some(cand)
-              if distinctField.isEmpty || cand.getLongCardinality <= (1L << 22) =>
-            cand.andNot(deleted)
-            return finishBitmapCandidates(cand, filterDf, req,
-              if (distinctField.isEmpty) None else distinctPin)
-          case _ => ()
-        }
-      }
-    }
-
-    // driver-side small-query path: when the pinned dictionary proves the
-    // scan touches few posting rows (and no sort-ish criterion / distinct
-    // needs facet joins), collect those rows once and rank in-process —
-    // the adaptive twin of milli's in-process execution. Web-scale
-    // dictionaries return None here and always rank distributed.
-    // sort-ish = facet joins needed: Asc/Desc always; the Sort criterion
-    // only when the request actually carries query-time sort entries (a
-    // criteria list containing `sort` with no sortCriteria is a no-op —
-    // milli's default list includes it, and those queries must still be
-    // eligible for the driver path)
-    val sortish = criteria.exists {
-      case Criterion.Asc(_) | Criterion.Desc(_) => true
-      case Criterion.Sort => req.sortCriteria.nonEmpty
-      case _ => false
-    }
-    val smallEnough = index.estimatePostings(relevantWords, prefixWords)
-        .exists(_ <= maxLocalPostings) &&
-      index.estimatePostingBytes(relevantWords, prefixWords)
-        .exists(_ <= Search.MaxLocalBytes)
-    // sort-ish criteria stay LOCAL when every referenced facet field (and
-    // the geo point table) pins driver-side — milli's asc_desc/geo criteria
-    // read their facet trees in-process too; None → the distributed
-    // facet-join path below (web-scale fields, multi-valued numerics).
-    // Probed only for queries the small gate already admits, so a
-    // distributed-routed query never triggers the pinning collects.
-    val localSortCmps: Option[Map[Criterion, (Int, Int) => Int]] =
-      if (!sortish) Some(Map.empty)
-      else if (!smallEnough || maxLocalPostings == 0) None
-      else Search.localSortComparators(index, criteria, req.sortCriteria)
-    // distinct stays local when the field's min-norm map pins (the
-    // distributed dedup key is exactly groupBy-min(norm)); None → the
-    // distributed window path
-    val distinctLocal: Option[Option[java.util.HashMap[Integer, String]]] =
-      distinctField match {
-        case None => Some(None)
-        case Some(f) if smallEnough && maxLocalPostings > 0 =>
-          index.sortValuesLocal(f).map(p => Some(p.strMin))
-        case _ => None
-      }
-    // Sort-only queries on an UNPINNABLE field (too many rows for the
-    // driver maps — localSortCmps is None) walk the facet LEVEL TREE
-    // instead of paying a distributed orderBy: milli's ascending/
-    // descending_facet_sort (facet_sort_ascending.rs:32-110) — keep-first
-    // value-group iteration over the candidates, O(offset+limit · levels)
-    // level-0 band fetches regardless of field cardinality. Candidates
-    // must resolve to a bitmap (phrase-free) and any filter must be a
-    // cached bitmap; deeper criteria cascades keep the distributed path.
-    if (localSortCmps.isEmpty && maxLocalPostings > 0 && distinctField.isEmpty &&
-        branches.forall(b => !QueryTree.hasPhrase(b)) && filterDf.forall(_.isLeft)) {
-      // sort-LED criteria: a leading Sort/Asc/Desc followed by any cascade
-      // of non-sort criteria (milli's criterion nesting: the sort yields
-      // value buckets, the children order WITHIN each bucket). rest empty
-      // = the plain sort-only page.
-      val sortLed: Option[(String, Boolean, Seq[Criterion])] = criteria match {
-        case Criterion.Sort +: rest => req.sortCriteria match {
-          case Seq(s) if s.geoPoint.isEmpty => Some((s.field, s.ascending, rest))
-          case _ => None
-        }
-        case Criterion.Asc(f) +: rest  => Some((f, true, rest))
-        case Criterion.Desc(f) +: rest => Some((f, false, rest))
-        case _ => None
-      }
-      sortLed.filter(_._3.forall {
-        case Criterion.Sort | Criterion.Asc(_) | Criterion.Desc(_) => false
-        case _ => true // a second sort level would need comparators we lack
-      }).foreach { case (f, asc, rest) =>
-        index.resolveTreeBitmap(tree, derivations).foreach { cand =>
-          cand.andNot(deleted)
-          filterDf.foreach {
-            case Left(fbm) => cand.and(fbm)
-            case Right(_)  => () // unreachable (gate above)
-          }
-          val take = req.offset + req.limit
-          if (rest.isEmpty) {
-            FacetLevels.sortedPage(index, f, asc, cand, take).foreach { ids =>
-              return SearchResult(ids.drop(req.offset), cand.getLongCardinality)
-            }
-          } else {
-            FacetLevels.sortedGroups(index, f, asc, cand, take).foreach { groups =>
-              // groups fully before the page window only count; groups
-              // overlapping it rank through the remaining cascade
-              val out = Seq.newBuilder[Int]
-              var before = 0L
-              var got = 0
-              val it = groups.iterator
-              var failed = false
-              while (!failed && got < req.limit && it.hasNext) {
-                val g = it.next()
-                val size = g.getLongCardinality
-                if (before + size <= req.offset) before += size
-                else {
-                  val innerOff = math.max(0L, req.offset - before).toInt
-                  val innerLim = req.limit - got
-                  executeQueryLocal(branches.toVector, derivations,
-                    exactParts, searchableFids, relevantWords, prefixWords,
-                    Some(Left(g)), deleted, rest,
-                    req.copy(offset = innerOff, limit = innerLim),
-                    Map.empty, None, drainCap = maxLocalDrain) match {
-                    case Some(r) =>
-                      r.documentsIds.foreach { id => out += id; got += 1 }
-                      before += size
-                    case None => failed = true // cap hit → distributed path
-                  }
-                }
-              }
-              if (!failed)
-                return SearchResult(out.result(), cand.getLongCardinality)
+  /** [[Planner.SortLed]]: the facet level-tree walk's value groups in
+    * order. Groups fully before the page window only count; groups
+    * overlapping it contribute their docid-ordered docs, or with `rest`
+    * criteria rank through the capped local drain. None when the walk
+    * exceeds its fetch budget or a group's drain hits the cap. */
+  private def executeSortLed(p: Prepared, r: Planner.SortLed): Option[SearchResult] = {
+    val req = p.req
+    index.resolveTreeBitmap(p.tree, p.derivations).flatMap { cand =>
+      cand.andNot(p.deleted)
+      p.filter.foreach(_.left.foreach(fbm => cand.and(fbm)))
+      FacetLevels.sortedGroups(index, r.field, r.asc, cand, req.offset + req.limit)
+        .flatMap { groups =>
+          val out = Seq.newBuilder[Int]
+          var before = 0L
+          var got = 0
+          val complete = groups.iterator.takeWhile(_ => got < req.limit).forall { g =>
+            val skip = math.max(0L, req.offset - before).toInt
+            before += g.getLongCardinality
+            before <= req.offset || {
+              val page =
+                if (r.rest.isEmpty) Some(docids(g).slice(skip, skip + req.limit - got).toSeq)
+                else executeQueryLocal(
+                  p.copy(filter = Some(Left(g)), criteria = r.rest,
+                    req = req.copy(offset = skip, limit = req.limit - got)),
+                  Planner.Local(Map.empty, None, maxLocalDrain)).map(_.documentsIds)
+              page.foreach { ids => out ++= ids; got += ids.length }
+              page.isDefined
             }
           }
+          if (complete) Some(SearchResult(out.result(), cand.getLongCardinality)) else None
         }
-      }
     }
+  }
 
-    if (smallEnough && localSortCmps.isDefined && distinctLocal.isDefined)
-      return executeQueryLocal(branches.toVector, derivations, exactParts,
-        searchableFids, relevantWords, prefixWords, filterDf, deleted, criteria,
-        req, localSortCmps.get, distinctLocal.get).get
-    // Words-led phrase-free queries stay LOCAL even past the postings-volume
-    // gate: their drain is O(offset+limit + drained cells), not O(postings)
-    // — branch candidates resolve via cached bitmap point reads, big buckets
-    // subdivide into (typo, prox) cells, the forward-index fetch is
-    // docid-restricted to the chosen docs, and a filter either intersects as
-    // a cached bitmap or is absent. This is the query shape milli serves
-    // in-process at ANY corpus size (criteria cascade over LMDB bitmaps);
-    // without it, head-word multi-word queries fall off the local path the
-    // moment the corpus outgrows maxLocalPostings and pay 4 distributed
-    // jobs per query. The one unbounded dimension — a giant tie cell, e.g.
-    // a bare stop word whose whole bucket must rank — aborts to the
-    // distributed path via the drain cap.
-    val cellDrainEligible =
-      maxLocalPostings > 0 && !sortish && distinctField.isEmpty &&
-        criteria.headOption.contains(Criterion.Words) &&
-        branches.forall(b => !QueryTree.hasPhrase(b)) &&
-        filterDf.forall(_.isLeft)
-    if (cellDrainEligible) {
-      executeQueryLocal(branches.toVector, derivations, exactParts,
-        searchableFids, relevantWords, prefixWords, filterDf, deleted, criteria,
-        req, Map.empty, None, drainCap = maxLocalDrain) match {
-        case Some(r) => return r
-        case None    => () // drain cap hit — rank distributed below
-      }
-    }
-
-    val bBranches = spark.sparkContext.broadcast(branches.toVector)
-    val bDerivations = spark.sparkContext.broadcast(derivations)
-    val bExactParts = spark.sparkContext.broadcast(exactParts.toVector)
-    val bFids = spark.sparkContext.broadcast(searchableFids.toVector)
+  private def executeDistributed(p: Prepared): SearchResult = {
+    val bBranches = spark.sparkContext.broadcast(p.branches)
+    val bDerivations = spark.sparkContext.broadcast(p.derivations)
+    val bExactParts = spark.sparkContext.broadcast(p.exactParts.toVector)
+    val bFids = spark.sparkContext.broadcast(p.searchableFids.toVector)
     val bFlats = spark.sparkContext.broadcast(
-      branches.toVector.map(Ranker.flattenQueryTree))
+      p.branches.map(Ranker.flattenQueryTree))
 
-    // 3. per-candidate rank vector job. doc_word_positions is written
+    // per-candidate rank vector job. doc_word_positions is written
     // WORD-major (IndexBuilder: range-partitioned + sorted on
     // (word, docid)), so the word IN-filter and prefix StartsWith ranges
     // prune at the parquet footer — at 10^12 docs the scan touches only
@@ -583,8 +464,8 @@ class Search(index: GraftIndex,
     // per-doc grouping: a candidate-sized shuffle, orders of magnitude
     // smaller than the un-pruned scan it replaces.
     val dwp = applyFilter(
-      index.docWordPositions.where(wordPredicate(relevantWords, prefixWords)),
-      filterDf, deleted)
+      index.docWordPositions.where(wordPredicate(p.relevantWords, p.prefixWords)),
+      p.filter, p.deleted)
     val docData0 = dwp.select($"docid", $"word", $"positions")
       .repartition($"docid")
       .sortWithinPartitions($"docid")
@@ -613,7 +494,7 @@ class Search(index: GraftIndex,
     // candidate set many orders of magnitude smaller (fetchFwc is the
     // driver-path twin of this same bound).
     val docData =
-      if (!criteria.contains(Criterion.Exactness))
+      if (!p.criteria.contains(Criterion.Exactness))
         docData0.withColumn("fwc", lit(null).cast("map<int,int>"))
       else
         docData0.join(
@@ -636,17 +517,17 @@ class Search(index: GraftIndex,
       }
       .toDF("docid", "r_words", "r_typo", "r_proximity", "r_attribute", "r_exactness")
 
-    val withSorts = attachSortColumns(rankedRows, criteria, req.sortCriteria)
-    val sortCols = criteria.flatMap(criterionColumns(_, req.sortCriteria)) :+ $"docid".asc
+    val withSorts = attachSortColumns(rankedRows, p.criteria, p.req.sortCriteria)
+    val sortCols = p.criteria.flatMap(criterionColumns(_, p.req.sortCriteria)) :+ $"docid".asc
     // exhaustive counting + top-k are two actions: persist the (small,
     // candidates × rank-ints) rank rows so the scan/rank job runs once
     val persisted =
-      if (req.exhaustive)
+      if (p.req.exhaustive)
         Some(withSorts.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       else None
     try {
       val total = persisted.map(_.count()).getOrElse(-1L)
-      finish(persisted.getOrElse(withSorts), sortCols, distinctField, req, total)
+      finish(persisted.getOrElse(withSorts), sortCols, p.distinctField, p.req, total)
     } finally persisted.foreach(_.unpersist(false))
   }
 
@@ -658,28 +539,19 @@ class Search(index: GraftIndex,
     (in ++ pref).reduceOption(_ || _).getOrElse(lit(false))
   }
 
-  /** Small-query path: pruned posting rows through the forward-index LRU
+  /** [[Planner.Local]]: pruned posting rows through the forward-index LRU
     * cache (zero jobs when warm), then the SAME rank vector + ordering
-    * in-process. Only reachable when the pinned dictionary bounds the scan
-    * size. The filter NEVER collects its full candidate set: it is
-    * semi-joined against the (≤ maxLocalPostings) query candidates, so the
-    * driver materializes at most that many filter survivors. Word counts
-    * come from the pinned (docid,fid)→wc map when the index is small enough,
-    * else a candidate-bounded semi-join. */
-  private def executeQueryLocal(
-      branches: Vector[QueryTree.Op],
-      derivations: Ranker.Derivations,
-      exactParts: Seq[Ranker.ExactPart],
-      searchableFids: Seq[Int],
-      relevantWords: Seq[String],
-      prefixWords: Seq[String],
-      filterDf: Search.Filt,
-      deleted: RoaringBitmap,
-      criteria: Seq[Criterion],
-      req: SearchRequest,
-      sortCmps: Map[Criterion, (Int, Int) => Int] = Map.empty,
-      distinctVals: Option[java.util.HashMap[Integer, String]] = None,
-      drainCap: Long = Long.MaxValue): Option[SearchResult] = {
+    * in-process. None when more than the route's drain cap must drain. The
+    * filter NEVER collects its full candidate set: it is semi-joined
+    * against the query candidates, so the driver materializes at most that
+    * many filter survivors. Word counts come from the pinned
+    * (docid,fid)→wc map when the index is small enough, else a
+    * candidate-bounded semi-join. */
+  private def executeQueryLocal(p: Prepared, route: Planner.Local)
+      : Option[SearchResult] = {
+    val Prepared(req, criteria, _, filterDf, deleted, _, _, branches, derivations,
+      relevantWords, prefixWords, exactParts, searchableFids) = p
+    val Planner.Local(sortCmps, distinctVals, drainCap) = route
     // Lazy words-bucket drain (milli's criterion iterator stops at `limit`,
     // criteria/words.rs:31-106): pass 1 computes only BUCKET MEMBERSHIP per
     // candidate; when the FIRST active criterion is Words, only docs in the
@@ -773,21 +645,11 @@ class Search(index: GraftIndex,
           b
         }
         // filter application: a handle-cached bitmap intersects in-process
-        // (zero jobs warm); a streaming plan semi-joins against the bounded
-        // candidate union — one job, collect bounded by the union's
-        // cardinality (≤ maxLocalPostings), so a broad filter over 10^9
-        // docs never reaches the driver
-        filterDf.foreach {
-          case Left(fbm) => buckets.foreach(_.and(fbm))
-          case Right(fd) =>
-            val union = buckets.reduce((a, b) => RoaringBitmap.or(a, b))
-            if (!union.isEmpty) {
-              val candDf = spark.createDataset(union.toArray.toSeq).toDF("docid")
-              val survivors = fd.join(broadcast(candDf), Seq("docid"), "left_semi")
-                .select($"docid").as[Int].collect()
-              val survBm = Bitmaps.fromInts(survivors)
-              buckets.foreach(_.and(survBm))
-            }
+        // (zero jobs warm); a streaming plan semi-joins against the
+        // candidate union
+        filterDf.foreach { f =>
+          val keep = filterSurvivors(f, buckets.reduce((a, b) => RoaringBitmap.or(a, b)).toArray)
+          buckets.foreach(_.and(keep))
         }
         val total = buckets.iterator.map(_.getLongCardinality).sum
         // lazy drain: whole leading buckets until offset+limit is covered.
@@ -888,9 +750,8 @@ class Search(index: GraftIndex,
           val (cell, bi) = cellStream.next()
           drained += cell.docs.getLongCardinality
           // drain cap: a tie cell too large to rank in-process sends the
-          // whole query to the distributed rank path (only reachable from
-          // the cell-drain admission; the volume-gated entry passes
-          // Long.MaxValue and keeps its r4 behavior exactly)
+          // whole query to the distributed rank path (a volume-gated Local
+          // route's cap is Long.MaxValue)
           if (drained > drainCap) { capHit = true; return }
           if (cell.proxBound) anyBoundCell = true
           val it = cell.docs.getIntIterator
@@ -1072,16 +933,10 @@ class Search(index: GraftIndex,
               scala.collection.mutable.HashMap.empty[String, Array[Int]]).update(w, ps)
         }
         // filter: cached bitmap in-process; otherwise a semi-join against
-        // the bounded candidate set (never a full filter collect — ADVICE r2)
-        filterDf.foreach {
-          case Left(fbm) => m.filterInPlace((d, _) => fbm.contains(d))
-          case Right(fd) =>
-            if (m.nonEmpty) {
-              val candDf = spark.createDataset(m.keys.toSeq).toDF("docid")
-              val survivors = fd.join(broadcast(candDf), Seq("docid"), "left_semi")
-                .select($"docid").as[Int].collect().toSet
-              m.filterInPlace((d, _) => survivors.contains(d))
-            }
+        // the candidate set
+        filterDf.foreach { f =>
+          val keep = filterSurvivors(f, m.keys.toArray)
+          m.filterInPlace((d, _) => keep.contains(d))
         }
         val bucketed: Array[scala.collection.mutable.ArrayBuffer[Int]] =
           Array.fill(branches.length)(scala.collection.mutable.ArrayBuffer.empty[Int])
@@ -1113,23 +968,11 @@ class Search(index: GraftIndex,
     }
     distinctVals match {
       case Some(sm) =>
-        // distinct drain: full rank order, keep the FIRST doc per distinct
-        // value (docs without a value never dedup — the distributed window
-        // partitions them by docid); the distinct-adjusted candidate count
-        // is the kept count over ALL candidates (wordsFirst was disabled,
-        // so `ranked` covers every bucket)
-        val sortedAll = ranked.sorted(ord)
-        val seen = new java.util.HashSet[String]()
-        val ids = Vector.newBuilder[Int]
-        var kept = 0L
-        sortedAll.foreach { r =>
-          val v = sm.get(r._1)
-          if (v == null || seen.add(v)) {
-            if (kept < take) ids += r._1
-            kept += 1
-          }
-        }
-        Some(SearchResult(ids.result().drop(req.offset), kept))
+        // distinct drain over the full rank order; the distinct-adjusted
+        // candidate count is the kept count over ALL candidates (wordsFirst
+        // was disabled, so `ranked` covers every bucket)
+        val (ids, kept) = keepFirst(ranked.sorted(ord).iterator.map(_._1), sm, take)
+        Some(SearchResult(ids.drop(req.offset), kept))
       case None =>
         // bounded top-k selection instead of a full sort: a size-
         // (offset+limit) max-heap over the rank order — O(n) peek
@@ -1155,66 +998,89 @@ class Search(index: GraftIndex,
     }
   }
 
-  /** Finish a bitmap-resolved no-rank query: ascending-docid page + count.
-    * Without a filter this is zero jobs (roaring iteration); with one, the
-    * candidate bitmap rides along as a foldable `bitmap_contains` literal
-    * (deserialized once per task) and only the ≤ offset+limit page plus one
-    * count come back — the driver never materializes the filter set. */
-  private def finishBitmapCandidates(
-      cand: RoaringBitmap,
-      filterDf: Search.Filt,
-      req: SearchRequest,
-      distinctPin: Option[java.util.HashMap[Integer, String]] = None): SearchResult = {
+  /** [[Planner.NoRank]]: ascending-docid page + count of the bitmap-
+    * resolved tree. Without a filter this is zero jobs (roaring iteration);
+    * with a streaming one, the candidate bitmap rides along as a foldable
+    * `bitmap_contains` literal (deserialized once per task) and only the
+    * ≤ offset+limit page plus one count come back — the driver never
+    * materializes the filter set. With a distinct pin, docid order IS the
+    * rank order, so the keep-first walk equals the distributed window's
+    * row_number==1 + count (which always counts exactly); None when that
+    * walk would cover more than 4M candidates. */
+  private def executeNoRank(p: Prepared,
+      distinctPin: Option[java.util.HashMap[Integer, String]]): Option[SearchResult] = {
+    val req = p.req
     val take = req.offset + req.limit
-    /** docid-order page; with a distinct pin, keep-first-per-value (docid
-      * order IS the rank order here, so this equals the distributed
-      * window's row_number==1 + count — which always counts exactly). */
-    def pageOf(c: RoaringBitmap, exactCountAlways: Boolean): SearchResult =
-      distinctPin match {
-        case Some(sm) =>
-          val seen = new java.util.HashSet[String]()
-          val ids = Vector.newBuilder[Int]
-          var kept = 0L
-          val it = c.iterator()
-          while (it.hasNext) {
-            val d = it.next().intValue()
-            val v = sm.get(d)
-            if (v == null || seen.add(v)) {
-              if (kept < take) ids += d
-              kept += 1
+    index.resolveTreeBitmap(p.tree, p.derivations)
+      .filter(c => distinctPin.isEmpty || c.getLongCardinality <= (1L << 22))
+      .map { cand =>
+        cand.andNot(p.deleted)
+        p.filter match {
+          case Some(Right(fd)) =>
+            val filtered = fd.where(graft.functions.GraftFunctions.bitmap_contains(
+              lit(Bitmaps.cboSerialize(cand)), $"docid"))
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            try {
+              val total = if (req.exhaustive) filtered.count() else -1L
+              val page = filtered.orderBy($"docid").limit(take)
+                .select($"docid").as[Int].collect()
+              SearchResult(page.toSeq.drop(req.offset), total)
+            } finally filtered.unpersist(false)
+          case f =>
+            // a cached filter bitmap intersects in-process (zero jobs); its
+            // count honors `exhaustive` like the streaming branch (parity
+            // with the distributed path's -1)
+            f.foreach(_.left.foreach(fbm => cand.and(fbm)))
+            distinctPin match {
+              case Some(sm) =>
+                val (ids, kept) = keepFirst(docids(cand), sm, take)
+                SearchResult(ids.drop(req.offset), kept)
+              case None =>
+                SearchResult(docids(cand).slice(req.offset, take).toSeq,
+                  if (f.isEmpty || req.exhaustive) cand.getLongCardinality else -1L)
             }
-          }
-          SearchResult(ids.result().drop(req.offset), kept)
-        case None =>
-          val ids = Vector.newBuilder[Int]
-          val it = c.iterator()
-          var i = 0
-          while (it.hasNext && i < take) { ids += it.next().intValue(); i += 1 }
-          SearchResult(ids.result().drop(req.offset),
-            if (exactCountAlways || req.exhaustive) c.getLongCardinality else -1L)
+        }
       }
-    filterDf match {
-      case None => pageOf(cand, exactCountAlways = true)
-      case Some(Left(fbm)) =>
-        // cached filter bitmap: in-process intersection, zero jobs. Count
-        // honors `exhaustive` like the streaming branch (parity with the
-        // distributed path's -1).
-        cand.and(fbm)
-        pageOf(cand, exactCountAlways = false)
-      case Some(Right(fd)) =>
-        val filtered = fd.where(graft.functions.GraftFunctions.bitmap_contains(
-          lit(Bitmaps.cboSerialize(cand)), $"docid"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val total = if (req.exhaustive) filtered.count() else -1L
-          val page = filtered.orderBy($"docid").limit(take)
-            .select($"docid").as[Int].collect()
-          SearchResult(page.toSeq.drop(req.offset), total)
-        } finally filtered.unpersist(false)
-    }
   }
 
   // -------------------------------------------------------------- helpers
+
+  /** A bitmap holding every docid of `ids` the filter keeps: a cached
+    * filter bitmap as is (zero jobs), or the survivors of a streaming plan
+    * semi-joined against `ids` — one job whose collect is bounded by |ids|,
+    * so a broad filter's own set never reaches the driver. */
+  private def filterSurvivors(f: Either[RoaringBitmap, DataFrame],
+      ids: => Array[Int]): RoaringBitmap = f match {
+    case Left(fbm) => fbm
+    case Right(fd) =>
+      val cand = ids
+      if (cand.isEmpty) new RoaringBitmap()
+      else Bitmaps.fromInts(
+        fd.join(broadcast(spark.createDataset(cand.toSeq).toDF("docid")),
+          Seq("docid"), "left_semi").select($"docid").as[Int].collect())
+  }
+
+  private def docids(bm: RoaringBitmap): Iterator[Int] =
+    bm.iterator().asScala.map(_.intValue())
+
+  /** Keep-first distinct over docids in rank order (`FacetDistinct`,
+    * facet_distinct.rs): the first `take` kept ids and the kept count over
+    * all of them. Docs without a value never dedup — the distributed window
+    * partitions them by docid. */
+  private def keepFirst(docids: Iterator[Int],
+      pin: java.util.HashMap[Integer, String], take: Int): (Vector[Int], Long) = {
+    val seen = new java.util.HashSet[String]()
+    val ids = Vector.newBuilder[Int]
+    var kept = 0L
+    docids.foreach { d =>
+      val v = pin.get(d)
+      if (v == null || seen.add(v)) {
+        if (kept < take) ids += d
+        kept += 1
+      }
+    }
+    (ids.result(), kept)
+  }
 
   /** join numeric+string facet values for every sort-ish criterion.
     * Multi-valued fields aggregate PER DIRECTION — milli's facet sort is

@@ -55,6 +55,8 @@ class CellDrainAdmissionSpec extends AnyFunSuite with Matchers {
   test("phrase queries never take the widened admission (and stay correct)") {
     val req = SearchRequest(query = Some("\"quick brown\""), limit = 10,
       exhaustive = true)
+    bypass.routes(bypass.prepare(req).get)
+      .collect { case l: Planner.Local => l.drainCap } should not contain Search.MaxLocalDrain
     val b = bypass.execute(req)
     val d = oracle.execute(req)
     b.documentsIds shouldBe d.documentsIds

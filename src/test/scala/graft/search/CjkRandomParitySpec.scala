@@ -118,6 +118,7 @@ class CjkRandomParitySpec extends AnyFunSuite with Matchers {
       withClue(s"#$i query=[$q] typos=${req.authorizeTypos} offset=$offset: ") {
         a.documentsIds shouldBe b.documentsIds
         a.candidates shouldBe b.candidates
+        ForcedRoutes.check(local, req, b)
       }
     }
   }
@@ -145,6 +146,7 @@ class CjkRandomParitySpec extends AnyFunSuite with Matchers {
           withClue(s"#$i query=[$q] offset=$offset: ") {
             a.documentsIds shouldBe b.documentsIds
             a.candidates shouldBe b.candidates
+            ForcedRoutes.check(local, req, b)
           }
         }
     } finally {

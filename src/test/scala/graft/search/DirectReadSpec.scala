@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.TestSpark
+import graft.index.IndexSettings.T
 import QueryTree.MatchingStrategy
 
 /** The driver-side parquet point reader (DirectParquet) must be a PURE
@@ -112,7 +113,7 @@ class DirectReadSpec extends AnyFunSuite with Matchers {
       case (q, i) =>
         val req = SearchRequest(query = Some(q), limit = 17,
           strategy = MatchingStrategy.Last, exhaustive = true)
-        val a = DirectParquet.withFailingRead(search.execute(req))
+        val a = DirectParquet.withFailingRead(T.DocWordPositions)(search.execute(req))
         if (i == 0)
           withClue("the injected fault never reached a direct read: ")(
             DirectParquet.fallbacks.get() should be > fb0)
@@ -122,9 +123,79 @@ class DirectReadSpec extends AnyFunSuite with Matchers {
           a.candidates shouldBe b.candidates
         }
     }
-    val bm25Got = DirectParquet.withFailingRead(new Bm25(live).topK(terms, 5))
+    val bm25Got = DirectParquet.withFailingRead(T.PostingBlocks)(new Bm25(live).topK(terms, 5))
     bm25Got.map(_._1).toSeq shouldBe bm25Want.map(_._1).toSeq
     bm25Got.zip(bm25Want).foreach { case ((_, x), (_, y)) => x shouldBe y +- 1e-9 }
+  }
+
+  // one case per direct read site: on a fresh handle the named table's
+  // first direct read fails, and a forced route whose answer depends on
+  // that read must still equal the distributed answer. Every doc holds
+  // "alphas" and "bravos" (docs 5–199 1–7 apart, docs 0–4 8 apart); docs
+  // 0–4 also hold "bravox" right after "alphas". prefixThreshold 2 puts
+  // "bra" in the prefix dictionary.
+  private lazy val sites: GraftIndex = {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val dir = graft.TestSpark.tempDir("direct-readsites")
+    val filler = Seq("fa", "fb", "fc", "fd", "fe", "ff")
+    val docs = (0 until 200).map { i =>
+      val text =
+        if (i < 5) s"alphas bravox ${filler.mkString(" ")} bravos"
+        else s"alphas ${filler.take(i % 7).mkString(" ")} bravos"
+      (i, text)
+    }.toDF("docid", "text")
+    val stg = graft.index.IndexSettings(searchableFields = Seq("text"),
+      primaryKey = "docid", prefixThreshold = 2)
+    new graft.index.IndexBuilder(spark, stg).build(docs, dir, resume = false)
+    GraftIndex(spark, dir, stg)
+  }
+
+  private def faultedRoute(table: String, route: Planner.Route, req: SearchRequest,
+      warmUp: Seq[SearchRequest] = Nil): GraftIndex = {
+    def fresh() = GraftIndex(TestSpark.spark, sites.dir, sites.settings)
+    val idx = fresh()
+    val search = new Search(idx)
+    warmUp.foreach(search.execute)
+    val fb0 = DirectParquet.fallbacks.get()
+    val got = DirectParquet.withFailingRead(table)(
+      search.prepare(req).flatMap(search.run(_, route)))
+    withClue(s"no direct read of $table failed: ")(
+      DirectParquet.fallbacks.get() should be > fb0)
+    val want = new Search(fresh(), maxLocalPostings = 0).execute(req)
+    withClue(s"$route with a failed $table read: ") {
+      got.map(_.documentsIds) shouldBe Some(want.documentsIds)
+      got.map(_.candidates) shouldBe Some(want.candidates)
+    }
+    idx
+  }
+
+  test("word and prefix bitmaps: a failed direct read falls back (no-rank route)") {
+    val req = SearchRequest(query = Some("alphas bra"), criteriaOverride = Some(Nil),
+      limit = 300)
+    faultedRoute(T.WordDocids, Planner.NoRank(None), req)
+    // a lost prefix row would not change the answer (the dictionary-miss
+    // path rebuilds the range union from word rows), so check that the
+    // handle caches the row the fallback read: every doc holds "bravos"
+    val idx = faultedRoute(T.WordPrefixDocids, Planner.NoRank(None), req)
+    idx.bitmapCache.get("p", Seq("bra"))(_ => Map.empty)("bra")
+      .map(_.getLongCardinality) shouldBe Some(200L)
+  }
+
+  test("pair rows: a failed direct read falls back (local route, proximity cells)") {
+    // the warm-up caches the (alphas, bravos) pairs, so the faulted read
+    // carries only the (alphas, bravox) pairs: without them docs 0–4 leave
+    // the proximity-1 cell, which alone covers the page
+    faultedRoute(T.WordPairProximityDocids,
+      Planner.Local(Map.empty, None, Long.MaxValue),
+      SearchRequest(query = Some("alphas bravoz "), limit = 20),
+      warmUp = Seq(SearchRequest(query = Some("alphas bravos "), limit = 20,
+        authorizeTypos = false)))
+  }
+
+  test("forward index: a failed direct read falls back (local route)") {
+    faultedRoute(T.DocWordPositions, Planner.Local(Map.empty, None, Long.MaxValue),
+      SearchRequest(query = Some("alphas bravos "), limit = 20, offset = 3))
   }
 
   test("spanBand orders by UTF-8 bytes, not UTF-16 strings") {

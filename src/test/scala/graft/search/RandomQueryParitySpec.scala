@@ -76,6 +76,7 @@ class RandomQueryParitySpec extends AnyFunSuite with Matchers {
       withClue(s"#$i query=[$q] typos=$typos filter=$filter offset=$offset: ") {
         a.documentsIds shouldBe b.documentsIds
         a.candidates shouldBe b.candidates
+        ForcedRoutes.check(local, req, b)
       }
     }
   }
@@ -94,6 +95,7 @@ class RandomQueryParitySpec extends AnyFunSuite with Matchers {
       withClue(s"query=[$q] offset=$offset: ") {
         a.documentsIds shouldBe b.documentsIds
         a.candidates shouldBe b.candidates
+        ForcedRoutes.check(local, req, b)
       }
     }
   }
@@ -143,6 +145,7 @@ class RandomQueryParitySpec extends AnyFunSuite with Matchers {
         withClue(s"#$i query=[$q] typos=${req.authorizeTypos} offset=$offset: ") {
           a.documentsIds shouldBe b.documentsIds
           a.candidates shouldBe b.candidates
+          ForcedRoutes.check(local, req, b)
         }
       }
     } finally {
@@ -180,6 +183,7 @@ class RandomQueryParitySpec extends AnyFunSuite with Matchers {
           s"distinct=$distinct offset=$offset: ") {
         a.documentsIds shouldBe b.documentsIds
         a.candidates shouldBe b.candidates
+        ForcedRoutes.check(local, req, b)
       }
     }
   }
