@@ -11,12 +11,6 @@ import org.roaringbitmap.RoaringBitmap
 import graft.core.{Bitmaps, Proximity, Tokenizer}
 import graft.functions.{GraftFunctions => F}
 
-/** One extracted token occurrence: the row shape of the forward-index
-  * shuffle (reference key `(docid, word) → positions`,
-  * `/root/reference/milli/src/index.rs:108-109`). `position` is absolute:
-  * `(fieldId << 16) | wordIndex`. */
-final case class TokenRow(docid: Int, fid: Int, word: String, position: Int)
-
 /** One forward-index row: a doc's sorted absolute positions of one word —
   * the value shape of reference db #6 (`milli/src/index.rs:108-109`).
   * Emitted doc-contiguously by [[IndexBuilder.extractDwp]], so downstream
@@ -87,30 +81,6 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
     docs.sparkSession.createDataFrame(rows, schema)
   }
 
-  /** Tokenize every searchable field of every document.
-    * One `flatMap` = the reference's `extract_docid_word_positions`
-    * (`extract/extract_docid_word_positions.rs:22-92`). */
-  def tokenize(docs: DataFrame): Dataset[TokenRow] = {
-    val fields = settings.searchableFields
-    val fidOf = fieldIds
-    val stop = settings.stopWords
-    val cols = col("docid") +: fields.map(f => fcol(f).cast("string"))
-    docs.select(cols: _*).flatMap { row =>
-      val docid = row.getInt(0)
-      fields.iterator.zipWithIndex.flatMap { case (f, i) =>
-        val text = if (row.isNullAt(i + 1)) null else row.getString(i + 1)
-        if (text == null) Iterator.empty
-        else {
-          val fid = fidOf(f)
-          Tokenizer.tokenize(text).iterator
-            .filterNot(t => stop.contains(t.word))
-            .map(t => TokenRow(docid, fid, t.word,
-              Tokenizer.absoluteFromRelative(fid, t.position)))
-        }
-      }
-    }
-  }
-
   /** Map-side forward-index extraction: tokenize all searchable fields of a
     * doc and group positions per word BEFORE any shuffle (the per-chunk
     * grenad sorter of `extract_docid_word_positions.rs` becomes a per-row
@@ -171,31 +141,24 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
       rawValues(f).select(lit(f).as("field"), col("docid"),
           expr("try_cast(__raw as double)").as("value"))
         .where(col("value").isNotNull)
-    }.reduceOption(_ unionAll _).getOrElse(emptyNumbers)
+    }.reduceOption(_ unionAll _).getOrElse(emptyFrame("field string, docid int, value double"))
     val strings = facetFields.map { f =>
       rawValues(f).select(lit(f).as("field"), col("docid"),
           trim(lower(col("__raw").cast("string"))).as("norm"),
           col("__raw").cast("string").as("orig"))
         .where(col("orig").isNotNull)
-    }.reduceOption(_ unionAll _).getOrElse(emptyStrings)
+    }.reduceOption(_ unionAll _).getOrElse(
+      emptyFrame("field string, docid int, norm string, orig string"))
     val exists = facetFields.map { f =>
       docs.select(lit(f).as("field"), col("docid"))
         .where(fcol(f).isNotNull)
-    }.reduceOption(_ unionAll _).getOrElse(emptyExists)
+    }.reduceOption(_ unionAll _).getOrElse(emptyFrame("field string, docid int"))
     (numbers, strings, exists)
   }
 
-  private def emptyNumbers: DataFrame =
+  private def emptyFrame(ddl: String): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "field string, docid int, value double"))
-  private def emptyStrings: DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "field string, docid int, norm string, orig string"))
-  private def emptyExists: DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL("field string, docid int"))
+      org.apache.spark.sql.types.StructType.fromDDL(ddl))
 
   /** Build every index table under `dir`. `docs` must already carry an
     * `docid` int column (see [[assignDocids]]). Completed tables recorded
@@ -209,8 +172,29 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
       dir: String,
       resume: Boolean = true,
       facetOverride: Option[(DataFrame, DataFrame, DataFrame)] = None): Manifest = {
+    val dag = new DagRunner
+    val run = buildOn(dag, docs, dir, resume, facetOverride, T.buildStages.toSet)
+    try dag.run() finally run.release()
+    run.finish()
+  }
+
+  /** Register the build's table stages on `dag`, one step per table named
+    * after it, restricted to `tables` (a subset of [[IndexSettings.T.buildStages]];
+    * an `addDocuments` delta builds only the base tables it merges). Steps
+    * of other callers may depend on a table's step: it finishes when the
+    * table is committed. The caller runs `dag`, then calls
+    * [[IndexBuilder.BuildRun.release]], then (full builds) `finish`. */
+  private[index] def buildOn(
+      dag: DagRunner,
+      docs: DataFrame,
+      dir: String,
+      resume: Boolean,
+      facetOverride: Option[(DataFrame, DataFrame, DataFrame)],
+      tables: Set[String]): IndexBuilder.BuildRun = {
     val manifest = Manifest.load(dir)
     val t0 = System.nanoTime()
+    def pending(name: String): Boolean =
+      tables(name) && !(resume && manifest.isDone(name, dir))
     // format marker (evaluated BEFORE any stage can record): the serving
     // point-read path (GraftIndex.prefixPairDict) requires BOTH prefix-pair
     // tables to carry the full prox 1..7 range (older builds capped at 4).
@@ -219,7 +203,7 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
     // keeps the marker off and serving on its fallback paths.
     val ppFreshBoth =
       Seq(T.WordPrefixPairProximityDocids, T.PrefixWordPairProximityDocids)
-        .forall(t => !(resume && manifest.isDone(t, dir)))
+        .forall(pending)
 
     // Every bitmap table aggregates millions of (key → roaring bitmap)
     // groups through ObjectHashAggregate; Spark's default sort-based
@@ -232,7 +216,6 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
     // keep Spark's spill-capable default.
     val aggFallbackKey = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
     val aggFallbackPrev = spark.conf.getOption(aggFallbackKey)
-    spark.conf.set(aggFallbackKey, (4 << 20).toString)
     // let AQE coalesce the partitions of CACHED plans too (the build's
     // partial→range-shuffle→persist pattern everywhere): without this,
     // every persisted exchange keeps the full spark.sql.shuffle.partitions
@@ -241,7 +224,6 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
     // like the agg threshold.
     val cachedPartKey = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
     val cachedPartPrev = spark.conf.getOption(cachedPartKey)
-    spark.conf.set(cachedPartKey, "true")
 
     // per-task lineage + metrics (north rule): aggregate task metrics per
     // stage while the build runs; flushed into the manifest at the end.
@@ -272,22 +254,14 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
         }
       }
     }
-    spark.sparkContext.addSparkListener(listener)
 
     // Stages are independent DataFrame lineages off the shared token
-    // Dataset: run each wave's writes CONCURRENTLY (Spark's scheduler
-    // interleaves the jobs across executor slots — same shape as a
-    // multi-tenant cluster). Row counts come from parquet footers, not a
+    // Dataset: each table's write runs as a step of `dag` (Spark's
+    // scheduler interleaves the jobs across executor slots — same shape as
+    // a multi-tenant cluster). Row counts come from parquet footers, not a
     // second scan.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    // daemon threads: a failed build must never keep the JVM alive
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8,
-      (r: Runnable) => { val t = new Thread(r); t.setDaemon(true); t })
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-
     def stage(name: String)(df: => DataFrame): Unit =
-      if (!(resume && manifest.isDone(name, dir))) {
+      if (pending(name)) {
         val s0 = System.nanoTime()
         spark.sparkContext.setJobGroup(name, s"graft build: $name")
         try {
@@ -305,10 +279,8 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
     // critical path (documents → forward index → pair-proximity →
     // prefix-pair tables) while independent stages fill the remaining
     // executor slots — the Spark twin of the reference's rayon fan-out.
-    val done = scala.collection.concurrent.TrieMap.empty[String, Future[Unit]]
     def stageF(name: String, deps: Seq[String])(df: => DataFrame): Unit =
-      done(name) = Future.sequence(deps.map(done(_)))
-        .map(_ => stage(name)(df))
+      dag.step(name, deps)(stage(name)(df))
 
     stageF(T.Documents, Nil) {
       docs.repartitionByRange(col("docid")).sortWithinPartitions("docid")
@@ -360,13 +332,11 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
     // no stage thunk will ever evaluate — skip the tokenize and word-agg
     // pseudo-stages too (a resumed `Main index` replays timings without
     // re-running the forward-index extraction)
-    val fullResume = resume && T.buildStages.forall(manifest.isDone(_, dir))
-    done("__dwp") =
-      if (fullResume) Future.successful(())
-      else if (readsOwnOutput)
-        done(T.Documents).map(_ =>
-          tokenizeInto(spark.read.parquet(s"$dir/${T.Documents}")))
-      else Future(tokenizeInto(docs))
+    val fullResume = !tables.exists(pending)
+    dag.step("__dwp", if (readsOwnOutput) Seq(T.Documents) else Nil) {
+      if (!fullResume) tokenizeInto(
+        if (readsOwnOutput) spark.read.parquet(s"$dir/${T.Documents}") else docs)
+    }
     def dwp = dwpRef
 
     // everything derived from the forward index (launches when __dwp lands)
@@ -386,7 +356,7 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
     // exact_word_docids AND term_dict (occurrences in exact_attributes
     // fields live ONLY in exact_word_docids, extract_word_docids.rs:25-88)
     var wordAggRef: DataFrame = null
-    done("__wordAgg") = if (fullResume) Future.successful(()) else done("__dwp").map { _ =>
+    def aggregateWords(): Unit = {
       spark.sparkContext.setJobGroup("__wordAgg", "graft build: word-table partials")
       try {
         // partials persist only until the MERGED frame materializes (the
@@ -405,9 +375,9 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
           .persist(StorageLevel.MEMORY_AND_DISK)
         wordAggRef.count()
         partials.unpersist()
-        ()
       } finally spark.sparkContext.clearJobGroup()
     }
+    dag.step("__wordAgg", Seq("__dwp"))(if (!fullResume) aggregateWords())
     def mergedWordAgg = wordAggRef
     stageF(T.WordDocids, Seq("__wordAgg")) {
       mergedWordAgg.where(length($"docids") > 0)
@@ -431,7 +401,7 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
         .mapPartitions(it => IndexBuilder.mergeWordPositionRuns(it))
         .toDF("word", "position", "docids")
     }
-    done(T.WordPositionDocids).onComplete { _ =>
+    dag.step("__wordPosRelease", Seq(T.WordPositionDocids)) {
       if (wordPosPartialRef != null) wordPosPartialRef.unpersist()
     }
     stageF(T.DocFidWordCounts, Seq("__dwp")) {
@@ -458,7 +428,7 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
         .mapPartitions(it => IndexBuilder.mergePairPartialRuns(it))
         .toDF("prox", "w1", "w2", "docids")
     }
-    done(T.WordPairProximityDocids).onComplete { _ =>
+    dag.step("__pairRelease", Seq(T.WordPairProximityDocids)) {
       if (pairPartialRef != null) pairPartialRef.unpersist()
     }
     stageF(T.TermDict, Seq("__wordAgg")) {
@@ -491,9 +461,10 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
     stageF(T.PrefixDict, Seq("__wordAgg")) {
       buildPrefixDictFrom(mergedWordAgg.select($"word"))
     }
-    Future.sequence(Seq(done(T.WordDocids), done(T.ExactWordDocids),
-        done(T.TermDict), done(T.PrefixDict)))
-      .onComplete(_ => if (wordAggRef != null) wordAggRef.unpersist())
+    dag.step("__wordAggRelease",
+        Seq(T.WordDocids, T.ExactWordDocids, T.TermDict, T.PrefixDict)) {
+      if (wordAggRef != null) wordAggRef.unpersist()
+    }
     stageF(T.WordPrefixDocids, Seq(T.WordDocids, T.PrefixDict)) {
       buildWordPrefixDocids(dir)
     }
@@ -505,7 +476,7 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
     }
     // prefix-pair proximity tables (#8, #9) — prefix len ≤ 2, full stored
     // prox 1..7 (divergence from prefix_word_pairs/mod.rs:17-18 documented
-    // at prefixPairPartials). Built in ONE shared pass: the committed pair
+    // at prefixPairPartialsBoth). Built in ONE shared pass: the committed pair
     // table is the build's biggest derived input, and reading it once per
     // side cost ~25% of the whole build (NOTES_ROUND5). The shared pass
     // reads the COMMITTED table (consuming the pair stage's pre-merge
@@ -514,12 +485,9 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
     // missing still pays the shared pass once (both sides' partials are
     // computed, the done side's write is skipped by `stage`).
     var ppTables: (DataFrame, DataFrame) = null
-    done("__ppBoth") = Future.sequence(
-        Seq(done(T.WordPairProximityDocids), done(T.PrefixDict))).map { _ =>
-      val needed =
-        Seq(T.WordPrefixPairProximityDocids, T.PrefixWordPairProximityDocids)
-          .exists(t => !(resume && manifest.isDone(t, dir)))
-      if (needed) {
+    dag.step("__ppBoth", Seq(T.WordPairProximityDocids, T.PrefixDict)) {
+      if (Seq(T.WordPrefixPairProximityDocids, T.PrefixWordPairProximityDocids)
+          .exists(pending)) {
         spark.sparkContext.setJobGroup("__ppBoth",
           "graft build: prefix-pair shared pass")
         try ppTables = buildPrefixPairTablesBoth(dir)
@@ -535,13 +503,11 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
     // settings reindex or non-deterministic input still reads the
     // committed table
     var facets: (DataFrame, DataFrame, DataFrame) = null
-    done("__facets") =
-      if (facetOverride.isDefined) { facets = facetOverride.get; Future.successful(()) }
-      else if (readsOwnOutput) done(T.Documents).map { _ =>
-        facets = extractFacets(spark.read.parquet(s"$dir/${T.Documents}"))
-        ()
-      }
-      else { facets = extractFacets(docs); Future.successful(()) }
+    val facetsFromTable = facetOverride.isEmpty && readsOwnOutput
+    dag.step("__facets", if (facetsFromTable) Seq(T.Documents) else Nil) {
+      facets = facetOverride.getOrElse(extractFacets(
+        if (facetsFromTable) spark.read.parquet(s"$dir/${T.Documents}") else docs))
+    }
     stageF(T.DocFacetNumbers, Seq("__facets")) {
       facets._1.repartitionByRange($"field", $"value")
         .sortWithinPartitions("field", "value")
@@ -566,24 +532,31 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
     // both fixture-override and column-extracted geo.
     stageF(T.GeoCells, Seq(T.DocFacetNumbers)) { buildGeoCells(dir) }
 
-    try Await.result(Future.sequence(done.values.toSeq), Duration.Inf)
-    finally {
-      if (dwpRef != null) dwpRef.unpersist()
-      releaseTransients()
-      pool.shutdown()
-      aggFallbackPrev match {
-        case Some(v) => spark.conf.set(aggFallbackKey, v)
-        case None    => spark.conf.unset(aggFallbackKey)
-      }
-      cachedPartPrev match {
-        case Some(v) => spark.conf.set(cachedPartKey, v)
-        case None    => spark.conf.unset(cachedPartKey)
-      }
-    }
-    val ppMarker = new java.io.File(s"$dir/${IndexBuilder.PrefixPairsProx7Marker}")
-    if (ppFreshBoth && !ppMarker.exists()) ppMarker.createNewFile()
-    finishBuild(manifest, taskAgg, stageGroup, listener, dir, t0)
-    manifest
+    // set after registration, which may throw: no step runs before `dag.run()`
+    spark.conf.set(aggFallbackKey, (4 << 20).toString)
+    spark.conf.set(cachedPartKey, "true")
+    spark.sparkContext.addSparkListener(listener)
+    IndexBuilder.BuildRun(
+      release = () => {
+        Seq(dwpRef, wordAggRef, wordPosPartialRef, pairPartialRef)
+          .foreach(r => if (r != null) r.unpersist())
+        releaseTransients()
+        aggFallbackPrev match {
+          case Some(v) => spark.conf.set(aggFallbackKey, v)
+          case None    => spark.conf.unset(aggFallbackKey)
+        }
+        cachedPartPrev match {
+          case Some(v) => spark.conf.set(cachedPartKey, v)
+          case None    => spark.conf.unset(cachedPartKey)
+        }
+        spark.sparkContext.removeSparkListener(listener)
+      },
+      finish = () => {
+        val ppMarker = new java.io.File(s"$dir/${IndexBuilder.PrefixPairsProx7Marker}")
+        if (ppFreshBoth && !ppMarker.exists()) ppMarker.createNewFile()
+        finishBuild(manifest, taskAgg, stageGroup, dir, t0)
+        manifest
+      })
   }
 
   // ------------------------------------------------- derived-table builders
@@ -688,43 +661,6 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
       .toDF("prefix", "position", "docids")
   }
 
-  /** Core of the prefix-pair builds: `src` is any (prox, w1, w2, bitmap)
-    * frame — the committed pair table (refresh paths) or the pair-stage
-    * PARTIALS (full build, where consuming pre-merge partials lets these
-    * stages overlap the pair table's own shuffle+commit instead of
-    * serializing behind it; bitmap union is associative, so merged groups
-    * and partial fragments aggregate to identical bytes). */
-  private def prefixPairFrom(src: DataFrame, prefixes: Set[String],
-      rightSide: Boolean): DataFrame = {
-    val partials = transient(
-      src.mapPartitions(it =>
-          IndexBuilder.prefixPairPartials(it, prefixes, rightSide))
-        .toDF((if (rightSide) Seq("w1", "prefix") else Seq("prefix", "w2")) ++
-          Seq("prox", "partial"): _*))
-    if (rightSide)
-      partials.repartitionByRange($"prefix", $"w1", $"prox")
-        .sortWithinPartitions("prefix", "w1", "prox")
-        .mapPartitions(it => IndexBuilder.mergePairPartialRuns(it))
-        .toDF("prox", "w1", "prefix", "docids")
-    else
-      partials.repartitionByRange($"prefix", $"w2", $"prox")
-        .sortWithinPartitions("prefix", "w2", "prox")
-        .mapPartitions(it => IndexBuilder.mergePairPartialRuns(it))
-        .toDF("prox", "prefix", "w2", "docids")
-  }
-
-  def buildWordPrefixPairProximity(dir: String, only: Option[DataFrame] = None): DataFrame =
-    prefixPairFrom(
-      spark.read.parquet(s"$dir/${T.WordPairProximityDocids}")
-        .select($"prox", $"w1", $"w2", $"docids"),
-      prefixSet(dir, only, maxLen = 2), rightSide = true)
-
-  def buildPrefixWordPairProximity(dir: String, only: Option[DataFrame] = None): DataFrame =
-    prefixPairFrom(
-      spark.read.parquet(s"$dir/${T.WordPairProximityDocids}")
-        .select($"prox", $"w1", $"w2", $"docids"),
-      prefixSet(dir, only, maxLen = 2), rightSide = false)
-
   /** Single-pass build of BOTH prefix-pair tables (#8 and #9): one scan +
     * partition-local combine over the committed pair table emits the two
     * sides' partials together ([[IndexBuilder.prefixPairPartialsBoth]]),
@@ -736,9 +672,11 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
     * range-partitioned frame preserves per-file sort and bounds, so
     * footer pruning on (prefix, word, prox) is unchanged. The merged
     * cache is registered as a transient — released by the caller's
-    * `releaseTransients()` / build-end. */
-  def buildPrefixPairTablesBoth(dir: String): (DataFrame, DataFrame) = {
-    val prefixes = prefixSet(dir, None, maxLen = 2)
+    * `releaseTransients()` / build-end. `only`: restrict both tables to
+    * these prefixes (incremental refresh). */
+  def buildPrefixPairTablesBoth(dir: String,
+      only: Option[DataFrame] = None): (DataFrame, DataFrame) = {
+    val prefixes = prefixSet(dir, only, maxLen = 2)
     val partials = spark.read.parquet(s"$dir/${T.WordPairProximityDocids}")
       .select($"prox", $"w1", $"w2", $"docids")
       .mapPartitions(it => IndexBuilder.prefixPairPartialsBoth(it, prefixes))
@@ -770,10 +708,7 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
     // one footer-pruned existence probe: most indexes have no geo — skip
     // the join/shuffle and commit an empty (but schema-correct) table
     if (base.where($"field" === "_geo.lat").limit(1).isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "cell bigint, docid int, lat double, lng double"))
+      return emptyFrame("cell bigint, docid int, lat double, lng double")
     val lats = base.where($"field" === "_geo.lat")
       .select($"docid", $"value".cast("double").as("lat"))
     val lngs = base.where($"field" === "_geo.lng")
@@ -798,134 +733,150 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
       onlyFields.fold(base)(fs => base.where($"field".isin(fs: _*))), transient)
   }
 
-  /** Rebuild every derived table (prefix dict + the four prefix posting
-    * tables + facet level trees) from the CURRENT base tables under `dir` —
-    * called by `Updates.addDocuments` after merging bases so incremental
-    * indexes never serve stale derived data. */
-  def refreshDerivedTables(dir: String,
-      writeOver: (DataFrame, String) => Unit): Unit = {
-    writeOver(buildPrefixDict(dir), s"$dir/${T.PrefixDict}")
-    writeOver(buildWordPrefixDocids(dir), s"$dir/${T.WordPrefixDocids}")
-    writeOver(buildExactWordPrefixDocids(dir), s"$dir/${T.ExactWordPrefixDocids}")
-    writeOver(buildWordPrefixPositionDocids(dir), s"$dir/${T.WordPrefixPositionDocids}")
-    val (ppWordPrefix, ppPrefixWord) = buildPrefixPairTablesBoth(dir)
-    writeOver(ppWordPrefix, s"$dir/${T.WordPrefixPairProximityDocids}")
-    writeOver(ppPrefixWord, s"$dir/${T.PrefixWordPairProximityDocids}")
-    writeOver(buildFacetNumberLevels(dir), s"$dir/${T.FacetNumberLevels}")
-    writeOver(buildFacetStringLevels(dir), s"$dir/${T.FacetStringLevels}")
-    releaseTransients()
-  }
-
-  /** Prefix-DIFF incremental refresh — the Spark twin of the reference's
-    * new/deleted-prefix computation (`update/words_prefixes_fst.rs:43-96`):
-    * after a batch merge, only prefixes whose underlying rows could have
-    * changed are rebuilt; everything else carries over from the current
-    * tables. Affected = prefixes of words occurring in the batch (a prefix
-    * row aggregates word rows; only batch words' rows changed) ∪ prefixes
-    * added to ∪ removed from the recomputed prefix dictionary. Facet levels
-    * rebuild only the FIELDS present in the batch. At 10^9-doc indexes with
-    * small batches this turns the per-batch refresh from
-    * O(all derived rows) into O(rows under the batch's vocabulary). */
-  def refreshDerivedTablesIncremental(dir: String, deltaDir: String,
+  /** Refresh every derived table after `Updates.addDocuments` merged a
+    * batch's base tables: the prefix dictionary, the prefix posting tables
+    * (#4, #5, the prefix-position table and both prefix-pair tables) and
+    * the two facet level trees. Each refresh is a step on `dag` that
+    * starts once its inputs are in place: `merged(t)` names the step after
+    * which base table `t` holds the merged rows.
+    *
+    * Prefix DIFF — the Spark twin of the reference's new/deleted-prefix
+    * computation (`update/words_prefixes_fst.rs:43-96`): only prefixes
+    * whose rows could have changed are rebuilt, and every other file
+    * carries over byte-for-byte. Affected = prefixes of the batch's words
+    * (`deltaDir`'s term_dict; a prefix row aggregates word rows, and only
+    * batch words' rows changed) ∪ prefixes added to ∪ removed from the
+    * recomputed dictionary; with no prefix dictionary yet, the prefix
+    * tables rebuild whole. Both prefix-pair tables refresh from ONE scan
+    * of the merged pair table. Facet levels rebuild only the FIELDS in the
+    * batch. A small batch pays for its own vocabulary, not the index. */
+  private[index] def refreshDerivedTables(dag: DagRunner, dir: String,
+      deltaDir: String, merged: String => String,
       writeOver: (DataFrame, String) => Unit): Unit = {
     def exists(p: String) = new java.io.File(p).exists()
+    def prefixes(path: String): Set[String] =
+      spark.read.parquet(path).select($"prefix").as[String].collect().toSet
     val dictPath = s"$dir/${T.PrefixDict}"
-    if (!exists(dictPath) || !exists(s"$deltaDir/${T.TermDict}")) {
-      refreshDerivedTables(dir, writeOver); return
+    // the diff's inputs the merge leaves alone — the current dictionary and
+    // the batch's prefixes — are read while term_dict merges (step
+    // `T.TermDict` is the delta build's commit of the batch dictionary)
+    var oldDict: Option[Set[String]] = None
+    var batchPrefixes = Set.empty[String]
+    dag.step("refresh:batch_prefixes", Seq(T.TermDict)) {
+      if (exists(dictPath)) {
+        oldDict = Some(prefixes(dictPath))
+        batchPrefixes = spark.read.parquet(s"$deltaDir/${T.TermDict}")
+          .select(explode(sequence(lit(1),
+            least(length($"word"), lit(settings.maxPrefixLength)))).as("n"), $"word")
+          .select($"word".substr(lit(1), $"n").as("prefix")).distinct()
+          .as[String].collect().toSet
+      }
     }
-    val deltaWords = spark.read.parquet(s"$deltaDir/${T.TermDict}").select($"word")
-    val deltaPrefixes = deltaWords
-      .select(explode(sequence(lit(1),
-        least(length($"word"), lit(settings.maxPrefixLength)))).as("n"), $"word")
-      .select($"word".substr(lit(1), $"n").as("prefix")).distinct()
-    val oldDict = spark.read.parquet(dictPath).select($"prefix")
-    val newDict = buildPrefixDict(dir)
-    val added = newDict.select($"prefix").join(oldDict, Seq("prefix"), "left_anti")
-    val removed = oldDict.join(newDict.select($"prefix"), Seq("prefix"), "left_anti")
-    val affected = deltaPrefixes.unionByName(added).unionByName(removed)
-      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    affected.count() // materialize BEFORE the dict (its lineage) is replaced
-    try {
-      writeOver(newDict, dictPath)
+    // None until the dict step runs, and after it when the index had no
+    // dictionary: every prefix table is then rebuilt whole
+    var affected: Option[DataFrame] = None
+    val dictStep = "refresh:" + T.PrefixDict
+    dag.step(dictStep, Seq(merged(T.TermDict), "refresh:batch_prefixes")) {
+      writeOver(buildPrefixDict(dir), dictPath)
+      affected = oldDict.map { old =>
+        val now = prefixes(dictPath)
+        // a driver-side relation: later table swaps cannot re-evaluate it
+        (batchPrefixes ++ (now -- old) ++ (old -- now)).toSeq.toDF("prefix")
+      }
+    }
 
-      def refresh(name: String, sortCols: Seq[String],
-          build: Option[DataFrame] => DataFrame): Unit = {
+    // O(touched files): only files whose footer prefix interval intersects
+    // the affected set are opened — in them, affected prefixes' rows are
+    // replaced by the rebuild (prefixes dropped from the dict vanish:
+    // removed ⊆ affected), every other FILE carries over byte-for-byte.
+    // The prefix tables are written prefix-sorted precisely so this (and
+    // serving point reads) can footer-prune. `only` None: replace whole.
+    def replace(name: String, sortCols: Seq[String], only: Option[DataFrame],
+        rebuilt: DataFrame): Unit = {
+      val path = s"$dir/$name"
+      only match {
+        case None => writeOver(rebuilt, path)
+        case Some(aff) =>
+          TableIO.mergeTouchedFiles(spark, path, aff, "prefix") { (touchedDf, a) =>
+            touchedDf.join(broadcast(a), Seq("prefix"), "left_anti")
+              .unionByName(rebuilt)
+              .repartitionByRange(sortCols.map(col): _*)
+              .sortWithinPartitions(sortCols.head, sortCols.tail: _*)
+          }
+      }
+    }
+    def refresh(name: String, base: String, sortCols: Seq[String],
+        build: Option[DataFrame] => DataFrame): Unit =
+      dag.step("refresh:" + name, Seq(merged(base), dictStep)) {
+        val only = affected.filter(_ => exists(s"$dir/$name"))
+        replace(name, sortCols, only, build(only))
+      }
+    refresh(T.WordPrefixDocids, T.WordDocids, Seq("prefix"),
+      buildWordPrefixDocids(dir, _))
+    refresh(T.ExactWordPrefixDocids, T.ExactWordDocids, Seq("prefix"),
+      buildExactWordPrefixDocids(dir, _))
+    refresh(T.WordPrefixPositionDocids, T.WordPositionDocids,
+      Seq("prefix", "position"), buildWordPrefixPositionDocids(dir, _))
+    // both prefix-pair tables from one pass; a missing side rebuilds both
+    val (wordPrefix, prefixWord) =
+      (T.WordPrefixPairProximityDocids, T.PrefixWordPairProximityDocids)
+    var pairOnly: Option[DataFrame] = None
+    var pairs: (DataFrame, DataFrame) = null
+    dag.step("refresh:prefix_pairs", Seq(merged(T.WordPairProximityDocids), dictStep)) {
+      pairOnly = affected.filter(_ =>
+        exists(s"$dir/$wordPrefix") && exists(s"$dir/$prefixWord"))
+      pairs = buildPrefixPairTablesBoth(dir, pairOnly)
+    }
+    dag.step("refresh:" + wordPrefix, Seq("refresh:prefix_pairs"))(
+      replace(wordPrefix, Seq("prefix", "w1", "prox"), pairOnly, pairs._1))
+    dag.step("refresh:" + prefixWord, Seq("refresh:prefix_pairs"))(
+      replace(prefixWord, Seq("prefix", "w2", "prox"), pairOnly, pairs._2))
+
+    // facet levels: VALUE-level incremental merge (FacetIncremental —
+    // the reference's FacetsUpdateIncremental re-expressed set-based):
+    // small deltas union into their containing groups per level with
+    // splits; fields whose delta is large (the reference's 1/50
+    // criterion), new fields, and top-level growth take the bulk
+    // field-grain rebuild instead
+    def refreshLevels(name: String, deltaBase: String, boundCol: String,
+        build: Option[Seq[String]] => DataFrame): Unit =
+      dag.step("refresh:" + name, Seq(merged(deltaBase))) {
         val path = s"$dir/$name"
-        if (!exists(path)) { writeOver(build(None), path); return }
-        // O(touched files): only files whose footer prefix interval
-        // intersects the affected set are opened — in them, affected
-        // prefixes' rows are replaced by the rebuild (prefixes dropped
-        // from the dict vanish: removed ⊆ affected), every other FILE
-        // carries over byte-for-byte. The prefix tables are written
-        // prefix-sorted precisely so this (and serving point reads)
-        // can footer-prune.
-        val rebuilt = build(Some(affected))
-        TableIO.mergeTouchedFiles(spark, path, affected, "prefix") { (touchedDf, aff) =>
-          touchedDf.join(broadcast(aff), Seq("prefix"), "left_anti")
-            .unionByName(rebuilt)
-            .repartitionByRange(sortCols.map(col): _*)
-            .sortWithinPartitions(sortCols.head, sortCols.tail: _*)
+        if (!exists(path) || !exists(s"$deltaDir/$deltaBase"))
+          writeOver(build(None), path)
+        else {
+          val delta = spark.read.parquet(s"$deltaDir/$deltaBase")
+            .select($"field", col(boundCol).as("bound"), $"docid")
+          // O(touched files): the level tables are field-major sorted, so
+          // only files whose footer field interval meets the batch's
+          // fields are opened — fields absent from the batch
+          // (heterogeneous-schema corpora) carry their files over
+          // byte-for-byte, and a batch with no faceted field keeps every
+          // row. A touched field's rows live entirely inside the touched
+          // files, so the merge's 1/50 bulk-vs-incremental criterion still
+          // sees full field sizes.
+          TableIO.mergeTouchedFiles(spark, path, delta, "field") { (touchedDf, _) =>
+            val m = FacetIncremental.merge(spark, touchedDf, delta)
+            val out =
+              if (m.rebuildFields.isEmpty) m.rows
+              else m.rows.unionByName(build(Some(m.rebuildFields)))
+            out.repartitionByRange(col("field"), col("level"), col("bound"))
+              .sortWithinPartitions("field", "level", "bound")
+          }
         }
       }
-      refresh(T.WordPrefixDocids, Seq("prefix"), buildWordPrefixDocids(dir, _))
-      refresh(T.ExactWordPrefixDocids, Seq("prefix"), buildExactWordPrefixDocids(dir, _))
-      refresh(T.WordPrefixPositionDocids, Seq("prefix", "position"),
-        buildWordPrefixPositionDocids(dir, _))
-      refresh(T.WordPrefixPairProximityDocids, Seq("prefix", "w1", "prox"),
-        buildWordPrefixPairProximity(dir, _))
-      refresh(T.PrefixWordPairProximityDocids, Seq("prefix", "w2", "prox"),
-        buildPrefixWordPairProximity(dir, _))
-
-      // facet levels: VALUE-level incremental merge (FacetIncremental —
-      // the reference's FacetsUpdateIncremental re-expressed set-based):
-      // small deltas union into their containing groups per level with
-      // splits; fields whose delta is large (the reference's 1/50
-      // criterion), new fields, and top-level growth take the bulk
-      // field-grain rebuild instead
-      def refreshLevels(name: String, deltaBase: String, boundCol: String,
-          build: Option[Seq[String]] => DataFrame): Unit = {
-        val path = s"$dir/$name"
-        if (!exists(path) || !exists(s"$deltaDir/$deltaBase")) {
-          writeOver(build(None), path); return
-        }
-        val delta = spark.read.parquet(s"$deltaDir/$deltaBase")
-          .select($"field", col(boundCol).as("bound"), $"docid")
-        val fields = delta.select($"field").distinct().as[String].collect().toSeq
-        if (fields.isEmpty) return // nothing faceted in the batch: keep all
-        // O(touched files): the level tables are field-major sorted, so
-        // only files whose footer field interval meets the batch's fields
-        // are opened — fields absent from the batch (heterogeneous-schema
-        // corpora) carry their files over byte-for-byte. A touched field's
-        // rows live entirely inside the touched files, so the merge's
-        // 1/50 bulk-vs-incremental criterion still sees full field sizes.
-        TableIO.mergeTouchedFiles(spark, path,
-            delta.select($"field").distinct(), "field") { (touchedDf, _) =>
-          val m = FacetIncremental.merge(spark, touchedDf, delta)
-          val out =
-            if (m.rebuildFields.isEmpty) m.rows
-            else m.rows.unionByName(build(Some(m.rebuildFields)))
-          out.repartitionByRange(col("field"), col("level"), col("bound"))
-            .sortWithinPartitions("field", "level", "bound")
-        }
-      }
-      refreshLevels(T.FacetNumberLevels, T.DocFacetNumbers, "value",
-        buildFacetNumberLevels(dir, _))
-      refreshLevels(T.FacetStringLevels, T.DocFacetStrings, "norm",
-        buildFacetStringLevels(dir, _))
-    } finally {
-      affected.unpersist(false)
-      releaseTransients()
-    }
+    refreshLevels(T.FacetNumberLevels, T.DocFacetNumbers, "value",
+      buildFacetNumberLevels(dir, _))
+    refreshLevels(T.FacetStringLevels, T.DocFacetStrings, "norm",
+      buildFacetStringLevels(dir, _))
   }
 
   private def finishBuild(
       manifest: Manifest,
       taskAgg: java.util.concurrent.ConcurrentHashMap[Int, Array[Long]],
       stageGroup: java.util.concurrent.ConcurrentHashMap[Int, String],
-      listener: org.apache.spark.scheduler.SparkListener,
       dir: String,
       t0: Long): Unit = {
-    spark.sparkContext.removeSparkListener(listener)
     import scala.jdk.CollectionConverters._
     val stages = taskAgg.asScala
     val totals = Array(0L, 0L, 0L, 0L, 0L)
@@ -952,6 +903,10 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
 }
 
 object IndexBuilder extends Serializable {
+
+  /** A build registered by `buildOn`: after the run, `release` drops its caches
+    * and restores the session; `finish` writes a full build's manifest. */
+  private[index] final case class BuildRun(release: () => Unit, finish: () => Manifest)
 
   /** Root marker: this index's prefix-pair tables (#8/#9) carry the full
     * stored prox range 1..7 — the serving point-read path requires it
@@ -1023,13 +978,6 @@ object IndexBuilder extends Serializable {
         (sum(when(col("tolerant_occ"), 1).otherwise(0)) === 0).as("exact_only"),
         sum($"occ").as("ttf"))
       .repartitionByRange(col("word")).sortWithinPartitions("word")
-  }
-
-  /** Posting blocks from the forward index: tf = positions per (word, doc). */
-  def buildPostingBlocksFromDwp(spark: SparkSession, dwp: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions._
-    buildPostingBlocksFromTf(spark,
-      dwp.select(col("word"), col("docid"), size(col("positions")).as("tf")))
   }
 
   /** Posting blocks from an ALREADY (word, docid)-sorted source (the
@@ -1435,83 +1383,22 @@ object IndexBuilder extends Serializable {
   /** Partition-local combine for the prefix-pair tables (#8/#9): input is
     * the committed pair table's (prox, w1, w2, docids) rows — already
     * (w1, w2)-sorted, so each partition's key set is nearly disjoint from
-    * its neighbours' — and output is (left, right, prox, partial-bitmap)
-    * where the prefix side is `rightSide ? prefix(w2) : prefix(w1)`
-    * (prefix len ≤ 2, prefix_word_pairs/mod.rs:17-18). DIVERGENCE: the
-    * reference also caps prox ≤ 4 and degrades prefix proximity beyond it
-    * (`criteria/mod.rs:656-707`); we keep the full stored prox range 1..7
-    * so the serving prefix-pair path (`GraftIndex.pairProxPrefixBitmaps`)
-    * is pure point reads — no query-time ranged aggregation over the pair
-    * table, ever. Long-range pairs are the rarest rows, so the extra
-    * storage is small. Replaces an explode + broadcast join +
-    * bitmap_union_agg + second shuffle with one shuffle of pre-unioned
-    * partials. */
-  def prefixPairPartials(
-      rows: Iterator[org.apache.spark.sql.Row],
-      prefixes: Set[String],
-      rightSide: Boolean,
-      flushKeys: Int = 1 << 20): Iterator[(String, String, Int, Array[Byte])] = {
-    val intern = new mutable.AnyRefMap[String, Int]()
-    val internWords = new mutable.ArrayBuffer[String]()
-    val agg = new mutable.LongMap[BmAcc]()
-    def internOf(w: String): Int =
-      intern.getOrElseUpdate(w, { internWords += w; internWords.length - 1 })
-    def drain(): Iterator[(String, String, Int, Array[Byte])] = {
-      if (agg.isEmpty) return Iterator.empty
-      val buf = new mutable.ArrayBuffer[(String, String, Int, Array[Byte])](agg.size)
-      agg.foreachEntry { (key, acc) =>
-        buf += ((internWords((key >>> 33).toInt),
-          internWords(((key >>> 3) & ((1L << 30) - 1)).toInt),
-          (key & 7).toInt, acc.bytes))
-      }
-      agg.clear()
-      buf.iterator
-    }
-    new Iterator[(String, String, Int, Array[Byte])] {
-      private var batch: Iterator[(String, String, Int, Array[Byte])] = Iterator.empty
-      private def pump(): Unit =
-        while (!batch.hasNext && (rows.hasNext || agg.nonEmpty)) {
-          while (rows.hasNext && agg.size < flushKeys) {
-            val r = rows.next()
-            val prox = r.getInt(0)
-            if (prox <= 7) {
-              val w1 = r.getString(1)
-              val w2 = r.getString(2)
-              val base = if (rightSide) w2 else w1
-              val lim = math.min(base.length, 2)
-              var n = 1
-              while (n <= lim) {
-                val p = base.substring(0, n)
-                if (prefixes(p)) {
-                  val a = internOf(if (rightSide) w1 else p)
-                  val b = internOf(if (rightSide) p else w2)
-                  val key = (a.toLong << 33) | (b.toLong << 3) | prox
-                  val acc = agg.getOrNull(key)
-                  val bytes = r.getAs[Array[Byte]](3)
-                  if (acc == null) { val x = new BmAcc; x.add(bytes); agg(key) = x }
-                  else acc.add(bytes)
-                }
-                n += 1
-              }
-            }
-          }
-          batch = drain()
-        }
-      override def hasNext: Boolean = { pump(); batch.hasNext }
-      override def next(): (String, String, Int, Array[Byte]) = { pump(); batch.next() }
-    }
-  }
-
-  /** Both-sides variant of [[prefixPairPartials]]: ONE pass over the pair
-    * table emits partials for #8 (prefix of w2) AND #9 (prefix of w1)
-    * together, so the 5.9M-row committed pair table — the build's biggest
-    * derived input — is scanned and cbo-decoded once instead of once per
-    * table. The side rides in the prox int (`sprox = prox | side<<3`,
-    * side 0 = word_prefix_pair, side 1 = prefix_word_pair; prox ≤ 7 so
-    * the ranges 1..7 / 9..15 never collide), which keeps the downstream
-    * shuffle + [[mergePairPartialRuns]] run-walk shared verbatim. Output
-    * tuples are (prefix, word, sprox, partial) — prefix-major, matching
-    * both tables' on-disk sort (prefix, word, prox). */
+    * its neighbours' — and ONE pass emits partials for #8 (prefix of w2)
+    * AND #9 (prefix of w1) together, so the pair table — the build's
+    * biggest derived input — is scanned and cbo-decoded once instead of
+    * once per table. Prefix len ≤ 2 (prefix_word_pairs/mod.rs:17-18).
+    * DIVERGENCE: the reference also caps prox ≤ 4 and degrades prefix
+    * proximity beyond it (`criteria/mod.rs:656-707`); we keep the full
+    * stored prox range 1..7 so the serving prefix-pair path
+    * (`GraftIndex.pairProxPrefixBitmaps`) is pure point reads — no
+    * query-time ranged aggregation over the pair table, ever. Long-range
+    * pairs are the rarest rows, so the extra storage is small. The side
+    * rides in the prox int (`sprox = prox | side<<3`, side 0 =
+    * word_prefix_pair, side 1 = prefix_word_pair; prox ≤ 7 so the ranges
+    * 1..7 / 9..15 never collide), which keeps the downstream shuffle +
+    * [[mergePairPartialRuns]] run-walk shared verbatim. Output tuples are
+    * (prefix, word, sprox, partial) — prefix-major, matching both tables'
+    * on-disk sort (prefix, word, prox). */
   def prefixPairPartialsBoth(
       rows: Iterator[org.apache.spark.sql.Row],
       prefixes: Set[String],
@@ -1935,16 +1822,6 @@ object IndexBuilder extends Serializable {
       ceilDiv(totalL0 * 4 / 3 + 1, rowsPerFile))).toInt
     all.repartitionByRange(outParts, col("field"), col("level"), col("bound"))
       .sortWithinPartitions("field", "level", "bound")
-  }
-
-  /** FOR-compressed posting blocks with block-max metadata (north rule):
-    * tf per (word, docid), shuffled once on word, blocks built inside a
-    * `mapPartitions` over word-sorted runs. */
-  def buildPostingBlocks(spark: SparkSession, tokens: DataFrame): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    buildPostingBlocksFromTf(spark,
-      tokens.groupBy($"word", $"docid").agg(count(lit(1)).cast("int").as("tf")))
   }
 
   /** Encode (word, docid, tf) rows into FOR blocks: one shuffle on word,

@@ -2,6 +2,7 @@ package graft.index
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** File-granular parquet table maintenance shared by [[Updates]] and the
   * derived-table refresh: atomic swap-in replaces, footer-stats touched-file
@@ -154,18 +155,12 @@ object TableIO {
   def fileKeyIntervals(spark: SparkSession, path: String, keyCol: String)
       : Array[(String, Option[(Array[Byte], Array[Byte])])] = {
     import scala.jdk.CollectionConverters._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val files = Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-    files.map { f =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf))
-      try {
+    parquetFiles(path).map { f =>
+      withFooter(spark, f) { footer =>
         var lo: Array[Byte] = null
         var hi: Array[Byte] = null
         var ok = true
-        reader.getFooter.getBlocks.asScala.foreach { b =>
+        footer.getBlocks.asScala.foreach { b =>
           b.getColumns.asScala.find(_.getPath.toDotString == keyCol) match {
             case Some(cc) =>
               val st = cc.getStatistics
@@ -181,7 +176,7 @@ object TableIO {
         }
         (f.getAbsolutePath,
           if (ok && lo != null) Some((lo, hi)) else None)
-      } finally reader.close()
+      }
     }
   }
 
@@ -244,15 +239,42 @@ object TableIO {
     invalidate(spark, oldPath)
   }
 
-  /** File-level append for tables that only gain rows: move the delta's
-    * parquet files into the live dir under unique names — zero Spark jobs,
-    * O(batch) IO. Returns false (caller falls back to a reconciling union
-    * rewrite) when the schemas differ. */
-  def appendFiles(spark: SparkSession, oldPath: String, newPath: String): Boolean = {
-    if (spark.read.parquet(oldPath).schema != spark.read.parquet(newPath).schema)
-      return false
-    val files = new java.io.File(newPath).listFiles()
+  /** (name, type) of each column of the Spark row schema stored in the
+    * footer of one parquet file under `path`. Column nullability is left
+    * out, as a parquet read makes every column nullable; a nested
+    * difference only costs the caller's rewrite fallback. None when the
+    * dir has no parquet file or the footer carries no Spark schema. */
+  private def footerColumns(spark: SparkSession, path: String)
+      : Option[Seq[(String, DataType)]] =
+    parquetFiles(path).headOption.flatMap(f => withFooter(spark, f) { footer =>
+      Option(footer.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+        .map(json => DataType.fromJson(json).asInstanceOf[StructType]
+          .map(c => c.name -> c.dataType))
+    })
+
+  private def withFooter[A](spark: SparkSession, f: java.io.File)(
+      read: org.apache.parquet.hadoop.metadata.ParquetMetadata => A): A = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.getAbsolutePath),
+        spark.sparkContext.hadoopConfiguration))
+    try read(reader.getFooter) finally reader.close()
+  }
+
+  private def parquetFiles(path: String): Array[java.io.File] =
+    Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+
+  /** File-level append for tables that only gain rows: copy the delta's
+    * parquet files into the live dir under unique names — zero Spark jobs
+    * (the schemas compare from one footer per dir), O(batch) IO. Returns
+    * false (caller falls back to a reconciling union rewrite) when the
+    * schemas differ or either dir has no footer schema to compare. */
+  def appendFiles(spark: SparkSession, oldPath: String, newPath: String): Boolean = {
+    val oldColumns = footerColumns(spark, oldPath)
+    if (oldColumns.isEmpty || oldColumns != footerColumns(spark, newPath)) return false
+    val files = parquetFiles(newPath)
     val stamp = java.lang.Long.toHexString(System.nanoTime())
     files.foreach { f =>
       java.nio.file.Files.copy(f.toPath,

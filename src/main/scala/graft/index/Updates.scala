@@ -16,12 +16,13 @@ import graft.index.IndexSettings.T
   *    consumed at `search/mod.rs:252`);
   *  - hard delete = rewrite every posting table subtracting the bitmap and
   *    dropping empty rows (the purge loop of delete_documents.rs:121-1167);
-  *  - addDocuments = index the new batch into a DELTA directory with the
-  *    same pipeline, then merge table-by-table with `bitmap_union_agg` —
-  *    the distributed TypedChunk merge
-  *    (`/root/reference/milli/src/update/index_documents/typed_chunk.rs:45-216`).
-  *    Replace semantics: docids of replaced external ids are tombstoned
-  *    first (`transform.rs:141-294`).
+  *  - addDocuments = build the batch's BASE tables into a delta directory,
+  *    then merge each into its live table on its own (`bitmap_union_agg`
+  *    or a file append) — the distributed TypedChunk merge
+  *    (`milli/src/update/index_documents/typed_chunk.rs:45-216`)
+  *    — and refresh the derived tables from the merged bases, all as one
+  *    [[DagRunner]] DAG. Replace semantics: docids of replaced external
+  *    ids are tombstoned first (`transform.rs:141-294`).
   */
 class Updates(spark: SparkSession, settings: IndexSettings) {
   import spark.implicits._
@@ -78,40 +79,45 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
         .where(!F.bitmap_contains(delLit, $"docid")), path)
     }
 
+    // every table rewrite is an independent step; the dictionaries follow
+    // the purged forward index, and the tombstone clears only after all
+    // of them committed
+    val dag = new DagRunner
     Seq(T.WordDocids, T.ExactWordDocids, T.WordPrefixDocids,
       T.ExactWordPrefixDocids, T.WordPositionDocids,
       T.WordPrefixPositionDocids, T.FidWordCountDocids, T.WordPairProximityDocids,
       T.WordPrefixPairProximityDocids, T.PrefixWordPairProximityDocids,
       T.FacetExistsDocids, T.FacetNumberLevels, T.FacetStringLevels)
-      .foreach(rewriteBitmapTable)
+      .foreach(t => dag.step(t)(rewriteBitmapTable(t)))
     Seq(T.Documents, T.DocWordPositions, T.DocFidWordCounts, T.DocFacetNumbers,
-      T.DocFacetStrings, T.DocStats, T.GeoCells).foreach(rewriteDocidTable)
+      T.DocFacetStrings, T.DocStats, T.GeoCells)
+      .foreach(t => dag.step(t)(rewriteDocidTable(t)))
     // posting blocks: decode, filter, re-encode per word
-    val pb = s"$dir/${T.PostingBlocks}"
-    if (new java.io.File(pb).exists()) {
-      val tf = spark.read.parquet(pb).select($"word", $"bytes")
-        .as[(String, Array[Byte])]
-        .flatMap { case (w, bytes) =>
-          graft.core.PostingBlocks.decode(bytes).iterator.map(p => (w, p._1, p._2)) }
-        .toDF("word", "docid", "tf")
-        .where(!F.bitmap_contains(delLit, $"docid"))
-      writeOver(IndexBuilder.buildPostingBlocksFromTf(spark, tf), pb)
+    dag.step(T.PostingBlocks) {
+      val pb = s"$dir/${T.PostingBlocks}"
+      if (new java.io.File(pb).exists())
+        writeOver(IndexBuilder.buildPostingBlocksFromTf(spark,
+          decodeTf(spark.read.parquet(pb)).where(!F.bitmap_contains(delLit, $"docid"))), pb)
     }
     // term_dict df/ttf/exact_only recounted from the PURGED forward index
     // (delete_documents.rs purges word-level metadata the same way): a
     // stale df skews BM25 idf and the serving-gate estimates. prefix_dict
     // n_words follows from the recounted dictionary.
     val dwpPath = s"$dir/${T.DocWordPositions}"
-    if (new java.io.File(dwpPath).exists() &&
-        new java.io.File(s"$dir/${T.TermDict}").exists()) {
-      val exactFids = settings.exactAttributes.flatMap(
-        settings.searchableFields.zipWithIndex.toMap.get).toSet
-      writeOver(IndexBuilder.termDictFromDwp(
+    val recount = new java.io.File(dwpPath).exists() &&
+      new java.io.File(s"$dir/${T.TermDict}").exists()
+    val exactFids = settings.exactAttributes.flatMap(
+      settings.searchableFields.zipWithIndex.toMap.get).toSet
+    dag.step(T.TermDict, Seq(T.DocWordPositions)) {
+      if (recount) writeOver(IndexBuilder.termDictFromDwp(
         spark, spark.read.parquet(dwpPath), exactFids), s"$dir/${T.TermDict}")
-      if (new java.io.File(s"$dir/${T.PrefixDict}").exists())
+    }
+    dag.step(T.PrefixDict, Seq(T.TermDict)) {
+      if (recount && new java.io.File(s"$dir/${T.PrefixDict}").exists())
         writeOver(new IndexBuilder(spark, settings).buildPrefixDict(dir),
           s"$dir/${T.PrefixDict}")
     }
+    dag.run()
     // clear tombstone
     Seq(Bitmaps.cboSerialize(new RoaringBitmap())).toDF("docids").coalesce(1)
       .write.mode("overwrite").parquet(deletedPath(dir))
@@ -131,9 +137,16 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
   }
 
   /** Incremental batch: index `newDocs` (docid already assigned, disjoint
-    * from or replacing existing ids) into a delta dir, then merge every
-    * posting table. `replace`: existing docs with the same primary key are
-    * tombstoned first. Returns the merged index dir (in place).
+    * from or replacing existing ids) into the index at `dir`, in place.
+    * `replace`: existing docs with the same primary key are tombstoned
+    * first, ahead of the DAG (the lookup reads `documents` before the
+    * append). In the DAG, a delta build writes only the base tables
+    * ([[deltaStages]]) into a scratch dir; once all have committed, each
+    * merges into its live table on its own ([[mergeSteps]]), and each
+    * derived table refreshes once the merged tables it reads are in place
+    * ([[IndexBuilder.refreshDerivedTables]]). On a failure the call waits
+    * for the running steps, deletes the delta and rethrows: a batch that
+    * fails to build leaves the live tables as they were.
     *
     * After the commit, tables whose parquet file count crossed
     * `autoCompactFiles` are compacted in the same call (the Iceberg
@@ -156,12 +169,24 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
         if (replaced.nonEmpty) softDelete(dir, replaced.toSeq)
       }
     }
+    val builder = new IndexBuilder(spark, settings)
     val delta = java.nio.file.Files.createTempDirectory("graft-delta").toString
-    try addDocumentsDelta(dir, newDocs, delta, replace, autoCompactFiles)
-    finally {
-      // the delta index is per-batch scratch (appendTable MOVES its doc-
+    val dag = new DagRunner
+    try {
+      val deltaBuild = builder.buildOn(dag, newDocs, delta, resume = false,
+        facetOverride = None, tables = deltaStages(dir))
+      try {
+        // no live table changes before the whole delta has committed: a
+        // batch that fails to build leaves the index as it was
+        dag.barrier(Updates.DeltaBuilt)
+        mergeSteps(dag, dir, delta)
+        builder.refreshDerivedTables(dag, dir, delta, Updates.merged, writeOver)
+        dag.run()
+      } finally deltaBuild.release()
+    } finally {
+      // the delta index is per-batch scratch (appendFiles copies its doc-
       // keyed files into the live dir; everything else merges by value) —
-      // leaving it leaked one full delta index per incremental batch
+      // leaving it leaked one delta index per incremental batch
       def rec(f: java.io.File): Unit = {
         if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rec))
         f.delete(); ()
@@ -169,11 +194,35 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
       rec(new java.io.File(delta))
       spark.catalog.refreshByPath(delta) // drop cached plans over dead files
     }
+    Manifest.recordUpdate(dir, "add_documents", s"replace=$replace")
+    if (autoCompactFiles > 0) compact(dir, maxFiles = autoCompactFiles)
   }
 
-  private def addDocumentsDelta(dir: String, newDocs: DataFrame,
-      delta: String, replace: Boolean, autoCompactFiles: Int): Unit = {
-    new IndexBuilder(spark, settings).build(newDocs, delta, resume = false)
+  /** The build stages an `addDocuments` delta writes for the index at `dir`:
+    * the base tables [[mergeSteps]] merges, not the derived ones refreshed
+    * from them. Without exact attributes `exact_word_docids` stays empty,
+    * so the delta skips it too once the index has the table. */
+  private def deltaStages(dir: String): Set[String] = {
+    val exactStaysEmpty = settings.exactAttributes.isEmpty &&
+      new java.io.File(s"$dir/${T.ExactWordDocids}").exists()
+    T.buildStages.toSet -- Updates.DerivedTables --
+      (if (exactStaysEmpty) Seq(T.ExactWordDocids) else Nil)
+  }
+
+  /** One step per base table, named [[Updates.merged]]: it merges the delta
+    * table into the live one once the whole delta build has committed. A
+    * table the delta lacks stays as it is; a table the index lacks is
+    * copied from the delta. */
+  private def mergeSteps(dag: DagRunner, dir: String, delta: String): Unit = {
+    def exists(p: String) = new java.io.File(p).exists()
+    def step(name: String)(merge: (String, String) => Unit): Unit =
+      dag.step(Updates.merged(name), Seq(Updates.DeltaBuilt)) {
+        val oldPath = s"$dir/$name"; val newPath = s"$delta/$name"
+        if (exists(newPath)) {
+          if (!exists(oldPath)) writeOver(spark.read.parquet(newPath), oldPath)
+          else merge(oldPath, newPath)
+        }
+      }
 
     // word-keyed bitmap tables merge O(touched files), not O(table):
     // untouched parquet files (key ranges disjoint from the batch
@@ -183,46 +232,27 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
     // `sortCols` restores each table's physical key order so footer
     // pruning keeps working on the merged output.
     def mergeBitmapTable(name: String, keys: Seq[String],
-        touchKey: Option[String] = None, sortCols: Seq[String] = Nil): Unit = {
-      val oldPath = s"$dir/$name"; val newPath = s"$delta/$name"
-      if (!new java.io.File(newPath).exists()) return
-      if (!new java.io.File(oldPath).exists()) {
-        writeOver(spark.read.parquet(newPath), oldPath); return
+        touchKey: Option[String] = None, sortCols: Seq[String] = Nil): Unit =
+      step(name) { (oldPath, newPath) =>
+        def agg(a: DataFrame, b: DataFrame): DataFrame = {
+          val u = a.select((keys :+ "docids").map(col): _*)
+            .unionByName(b.select((keys :+ "docids").map(col): _*))
+            .groupBy(keys.map(col): _*)
+            .agg(F.bitmap_union_agg($"docids").as("docids"))
+          val u2 = if (name == T.WordDocids)
+            u.withColumn("df", F.bitmap_cardinality($"docids"))
+          else u
+          val sc = if (sortCols.nonEmpty) sortCols else keys
+          u2.repartitionByRange(sc.map(col): _*)
+            .sortWithinPartitions(sc.head, sc.tail: _*)
+        }
+        touchKey match {
+          case Some(k) =>
+            mergeTouchedFiles(oldPath, spark.read.parquet(newPath), k)(agg)
+          case None =>
+            writeOver(agg(spark.read.parquet(oldPath), spark.read.parquet(newPath)), oldPath)
+        }
       }
-      def agg(a: DataFrame, b: DataFrame): DataFrame = {
-        val u = a.select((keys :+ "docids").map(col): _*)
-          .unionByName(b.select((keys :+ "docids").map(col): _*))
-          .groupBy(keys.map(col): _*)
-          .agg(F.bitmap_union_agg($"docids").as("docids"))
-        val u2 = if (name == T.WordDocids)
-          u.withColumn("df", F.bitmap_cardinality($"docids"))
-        else u
-        val sc = if (sortCols.nonEmpty) sortCols else keys
-        u2.repartitionByRange(sc.map(col): _*)
-          .sortWithinPartitions(sc.head, sc.tail: _*)
-      }
-      touchKey match {
-        case Some(k) =>
-          mergeTouchedFiles(oldPath, spark.read.parquet(newPath), k)(agg)
-        case None =>
-          writeOver(agg(spark.read.parquet(oldPath), spark.read.parquet(newPath)), oldPath)
-      }
-    }
-    // doc-keyed tables only ever GAIN rows: move the delta's parquet files
-    // into the live dir (O(batch), zero Spark jobs) instead of rewriting
-    // the whole table per batch — at web scale the union-rewrite was
-    // O(index) freight per update. Schema drift (documents may carry new
-    // columns per batch) falls back to the reconciling union rewrite.
-    def appendTable(name: String): Unit = {
-      val oldPath = s"$dir/$name"; val newPath = s"$delta/$name"
-      if (!new java.io.File(newPath).exists()) return
-      if (!new java.io.File(oldPath).exists())
-        writeOver(spark.read.parquet(newPath), oldPath)
-      else if (!appendFiles(oldPath, newPath))
-        writeOver(spark.read.parquet(oldPath)
-          .unionByName(spark.read.parquet(newPath), allowMissingColumns = true), oldPath)
-    }
-
     mergeBitmapTable(T.WordDocids, Seq("word"), touchKey = Some("word"))
     mergeBitmapTable(T.ExactWordDocids, Seq("word"), touchKey = Some("word"))
     mergeBitmapTable(T.WordPositionDocids, Seq("word", "position"),
@@ -233,19 +263,27 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
     mergeBitmapTable(T.WordPairProximityDocids, Seq("prox", "w1", "w2"),
       touchKey = Some("w1"), sortCols = Seq("w1", "w2", "prox"))
     mergeBitmapTable(T.FacetExistsDocids, Seq("field"))
+    // doc-keyed tables only ever GAIN rows: copy the delta's parquet files
+    // into the live dir (O(batch), zero Spark jobs) instead of rewriting
+    // the whole table per batch — at web scale the union-rewrite was
+    // O(index) freight per update. Schema drift (documents may carry new
+    // columns per batch) falls back to the reconciling union rewrite.
     Seq(T.Documents, T.DocWordPositions, T.DocFidWordCounts,
       T.DocFacetNumbers, T.DocFacetStrings, T.DocStats, T.GeoCells)
-      .foreach(appendTable)
+      .foreach(name => step(name) { (oldPath, newPath) =>
+        if (!appendFiles(oldPath, newPath))
+          writeOver(spark.read.parquet(oldPath)
+            .unionByName(spark.read.parquet(newPath), allowMissingColumns = true), oldPath)
+      })
     // term_dict: recompute df by summing per-shard dfs (words disjoint by
     // doc); ttf sums the same way. `coalesce(ttf, df)` tolerates an index
     // written before the ttf column existed (≥1 occurrence per posting row
-    // is the conservative floor).
-    val tdOld = s"$dir/${T.TermDict}"; val tdNew = s"$delta/${T.TermDict}"
-    if (new java.io.File(tdOld).exists() && new java.io.File(tdNew).exists()) {
-      // touched-file merge: every existing row for a batch word lives in a
-      // file whose [min,max] word interval contains it, so summing over
-      // (touched ∪ delta) is exact; files for out-of-batch words carry over
-      mergeTouchedFiles(tdOld, spark.read.parquet(tdNew), "word") { (a, b) =>
+    // is the conservative floor). Touched-file merge: every existing row
+    // for a batch word lives in a file whose [min,max] word interval
+    // contains it, so summing over (touched ∪ delta) is exact; files for
+    // out-of-batch words carry over.
+    step(T.TermDict) { (oldPath, newPath) =>
+      mergeTouchedFiles(oldPath, spark.read.parquet(newPath), "word") { (a, b) =>
         a.unionByName(b, allowMissingColumns = true)
           .withColumn("ttf", coalesce(col("ttf"), $"df".cast("long")))
           .groupBy($"word")
@@ -254,36 +292,16 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
           .withColumn("exact_only", $"eo" === 1).drop("eo")
           .repartitionByRange(col("word")).sortWithinPartitions("word")
       }
-    } else appendTable(T.TermDict)
+    }
     // posting blocks: decode + re-encode ONLY the files containing batch
     // words; the rest of the compressed index is never read (the bytes
     // column of untouched files stays on disk — at web scale the old
     // full-decode was an O(index) rewrite per batch)
-    val pbOld = s"$dir/${T.PostingBlocks}"; val pbNew = s"$delta/${T.PostingBlocks}"
-    if (new java.io.File(pbNew).exists()) {
-      if (!new java.io.File(pbOld).exists())
-        writeOver(spark.read.parquet(pbNew), pbOld)
-      else {
-        def toTf(df: DataFrame): DataFrame =
-          df.select($"word", $"bytes").as[(String, Array[Byte])]
-            .flatMap { case (w, bytes) =>
-              graft.core.PostingBlocks.decode(bytes).iterator.map(p => (w, p._1, p._2)) }
-            .toDF("word", "docid", "tf")
-        mergeTouchedFiles(pbOld, spark.read.parquet(pbNew), "word") { (a, b) =>
-          IndexBuilder.buildPostingBlocksFromTf(spark, toTf(a).unionByName(toTf(b)))
-        }
+    step(T.PostingBlocks) { (oldPath, newPath) =>
+      mergeTouchedFiles(oldPath, spark.read.parquet(newPath), "word") { (a, b) =>
+        IndexBuilder.buildPostingBlocksFromTf(spark, decodeTf(a).unionByName(decodeTf(b)))
       }
     }
-    // derived prefix tables + facet levels refresh from the MERGED base
-    // tables so incremental indexes never serve stale derived data — but
-    // via the PREFIX DIFF (words_prefixes_fst.rs:43-96): only prefixes
-    // under the batch's vocabulary (plus dict additions/removals) rebuild;
-    // unaffected rows carry over, so a small batch into a huge index pays
-    // for its own words, not the whole dictionary.
-    new IndexBuilder(spark, settings)
-      .refreshDerivedTablesIncremental(dir, delta, writeOver)
-    Manifest.recordUpdate(dir, "add_documents", s"replace=$replace")
-    if (autoCompactFiles > 0) compact(dir, maxFiles = autoCompactFiles)
   }
 
   /** table → canonical (leading-key-first) sort columns, as written by the
@@ -339,12 +357,8 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
     if (new java.io.File(pb).exists()) {
       val n = fileCount(pb)
       if (n > maxFiles) {
-        val tf = spark.read.parquet(pb).select($"word", $"bytes")
-          .as[(String, Array[Byte])]
-          .flatMap { case (w, bytes) =>
-            graft.core.PostingBlocks.decode(bytes).iterator.map(p => (w, p._1, p._2)) }
-          .toDF("word", "docid", "tf")
-        writeOver(IndexBuilder.buildPostingBlocksFromTf(spark, tf), pb)
+        writeOver(IndexBuilder.buildPostingBlocksFromTf(spark,
+          decodeTf(spark.read.parquet(pb))), pb)
         done += (T.PostingBlocks -> n)
       }
     }
@@ -353,6 +367,13 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
       Manifest.recordUpdate(dir, "compact", res.map(t => s"${t._1}:${t._2}").mkString(","))
     res
   }
+
+  /** Posting-block rows decoded to one (word, docid, tf) row per posting. */
+  private def decodeTf(blocks: DataFrame): DataFrame =
+    blocks.select($"word", $"bytes").as[(String, Array[Byte])]
+      .flatMap { case (w, bytes) =>
+        graft.core.PostingBlocks.decode(bytes).iterator.map(p => (w, p._1, p._2)) }
+      .toDF("word", "docid", "tf")
 
   // file-granular maintenance (atomic swap, footer-stats touched-file
   // merge, zero-job append) lives in [[TableIO]], shared with the derived
@@ -373,4 +394,17 @@ object Updates {
     * so this bounds that cost while a compaction stays rare across small
     * batches. Callers pass `autoCompactFiles = 0` to turn the pass off. */
   val DefaultAutoCompactFiles: Int = 64
+
+  /** Tables derived from the base tables: `addDocuments` refreshes them
+    * from the merged bases rather than building them into its delta. */
+  private val DerivedTables: Seq[String] = Seq(T.PrefixDict, T.WordPrefixDocids,
+    T.ExactWordPrefixDocids, T.WordPrefixPositionDocids,
+    T.WordPrefixPairProximityDocids, T.PrefixWordPairProximityDocids,
+    T.FacetNumberLevels, T.FacetStringLevels)
+
+  /** The `addDocuments` step after which every delta table has committed. */
+  private val DeltaBuilt = "delta:built"
+
+  /** The `addDocuments` step after which live table `table` holds the batch. */
+  private def merged(table: String): String = s"merge:$table"
 }

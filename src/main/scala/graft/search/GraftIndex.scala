@@ -1331,7 +1331,7 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
   /** Prefix-side pair rows, grouped by prox. Resolution order:
     *
     *  1. prefix in the precomputed prefix-pair tables (#8/#9, len ≤ 2,
-    *     full stored prox 1..7 — IndexBuilder.prefixPairPartials): batched
+    *     full stored prox 1..7 — IndexBuilder.prefixPairPartialsBoth): batched
     *     POINT READS, the reference's own read path
     *     (`criteria/mod.rs:656-707`) — no query-time aggregation even cold;
     *  2. pinned dictionary with ≤ 64 extensions: per-prox unions assembled

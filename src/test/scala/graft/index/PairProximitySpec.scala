@@ -140,37 +140,87 @@ class PairProximitySpec extends AnyFunSuite with Matchers {
     b shouldBe a
   }
 
-  test("single-pass prefix-pair build ≡ per-side builders, byte-identical") {
+  // driver-side oracle for the prefix-pair tables: for prox ≤ 7 and every
+  // dictionary prefix p (length ≤ 2, within `only` when given), OR the pair
+  // table's bitmaps into (prox, w1, p) for prefixes of w2 (#8) and into
+  // (prox, p, w2) for prefixes of w1 (#9)
+  private def brutePrefixPairs(spark: org.apache.spark.sql.SparkSession,
+      dir: String, only: Option[Set[String]])
+      : (Map[(Int, String, String), Set[Int]], Map[(Int, String, String), Set[Int]]) = {
+    val T = IndexSettings.T
+    val dict = spark.read.parquet(s"$dir/${T.PrefixDict}").collect()
+      .map(_.getAs[String]("prefix")).filter(_.length <= 2).toSet
+      .filter(p => only.forall(_(p)))
+    val w8 = scala.collection.mutable.Map.empty[(Int, String, String), Set[Int]]
+    val w9 = scala.collection.mutable.Map.empty[(Int, String, String), Set[Int]]
+    spark.read.parquet(s"$dir/${T.WordPairProximityDocids}").collect().foreach { r =>
+      val prox = r.getAs[Int]("prox")
+      val w1 = r.getAs[String]("w1"); val w2 = r.getAs[String]("w2")
+      val ids = graft.core.Bitmaps.cboDeserialize(r.getAs[Array[Byte]]("docids")).toArray.toSet
+      if (prox <= 7) {
+        (1 to math.min(2, w2.length)).map(w2.take).filter(dict).foreach { p =>
+          w8((prox, w1, p)) = w8.getOrElse((prox, w1, p), Set.empty[Int]) ++ ids }
+        (1 to math.min(2, w1.length)).map(w1.take).filter(dict).foreach { p =>
+          w9((prox, p, w2)) = w9.getOrElse((prox, p, w2), Set.empty[Int]) ++ ids }
+      }
+    }
+    (w8.toMap, w9.toMap)
+  }
+
+  /** (prox, left, right) → docids of a prefix-pair frame. */
+  private def decoded(df: org.apache.spark.sql.DataFrame): Map[(Int, String, String), Set[Int]] =
+    df.collect().map { r =>
+      ((r.getInt(0), r.getString(1), r.getString(2)),
+        graft.core.Bitmaps.cboDeserialize(r.getAs[Array[Byte]](3)).toArray.toSet)
+    }.toMap
+
+  private lazy val ppDir = {
     val spark = graft.TestSpark.spark
     val settings = IndexSettings(searchableFields = Seq("text"), primaryKey = "url")
     val dir = graft.TestSpark.tempDir("graft-ppboth")
-    val docs = graft.webgen.WebPages.generate(spark, 300)
-    val builder = new IndexBuilder(spark, settings)
-    builder.build(docs, dir, resume = false)
-    def canon(df: org.apache.spark.sql.DataFrame): Seq[(Int, String, String, Seq[Byte])] =
-      df.collect().map { r =>
-        (r.getInt(0), r.getString(1), r.getString(2),
-          r.getAs[Array[Byte]](3).toSeq)
-      }.toSeq.sortBy(t => (t._2, t._3, t._1))
+    new IndexBuilder(spark, settings)
+      .build(graft.webgen.WebPages.generate(spark, 300), dir, resume = false)
+    (dir, new IndexBuilder(spark, settings))
+  }
+
+  test("single-pass prefix-pair build ≡ brute force over the pair table") {
+    val spark = graft.TestSpark.spark
+    val (dir, builder) = ppDir
+    val (w8, w9) = brutePrefixPairs(spark, dir, only = None)
+    w8 should not be empty
+    w9 should not be empty
     val (bothW, bothP) = builder.buildPrefixPairTablesBoth(dir)
-    withClue("word_prefix_pair (#8): ") {
-      canon(bothW) shouldBe canon(builder.buildWordPrefixPairProximity(dir))
-    }
-    withClue("prefix_word_pair (#9): ") {
-      canon(bothP) shouldBe canon(builder.buildPrefixWordPairProximity(dir))
-    }
+    withClue("word_prefix_pair (#8): ") { decoded(bothW) shouldBe w8 }
+    withClue("prefix_word_pair (#9): ") { decoded(bothP) shouldBe w9 }
     // and the committed tables (written through the shared __ppBoth stage)
-    // match the per-side builders too
     val T = IndexSettings.T
     withClue("committed #8: ") {
-      canon(spark.read.parquet(s"$dir/${T.WordPrefixPairProximityDocids}")
-        .select("prox", "w1", "prefix", "docids")) shouldBe
-        canon(builder.buildWordPrefixPairProximity(dir))
+      decoded(spark.read.parquet(s"$dir/${T.WordPrefixPairProximityDocids}")
+        .select("prox", "w1", "prefix", "docids")) shouldBe w8
     }
     withClue("committed #9: ") {
-      canon(spark.read.parquet(s"$dir/${T.PrefixWordPairProximityDocids}")
-        .select("prox", "prefix", "w2", "docids")) shouldBe
-        canon(builder.buildPrefixWordPairProximity(dir))
+      decoded(spark.read.parquet(s"$dir/${T.PrefixWordPairProximityDocids}")
+        .select("prox", "prefix", "w2", "docids")) shouldBe w9
     }
+    builder.releaseTransients()
+  }
+
+  test("single-pass prefix-pair build restricted by `only` ≡ brute force") {
+    val spark = graft.TestSpark.spark
+    import spark.implicits._
+    val (dir, builder) = ppDir
+    // up to two dictionary prefixes of each length, and one outside it
+    val dict = spark.read.parquet(s"$dir/${IndexSettings.T.PrefixDict}")
+      .select($"prefix").as[String].collect().toSeq.sorted
+    val only = (dict.filter(_.length == 1).take(2) ++ dict.filter(_.length == 2).take(2) :+
+      "zz").toSet
+    (1 to 2).foreach(n => only.count(_.length == n) should be > 0)
+    val (w8, w9) = brutePrefixPairs(spark, dir, Some(only))
+    w8 should not be empty
+    val (bothW, bothP) =
+      builder.buildPrefixPairTablesBoth(dir, Some(only.toSeq.toDF("prefix")))
+    withClue("word_prefix_pair (#8): ") { decoded(bothW) shouldBe w8 }
+    withClue("prefix_word_pair (#9): ") { decoded(bothP) shouldBe w9 }
+    builder.releaseTransients()
   }
 }

@@ -70,10 +70,14 @@ class UpdatesSpec extends AnyFunSuite with Matchers {
       .count() shouldBe 0
   }
 
-  test("incremental add-documents merge equals from-scratch build") {
+  /** Build `all`'s first 200 docs, add the rest with `addDocuments`, and
+    * compare a ranked query, BM25 and EVERY table with a from-scratch
+    * build of `all` — including the derived prefix tables and facet level
+    * trees refreshed after the merge (stale derived data is the
+    * incremental-index time bomb). */
+  private def assertIncrementalParity(settings: IndexSettings,
+      all: org.apache.spark.sql.DataFrame): Unit = {
     val spark = TestSpark.spark
-    val settings = IndexSettings(searchableFields = Seq("text"), primaryKey = "url")
-    val all = WebPages.generate(spark, 400).cache()
     val first = all.where(org.apache.spark.sql.functions.col("docid") < 200)
     val second = all.where(org.apache.spark.sql.functions.col("docid") >= 200)
 
@@ -99,13 +103,11 @@ class UpdatesSpec extends AnyFunSuite with Matchers {
     bmInc.map(_._1).toSeq shouldBe bmFull.map(_._1).toSeq
     bmInc.zip(bmFull).foreach { case ((_, a), (_, b)) => a shouldBe b +- 1e-9 }
 
-    // EVERY table is identical — including the derived prefix tables and
-    // facet level trees refreshed after the merge (stale derived data is
-    // the incremental-index time bomb)
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, concat_ws}
     val tables = new java.io.File(fullDir).listFiles().filter(_.isDirectory)
       .map(_.getName).filterNot(_.startsWith("_")).sorted.toSeq
+    tables should contain allElementsOf IndexSettings.T.buildStages
     def canon(dir: String, t: String): Seq[String] = {
       val df = spark.read.parquet(s"$dir/$t")
       // posting_blocks: physical block fragmentation depends on the salted
@@ -130,6 +132,83 @@ class UpdatesSpec extends AnyFunSuite with Matchers {
     tables.foreach { t =>
       withClue(s"table $t: ") { canon(incDir, t) shouldBe canon(fullDir, t) }
     }
+  }
+
+  test("incremental add-documents merge equals from-scratch build") {
+    val settings = IndexSettings(searchableFields = Seq("text"), primaryKey = "url")
+    assertIncrementalParity(settings, WebPages.generate(TestSpark.spark, 400).cache())
+  }
+
+  test("incremental add-documents merge equals from-scratch build " +
+      "with facets, a sort field and an exact attribute") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    import org.apache.spark.sql.functions.substring_index
+    val settings = IndexSettings(searchableFields = Seq("text", "title"),
+      filterableFields = Set("lang"), sortableFields = Set("n_chars"),
+      exactAttributes = Set("title"), primaryKey = "url")
+    val all = WebPages.generate(spark, 400)
+      .withColumn("title", substring_index($"text", " ", 4))
+      .withColumn("n_chars", org.apache.spark.sql.functions.length($"text"))
+      .cache()
+    // every table the merge and the concurrent refresh write is non-empty
+    val dir = freshDir()
+    new IndexBuilder(spark, settings).build(all, dir, resume = false)
+    Seq(IndexSettings.T.ExactWordDocids, IndexSettings.T.ExactWordPrefixDocids,
+        IndexSettings.T.FacetNumberLevels, IndexSettings.T.FacetStringLevels,
+        IndexSettings.T.FacetExistsDocids, IndexSettings.T.WordPrefixDocids,
+        IndexSettings.T.WordPrefixPositionDocids,
+        IndexSettings.T.WordPrefixPairProximityDocids,
+        IndexSettings.T.PrefixWordPairProximityDocids).foreach { t =>
+      withClue(s"table $t: ") { spark.read.parquet(s"$dir/$t").count() should be > 0L }
+    }
+    assertIncrementalParity(settings, all)
+  }
+
+  test("a failed addDocuments leaves every live table unchanged, no " +
+      "delta directory and no side directories in the index") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val settings = IndexSettings(searchableFields = Seq("text"),
+      filterableFields = Set("lang"), primaryKey = "url")
+    val dir = freshDir()
+    val all = WebPages.generate(spark, 240).cache()
+    new IndexBuilder(spark, settings).build(all.where($"docid" < 200), dir, resume = false)
+    // one document's text throws, late: by then the delta's facet tables
+    // (which never read the text) have committed, and they must not merge
+    // into the live index while the text tables fail
+    val poison = org.apache.spark.sql.functions.udf((docid: Int, text: String) =>
+      if (docid != 230) text
+      else { Thread.sleep(4000); throw new IllegalStateException("unreadable document") })
+    val batch = all.where($"docid" >= 200).withColumn("text", poison($"docid", $"text"))
+    def deltaDirs(): Set[String] =
+      new java.io.File(System.getProperty("java.io.tmpdir")).listFiles()
+        .filter(f => f.isDirectory && f.getName.startsWith("graft-delta"))
+        .map(_.getName).toSet
+    // every file of the index, by path relative to it → its bytes' digest
+    def snapshot(): Map[String, String] = {
+      import scala.jdk.CollectionConverters._
+      val root = java.nio.file.Paths.get(dir)
+      val files = java.nio.file.Files.walk(root)
+      try files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map { f =>
+          val md = java.security.MessageDigest.getInstance("SHA-256")
+          root.relativize(f).toString ->
+            md.digest(java.nio.file.Files.readAllBytes(f)).map("%02x".format(_)).mkString
+        }.toMap
+      finally files.close()
+    }
+    val before = deltaDirs()
+    val liveBefore = snapshot()
+    an[Exception] should be thrownBy new Updates(spark, settings).addDocuments(dir, batch)
+    (deltaDirs() -- before) shouldBe empty
+    snapshot() shouldBe liveBefore
+    def sideDirs(f: java.io.File): Seq[String] =
+      Option(f.listFiles()).toSeq.flatten.filter(_.isDirectory).flatMap { d =>
+        (if (d.getName.endsWith("__tmp") || d.getName.endsWith("__old"))
+           Seq(d.getPath) else Nil) ++ sideDirs(d)
+      }
+    sideDirs(new java.io.File(dir)) shouldBe empty
   }
 
   test("incremental merge is O(touched): out-of-range files carry over " +
