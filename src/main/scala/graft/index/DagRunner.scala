@@ -31,6 +31,14 @@ private[index] final class DagRunner {
     steps(name) = (deps, () => body)
   }
 
+  /** Register step `name` computing a value: steps that depend on `name`
+    * read it with [[DagRunner.Value.get]]. */
+  def value[A](name: String, deps: Seq[String] = Nil)(body: => A): DagRunner.Value[A] = {
+    val v = new DagRunner.Value[A](name)
+    step(name, deps)(v.set(body))
+    v
+  }
+
   /** An empty step that finishes once every step registered so far has. */
   def barrier(name: String): Unit = step(name, steps.keys.toSeq)(())
 
@@ -60,5 +68,16 @@ private[index] final class DagRunner {
       done.values.foreach(Await.ready(_, Duration.Inf))
     } finally pool.shutdown()
     Option(firstFailure.get).foreach(e => throw e)
+  }
+}
+
+private[index] object DagRunner {
+  /** The result of a [[DagRunner.value]] step, named after it. */
+  final class Value[A](val step: String) {
+    @volatile private var result: Option[A] = None
+    private[DagRunner] def set(a: A): Unit = result = Some(a)
+    /** The step's result; throws before the step has run. */
+    def get: A = result.getOrElse(
+      throw new IllegalStateException(s"step $step has not run"))
   }
 }

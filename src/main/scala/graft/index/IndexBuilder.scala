@@ -160,6 +160,24 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType.fromDDL(ddl))
 
+  private def read(path: String): DataFrame = TableIO.read(spark, path)
+
+  /** Tables these settings keep empty, each with the schema it is written
+    * with: the exact word tables when no searchable field is an exact
+    * attribute, and `geo_cells` when `_geo.lat` is neither filterable nor
+    * sortable and no `facetOverride` supplies the facet rows. */
+  private[index] def staysEmpty(facetOverride: Boolean): Map[String, String] = {
+    val exact =
+      if (exactFids.nonEmpty) Map.empty[String, String]
+      else Map(T.ExactWordDocids -> "word string, docids binary",
+        T.ExactWordPrefixDocids -> "prefix string, docids binary not null")
+    val geo =
+      if (facetOverride || (settings.filterableFields ++ settings.sortableFields)("_geo.lat"))
+        Map.empty[String, String]
+      else Map(T.GeoCells -> IndexBuilder.GeoCellsDdl)
+    exact ++ geo
+  }
+
   /** Build every index table under `dir`. `docs` must already carry an
     * `docid` int column (see [[assignDocids]]). Completed tables recorded
     * in the manifest are skipped when `resume` is true.
@@ -279,8 +297,14 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
     // critical path (documents → forward index → pair-proximity →
     // prefix-pair tables) while independent stages fill the remaining
     // executor slots — the Spark twin of the reference's rayon fan-out.
+    // a table the settings keep empty is written from an empty frame at
+    // once, without its plan or its inputs
+    val empty = staysEmpty(facetOverride.isDefined)
     def stageF(name: String, deps: Seq[String])(df: => DataFrame): Unit =
-      dag.step(name, deps)(stage(name)(df))
+      empty.get(name) match {
+        case Some(ddl) => dag.step(name)(stage(name)(emptyFrame(ddl)))
+        case None      => dag.step(name, deps)(stage(name)(df))
+      }
 
     stageF(T.Documents, Nil) {
       docs.repartitionByRange(col("docid")).sortWithinPartitions("docid")
@@ -335,7 +359,7 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
     val fullResume = !tables.exists(pending)
     dag.step("__dwp", if (readsOwnOutput) Seq(T.Documents) else Nil) {
       if (!fullResume) tokenizeInto(
-        if (readsOwnOutput) spark.read.parquet(s"$dir/${T.Documents}") else docs)
+        if (readsOwnOutput) read(s"$dir/${T.Documents}") else docs)
     }
     def dwp = dwpRef
 
@@ -444,11 +468,11 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
       // file-boundary fragments) — the tf rows never pay a second range
       // shuffle of the forward index
       IndexBuilder.buildPostingBlocksFromSorted(spark,
-        spark.read.parquet(s"$dir/${T.DocWordPositions}"))
+        read(s"$dir/${T.DocWordPositions}"))
     }
 
     stageF(T.FidWordCountDocids, Seq(T.DocFidWordCounts)) {
-      spark.read.parquet(s"$dir/${T.DocFidWordCounts}")
+      read(s"$dir/${T.DocFidWordCounts}")
         .groupBy($"fid", $"word_count")
         .agg(F.bitmap_or_agg($"docid").as("docids"))
     }
@@ -506,7 +530,7 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
     val facetsFromTable = facetOverride.isEmpty && readsOwnOutput
     dag.step("__facets", if (facetsFromTable) Seq(T.Documents) else Nil) {
       facets = facetOverride.getOrElse(extractFacets(
-        if (facetsFromTable) spark.read.parquet(s"$dir/${T.Documents}") else docs))
+        if (facetsFromTable) read(s"$dir/${T.Documents}") else docs))
     }
     stageF(T.DocFacetNumbers, Seq("__facets")) {
       facets._1.repartitionByRange($"field", $"value")
@@ -582,14 +606,13 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
       .repartitionByRange($"prefix").sortWithinPartitions("prefix")
 
   def buildPrefixDict(dir: String): DataFrame =
-    buildPrefixDictFrom(
-      spark.read.parquet(s"$dir/${T.TermDict}").select($"word"))
+    buildPrefixDictFrom(read(s"$dir/${T.TermDict}").select($"word"))
 
   /** prefix set actually used by a build: the whole dict, or (incremental
     * refresh) its intersection with an affected-prefix set. */
   private def pdUse(dir: String, only: Option[DataFrame],
       maxLen: Int = Int.MaxValue): DataFrame = {
-    val pd0 = spark.read.parquet(s"$dir/${T.PrefixDict}")
+    val pd0 = read(s"$dir/${T.PrefixDict}")
     val pd = (if (maxLen == Int.MaxValue) pd0
       else pd0.where(length($"prefix") <= maxLen)).select($"prefix")
     only.fold(pd)(a => pd.join(a, Seq("prefix"), "left_semi"))
@@ -599,7 +622,7 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
     * shuffles hash-partition on prefix, skew-safe under AQE).
     * `only`: restrict to these prefixes (incremental refresh). */
   def buildWordPrefixDocids(dir: String, only: Option[DataFrame] = None): DataFrame = {
-    val wd = spark.read.parquet(s"$dir/${T.WordDocids}")
+    val wd = read(s"$dir/${T.WordDocids}")
     val exploded = wd.select($"word", $"docids",
         explode(sequence(lit(1), least(length($"word"), lit(settings.maxPrefixLength)))).as("n"))
       .select($"word".substr(lit(1), $"n").as("prefix"), $"docids")
@@ -611,7 +634,7 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
   /** reference db #5: prefix unions over the exact-attribute split
     * (`index.rs:105-106`). */
   def buildExactWordPrefixDocids(dir: String, only: Option[DataFrame] = None): DataFrame = {
-    val wd = spark.read.parquet(s"$dir/${T.ExactWordDocids}")
+    val wd = read(s"$dir/${T.ExactWordDocids}")
     val exploded = wd.select($"word", $"docids",
         explode(sequence(lit(1), least(length($"word"), lit(settings.maxPrefixLength)))).as("n"))
       .select($"word".substr(lit(1), $"n").as("prefix"), $"docids")
@@ -647,7 +670,7 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
     // word rows are contiguous, so per-partition key sets barely overlap)
     // + ONE range shuffle of pre-unioned partials + sorted-run merge —
     // see prefixPositionPartials
-    val wp = spark.read.parquet(s"$dir/${T.WordPositionDocids}")
+    val wp = read(s"$dir/${T.WordPositionDocids}")
     val prefixes = prefixSet(dir, only, settings.maxPrefixLength)
     val maxLen = settings.maxPrefixLength
     val partials = transient(
@@ -677,7 +700,7 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
   def buildPrefixPairTablesBoth(dir: String,
       only: Option[DataFrame] = None): (DataFrame, DataFrame) = {
     val prefixes = prefixSet(dir, only, maxLen = 2)
-    val partials = spark.read.parquet(s"$dir/${T.WordPairProximityDocids}")
+    val partials = read(s"$dir/${T.WordPairProximityDocids}")
       .select($"prox", $"w1", $"w2", $"docids")
       .mapPartitions(it => IndexBuilder.prefixPairPartialsBoth(it, prefixes))
       .toDF("k1", "k2", "sprox", "partial")
@@ -704,11 +727,11 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
     * `criteria/geo.rs:67-154`) as a sorted columnar table. Exact lat/lng
     * ride along so candidate verification never re-joins the facet table. */
   def buildGeoCells(dir: String): DataFrame = {
-    val base = spark.read.parquet(s"$dir/${T.DocFacetNumbers}")
+    val base = read(s"$dir/${T.DocFacetNumbers}")
     // one footer-pruned existence probe: most indexes have no geo — skip
     // the join/shuffle and commit an empty (but schema-correct) table
     if (base.where($"field" === "_geo.lat").limit(1).isEmpty)
-      return emptyFrame("cell bigint, docid int, lat double, lng double")
+      return emptyFrame(IndexBuilder.GeoCellsDdl)
     val lats = base.where($"field" === "_geo.lat")
       .select($"docid", $"value".cast("double").as("lat"))
     val lngs = base.where($"field" === "_geo.lng")
@@ -720,14 +743,14 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
   }
 
   def buildFacetNumberLevels(dir: String, onlyFields: Option[Seq[String]] = None): DataFrame = {
-    val base = spark.read.parquet(s"$dir/${T.DocFacetNumbers}")
+    val base = read(s"$dir/${T.DocFacetNumbers}")
       .select($"field", $"value".cast("double").as("bound"), $"docid")
     IndexBuilder.buildFacetLevels(spark,
       onlyFields.fold(base)(fs => base.where($"field".isin(fs: _*))), transient)
   }
 
   def buildFacetStringLevels(dir: String, onlyFields: Option[Seq[String]] = None): DataFrame = {
-    val base = spark.read.parquet(s"$dir/${T.DocFacetStrings}")
+    val base = read(s"$dir/${T.DocFacetStrings}")
       .select($"field", $"norm".as("bound"), $"docid")
     IndexBuilder.buildFacetLevels(spark,
       onlyFields.fold(base)(fs => base.where($"field".isin(fs: _*))), transient)
@@ -744,44 +767,44 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
     * computation (`update/words_prefixes_fst.rs:43-96`): only prefixes
     * whose rows could have changed are rebuilt, and every other file
     * carries over byte-for-byte. Affected = prefixes of the batch's words
-    * (`deltaDir`'s term_dict; a prefix row aggregates word rows, and only
-    * batch words' rows changed) ∪ prefixes added to ∪ removed from the
-    * recomputed dictionary; with no prefix dictionary yet, the prefix
-    * tables rebuild whole. Both prefix-pair tables refresh from ONE scan
-    * of the merged pair table. Facet levels rebuild only the FIELDS in the
-    * batch. A small batch pays for its own vocabulary, not the index. */
+    * (`batchWords`, the delta's vocabulary on the driver; a prefix row
+    * aggregates word rows, and only batch words' rows changed) ∪ prefixes
+    * added to ∪ removed from the recomputed dictionary; with no prefix
+    * dictionary yet, the prefix tables rebuild whole. Both prefix-pair tables
+    * refresh from ONE scan of the merged pair table. Facet levels rebuild
+    * only the FIELDS in the batch. A small batch pays for its own
+    * vocabulary, not the index. A table the settings keep empty
+    * ([[staysEmpty]]) is not refreshed once it exists. */
   private[index] def refreshDerivedTables(dag: DagRunner, dir: String,
       deltaDir: String, merged: String => String,
-      writeOver: (DataFrame, String) => Unit): Unit = {
+      writeOver: (DataFrame, String) => Unit,
+      batchWords: DagRunner.Value[Array[String]]): Unit = {
     def exists(p: String) = new java.io.File(p).exists()
     def prefixes(path: String): Set[String] =
-      spark.read.parquet(path).select($"prefix").as[String].collect().toSet
+      read(path).select($"prefix").as[String].collect().toSet
+    // a driver-side relation: later table swaps cannot re-evaluate it
+    def relation(prefixes: Set[String]): DataFrame = prefixes.toSeq.toDF("prefix")
     val dictPath = s"$dir/${T.PrefixDict}"
     // the diff's inputs the merge leaves alone — the current dictionary and
-    // the batch's prefixes — are read while term_dict merges (step
-    // `T.TermDict` is the delta build's commit of the batch dictionary)
+    // the batch's prefixes — are read while term_dict merges
     var oldDict: Option[Set[String]] = None
     var batchPrefixes = Set.empty[String]
-    dag.step("refresh:batch_prefixes", Seq(T.TermDict)) {
+    dag.step("refresh:batch_prefixes", Seq(batchWords.step)) {
       if (exists(dictPath)) {
         oldDict = Some(prefixes(dictPath))
-        batchPrefixes = spark.read.parquet(s"$deltaDir/${T.TermDict}")
-          .select(explode(sequence(lit(1),
-            least(length($"word"), lit(settings.maxPrefixLength)))).as("n"), $"word")
-          .select($"word".substr(lit(1), $"n").as("prefix")).distinct()
-          .as[String].collect().toSet
+        batchPrefixes = batchWords.get.iterator
+          .flatMap(IndexBuilder.prefixesOf(_, settings.maxPrefixLength)).toSet
       }
     }
     // None until the dict step runs, and after it when the index had no
     // dictionary: every prefix table is then rebuilt whole
-    var affected: Option[DataFrame] = None
+    var affected: Option[Set[String]] = None
     val dictStep = "refresh:" + T.PrefixDict
     dag.step(dictStep, Seq(merged(T.TermDict), "refresh:batch_prefixes")) {
       writeOver(buildPrefixDict(dir), dictPath)
       affected = oldDict.map { old =>
         val now = prefixes(dictPath)
-        // a driver-side relation: later table swaps cannot re-evaluate it
-        (batchPrefixes ++ (now -- old) ++ (old -- now)).toSeq.toDF("prefix")
+        batchPrefixes ++ (now -- old) ++ (old -- now)
       }
     }
 
@@ -791,26 +814,28 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
     // removed ⊆ affected), every other FILE carries over byte-for-byte.
     // The prefix tables are written prefix-sorted precisely so this (and
     // serving point reads) can footer-prune. `only` None: replace whole.
-    def replace(name: String, sortCols: Seq[String], only: Option[DataFrame],
+    def replace(name: String, sortCols: Seq[String], only: Option[Set[String]],
         rebuilt: DataFrame): Unit = {
       val path = s"$dir/$name"
       only match {
         case None => writeOver(rebuilt, path)
         case Some(aff) =>
-          TableIO.mergeTouchedFiles(spark, path, aff, "prefix") { (touchedDf, a) =>
-            touchedDf.join(broadcast(a), Seq("prefix"), "left_anti")
-              .unionByName(rebuilt)
-              .repartitionByRange(sortCols.map(col): _*)
-              .sortWithinPartitions(sortCols.head, sortCols.tail: _*)
+          TableIO.mergeTouchedFiles(spark, path, relation(aff), "prefix", aff) {
+            (touchedDf, a) =>
+              touchedDf.join(broadcast(a), Seq("prefix"), "left_anti")
+                .unionByName(rebuilt)
+                .repartitionByRange(sortCols.map(col): _*)
+                .sortWithinPartitions(sortCols.head, sortCols.tail: _*)
           }
       }
     }
     def refresh(name: String, base: String, sortCols: Seq[String],
         build: Option[DataFrame] => DataFrame): Unit =
-      dag.step("refresh:" + name, Seq(merged(base), dictStep)) {
-        val only = affected.filter(_ => exists(s"$dir/$name"))
-        replace(name, sortCols, only, build(only))
-      }
+      if (!(staysEmpty(facetOverride = false).contains(name) && exists(s"$dir/$name")))
+        dag.step("refresh:" + name, Seq(merged(base), dictStep)) {
+          val only = affected.filter(_ => exists(s"$dir/$name"))
+          replace(name, sortCols, only, build(only.map(relation)))
+        }
     refresh(T.WordPrefixDocids, T.WordDocids, Seq("prefix"),
       buildWordPrefixDocids(dir, _))
     refresh(T.ExactWordPrefixDocids, T.ExactWordDocids, Seq("prefix"),
@@ -820,12 +845,12 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
     // both prefix-pair tables from one pass; a missing side rebuilds both
     val (wordPrefix, prefixWord) =
       (T.WordPrefixPairProximityDocids, T.PrefixWordPairProximityDocids)
-    var pairOnly: Option[DataFrame] = None
+    var pairOnly: Option[Set[String]] = None
     var pairs: (DataFrame, DataFrame) = null
     dag.step("refresh:prefix_pairs", Seq(merged(T.WordPairProximityDocids), dictStep)) {
       pairOnly = affected.filter(_ =>
         exists(s"$dir/$wordPrefix") && exists(s"$dir/$prefixWord"))
-      pairs = buildPrefixPairTablesBoth(dir, pairOnly)
+      pairs = buildPrefixPairTablesBoth(dir, pairOnly.map(relation))
     }
     dag.step("refresh:" + wordPrefix, Seq("refresh:prefix_pairs"))(
       replace(wordPrefix, Seq("prefix", "w1", "prox"), pairOnly, pairs._1))
@@ -845,17 +870,18 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
         if (!exists(path) || !exists(s"$deltaDir/$deltaBase"))
           writeOver(build(None), path)
         else {
-          val delta = spark.read.parquet(s"$deltaDir/$deltaBase")
+          val delta = read(s"$deltaDir/$deltaBase")
             .select($"field", col(boundCol).as("bound"), $"docid")
           // O(touched files): the level tables are field-major sorted, so
           // only files whose footer field interval meets the batch's
-          // fields are opened — fields absent from the batch
-          // (heterogeneous-schema corpora) carry their files over
+          // fields (collected once) are opened — fields absent from the
+          // batch (heterogeneous-schema corpora) carry their files over
           // byte-for-byte, and a batch with no faceted field keeps every
           // row. A touched field's rows live entirely inside the touched
           // files, so the merge's 1/50 bulk-vs-incremental criterion still
           // sees full field sizes.
-          TableIO.mergeTouchedFiles(spark, path, delta, "field") { (touchedDf, _) =>
+          val fields = delta.select($"field").distinct().as[String].collect()
+          TableIO.mergeTouchedFiles(spark, path, delta, "field", fields) { (touchedDf, _) =>
             val m = FacetIncremental.merge(spark, touchedDf, delta)
             val out =
               if (m.rebuildFields.isEmpty) m.rows
@@ -907,6 +933,16 @@ object IndexBuilder extends Serializable {
   /** A build registered by `buildOn`: after the run, `release` drops its caches
     * and restores the session; `finish` writes a full build's manifest. */
   private[index] final case class BuildRun(release: () => Unit, finish: () => Manifest)
+
+  /** The prefixes of `word` of 1 to `maxLen` characters, counted in code
+    * points as Spark's `length` and `substr` count them. */
+  private[index] def prefixesOf(word: String, maxLen: Int): Iterator[String] = {
+    val n = math.min(word.codePointCount(0, word.length), maxLen)
+    Iterator.range(1, n + 1).map(i => word.substring(0, word.offsetByCodePoints(0, i)))
+  }
+
+  /** The schema of `geo_cells`. */
+  private val GeoCellsDdl = "cell bigint, docid int, lat double, lng double"
 
   /** Root marker: this index's prefix-pair tables (#8/#9) carry the full
     * stored prox range 1..7 — the serving point-read path requires it
@@ -983,10 +1019,11 @@ object IndexBuilder extends Serializable {
   /** Posting blocks from an ALREADY (word, docid)-sorted source (the
     * committed word-major `doc_word_positions`): encode each partition's
     * consecutive word runs directly — zero shuffle. A scan partition can
-    * concatenate several files, so a word may appear as more than one
-    * sorted run (disjoint docid ranges from the range write); each run
-    * encodes as its own fragment and the first-docid block ids keep the
-    * per-word global order, exactly as with the salted shuffle. */
+    * concatenate several files in any order, so a word may appear as more
+    * than one sorted run, adjacent or not (disjoint docid ranges from the
+    * range write); each run encodes as its own fragment and the
+    * first-docid block ids keep the per-word global order, exactly as
+    * with the salted shuffle. */
   def buildPostingBlocksFromSorted(spark: SparkSession, sortedDwp: DataFrame): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
@@ -1849,7 +1886,10 @@ object IndexBuilder extends Serializable {
   }
 
   /** Encode one partition's consecutive (word, docid, tf) runs into FOR
-    * blocks; block id = the block's first docid. */
+    * blocks; block id = the block's first docid. A run ends where the word
+    * changes or the docid stops rising: a scan partition packs files in no
+    * docid order, so a word split over several files continues as a new
+    * run (its own fragment) rather than one unsorted posting list. */
   private def encodeRuns(it: Iterator[(String, Int, Int)])
       : Iterator[(String, Int, Array[Byte], Int, Int, Int)] =
     new Iterator[(String, Int, Array[Byte], Int, Int, Int)] {
@@ -1860,7 +1900,8 @@ object IndexBuilder extends Serializable {
         if (pending.isEmpty && src.hasNext) {
           val word = src.head._1
           val postings = mutable.ArrayBuffer.empty[(Int, Int)]
-          while (src.hasNext && src.head._1 == word)
+          while (src.hasNext && src.head._1 == word &&
+              (postings.isEmpty || src.head._2 > postings.last._1))
             postings += { val r = src.next(); (r._2, r._3) }
           val arr = postings.toArray
           graft.core.PostingBlocks.encode(arr).zipWithIndex.foreach {

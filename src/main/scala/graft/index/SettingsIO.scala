@@ -62,7 +62,7 @@ class SettingsUpdater(spark: org.apache.spark.sql.SparkSession) {
   def update(dir: String, newSettings: IndexSettings): Plan = {
     val oldSettings = SettingsIO.load(dir).getOrElse(newSettings)
     val p = plan(oldSettings, newSettings)
-    val docs = spark.read.parquet(s"$dir/${T.Documents}")
+    val docs = TableIO.read(spark, s"$dir/${T.Documents}")
     if (p.fullReindex) {
       // drop every derived table's manifest entry by clearing the manifest,
       // keep documents, rebuild the rest

@@ -1,7 +1,6 @@
 package graft.index
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** File-granular parquet table maintenance shared by [[Updates]] and the
@@ -62,6 +61,17 @@ object TableIO {
       java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").trim.toLong)
       .toOption.filter(_ > 0).getOrElse(LegacyPageRows))
   }
+
+  /** Read index-table parquet `paths` (table dirs or files of one table)
+    * with the Spark row schema stored in the first file's footer: no
+    * schema-inference job, and every read of a table resolves to the same
+    * plan, so a cached plan keeps matching later reads. A footer without a
+    * Spark schema falls back to inference. */
+  def read(spark: SparkSession, paths: String*): DataFrame =
+    paths.headOption.flatMap(p => footerSchema(spark, p)) match {
+      case Some(s) => spark.read.schema(s).parquet(paths: _*)
+      case None    => spark.read.parquet(paths: _*)
+    }
 
   /** Parquet write with the serving row-group cap (+ fine-grained pages
     * for the forward index and the pair table — see [[DwpPageRows]]). */
@@ -182,17 +192,17 @@ object TableIO {
 
   /** Merge `deltaDf` into the key-sorted parquet table at `oldPath`
     * touching only the files whose `[min, max]` interval of `keyCol`
-    * intersects the delta's key set — O(touched + delta) instead of
-    * O(table) per batch. Untouched files carry over byte-for-byte into the
-    * swapped-in directory. No-op when the delta has no keys. */
+    * intersects `keys` — O(touched + delta) instead of O(table) per batch.
+    * `keys` is the caller's driver-side key set: every `keyCol` value of
+    * the delta, or a superset (a spare key only rewrites a file as it
+    * was). Untouched files carry over byte-for-byte into the swapped-in
+    * directory. No-op when `keys` is empty. */
   def mergeTouchedFiles(spark: SparkSession,
-      oldPath: String, deltaDf: DataFrame, keyCol: String)(
+      oldPath: String, deltaDf: DataFrame, keyCol: String, keys: Iterable[String])(
       merge: (DataFrame, DataFrame) => DataFrame): Unit = {
     import java.nio.charset.StandardCharsets.UTF_8
-    import spark.implicits._
-    val keyB: Array[Array[Byte]] = deltaDf
-      .select(col(keyCol).cast("string")).distinct().as[String].collect()
-      .map(_.getBytes(UTF_8)).sortWith(utf8Cmp(_, _) < 0)
+    val keyB: Array[Array[Byte]] =
+      keys.iterator.map(_.getBytes(UTF_8)).toArray.sortWith(utf8Cmp(_, _) < 0)
     if (keyB.isEmpty) return
     val stats = fileKeyIntervals(spark, oldPath, keyCol)
     def touched(iv: Option[(Array[Byte], Array[Byte])]): Boolean = iv match {
@@ -209,8 +219,8 @@ object TableIO {
     val (touchedF, keepF) = stats.partition(s => touched(s._2))
     val tmp = oldPath + "__tmp"
     val touchedDf =
-      if (touchedF.isEmpty) spark.read.parquet(oldPath).limit(0)
-      else spark.read.parquet(touchedF.map(_._1): _*)
+      if (touchedF.isEmpty) read(spark, oldPath).limit(0)
+      else read(spark, touchedF.map(_._1): _*)
     writeParquet(merge(touchedDf, deltaDf), tmp)
     // untouched files carry over byte-for-byte, so the fresh marker
     // writeParquet just wrote can misdescribe them two ways: (a) the old
@@ -239,19 +249,23 @@ object TableIO {
     invalidate(spark, oldPath)
   }
 
-  /** (name, type) of each column of the Spark row schema stored in the
-    * footer of one parquet file under `path`. Column nullability is left
-    * out, as a parquet read makes every column nullable; a nested
-    * difference only costs the caller's rewrite fallback. None when the
-    * dir has no parquet file or the footer carries no Spark schema. */
-  private def footerColumns(spark: SparkSession, path: String)
-      : Option[Seq[(String, DataType)]] =
+  /** The Spark row schema stored in the footer of the first parquet file of
+    * `path` (a table dir or one file). None when there is no parquet file
+    * or the footer carries no Spark schema. */
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] =
     parquetFiles(path).headOption.flatMap(f => withFooter(spark, f) { footer =>
       Option(footer.getFileMetaData.getKeyValueMetaData
           .get("org.apache.spark.sql.parquet.row.metadata"))
-        .map(json => DataType.fromJson(json).asInstanceOf[StructType]
-          .map(c => c.name -> c.dataType))
+        .map(json => DataType.fromJson(json).asInstanceOf[StructType])
     })
+
+  /** (name, type) of each column of `path`'s footer schema. Column
+    * nullability is left out, as a parquet read makes every column
+    * nullable; a nested difference only costs the caller's rewrite
+    * fallback. */
+  private def footerColumns(spark: SparkSession, path: String)
+      : Option[Seq[(String, DataType)]] =
+    footerSchema(spark, path).map(_.map(c => c.name -> c.dataType))
 
   private def withFooter[A](spark: SparkSession, f: java.io.File)(
       read: org.apache.parquet.hadoop.metadata.ParquetMetadata => A): A = {
@@ -262,19 +276,24 @@ object TableIO {
     try read(reader.getFooter) finally reader.close()
   }
 
-  private def parquetFiles(path: String): Array[java.io.File] =
-    Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
+  private def parquetFiles(path: String): Array[java.io.File] = {
+    val p = new java.io.File(path)
+    (if (p.isFile) Array(p) else Option(p.listFiles()).getOrElse(Array.empty[java.io.File]))
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+  }
 
   /** File-level append for tables that only gain rows: copy the delta's
-    * parquet files into the live dir under unique names — zero Spark jobs
-    * (the schemas compare from one footer per dir), O(batch) IO. Returns
-    * false (caller falls back to a reconciling union rewrite) when the
-    * schemas differ or either dir has no footer schema to compare. */
+    * parquet files that hold rows into the live dir under unique names —
+    * zero Spark jobs (the schemas compare from one footer per dir), O(batch)
+    * IO. Returns false (caller falls back to a reconciling union rewrite)
+    * when the schemas differ or either dir has no footer schema to
+    * compare. */
   def appendFiles(spark: SparkSession, oldPath: String, newPath: String): Boolean = {
+    import scala.jdk.CollectionConverters._
     val oldColumns = footerColumns(spark, oldPath)
     if (oldColumns.isEmpty || oldColumns != footerColumns(spark, newPath)) return false
-    val files = parquetFiles(newPath)
+    val files = parquetFiles(newPath).filter(f =>
+      withFooter(spark, f)(_.getBlocks.asScala.exists(_.getRowCount > 0)))
     val stamp = java.lang.Long.toHexString(System.nanoTime())
     files.foreach { f =>
       java.nio.file.Files.copy(f.toPath,

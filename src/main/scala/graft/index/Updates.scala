@@ -34,7 +34,7 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
   def deletedBitmap(dir: String): RoaringBitmap = {
     val p = new java.io.File(deletedPath(dir))
     if (!p.exists()) new RoaringBitmap()
-    else spark.read.parquet(deletedPath(dir)).select($"docids").as[Array[Byte]]
+    else read(deletedPath(dir)).select($"docids").as[Array[Byte]]
       .collect().headOption.map(Bitmaps.cboDeserialize).getOrElse(new RoaringBitmap())
   }
 
@@ -59,10 +59,11 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
     // task by the bitmap expressions, never per row
     val delLit = lit(Bitmaps.cboSerialize(deleted))
 
+    // a missing or zero-row table has nothing to purge
     def rewriteBitmapTable(name: String): Unit = {
       val path = s"$dir/$name"
-      if (!new java.io.File(path).exists()) return
-      val df = spark.read.parquet(path)
+      if (!hasRows(path)) return
+      val df = read(path)
       val out0 = df.withColumn("docids", F.bitmap_and_not($"docids", delLit))
         .where(F.bitmap_cardinality($"docids") > 0)
       // word_docids carries a materialized df column — recount it or BM25
@@ -74,8 +75,8 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
     }
     def rewriteDocidTable(name: String): Unit = {
       val path = s"$dir/$name"
-      if (!new java.io.File(path).exists()) return
-      writeOver(spark.read.parquet(path)
+      if (!hasRows(path)) return
+      writeOver(read(path)
         .where(!F.bitmap_contains(delLit, $"docid")), path)
     }
 
@@ -95,9 +96,9 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
     // posting blocks: decode, filter, re-encode per word
     dag.step(T.PostingBlocks) {
       val pb = s"$dir/${T.PostingBlocks}"
-      if (new java.io.File(pb).exists())
+      if (hasRows(pb))
         writeOver(IndexBuilder.buildPostingBlocksFromTf(spark,
-          decodeTf(spark.read.parquet(pb)).where(!F.bitmap_contains(delLit, $"docid"))), pb)
+          decodeTf(read(pb)).where(!F.bitmap_contains(delLit, $"docid"))), pb)
     }
     // term_dict df/ttf/exact_only recounted from the PURGED forward index
     // (delete_documents.rs purges word-level metadata the same way): a
@@ -110,7 +111,7 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
       settings.searchableFields.zipWithIndex.toMap.get).toSet
     dag.step(T.TermDict, Seq(T.DocWordPositions)) {
       if (recount) writeOver(IndexBuilder.termDictFromDwp(
-        spark, spark.read.parquet(dwpPath), exactFids), s"$dir/${T.TermDict}")
+        spark, read(dwpPath), exactFids), s"$dir/${T.TermDict}")
     }
     dag.step(T.PrefixDict, Seq(T.TermDict)) {
       if (recount && new java.io.File(s"$dir/${T.PrefixDict}").exists())
@@ -162,7 +163,7 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
     // replaced ids: same primary key in the existing documents table
     if (replace && new java.io.File(s"$dir/${T.Documents}").exists() &&
         newDocs.columns.contains(pk)) {
-      val existing = spark.read.parquet(s"$dir/${T.Documents}")
+      val existing = read(s"$dir/${T.Documents}")
       if (existing.columns.contains(pk)) {
         val replaced = existing.join(newDocs.select(col(pk)), Seq(pk), "left_semi")
           .select($"docid").as[Int].collect()
@@ -174,13 +175,19 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
     val dag = new DagRunner
     try {
       val deltaBuild = builder.buildOn(dag, newDocs, delta, resume = false,
-        facetOverride = None, tables = deltaStages(dir))
+        facetOverride = None, tables = deltaStages(builder, dir))
       try {
+        // the batch vocabulary, collected once on the driver: every word of
+        // the delta's term_dict, a superset of the keys of every word-keyed
+        // delta table (w1 of the pair table included)
+        val batchWords = dag.value(Updates.BatchWords, Seq(T.TermDict)) {
+          read(s"$delta/${T.TermDict}").select($"word").as[String].collect()
+        }
         // no live table changes before the whole delta has committed: a
         // batch that fails to build leaves the index as it was
         dag.barrier(Updates.DeltaBuilt)
-        mergeSteps(dag, dir, delta)
-        builder.refreshDerivedTables(dag, dir, delta, Updates.merged, writeOver)
+        mergeSteps(dag, dir, delta, batchWords)
+        builder.refreshDerivedTables(dag, dir, delta, Updates.merged, writeOver, batchWords)
         dag.run()
       } finally deltaBuild.release()
     } finally {
@@ -200,29 +207,33 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
 
   /** The build stages an `addDocuments` delta writes for the index at `dir`:
     * the base tables [[mergeSteps]] merges, not the derived ones refreshed
-    * from them. Without exact attributes `exact_word_docids` stays empty,
-    * so the delta skips it too once the index has the table. */
-  private def deltaStages(dir: String): Set[String] = {
-    val exactStaysEmpty = settings.exactAttributes.isEmpty &&
-      new java.io.File(s"$dir/${T.ExactWordDocids}").exists()
+    * from them. A table the settings keep empty ([[IndexBuilder.staysEmpty]])
+    * is skipped too once the index has it. */
+  private def deltaStages(builder: IndexBuilder, dir: String): Set[String] =
     T.buildStages.toSet -- Updates.DerivedTables --
-      (if (exactStaysEmpty) Seq(T.ExactWordDocids) else Nil)
-  }
+      builder.staysEmpty(facetOverride = false).keys
+        .filter(t => new java.io.File(s"$dir/$t").exists())
 
   /** One step per base table, named [[Updates.merged]]: it merges the delta
     * table into the live one once the whole delta build has committed. A
     * table the delta lacks stays as it is; a table the index lacks is
-    * copied from the delta. */
-  private def mergeSteps(dag: DagRunner, dir: String, delta: String): Unit = {
+    * copied from the delta. Word-keyed tables touch the files that hold a
+    * word of `batchWords`. */
+  private def mergeSteps(dag: DagRunner, dir: String, delta: String,
+      batchWords: DagRunner.Value[Array[String]]): Unit = {
     def exists(p: String) = new java.io.File(p).exists()
     def step(name: String)(merge: (String, String) => Unit): Unit =
       dag.step(Updates.merged(name), Seq(Updates.DeltaBuilt)) {
         val oldPath = s"$dir/$name"; val newPath = s"$delta/$name"
         if (exists(newPath)) {
-          if (!exists(oldPath)) writeOver(spark.read.parquet(newPath), oldPath)
+          if (!exists(oldPath)) writeOver(read(newPath), oldPath)
           else merge(oldPath, newPath)
         }
       }
+    def mergeWordKeyed(oldPath: String, newPath: String, keyCol: String)(
+        merge: (DataFrame, DataFrame) => DataFrame): Unit =
+      TableIO.mergeTouchedFiles(spark, oldPath, read(newPath), keyCol,
+        batchWords.get)(merge)
 
     // word-keyed bitmap tables merge O(touched files), not O(table):
     // untouched parquet files (key ranges disjoint from the batch
@@ -247,10 +258,8 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
             .sortWithinPartitions(sc.head, sc.tail: _*)
         }
         touchKey match {
-          case Some(k) =>
-            mergeTouchedFiles(oldPath, spark.read.parquet(newPath), k)(agg)
-          case None =>
-            writeOver(agg(spark.read.parquet(oldPath), spark.read.parquet(newPath)), oldPath)
+          case Some(k) => mergeWordKeyed(oldPath, newPath, k)(agg)
+          case None => writeOver(agg(read(oldPath), read(newPath)), oldPath)
         }
       }
     mergeBitmapTable(T.WordDocids, Seq("word"), touchKey = Some("word"))
@@ -272,8 +281,8 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
       T.DocFacetNumbers, T.DocFacetStrings, T.DocStats, T.GeoCells)
       .foreach(name => step(name) { (oldPath, newPath) =>
         if (!appendFiles(oldPath, newPath))
-          writeOver(spark.read.parquet(oldPath)
-            .unionByName(spark.read.parquet(newPath), allowMissingColumns = true), oldPath)
+          writeOver(read(oldPath)
+            .unionByName(read(newPath), allowMissingColumns = true), oldPath)
       })
     // term_dict: recompute df by summing per-shard dfs (words disjoint by
     // doc); ttf sums the same way. `coalesce(ttf, df)` tolerates an index
@@ -283,7 +292,7 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
     // contains it, so summing over (touched ∪ delta) is exact; files for
     // out-of-batch words carry over.
     step(T.TermDict) { (oldPath, newPath) =>
-      mergeTouchedFiles(oldPath, spark.read.parquet(newPath), "word") { (a, b) =>
+      mergeWordKeyed(oldPath, newPath, "word") { (a, b) =>
         a.unionByName(b, allowMissingColumns = true)
           .withColumn("ttf", coalesce(col("ttf"), $"df".cast("long")))
           .groupBy($"word")
@@ -298,7 +307,7 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
     // column of untouched files stays on disk — at web scale the old
     // full-decode was an O(index) rewrite per batch)
     step(T.PostingBlocks) { (oldPath, newPath) =>
-      mergeTouchedFiles(oldPath, spark.read.parquet(newPath), "word") { (a, b) =>
+      mergeWordKeyed(oldPath, newPath, "word") { (a, b) =>
         IndexBuilder.buildPostingBlocksFromTf(spark, decodeTf(a).unionByName(decodeTf(b)))
       }
     }
@@ -334,8 +343,10 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
     * their canonical range-sorted layout (and merge posting-block
     * fragments back to full 128-entry blocks). The maintenance pass that
     * bounds file-count growth from `inc-` appends and touched-file merges
-    * — the Iceberg `rewrite_data_files` role. Content-neutral; returns
-    * (table, file count before) for each compacted table. */
+    * — the Iceberg `rewrite_data_files` role. A zero-row table is left as
+    * it is ([[TableIO.appendFiles]] adds no empty file to it). Content-
+    * neutral; returns (table, file count before) for each compacted
+    * table. */
   def compact(dir: String, maxFiles: Int = 32): Seq[(String, Int)] = {
     def fileCount(path: String): Int =
       Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
@@ -345,8 +356,8 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
       val path = s"$dir/$name"
       if (new java.io.File(path).exists()) {
         val n = fileCount(path)
-        if (n > maxFiles) {
-          writeOver(spark.read.parquet(path)
+        if (n > maxFiles && hasRows(path)) {
+          writeOver(read(path)
             .repartitionByRange(sortCols.map(col): _*)
             .sortWithinPartitions(sortCols.head, sortCols.tail: _*), path)
           done += (name -> n)
@@ -356,9 +367,9 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
     val pb = s"$dir/${T.PostingBlocks}"
     if (new java.io.File(pb).exists()) {
       val n = fileCount(pb)
-      if (n > maxFiles) {
+      if (n > maxFiles && hasRows(pb)) {
         writeOver(IndexBuilder.buildPostingBlocksFromTf(spark,
-          decodeTf(spark.read.parquet(pb))), pb)
+          decodeTf(read(pb))), pb)
         done += (T.PostingBlocks -> n)
       }
     }
@@ -380,10 +391,9 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
   // prefix-table refresh
   private def writeOver(df: DataFrame, path: String): Unit =
     TableIO.writeOver(spark)(df, path)
-  private def mergeTouchedFiles(
-      oldPath: String, deltaDf: DataFrame, keyCol: String)(
-      merge: (DataFrame, DataFrame) => DataFrame): Unit =
-    TableIO.mergeTouchedFiles(spark, oldPath, deltaDf, keyCol)(merge)
+  private def read(path: String): DataFrame = TableIO.read(spark, path)
+  /** The table at `path` exists and its footers count a row (no job). */
+  private def hasRows(path: String): Boolean = Manifest.parquetRowCount(spark, path) > 0
   private def appendFiles(oldPath: String, newPath: String): Boolean =
     TableIO.appendFiles(spark, oldPath, newPath)
 }
@@ -401,6 +411,9 @@ object Updates {
     T.ExactWordPrefixDocids, T.WordPrefixPositionDocids,
     T.WordPrefixPairProximityDocids, T.PrefixWordPairProximityDocids,
     T.FacetNumberLevels, T.FacetStringLevels)
+
+  /** The `addDocuments` step that collects the delta's vocabulary. */
+  private val BatchWords = "delta:words"
 
   /** The `addDocuments` step after which every delta table has committed. */
   private val DeltaBuilt = "delta:built"

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.roaringbitmap.RoaringBitmap
 
 import graft.core.{Bitmaps, Typo}
-import graft.index.IndexSettings
+import graft.index.{IndexSettings, TableIO}
 import graft.index.IndexSettings.T
 
 /** Read-side handle on a built index directory: lazy table access plus the
@@ -65,7 +65,7 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     s"index at $dir was updated after this handle opened; " +
       "reopen GraftIndex (stale serving caches)")
 
-  def table(name: String): DataFrame = spark.read.parquet(s"$dir/$name")
+  def table(name: String): DataFrame = TableIO.read(spark, s"$dir/$name")
 
   lazy val documents: DataFrame = table(T.Documents)
   lazy val docWordPositions: DataFrame = table(T.DocWordPositions)
@@ -440,10 +440,6 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
 
   // ------------------------------------------------- filter bitmap cache
 
-  /** result-size cap for handle-cached filter bitmaps (≈ 4M ids, ~0.5 MB
-    * roaring worst case); broader filters keep the streaming plan. */
-  private val FilterCacheCap = 1 << 22
-
   private val filterBmCache = java.util.Collections.synchronizedMap(
     new java.util.LinkedHashMap[String, Option[RoaringBitmap]](16, 0.75f, true) {
       override def removeEldestEntry(
@@ -477,17 +473,19 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     * (rotates with it, so updates can't serve stale sets) — the Spark twin
     * of milli's in-process filter algebra (`filter.rs:300-320`): repeated
     * filters on a warm handle run ZERO jobs. None when the result exceeds
-    * [[FilterCacheCap]] — callers keep the distributed semi-join plan.
+    * [[GraftIndex.FilterCacheCap]] — callers keep the distributed
+    * semi-join plan.
     * The evaluation runs outside the lock (concurrent serving clients). */
   private[search] def filterBitmap(f: String): Option[RoaringBitmap] = {
     val hit = filterBmCache.get(f)
     if (hit != null) return hit
+    val cap = GraftIndex.FilterCacheCap
     val ids = FilterEvaluator
       .candidates(this, FilterParser.parse(f))
-      .limit(FilterCacheCap + 1)
+      .limit(cap + 1)
       .select($"docid").as[Int].collect()
     val res: Option[RoaringBitmap] =
-      if (ids.length > FilterCacheCap) None else Some(Bitmaps.fromInts(ids.toSeq))
+      if (ids.length > cap) None else Some(Bitmaps.fromInts(ids.toSeq))
     filterBmCache.put(f, res)
     res
   }
@@ -1685,6 +1683,19 @@ object GraftIndex {
     val saved = DwpDirectMaxRows
     DwpDirectMaxRows = rows
     try f finally DwpDirectMaxRows = saved
+  }
+
+  /** Result-size cap for handle-cached filter bitmaps (≈ 4M ids, ~0.5 MB
+    * roaring worst case); broader filters keep the streaming plan. */
+  @volatile private[search] var FilterCacheCap: Int = 1 << 22 // var: specs force streaming
+
+  /** Test hook: run `f` with the filter-bitmap cap at `n` (0 = every
+    * non-empty filter streams), restore guaranteed — see [[withDwpMaxRows]].
+    * A handle keeps the filters it cached, so `f` needs a fresh handle. */
+  private[search] def withFilterCacheCap[A](n: Int)(f: => A): A = {
+    val saved = FilterCacheCap
+    FilterCacheCap = n
+    try f finally FilterCacheCap = saved
   }
 
   /** Chosen-docid cap for docid-point page pruning on restricted direct

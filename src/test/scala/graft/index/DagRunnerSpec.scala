@@ -26,6 +26,16 @@ class DagRunnerSpec extends AnyFunSuite with Matchers {
     seen.last shouldBe "d"
   }
 
+  test("a value step's result reaches the steps that depend on it") {
+    val dag = new DagRunner
+    val words = dag.value("words") { Thread.sleep(50); Seq("a", "b") }
+    an[IllegalStateException] should be thrownBy words.get
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    dag.step("use", Seq(words.step)) { seen.add(words.get) }
+    dag.run()
+    seen.toArray.toSeq shouldBe Seq(Seq("a", "b"))
+  }
+
   test("a failing step: dependents never start, running steps finish " +
       "before the step's own exception is rethrown") {
     val dag = new DagRunner

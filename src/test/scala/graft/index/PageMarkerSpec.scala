@@ -70,7 +70,7 @@ class PageMarkerSpec extends AnyFunSuite with Matchers {
     val p = writeDwp(root, Seq("aa", "ab", "za", "zb"))
     Files.delete(Paths.get(p, TableIO.DwpPageMarker)) // simulate pre-marker build
     val delta = Seq(("ac", 9, Array(9))).toDF("word", "docid", "positions")
-    TableIO.mergeTouchedFiles(spark, p, delta, "word")(_ unionByName _)
+    TableIO.mergeTouchedFiles(spark, p, delta, "word", Seq("ac"))(_ unionByName _)
     TableIO.readPageMarker(p, TableIO.DwpPageMarker) shouldBe None
     spark.read.parquet(p).count() shouldBe 5
   }
@@ -81,7 +81,7 @@ class PageMarkerSpec extends AnyFunSuite with Matchers {
     val p = writeDwp(root, Seq("aa", "ab", "za", "zb"))
     Files.write(Paths.get(p, TableIO.DwpPageMarker), "16384".getBytes("UTF-8"))
     val delta = Seq(("ac", 9, Array(9))).toDF("word", "docid", "positions")
-    TableIO.mergeTouchedFiles(spark, p, delta, "word")(_ unionByName _)
+    TableIO.mergeTouchedFiles(spark, p, delta, "word", Seq("ac"))(_ unionByName _)
     TableIO.readPageMarker(p, TableIO.DwpPageMarker) shouldBe Some(16384L)
   }
 }

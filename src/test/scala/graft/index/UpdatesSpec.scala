@@ -14,6 +14,20 @@ class UpdatesSpec extends AnyFunSuite with Matchers {
 
   private def freshDir() = graft.TestSpark.tempDir("graft-upd")
 
+  /** Every file under `root`, by path relative to it → its bytes' SHA-256. */
+  private def digests(root: String): Map[String, String] = {
+    import scala.jdk.CollectionConverters._
+    val r = java.nio.file.Paths.get(root)
+    val files = java.nio.file.Files.walk(r)
+    try files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+      .map { f =>
+        val md = java.security.MessageDigest.getInstance("SHA-256")
+        r.relativize(f).toString ->
+          md.digest(java.nio.file.Files.readAllBytes(f)).map("%02x".format(_)).mkString
+      }.toMap
+    finally files.close()
+  }
+
   test("soft delete removes docs from search; hard delete purges tables") {
     val spark = TestSpark.spark
     import spark.implicits._
@@ -165,6 +179,31 @@ class UpdatesSpec extends AnyFunSuite with Matchers {
     assertIncrementalParity(settings, all)
   }
 
+  test("incremental add-documents merge equals from-scratch build when the " +
+      "batch touches few of many files") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{lit, when}
+    val settings = IndexSettings(searchableFields = Seq("text"), primaryKey = "url")
+    // pinned partitions: each word-keyed table spans several word-ranged
+    // files, and the batch's words sit at the start, middle and end of the
+    // word order, so most files carry over and a file whose batch word the
+    // merge missed would keep a stale row next to the merged one
+    val oldParts = spark.conf.get("spark.sql.shuffle.partitions")
+    val oldCoalesce = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    try {
+      spark.conf.set("spark.sql.shuffle.partitions", "8")
+      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      val all = WebPages.generate(spark, 260)
+        .withColumn("text", when($"docid" >= 200, lit("a w4 with")).otherwise($"text"))
+        .cache()
+      assertIncrementalParity(settings, all)
+    } finally {
+      spark.conf.set("spark.sql.shuffle.partitions", oldParts)
+      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", oldCoalesce)
+    }
+  }
+
   test("a failed addDocuments leaves every live table unchanged, no " +
       "delta directory and no side directories in the index") {
     val spark = TestSpark.spark
@@ -185,19 +224,7 @@ class UpdatesSpec extends AnyFunSuite with Matchers {
       new java.io.File(System.getProperty("java.io.tmpdir")).listFiles()
         .filter(f => f.isDirectory && f.getName.startsWith("graft-delta"))
         .map(_.getName).toSet
-    // every file of the index, by path relative to it → its bytes' digest
-    def snapshot(): Map[String, String] = {
-      import scala.jdk.CollectionConverters._
-      val root = java.nio.file.Paths.get(dir)
-      val files = java.nio.file.Files.walk(root)
-      try files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
-        .map { f =>
-          val md = java.security.MessageDigest.getInstance("SHA-256")
-          root.relativize(f).toString ->
-            md.digest(java.nio.file.Files.readAllBytes(f)).map("%02x".format(_)).mkString
-        }.toMap
-      finally files.close()
-    }
+    def snapshot(): Map[String, String] = digests(dir)
     val before = deltaDirs()
     val liveBefore = snapshot()
     an[Exception] should be thrownBy new Updates(spark, settings).addDocuments(dir, batch)
@@ -209,6 +236,37 @@ class UpdatesSpec extends AnyFunSuite with Matchers {
            Seq(d.getPath) else Nil) ++ sideDirs(d)
       }
     sideDirs(new java.io.File(dir)) shouldBe empty
+  }
+
+  test("on text-only settings addDocuments leaves the tables the settings " +
+      "keep empty byte-identical") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val T = IndexSettings.T
+    val settings = IndexSettings(searchableFields = Seq("text"),
+      filterableFields = Set("lang"), primaryKey = "url")
+    val dir = freshDir()
+    val all = WebPages.generate(spark, 260).cache()
+    new IndexBuilder(spark, settings).build(all.where($"docid" < 200), dir, resume = false)
+    val kept = Seq(T.ExactWordDocids, T.ExactWordPrefixDocids, T.GeoCells)
+    def snapshot() = kept.map(t => t -> digests(s"$dir/$t")).toMap
+    val before = snapshot()
+    kept.foreach { t =>
+      withClue(s"table $t: ") {
+        before(t) should not be empty
+        Manifest.parquetRowCount(spark, s"$dir/$t") shouldBe 0L
+      }
+    }
+    val updates = new Updates(spark, settings)
+    updates.addDocuments(dir, all.where($"docid" >= 200))
+    Manifest.parquetRowCount(spark, s"$dir/${T.Documents}") shouldBe 260L
+    snapshot() shouldBe before
+    // purging and compacting skip a zero-row table
+    updates.softDelete(dir, Seq(3, 210))
+    updates.hardDelete(dir)
+    Manifest.parquetRowCount(spark, s"$dir/${T.Documents}") shouldBe 258L
+    updates.compact(dir, maxFiles = 0).map(_._1) should contain(T.Documents)
+    snapshot() shouldBe before
   }
 
   test("incremental merge is O(touched): out-of-range files carry over " +

@@ -69,6 +69,18 @@ class CellDrainAdmissionSpec extends AnyFunSuite with Matchers {
     val req = SearchRequest(query = Some(Fixture.TestQuery), limit = 17,
       strategy = MatchingStrategy.Last, exhaustive = true,
       filter = Some("tag = blue"))
-    bypass.execute(req).documentsIds shouldBe oracle.execute(req).documentsIds
+    // the bitmap-filter answer; the shared handle caches `tag = blue`
+    val want = oracle.execute(req)
+    GraftIndex.withFilterCacheCap(0) {
+      // a fresh handle, so the filter streams
+      val fresh = GraftIndex(TestSpark.spark, index.dir, index.settings)
+      Seq(new Search(fresh, maxLocalPostings = 1), new Search(fresh, maxLocalPostings = 0))
+        .foreach { s =>
+          s.prepare(req).get.filter.exists(_.isRight) shouldBe true
+          val got = s.execute(req)
+          got.documentsIds shouldBe want.documentsIds
+          got.candidates shouldBe want.candidates
+        }
+    }
   }
 }
