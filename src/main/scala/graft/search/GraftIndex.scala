@@ -202,7 +202,7 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     }
     // pair-proximity bitmaps for head × head word pairs — the proximity
     // cell drain's point reads (one pruned scan; absent combinations cache
-    // as Absent, so cold multi-word head queries skip their first-touch
+    // as None, so cold multi-word head queries skip their first-touch
     // pair fetch entirely)
     val pairHead = byDf.map(_._1).take(32)
     pairProxBitmaps(
@@ -210,7 +210,7 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     // precomputed prefix-pair heads (#8/#9): trailing-prefix queries drain
     // prox cells against (query word, prefix) rows — prewarm head-word ×
     // head-prefix combinations on both sides so those cells assemble with
-    // zero jobs cold (absent combinations cache as Absent)
+    // zero jobs cold (absent combinations cache as None)
     val ppPfx = headPfxs.filter(prefixPairDict.contains).take(16)
     if (ppPfx.nonEmpty) {
       val items = for (w <- pairHead; p <- ppPfx; r <- Seq(true, false))
@@ -440,12 +440,7 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
 
   // ------------------------------------------------- filter bitmap cache
 
-  private val filterBmCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, Option[RoaringBitmap]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Option[RoaringBitmap]]): Boolean =
-        size() > 64
-    })
+  private val filterBmCache = new Lru[String, Option[RoaringBitmap]](64, _ => 1L)
 
   /** (branch group material, cell doc set) → attribute strata
     * [(attr label, member docs, noRefine)] — the strata depend only on the
@@ -458,16 +453,8 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     * 42k docs); LRU 64 ≈ ~1–2 MB; rotates with the handle. Entries are
     * read-only downstream (the drain and exactness strata never mutate
     * cell bitmaps — static RoaringBitmap ops + clones only). */
-  private[search] val attrStrataMemo = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[AnyRef, IndexedSeq[(Long, RoaringBitmap, Boolean)]](
-        16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[AnyRef, IndexedSeq[(Long, RoaringBitmap, Boolean)]])
-          : Boolean = size() > 64
-    })
-
-  /** Memo hits (specs pin replay engagement). */
-  private[search] val attrStrataMemoHits = new java.util.concurrent.atomic.AtomicLong()
+  private[search] val attrStrataMemo =
+    new Lru[AnyRef, IndexedSeq[(Long, RoaringBitmap, Boolean)]](64, _ => 1L)
 
   /** Filter DSL string → candidate docids bitmap, LRU-cached on the handle
     * (rotates with it, so updates can't serve stale sets) — the Spark twin
@@ -476,19 +463,18 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     * [[GraftIndex.FilterCacheCap]] — callers keep the distributed
     * semi-join plan.
     * The evaluation runs outside the lock (concurrent serving clients). */
-  private[search] def filterBitmap(f: String): Option[RoaringBitmap] = {
-    val hit = filterBmCache.get(f)
-    if (hit != null) return hit
-    val cap = GraftIndex.FilterCacheCap
-    val ids = FilterEvaluator
-      .candidates(this, FilterParser.parse(f))
-      .limit(cap + 1)
-      .select($"docid").as[Int].collect()
-    val res: Option[RoaringBitmap] =
-      if (ids.length > cap) None else Some(Bitmaps.fromInts(ids.toSeq))
-    filterBmCache.put(f, res)
-    res
-  }
+  private[search] def filterBitmap(f: String): Option[RoaringBitmap] =
+    filterBmCache.get(f).getOrElse {
+      val cap = GraftIndex.FilterCacheCap
+      val ids = FilterEvaluator
+        .candidates(this, FilterParser.parse(f))
+        .limit(cap + 1)
+        .select($"docid").as[Int].collect()
+      val res: Option[RoaringBitmap] =
+        if (ids.length > cap) None else Some(Bitmaps.fromInts(ids.toSeq))
+      filterBmCache.put(f, res)
+      res
+    }
 
   // -------------------------------------------------------- planner probes
 
@@ -535,39 +521,25 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
   /** LRU of (w1, w2) → prox-1 pair frequency: warm/repeated queries probe
     * word splits without launching a job (the reference's equivalent read
     * hits LMDB in-process, search/mod.rs:136-242). */
-  private val pairFreqCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, String), java.lang.Long](1024, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, String), java.lang.Long]): Boolean =
-          size() > 65536
-      })
+  private val pairFreqCache = new Lru[(String, String), Long](65536, _ => 1L)
 
   /** Batched pair frequency probe for `split_best_frequency`, LRU-cached:
     * one filter for all UNCACHED splits instead of per-pair reads. */
-  def pairFrequencies(pairs: Seq[(String, String)]): Map[(String, String), Long] = {
-    if (pairs.isEmpty) return Map.empty
-    val (hits, misses0) = pairs.distinct.partition(pairFreqCache.containsKey)
-    // pinned-dictionary short-circuit: a pair with a non-corpus-word side
-    // cannot appear in the pair table — frequency 0 with no fetch.
-    // split_best_frequency probes EVERY split point of every query word
-    // and nearly all halves are non-words, so this turns the per-novel-
-    // query pair-frequency job into a driver-side hash probe.
-    val misses = dfLocal match {
-      case Some(m) =>
-        val (in, out) = misses0.partition { case (l, r) =>
-          m.containsKey(l) && m.containsKey(r)
-        }
-        out.foreach(p => pairFreqCache.put(p, java.lang.Long.valueOf(0L)))
-        in
-      case None => misses0
-    }
-    val fetched: Map[(String, String), Long] =
-      if (misses.isEmpty) Map.empty else fetchPairFrequencies(misses)
-    misses.foreach(p => pairFreqCache.put(p, java.lang.Long.valueOf(fetched.getOrElse(p, 0L))))
-    hits.map(p => p -> pairFreqCache.get(p).longValue()).toMap ++
+  def pairFrequencies(pairs: Seq[(String, String)]): Map[(String, String), Long] =
+    pairFreqCache.getAll(pairs) { misses0 =>
+      // pinned-dictionary short-circuit: a pair with a non-corpus-word side
+      // cannot appear in the pair table — frequency 0 with no fetch.
+      // split_best_frequency probes EVERY split point of every query word
+      // and nearly all halves are non-words, so this turns the per-novel-
+      // query pair-frequency job into a driver-side hash probe.
+      val misses = dfLocal match {
+        case Some(m) => misses0.filter { case (l, r) => m.containsKey(l) && m.containsKey(r) }
+        case None => misses0
+      }
+      val fetched = if (misses.isEmpty) Map.empty[(String, String), Long]
+        else fetchPairFrequencies(misses)
       misses0.map(p => p -> fetched.getOrElse(p, 0L)).toMap
-  }
+    }
 
   private def fetchPairFrequencies(
       pairs: Seq[(String, String)]): Map[(String, String), Long] = {
@@ -630,7 +602,7 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
   /** Pinned-dictionary fetch guards: when the dictionary is driver-resident
     * a word/prefix with no dictionary presence cannot have a row in any
     * posting table, so its lookup skips the distributed fetch entirely and
-    * caches as Absent/empty. Novel ngram words (`w3w17`) and typo'd query
+    * caches as absent/empty. Novel ngram words (`w3w17`) and typo'd query
     * words otherwise cost one cold Spark job each on first touch. */
   private[search] def dictWords(ks: Seq[String]): Seq[String] = dfLocal match {
     case Some(m) => ks.filter(m.containsKey)
@@ -719,26 +691,20 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     * the band scan + OSA DP entirely (the reference keeps its FST in
     * memory for the same reason — mod.rs:362-442). */
   private val derivationCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, Boolean, Int), Seq[(String, Int)]](256, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Boolean, Int), Seq[(String, Int)]]): Boolean =
-          size() > 65536
-      })
+    new Lru[(String, Boolean, Int), Seq[(String, Int)]](65536, _ => 1L)
 
-  def derivations(keys: Set[(String, Boolean, Int)]): Ranker.Derivations = {
-    val hits = scala.collection.mutable.HashMap.empty[(String, Boolean, Int), Seq[(String, Int)]]
-    keys.foreach { k =>
-      val v = derivationCache.get(k)
-      if (v != null) hits.update(k, v)
-    }
-    val uncached = keys.filterNot(hits.contains)
-    val computed = derivationsUncached(uncached)
-    uncached.foreach(k => derivationCache.put(k, computed.map.getOrElse(k, Nil)))
-    Ranker.Derivations(hits.toMap ++ computed.map, computed.exactFids)
-  }
+  /** searchable fids of the exact attributes */
+  private lazy val exactFids: Set[Int] = settings.exactAttributes
+    .flatMap(f => settings.searchableFields.zipWithIndex.toMap.get(f))
 
-  private def derivationsUncached(keys: Set[(String, Boolean, Int)]): Ranker.Derivations = {
+  def derivations(keys: Set[(String, Boolean, Int)]): Ranker.Derivations =
+    Ranker.Derivations(derivationCache.getAll(keys) { missing =>
+      val computed = derivationsUncached(missing)
+      missing.map(k => k -> computed.getOrElse(k, Nil)).toMap
+    }, exactFids)
+
+  private def derivationsUncached(keys: Seq[(String, Boolean, Int)])
+      : Map[(String, Boolean, Int), Seq[(String, Int)]] = {
     // Plain prefix EXTENSIONS are NEVER enumerated against the dictionary:
     // the read path resolves them with a parquet StartsWith predicate on
     // the word-sorted posting tables + per-doc startsWith
@@ -747,11 +713,8 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     // word_prefix_docids db exists to avoid (criteria/mod.rs:590-637).
     // Prefix keys with a typo budget enumerate ONLY their typo'd
     // derivations (extensions excluded below).
-    val enumKeys = keys.filterNot { case (_, prefix, t) => prefix && t == 0 }
-    if (enumKeys.isEmpty) return Ranker.Derivations(Map.empty,
-      settings.exactAttributes
-        .flatMap(f => settings.searchableFields.zipWithIndex.toMap.get(f)))
-    val keySeq = enumKeys.toSeq
+    val keySeq = keys.filterNot { case (_, prefix, t) => prefix && t == 0 }
+    if (keySeq.isEmpty) return Map.empty
     // coarse prefilter: any key may match words within its length band
     def bandOk(len: Int): Boolean = keySeq.exists { case (w, prefix, t) =>
       if (prefix) len >= w.length - t
@@ -770,7 +733,7 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
             .as[(String, Boolean)].collect()
         else termDict.where(coarse).select($"word").as[String].collect().map((_, false))
     }
-    val map = keySeq.map { case key @ (w, prefix, t) =>
+    keySeq.map { case key @ (w, prefix, t) =>
       val ds = words.iterator.flatMap { case (cand, exactOnly) =>
         // plain extensions of a prefix key are served by the per-doc
         // startsWith path (Derivations.matching) — skip them here
@@ -783,9 +746,6 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
       }.toVector.sortBy(_._1)
       key -> (ds: Seq[(String, Int)])
     }.toMap
-    val exactFids = settings.exactAttributes
-      .flatMap(f => settings.searchableFields.zipWithIndex.toMap.get(f))
-    Ranker.Derivations(map, exactFids)
   }
 
   // --------------------------------------------- bitmap candidate resolver
@@ -1173,7 +1133,7 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     * table — the Spark twin of milli's `word_pair_proximity_docids` LMDB
     * gets (`criteria/mod.rs:203-220`). One pruned scan per miss batch
     * (w1/w2 In-filters push to the (w1,w2,prox)-sorted footers); every
-    * (pair, prox) combination caches individually (Absent included), so
+    * (pair, prox) combination caches individually (absent ones as None), so
     * warm proximity cell drains run zero Spark jobs. */
   private[search] def pairProxBitmaps(pairs: Seq[(String, String)])
       : Map[(String, String, Int), Option[RoaringBitmap]] = {
@@ -1432,10 +1392,6 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
 
   // --------------------------------------- position tables (#10 / #12)
 
-  /** Observability: position-row point reads (specs pin that the attribute
-    * / exactness cell refinements actually read tables #10/#12). */
-  val positionRowReads = new java.util.concurrent.atomic.AtomicLong()
-
   private lazy val wordPositionDocids: DataFrame = table(T.WordPositionDocids)
   private lazy val wordPrefixPositionDocids: DataFrame =
     table(T.WordPrefixPositionDocids)
@@ -1443,14 +1399,11 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     new java.io.File(s"$dir/${T.WordPositionDocids}").exists() &&
       new java.io.File(s"$dir/${T.WordPrefixPositionDocids}").exists()
 
-  /** Per-key ascending (position → docids) rows, LRU'd on the handle.
-    * Values: the rows array, [[GraftIndex.PosTooBig]], or Absent (no rows). */
-  private val posRowsCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, AnyRef](256, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, AnyRef]): Boolean =
-        size() > 4096
-    })
+  /** `w:<word>` / `p:<prefix>` → ascending (position → docids) rows:
+    * `None` = too big to point-read, `Some(empty)` = absent. Its misses
+    * show that the attribute / exactness refinements read #10/#12. */
+  private[search] val positionRowCache =
+    new Lru[String, Option[IndexedSeq[(Int, RoaringBitmap)]]](4096, _ => 1L)
 
   /** Ascending `(position, docids)` rows of words (#10
     * `word_position_docids`) and prefixes (#12 `word_prefix_position_docids`)
@@ -1468,24 +1421,11 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     type Rows = IndexedSeq[(Int, RoaringBitmap)]
     if (!hasPositionTables)
       return (words.map(_ -> None).toMap, prefixes.map(_ -> None).toMap)
-    val keys = words.distinct.map("w:" + _) ++ prefixes.distinct.map("p:" + _)
-    val hits = scala.collection.mutable.HashMap.empty[String, Option[Rows]]
-    val missW = Vector.newBuilder[String]
-    val missP = Vector.newBuilder[String]
-    keys.foreach { k =>
-      posRowsCache.get(k) match {
-        case null =>
-          if (k.startsWith("w:")) missW += k.drop(2) else missP += k.drop(2)
-        case GraftIndex.PosTooBig => hits.update(k, None)
-        case GraftIndex.PosAbsent => hits.update(k, Some(IndexedSeq.empty))
-        case rows                 => hits.update(k, Some(rows.asInstanceOf[Rows]))
-      }
-    }
+    // untagged missed keys of one table → their cache entries, tagged
     def fetch(misses: Seq[String], tableName: String, df: => DataFrame,
         keyCol: String, live: Seq[String] => Seq[String],
         tag: String): Map[String, Option[Rows]] = {
       if (misses.isEmpty) return Map.empty
-      positionRowReads.incrementAndGet()
       val alive = live(misses).toSet
       val out = scala.collection.mutable.HashMap.empty[String,
         scala.collection.mutable.ArrayBuffer[(Int, RoaringBitmap)]]
@@ -1496,7 +1436,7 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
         DirectParquet.bandGroupCount(fts,
           DirectParquet.keyBands(Seq(k))) <= GraftIndex.PosMaxGroupsPerKey)
       val okSet = ok.toSet
-      val fetched: Boolean = ok.isEmpty || {
+      val direct = ok.isEmpty ||
         DirectParquet.scanBands(fts, DirectParquet.keyBands(ok)) { g =>
           val k = g.getString(keyCol, 0)
           if (okSet(k))
@@ -1505,7 +1445,7 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
               ((g.getInteger("position", 0),
                 Bitmaps.cboDeserialize(g.getBinary("docids", 0).getBytes)))
         }
-      } || {
+      if (!direct) {
         // Spark fallback (direct read failed): same rows, one scan
         out.clear()
         df.where(col(keyCol).isin(ok: _*))
@@ -1516,37 +1456,29 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
               scala.collection.mutable.ArrayBuffer.empty) +=
               ((p, Bitmaps.cboDeserialize(b)))
           }
-        true
       }
-      if (!fetched) Map.empty // unreachable (fallback always true) — safety
-      else {
-        val res = Map.newBuilder[String, Option[Rows]]
-        misses.foreach { k =>
-          val v: (AnyRef, Option[Rows]) =
-            if (!alive.contains(k)) (GraftIndex.PosAbsent, Some(IndexedSeq.empty))
-            else if (big.contains(k)) (GraftIndex.PosTooBig, None)
-            else out.get(k) match {
-              case Some(rows) if rows.length > GraftIndex.PosMaxRowsPerKey =>
-                (GraftIndex.PosTooBig, None)
-              case Some(rows) =>
-                val sorted: Rows = rows.sortBy(_._1).toIndexedSeq
-                (sorted, Some(sorted))
-              case None => (GraftIndex.PosAbsent, Some(IndexedSeq.empty))
-            }
-          posRowsCache.put(s"${tag.charAt(0)}:$k", v._1)
-          res += k -> v._2
-        }
-        res.result()
-      }
+      misses.iterator.map { k =>
+        val v: Option[Rows] =
+          if (!alive.contains(k)) Some(IndexedSeq.empty)
+          else if (big.contains(k)) None
+          else out.get(k) match {
+            case Some(rows) if rows.length > GraftIndex.PosMaxRowsPerKey => None
+            case Some(rows) => Some(rows.sortBy(_._1).toIndexedSeq)
+            case None => Some(IndexedSeq.empty)
+          }
+        (tag + k) -> v
+      }.toMap
     }
-    val fw = fetch(missW.result(), T.WordPositionDocids, wordPositionDocids,
-      "word", dictWords, "words")
-    val fp = fetch(missP.result(), T.WordPrefixPositionDocids,
-      wordPrefixPositionDocids, "prefix", livePrefixes, "prefixes")
-    val all = hits ++ fw.map { case (k, v) => ("w:" + k, v) } ++
-      fp.map { case (k, v) => ("p:" + k, v) }
-    (words.distinct.map(w => w -> all.getOrElse("w:" + w, None)).toMap,
-      prefixes.distinct.map(p => p -> all.getOrElse("p:" + p, None)).toMap)
+    val got = positionRowCache.getAll(
+        words.distinct.map("w:" + _) ++ prefixes.distinct.map("p:" + _)) { missing =>
+      val (mw, mp) = missing.partition(_.startsWith("w:"))
+      fetch(mw.map(_.drop(2)), T.WordPositionDocids, wordPositionDocids,
+        "word", dictWords, "w:") ++
+        fetch(mp.map(_.drop(2)), T.WordPrefixPositionDocids,
+          wordPrefixPositionDocids, "prefix", livePrefixes, "p:")
+    }
+    (words.distinct.map(w => w -> got("w:" + w)).toMap,
+      prefixes.distinct.map(p => p -> got("p:" + p)).toMap)
   }
 
   /** word → (tolerant ∪ exact) candidate bitmap (empty when absent) — a
@@ -1582,7 +1514,7 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
   /** One-scan prewarm of every (searchable fid, n ≤ 10) word-count bitmap
     * — the exactness strata's rank-0 reads (the table only stores counts
     * ≤ 10, so this is the WHOLE serving-relevant key space; absent
-    * combinations cache as Absent). Called from warmServing. */
+    * combinations cache as None). Called from warmServing. */
   private[search] def prewarmFidWordCounts(): Unit = {
     val fids = settings.searchableFields.indices.toSeq
     if (fids.isEmpty ||
@@ -1659,12 +1591,10 @@ object GraftIndex {
     * a var so specs can force the unpinnable (level-tree walk) path. */
   private[search] var MaxSortPinRows: Int = 2000000
 
-  /** Position-row (#10/#12) point-read sentinels + caps: a key whose rows
-    * span more row groups (or decode to more rows) than these is refused —
-    * callers skip set-based refinement for that group and keep the per-doc
-    * path. Caps bound one fetch to a few MB of decode. */
-  private[search] object PosTooBig
-  private[search] object PosAbsent
+  /** Position-row (#10/#12) point-read caps: a key whose rows span more
+    * row groups (or decode to more rows) than these is refused — callers
+    * skip set-based refinement for that group and keep the per-doc path.
+    * Caps bound one fetch to a few MB of decode. */
   private[search] var PosMaxGroupsPerKey: Int = 4
   private[search] var PosMaxRowsPerKey: Int = 32768
 

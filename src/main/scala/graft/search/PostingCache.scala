@@ -22,40 +22,12 @@ final class PostingCache(index: GraftIndex, maxBytes: Long = 256L << 20) {
   def budgetBytes: Long = maxBytes
 
   /** word → postings sorted by docid: (docid, tf). */
-  private val lru = new java.util.LinkedHashMap[String, Array[Long]](256, 0.75f, true)
-  private var bytes = 0L
-
-  @inline private def entryBytes(a: Array[Long]): Long = 64L + 8L * a.length
-
-  private def evict(): Unit = {
-    val it = lru.entrySet().iterator()
-    while (bytes > maxBytes && it.hasNext) {
-      val e = it.next()
-      bytes -= entryBytes(e.getValue)
-      it.remove()
-    }
-  }
+  private val lru = new Lru[String, Array[Long]](maxBytes, a => 64L + 8L * a.length)
 
   /** Fetch-through: postings of every word, as (docid, tf) pairs packed in a
     * long (docid high, tf low) so the hot array is primitive. Misses are
-    * fetched in ONE pruned posting-block scan; absent words cache empty.
-    *
-    * The distributed fetch runs OUTSIDE the lock: one cold miss must not
-    * serialize every concurrent serving client behind a Spark job (two
-    * threads racing on the same word both fetch; the second install is
-    * dropped — standard fetch-through tolerance). */
-  def get(words: Seq[String]): Map[String, Array[Long]] = {
-    val distinct = words.distinct
-    val (hits, missing) = synchronized {
-      val h = Map.newBuilder[String, Array[Long]]
-      val m = Vector.newBuilder[String]
-      distinct.foreach { w =>
-        val v = lru.get(w) // refreshes LRU recency
-        if (v != null) h += (w -> v) else m += w
-      }
-      (h.result(), m.result())
-    }
-    if (missing.isEmpty) return hits
+    * fetched in ONE pruned posting-block scan; absent words cache empty. */
+  def get(words: Seq[String]): Map[String, Array[Long]] = lru.getAll(words) { missing =>
     // pinned-dictionary guard: non-dictionary terms have no blocks — cache
     // them empty without a scan
     val live = index.dictWords(missing)
@@ -66,7 +38,7 @@ final class PostingCache(index: GraftIndex, maxBytes: Long = 256L << 20) {
         .select(col("word"), col("block_id"), col("bytes"))
         .as[(String, Int, Array[Byte])].collect()
     val byWord = rows.groupBy(_._1)
-    val fetched: Map[String, Array[Long]] = missing.iterator.map { w =>
+    missing.iterator.map { w =>
       val ps: Array[Long] = byWord.get(w) match {
         case None => Array.empty[Long]
         case Some(blocks) =>
@@ -76,15 +48,6 @@ final class PostingCache(index: GraftIndex, maxBytes: Long = 256L << 20) {
       }
       w -> ps
     }.toMap
-    synchronized {
-      fetched.foreach { case (w, ps) =>
-        if (!lru.containsKey(w)) { lru.put(w, ps); bytes += entryBytes(ps) }
-      }
-      evict()
-      // values captured before evict() could run, so an over-budget batch
-      // (or a concurrent eviction) can't null out the caller's view
-      hits ++ fetched
-    }
   }
 
   @inline def docidOf(packed: Long): Int = (packed >>> 32).toInt
@@ -95,7 +58,7 @@ final class PostingCache(index: GraftIndex, maxBytes: Long = 256L << 20) {
   * `word_docids` / `exact_word_docids` / `word_prefix_docids` /
   * `exact_word_prefix_docids` point reads (ns `w`/`e`/`p`/`q`) plus
   * dictionary-miss prefix range unions (ns `r`). PRESENCE-AWARE: a key
-  * absent from its table caches as Absent so `resolveTreeBitmap` can still
+  * absent from its table caches as None so `resolveTreeBitmap` can still
   * distinguish "prefix not in the prefix dict" (→ range-union fallback)
   * from "not fetched yet". Warm no-rank/count queries and the bitmap-
   * bucketed rank pass run zero Spark jobs (the reference's equivalent reads
@@ -103,64 +66,20 @@ final class PostingCache(index: GraftIndex, maxBytes: Long = 256L << 20) {
 final class BitmapCache(maxBytes: Long = 128L << 20) {
   import org.roaringbitmap.RoaringBitmap
 
-  private object Absent
-  private val lru = new java.util.LinkedHashMap[String, AnyRef](256, 0.75f, true)
-  private var bytes = 0L
-
-  @inline private def entryBytes(v: AnyRef): Long = v match {
-    case bm: RoaringBitmap => 64L + bm.getSizeInBytes
-    case _                 => 64L
-  }
-
-  private def evict(): Unit = {
-    val it = lru.entrySet().iterator()
-    while (bytes > maxBytes && it.hasNext) {
-      val e = it.next()
-      bytes -= entryBytes(e.getValue)
-      it.remove()
-    }
-  }
+  private val lru = new Lru[String, Option[RoaringBitmap]](maxBytes,
+    v => 64L + v.fold(0L)(_.getSizeInBytes.toLong))
 
   /** Fetch-through lookup: `fetch` is called ONCE with the uncached keys and
     * returns bitmaps for those present in the table; the rest cache as
-    * Absent. Result maps every requested key to Some(bitmap) | None(absent).
-    * Returned bitmaps are SHARED — callers must not mutate them.
-    *
-    * `fetch` (a distributed job on a cold miss) runs OUTSIDE the lock so one
-    * cold query never serializes concurrent serving clients; racing threads
-    * may fetch the same key twice and the second install is dropped. */
+    * absent. Result maps every requested key to Some(bitmap) | None(absent).
+    * Returned bitmaps are SHARED — callers must not mutate them. */
   def get(ns: String, keys: Seq[String])(
       fetch: Seq[String] => Map[String, RoaringBitmap]): Map[String, Option[RoaringBitmap]] = {
-    val distinct = keys.distinct
-    val (hits, missing) = synchronized {
-      val h = Map.newBuilder[String, Option[RoaringBitmap]]
-      val m = Vector.newBuilder[String]
-      distinct.foreach { k =>
-        lru.get(ns + ":" + k) match { // refreshes LRU recency
-          case null              => m += k
-          case bm: RoaringBitmap => h += (k -> Some(bm))
-          case _                 => h += (k -> None)
-        }
-      }
-      (h.result(), m.result())
-    }
-    if (missing.isEmpty) return hits
-    val fetched = fetch(missing)
-    synchronized {
-      missing.foreach { k =>
-        if (!lru.containsKey(ns + ":" + k)) {
-          val v: AnyRef = fetched.get(k) match {
-            case Some(bm) => bm
-            case None     => Absent
-          }
-          lru.put(ns + ":" + k, v)
-          bytes += entryBytes(v)
-        }
-      }
-      evict()
-      // values captured before evict(): the caller's view can't be nulled
-      hits ++ missing.map(k => k -> fetched.get(k))
-    }
+    val p = ns.length + 1
+    lru.getAll(keys.map(ns + ":" + _)) { missing =>
+      val got = fetch(missing.map(_.substring(p)))
+      missing.iterator.map(k => k -> got.get(k.substring(p))).toMap
+    }.map { case (k, v) => k.substring(p) -> v }
   }
 }
 
@@ -178,41 +97,17 @@ final class DwpCache(index: GraftIndex, maxBytes: Long = 256L << 20) {
   /** byte budget (prewarm sizes its head against it). */
   def budgetBytes: Long = maxBytes
 
-  private val lru =
-    new java.util.LinkedHashMap[String, Array[(Int, String, Array[Int])]](64, 0.75f, true)
-  private var bytes = 0L
+  /** `w:<word>` / `p:<prefix>` → that key's complete rows. */
+  private val lru = new Lru[String, Rows](maxBytes,
+    a => 64L + a.iterator.map(r => 48L + 2L * r._2.length + 4L * r._3.length).sum)
 
-  private def entryBytes(a: Array[(Int, String, Array[Int])]): Long =
-    64L + a.iterator.map(r => 48L + 2L * r._2.length + 4L * r._3.length).sum
-
-  private def evict(): Unit = {
-    val it = lru.entrySet().iterator()
-    while (bytes > maxBytes && it.hasNext) {
-      val e = it.next()
-      bytes -= entryBytes(e.getValue)
-      it.remove()
-    }
-  }
-
-  /** Rows for every exact word and every prefix, fetched through one pruned
-    * scan per miss batch. Values are docid-sorted (binary-searchable).
-    * The scan runs OUTSIDE the lock (cold misses must not serialize
-    * concurrent serving clients; duplicate racing fetches tolerated). */
+  /** The cached rows of each word and prefix, plus the keys that missed. */
   private def splitHits(dw: Seq[String], dp: Seq[String])
-      : (Map[String, Rows], Map[String, Rows], Seq[String], Seq[String]) =
-    synchronized {
-      val hw = Map.newBuilder[String, Rows]
-      val hp = Map.newBuilder[String, Rows]
-      val mw = Vector.newBuilder[String]
-      val mp = Vector.newBuilder[String]
-      dw.foreach { w =>
-        val v = lru.get("w:" + w); if (v != null) hw += (w -> v) else mw += w
-      }
-      dp.foreach { p =>
-        val v = lru.get("p:" + p); if (v != null) hp += (p -> v) else mp += p
-      }
-      (hw.result(), hp.result(), mw.result(), mp.result())
-    }
+      : (Map[String, Rows], Map[String, Rows], Seq[String], Seq[String]) = {
+    val hw = dw.flatMap(w => lru.get("w:" + w).map(w -> _)).toMap
+    val hp = dp.flatMap(p => lru.get("p:" + p).map(p -> _)).toMap
+    (hw, hp, dw.filterNot(hw.contains), dp.filterNot(hp.contains))
+  }
 
   /** One pruned scan for a miss batch. Pinned-dictionary guard: novel
     * ngram/typo'd words and dead prefixes have no forward rows — they
@@ -282,26 +177,30 @@ final class DwpCache(index: GraftIndex, maxBytes: Long = 256L << 20) {
     (fetchedW, fetchedP)
   }
 
+  /** Rows for every exact word and every prefix, fetched through one pruned
+    * scan per miss batch. Values are docid-sorted (binary-searchable). */
   def get(words: Seq[String], prefixes: Seq[String],
       allowDirect: Boolean = true)
       : (Map[String, Rows], Map[String, Rows]) = {
     val (hitW, hitP, missW, missP) = splitHits(words.distinct, prefixes.distinct)
-    if (missW.isEmpty && missP.isEmpty) return (hitW, hitP)
-    val rows = scanRows(missW, missP, None, allowDirect)
-    val (fetchedW, fetchedP) = groupFetched(rows, missW, missP)
-    val out = synchronized {
-      (fetchedW.iterator.map { case (w, a) => ("w:" + w, a) } ++
-        fetchedP.iterator.map { case (p, a) => ("p:" + p, a) }).foreach {
-        case (k, a) =>
-          if (!lru.containsKey(k)) { lru.put(k, a); bytes += entryBytes(a) }
-      }
-      evict()
-      (hitW ++ fetchedW, hitP ++ fetchedP)
+    if (missW.isEmpty && missP.isEmpty) (hitW, hitP)
+    else {
+      val (w, p) = fill(missW, missP, allowDirect)
+      (hitW ++ w, hitP ++ p)
     }
+  }
+
+  /** Blocking complete fetch of missed keys, installed in the LRU. */
+  private def fill(missW: Seq[String], missP: Seq[String],
+      allowDirect: Boolean = true): (Map[String, Rows], Map[String, Rows]) = {
+    val (fetchedW, fetchedP) =
+      groupFetched(scanRows(missW, missP, None, allowDirect), missW, missP)
+    fetchedW.foreach { case (w, a) => lru.put("w:" + w, a) }
+    fetchedP.foreach { case (p, a) => lru.put("p:" + p, a) }
     // complete entries just landed: drop the restricted-fetch memo so the
     // next getForDocs sees the (fuller) LRU instead of the stale slice
     rMemo = null
-    out
+    (fetchedW, fetchedP)
   }
 
   /** Keys whose complete fill is in flight on the background filler. */
@@ -365,13 +264,13 @@ final class DwpCache(index: GraftIndex, maxBytes: Long = 256L << 20) {
     // drains stay restricted — the semi-join path keeps the collect
     // O(|chosen| × words) where a complete fill would be O(df))
     if (heavyW.isEmpty && heavyP.isEmpty) {
-      val (w, p) = get(missW, missP)
+      val (w, p) = fill(missW, missP)
       return (hitW ++ w, hitP ++ p)
     }
     val lightW = missW.filterNot(heavyW.contains)
     val lightP = missP.filterNot(heavyP.contains)
     val (lightFedW, lightFedP) =
-      if (lightW.nonEmpty || lightP.nonEmpty) get(lightW, lightP)
+      if (lightW.nonEmpty || lightP.nonEmpty) fill(lightW, lightP)
       else (Map.empty[String, Rows], Map.empty[String, Rows])
     val rows = scanRows(heavyW, heavyP, Some(docids))
     val (fetchedW, fetchedP) = groupFetched(rows, heavyW, heavyP)

@@ -675,13 +675,13 @@ object RankCells {
     // how wide the material) — labels re-copy from THIS cell, since the
     // memoized entry may have been built under different (typo, prox)
     val memoKey: AnyRef = (branchMats, cell.docs)
-    val hit = index.attrStrataMemo.get(memoKey)
-    if (hit != null) {
-      index.attrStrataMemoHits.incrementAndGet()
-      attrDrains.incrementAndGet()
-      return Some(hit.iterator.map { case (a, d, nr) =>
-        cell.copy(docs = d, attr = a, noRefine = nr)
-      })
+    index.attrStrataMemo.get(memoKey) match {
+      case Some(hit) =>
+        attrDrains.incrementAndGet()
+        return Some(hit.iterator.map { case (a, d, nr) =>
+          cell.copy(docs = d, attr = a, noRefine = nr)
+        })
+      case None => ()
     }
     val allWords = branchMats.flatMap(_.flatMap(_._1)).distinct
     val allPfx = branchMats.flatMap(_.flatMap(_._2)).distinct

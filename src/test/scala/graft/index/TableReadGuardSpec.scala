@@ -3,26 +3,72 @@ package graft.index
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
+/** Source walk shared by the guard specs: the `.scala` files of some
+  * `src/main/scala/graft/<pkg>` directories, and the places a pattern
+  * matches in them. */
+object SourceGuard extends Matchers {
+
+  def sources(pkgs: String*): Seq[java.io.File] = {
+    val files = pkgs.flatMap { pkg =>
+      val d = new java.io.File(s"src/main/scala/graft/$pkg")
+      withClue(s"${d.getAbsolutePath} must exist: ") { d.isDirectory shouldBe true }
+      d.listFiles().filter(_.getName.endsWith(".scala")).toSeq
+    }
+    files.size should be > 10
+    files
+  }
+
+  /** `file:line: text` of every match of `pattern` (which may span lines)
+    * in `files`, except in the files named in `allowed`. */
+  def offenders(files: Seq[java.io.File], pattern: scala.util.matching.Regex,
+      allowed: Set[String]): Seq[String] =
+    for {
+      f <- files if !allowed(f.getName)
+      text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      m <- pattern.findAllMatchIn(text).toSeq
+    } yield {
+      val line = text.substring(0, m.start).count(_ == '\n') + 1
+      s"${f.getName}:$line: ${m.matched.linesIterator.next().trim}"
+    }
+}
+
 /** Index tables are read through `TableIO.read`: a raw `.read.parquet(`
   * in the index or search code would start a schema-inference Spark job
   * per read, and its plan would not match a cached read of the same table. */
 class TableReadGuardSpec extends AnyFunSuite with Matchers {
 
   test("graft/index and graft/search read parquet only through TableIO") {
-    val raw = """\.read\s*\.parquet\(""".r
-    val sources = Seq("index", "search").flatMap { pkg =>
-      val d = new java.io.File(s"src/main/scala/graft/$pkg")
-      withClue(s"${d.getAbsolutePath} must exist: ") { d.isDirectory shouldBe true }
-      d.listFiles().filter(_.getName.endsWith(".scala")).toSeq
-    }
-    sources.size should be > 10
-    def lines(f: java.io.File): Seq[String] =
-      java.nio.file.Files.readAllLines(f.toPath).toArray(Array.empty[String]).toSeq
-    val offenders = for {
-      f <- sources if f.getName != "TableIO.scala"
-      (line, i) <- lines(f).zipWithIndex
-      if raw.findFirstIn(line).isDefined
-    } yield s"${f.getName}:${i + 1}: ${line.trim}"
-    offenders shouldBe empty
+    SourceGuard.offenders(SourceGuard.sources("index", "search"),
+      """\.read\s*\.parquet\(""".r, Set("TableIO.scala")) shouldBe empty
+  }
+}
+
+/** Every serving cache uses `graft.search.Lru`: another access-ordered
+  * `java.util.LinkedHashMap` or `removeEldestEntry` in the search code is a
+  * second hand-rolled LRU, with its own locking, counting and eviction. */
+class LruGuardSpec extends AnyFunSuite with Matchers {
+
+  /** `removeEldestEntry`, or `LinkedHashMap[…](capacity, loadFactor, true)`
+    * over line breaks */
+  private val accessOrdered =
+    """(?s)removeEldestEntry|LinkedHashMap\s*(\[[^{};=]*?\])?\s*\(\s*[^(),]+,\s*[^(),]+,\s*true\s*\)""".r
+
+  test("graft/search holds an LRU map only in Lru.scala") {
+    val found = SourceGuard.offenders(SourceGuard.sources("search"), accessOrdered,
+      allowed = Set.empty)
+    found.filterNot(_.startsWith("Lru.scala:")) shouldBe empty
+    withClue("the pattern no longer finds Lru's own map: ")(found should have size 1)
+  }
+
+  test("the LRU pattern finds the shapes it guards against") {
+    Seq(
+      "new java.util.LinkedHashMap[String, AnyRef](256, 0.75f, true)",
+      "new java.util.LinkedHashMap[AnyRef, IndexedSeq[(Long, Int)]](\n    16, 0.75f, true) {",
+      "override def removeEldestEntry(e: E): Boolean = size() > 64"
+    ).foreach(src => accessOrdered.findFirstIn(src) should not be empty)
+    Seq(
+      "scala.collection.mutable.LinkedHashMap.empty[String, Int]",
+      "new java.util.LinkedHashMap[String, Int](16, 0.75f, false)"
+    ).foreach(src => accessOrdered.findFirstIn(src) shouldBe empty)
   }
 }

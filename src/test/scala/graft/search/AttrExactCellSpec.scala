@@ -153,12 +153,12 @@ class AttrExactCellSpec extends AnyFunSuite with Matchers {
     val local = new Search(index)
     withRefine {
       run(local, "the w100 ") // prime caches / strata
-      val r0 = index.positionRowReads.get()
+      val r0 = index.positionRowCache.misses
       val res = run(local, "the w100 ")
       res.documentsIds should not be empty
       // warm repeat: strata cached on the handle, labels prove the whole
       // page → no position-row fetches either
-      index.positionRowReads.get() shouldBe r0
+      index.positionRowCache.misses shouldBe r0
     }
   }
 
@@ -221,25 +221,25 @@ class AttrExactCellSpec extends AnyFunSuite with Matchers {
     withRefine {
       val q = "the w100 "
       val first = run(local, q)
-      val h0 = index.attrStrataMemoHits.get()
+      val h0 = index.attrStrataMemo.hits
       val second = run(local, q)
       second.documentsIds shouldBe first.documentsIds
       second.candidates shouldBe first.candidates
       withClue("repeat query never hit the strata memo: ")(
-        index.attrStrataMemoHits.get() should be > h0)
+        index.attrStrataMemo.hits should be > h0)
     }
   }
 
   test("position tables are actually read (#10/#12 consumers)") {
     // a fresh handle (empty caches) must fetch position rows to refine
     val fresh = GraftIndex(spark, index.dir, stg)
-    val r0 = fresh.positionRowReads.get()
+    val r0 = fresh.positionRowCache.misses
     withRefine {
       val res = new Search(fresh).execute(
         SearchRequest(query = Some("the w1"), limit = 20))
       res.documentsIds should not be empty
     }
     withClue("expected #10/#12 position-row point reads: ")(
-      fresh.positionRowReads.get() should be > r0)
+      fresh.positionRowCache.misses should be > r0)
   }
 }

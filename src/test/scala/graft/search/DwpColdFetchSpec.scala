@@ -13,7 +13,8 @@ import graft.webgen.WebPages
   * Pins: (a) the restricted fetch returns exactly the full fetch filtered
   * to the requested docids, (b) the background fill converges to the same
   * complete cache entry a blocking fill produces, (c) end-to-end ranked
-  * results through the drain are unchanged. */
+  * results through the drain are unchanged, (d) a background fill that
+  * fails caches nothing and leaves the next call free to schedule one. */
 class DwpColdFetchSpec extends AnyFunSuite with Matchers {
 
   private lazy val spark = TestSpark.spark
@@ -55,6 +56,46 @@ class DwpColdFetchSpec extends AnyFunSuite with Matchers {
     withClue("async fill never landed") { filled.isDefined shouldBe true }
     filled.get.map(r => (r._1, r._2, r._3.toSeq)) shouldBe
       fullW("the").toSeq.map(r => (r._1, r._2, r._3.toSeq))
+  }
+
+  test("a failed background fill is dropped: rows stay right and a later call refills") {
+    // every Spark scan of the forward index throws; the restricted fetch
+    // reads directly, while the background fill always takes the scan
+    val scans = new java.util.concurrent.atomic.AtomicInteger()
+    val idx = new GraftIndex(spark, dir, stg) {
+      override lazy val docWordPositions: org.apache.spark.sql.DataFrame = {
+        scans.incrementAndGet()
+        throw new IllegalStateException("doc_word_positions scan fails")
+      }
+    }
+    val words = Seq("the", "w3")
+    val (fullW, _) = freshIndex.dwpCache.get(words, Nil)
+    val theDocs = fullW("the").map(_._1).distinct.sorted
+    def check(docids: Array[Int]): Unit = {
+      val (gotW, _) = idx.dwpCache.getForDocs(words, Nil, docids, asyncFillMinBytes = 0L)
+      words.foreach { w =>
+        withClue(s"rows of '$w': ") {
+          gotW(w).map(r => (r._1, r._2, r._3.toSeq)).toSeq shouldBe
+            fullW(w).filter(r => docids.contains(r._1))
+              .map(r => (r._1, r._2, r._3.toSeq)).toSeq
+        }
+      }
+    }
+    val escaped = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val prevHandler = Thread.getDefaultUncaughtExceptionHandler
+    Thread.setDefaultUncaughtExceptionHandler((_, e) => escaped.add(e))
+    try {
+      check(theDocs.take(25))
+      idx.dwpCache.awaitFills()
+      withClue("the background fill never ran: ")(scans.get() shouldBe 1)
+      // not cached: another slice is fetched restricted again, not served
+      // whole, and its fill is scheduled anew (the failed fill cleared
+      // its `filling` keys)
+      check(theDocs.slice(25, 50))
+      idx.dwpCache.awaitFills()
+      withClue("no new fill was scheduled after the failed one: ")(scans.get() shouldBe 2)
+    } finally Thread.setDefaultUncaughtExceptionHandler(prevHandler)
+    escaped shouldBe empty
   }
 
   test("direct page-pruned dwp fetch ≡ Spark scan (words, prefixes, docFilter)") {

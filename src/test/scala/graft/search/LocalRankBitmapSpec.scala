@@ -129,4 +129,16 @@ class LocalRankBitmapSpec extends AnyFunSuite with Matchers {
     val pBytes = index.estimatePostingBytes(Nil, Seq("w1")).get
     pBytes should be > 0L
   }
+
+  test("pair frequencies of a full cache: an install that evicts a hit still answers it") {
+    // 65,536 non-dictionary pairs fill the pair-frequency cache (each
+    // cached as 0 without a scan); the next call hits the eldest of them
+    // and installs one new pair. A hit lookup that does not refresh
+    // recency lets that install evict the hit before it is read back.
+    val idx = GraftIndex(spark, dir, stg)
+    val fill = (0 until 65536).map(i => (s"zq$i", s"zr$i"))
+    idx.pairFrequencies(fill).values.toSet shouldBe Set(0L)
+    idx.pairFrequencies(Seq(fill.head, ("zqnew", "zrnew"))) shouldBe
+      Map(fill.head -> 0L, ("zqnew", "zrnew") -> 0L)
+  }
 }
