@@ -19,9 +19,11 @@ import scala.util.Success
   * running step before it rethrows, so a caller's cleanup never deletes
   * files under a step that is still writing. 8 threads keep a local
   * executor's cores fed while a few steps sit in driver-side work (footer
-  * reads, renames). One runner runs once. */
+  * reads, renames). One runner runs once; afterwards [[timeline]] tells
+  * when each step became ready, started and ended. */
 private[index] final class DagRunner {
   private val steps = mutable.LinkedHashMap.empty[String, (Seq[String], () => Unit)]
+  private val times = new java.util.concurrent.ConcurrentHashMap[String, DagRunner.StepTime]()
 
   /** Register step `name`, to run once every step in `deps` (each
     * registered earlier) has succeeded. */
@@ -48,20 +50,35 @@ private[index] final class DagRunner {
     // daemon threads: a failed run must never keep the JVM alive
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8,
       (r: Runnable) => { val t = new Thread(r); t.setDaemon(true); t })
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    // dependency bookkeeping runs on the completing thread, so a step is
+    // ready the moment its last dependency ends, even with the pool full
+    implicit val ec: ExecutionContext = ExecutionContext.parasitic
     val firstFailure = new AtomicReference[Throwable]()
     val done = mutable.Map.empty[String, Future[Unit]]
+    val t0 = System.nanoTime()
+    def since(t: Long): Double = (t - t0) / 1e9
     try {
       for ((name, (deps, body)) <- steps) {
         val p = Promise[Unit]()
+        def cancel() = p.failure(new java.util.concurrent.CancellationException(name))
         Future.sequence(deps.map(done)).onComplete {
           case Success(_) if firstFailure.get == null =>
-            try { body(); p.success(()) }
-            catch { case e: Throwable =>
-              firstFailure.compareAndSet(null, e)
-              p.failure(e)
+            val ready = System.nanoTime()
+            pool.execute { () =>
+              if (firstFailure.get != null) cancel()
+              else {
+                val start = System.nanoTime()
+                def record() = times.put(name, DagRunner.StepTime(name, deps,
+                  since(ready), since(start), since(System.nanoTime())))
+                try { body(); record(); p.success(()) }
+                catch { case e: Throwable =>
+                  record()
+                  firstFailure.compareAndSet(null, e)
+                  p.failure(e)
+                }
+              }
             }
-          case _ => p.failure(new java.util.concurrent.CancellationException(name))
+          case _ => cancel()
         }
         done(name) = p.future
       }
@@ -69,9 +86,18 @@ private[index] final class DagRunner {
     } finally pool.shutdown()
     Option(firstFailure.get).foreach(e => throw e)
   }
+
+  /** Each step that ran, in registration order, timed from the start of
+    * [[run]]. */
+  def timeline: Seq[DagRunner.StepTime] = steps.keys.toSeq.flatMap(n => Option(times.get(n)))
 }
 
 private[index] object DagRunner {
+  /** When step `name` became ready (its last dependency ended), started on
+    * a pool thread and ended, in seconds from the start of the run. */
+  final case class StepTime(name: String, deps: Seq[String],
+      readyS: Double, startS: Double, endS: Double)
+
   /** The result of a [[DagRunner.value]] step, named after it. */
   final class Value[A](val step: String) {
     @volatile private var result: Option[A] = None

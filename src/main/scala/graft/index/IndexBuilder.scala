@@ -144,7 +144,7 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
     }.reduceOption(_ unionAll _).getOrElse(emptyFrame("field string, docid int, value double"))
     val strings = facetFields.map { f =>
       rawValues(f).select(lit(f).as("field"), col("docid"),
-          trim(lower(col("__raw").cast("string"))).as("norm"),
+          IndexBuilder.normalizeFacetUdf(col("__raw").cast("string")).as("norm"),
           col("__raw").cast("string").as("orig"))
         .where(col("orig").isNotNull)
     }.reduceOption(_ unionAll _).getOrElse(
@@ -489,14 +489,21 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
         Seq(T.WordDocids, T.ExactWordDocids, T.TermDict, T.PrefixDict)) {
       if (wordAggRef != null) wordAggRef.unpersist()
     }
-    stageF(T.WordPrefixDocids, Seq(T.WordDocids, T.PrefixDict)) {
-      buildWordPrefixDocids(dir)
+    // the committed dictionary's prefixes, read once for every prefix table
+    val prefixTables = Seq(T.WordPrefixDocids, T.ExactWordPrefixDocids,
+      T.WordPrefixPositionDocids, T.WordPrefixPairProximityDocids,
+      T.PrefixWordPairProximityDocids)
+    val prefixes = dag.value("__prefixes", Seq(T.PrefixDict)) {
+      if (prefixTables.exists(pending)) dictPrefixes(dir) else Set.empty[String]
     }
-    stageF(T.ExactWordPrefixDocids, Seq(T.ExactWordDocids, T.PrefixDict)) {
-      buildExactWordPrefixDocids(dir)
+    stageF(T.WordPrefixDocids, Seq(T.WordDocids, prefixes.step)) {
+      buildWordPrefixDocids(dir, prefixes.get)
     }
-    stageF(T.WordPrefixPositionDocids, Seq(T.WordPositionDocids, T.PrefixDict)) {
-      buildWordPrefixPositionDocids(dir)
+    stageF(T.ExactWordPrefixDocids, Seq(T.ExactWordDocids, prefixes.step)) {
+      buildExactWordPrefixDocids(dir, prefixes.get)
+    }
+    stageF(T.WordPrefixPositionDocids, Seq(T.WordPositionDocids, prefixes.step)) {
+      buildWordPrefixPositionDocids(dir, prefixes.get)
     }
     // prefix-pair proximity tables (#8, #9) — prefix len ≤ 2, full stored
     // prox 1..7 (divergence from prefix_word_pairs/mod.rs:17-18 documented
@@ -509,12 +516,12 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
     // missing still pays the shared pass once (both sides' partials are
     // computed, the done side's write is skipped by `stage`).
     var ppTables: (DataFrame, DataFrame) = null
-    dag.step("__ppBoth", Seq(T.WordPairProximityDocids, T.PrefixDict)) {
+    dag.step("__ppBoth", Seq(T.WordPairProximityDocids, prefixes.step)) {
       if (Seq(T.WordPrefixPairProximityDocids, T.PrefixWordPairProximityDocids)
           .exists(pending)) {
         spark.sparkContext.setJobGroup("__ppBoth",
           "graft build: prefix-pair shared pass")
-        try ppTables = buildPrefixPairTablesBoth(dir)
+        try ppTables = buildPrefixPairTablesBoth(dir, prefixes.get)
         finally spark.sparkContext.clearJobGroup()
       }
     }
@@ -584,11 +591,13 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
   }
 
   // ------------------------------------------------- derived-table builders
-  // Each reads ONLY base tables already under `dir`, so they serve both the
-  // from-scratch build and the post-merge refresh in Updates.addDocuments
-  // (the Spark twin of word_prefix_docids.rs / prefix_word_pairs/mod.rs /
-  // words_prefix_position_docids.rs incremental updates — bulk rebuild from
-  // merged bases, cheap in parquet).
+  // Each reads ONE base table under `base` and restricts its rows to the
+  // prefix set its caller passes, never to a prefix_dict table: the build
+  // passes its whole dictionary over its own base tables; an
+  // `addDocuments` refresh passes the prefixes it updates, over the batch's
+  // delta tables or, for prefixes the dictionary gained, the merged live
+  // ones (the Spark twin of word_prefix_docids.rs / prefix_word_pairs/mod.rs
+  // / words_prefix_position_docids.rs).
 
   /** prefixes of length 1..=4 shared by ≥ threshold words
     * (words_prefixes_fst.rs:43-96). `words`: one row per distinct word. */
@@ -608,37 +617,30 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
   def buildPrefixDict(dir: String): DataFrame =
     buildPrefixDictFrom(read(s"$dir/${T.TermDict}").select($"word"))
 
-  /** prefix set actually used by a build: the whole dict, or (incremental
-    * refresh) its intersection with an affected-prefix set. */
-  private def pdUse(dir: String, only: Option[DataFrame],
-      maxLen: Int = Int.MaxValue): DataFrame = {
-    val pd0 = read(s"$dir/${T.PrefixDict}")
-    val pd = (if (maxLen == Int.MaxValue) pd0
-      else pd0.where(length($"prefix") <= maxLen)).select($"prefix")
-    only.fold(pd)(a => pd.join(a, Seq("prefix"), "left_semi"))
-  }
+  /** The prefixes of the dictionary at `dir`, on the driver. The prefix
+    * dictionary is df-thresholded and length-capped exactly like the
+    * reference's prefix FST (words_prefixes_fst.rs:43-96), so its size is
+    * bounded by the alphabet's short-prefix space — thousands of entries
+    * even at web scale, safe to pin. */
+  private[index] def dictPrefixes(dir: String): Set[String] =
+    read(s"$dir/${T.PrefixDict}").select($"prefix").as[String].collect().toSet
 
   /** equality join on generated prefixes (no startsWith range join —
-    * shuffles hash-partition on prefix, skew-safe under AQE).
-    * `only`: restrict to these prefixes (incremental refresh). */
-  def buildWordPrefixDocids(dir: String, only: Option[DataFrame] = None): DataFrame = {
-    val wd = read(s"$dir/${T.WordDocids}")
-    val exploded = wd.select($"word", $"docids",
-        explode(sequence(lit(1), least(length($"word"), lit(settings.maxPrefixLength)))).as("n"))
-      .select($"word".substr(lit(1), $"n").as("prefix"), $"docids")
-    exploded.join(broadcast(pdUse(dir, only)), Seq("prefix"))
-      .groupBy($"prefix").agg(F.bitmap_union_agg($"docids").as("docids"))
-      .repartitionByRange($"prefix").sortWithinPartitions("prefix")
-  }
+    * shuffles hash-partition on prefix, skew-safe under AQE). */
+  def buildWordPrefixDocids(base: String, prefixes: Set[String]): DataFrame =
+    prefixDocids(s"$base/${T.WordDocids}", prefixes)
 
   /** reference db #5: prefix unions over the exact-attribute split
     * (`index.rs:105-106`). */
-  def buildExactWordPrefixDocids(dir: String, only: Option[DataFrame] = None): DataFrame = {
-    val wd = read(s"$dir/${T.ExactWordDocids}")
+  def buildExactWordPrefixDocids(base: String, prefixes: Set[String]): DataFrame =
+    prefixDocids(s"$base/${T.ExactWordDocids}", prefixes)
+
+  private def prefixDocids(wordTable: String, prefixes: Set[String]): DataFrame = {
+    val wd = read(wordTable)
     val exploded = wd.select($"word", $"docids",
         explode(sequence(lit(1), least(length($"word"), lit(settings.maxPrefixLength)))).as("n"))
       .select($"word".substr(lit(1), $"n").as("prefix"), $"docids")
-    exploded.join(broadcast(pdUse(dir, only)), Seq("prefix"))
+    exploded.join(broadcast(prefixes.toSeq.toDF("prefix")), Seq("prefix"))
       .groupBy($"prefix").agg(F.bitmap_union_agg($"docids").as("docids"))
       .repartitionByRange($"prefix").sortWithinPartitions("prefix")
   }
@@ -657,21 +659,13 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
     var d = transients.poll()
     while (d != null) { d.unpersist(); d = transients.poll() }
   }
-  /** Driver-side prefix set for the partial-combine prefix builders. The
-    * prefix dictionary is df-thresholded and length-capped exactly like
-    * the reference's prefix FST (words_prefixes_fst.rs:43-96), so its
-    * size is bounded by the alphabet's short-prefix space — thousands of
-    * entries even at web scale, safe to pin. */
-  private def prefixSet(dir: String, only: Option[DataFrame], maxLen: Int): Set[String] =
-    pdUse(dir, only, maxLen).collect().map(_.getString(0)).toSet
 
-  def buildWordPrefixPositionDocids(dir: String, only: Option[DataFrame] = None): DataFrame = {
+  def buildWordPrefixPositionDocids(base: String, prefixes: Set[String]): DataFrame = {
     // partition-local combine over the word-sorted source (a prefix's
     // word rows are contiguous, so per-partition key sets barely overlap)
     // + ONE range shuffle of pre-unioned partials + sorted-run merge —
     // see prefixPositionPartials
-    val wp = read(s"$dir/${T.WordPositionDocids}")
-    val prefixes = prefixSet(dir, only, settings.maxPrefixLength)
+    val wp = read(s"$base/${T.WordPositionDocids}")
     val maxLen = settings.maxPrefixLength
     val partials = transient(
       wp.select($"word", $"position", $"docids")
@@ -684,25 +678,34 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
       .toDF("prefix", "position", "docids")
   }
 
-  /** Single-pass build of BOTH prefix-pair tables (#8 and #9): one scan +
-    * partition-local combine over the committed pair table emits the two
-    * sides' partials together ([[IndexBuilder.prefixPairPartialsBoth]]),
-    * one range shuffle merges them (side encoded in `sprox`, so a run is
-    * never cross-side), and the persisted merged frame is split into the
-    * two tables by a cheap cached filter. Replaces two full pair-table
-    * scans (~25% of the whole build since the prox range extension to
-    * 1..7, NOTES_ROUND5 round-6 candidate 1) with one. Filtering the
-    * range-partitioned frame preserves per-file sort and bounds, so
-    * footer pruning on (prefix, word, prox) is unchanged. The merged
-    * cache is registered as a transient — released by the caller's
-    * `releaseTransients()` / build-end. `only`: restrict both tables to
-    * these prefixes (incremental refresh). */
+  /** Both prefix-pair tables of the index at `dir` over its own prefix
+    * dictionary, or over the dictionary's intersection with `only`. */
   def buildPrefixPairTablesBoth(dir: String,
       only: Option[DataFrame] = None): (DataFrame, DataFrame) = {
-    val prefixes = prefixSet(dir, only, maxLen = 2)
-    val partials = read(s"$dir/${T.WordPairProximityDocids}")
+    val dict = dictPrefixes(dir)
+    buildPrefixPairTablesBoth(dir, only.fold(dict)(o =>
+      dict intersect o.select($"prefix").as[String].collect().toSet))
+  }
+
+  /** Single-pass build of BOTH prefix-pair tables (#8 and #9) for the
+    * `prefixes` of ≤ 2 characters: one scan + partition-local combine over
+    * the pair table under `base` emits the two sides' partials together
+    * ([[IndexBuilder.prefixPairPartialsBoth]]), one range shuffle merges
+    * them (side encoded in `sprox`, so a run is never cross-side), and the
+    * persisted merged frame is split into the two tables by a cheap cached
+    * filter. Replaces two full pair-table scans (~25% of the whole build
+    * since the prox range extension to 1..7, NOTES_ROUND5 round-6
+    * candidate 1) with one. Filtering the range-partitioned frame
+    * preserves per-file sort and bounds, so footer pruning on (prefix,
+    * word, prox) is unchanged. The merged cache is registered as a
+    * transient — released by the caller's `releaseTransients()` /
+    * build-end. */
+  def buildPrefixPairTablesBoth(base: String,
+      prefixes: Set[String]): (DataFrame, DataFrame) = {
+    val pairPrefixes = IndexBuilder.pairPrefixes(prefixes)
+    val partials = read(s"$base/${T.WordPairProximityDocids}")
       .select($"prox", $"w1", $"w2", $"docids")
-      .mapPartitions(it => IndexBuilder.prefixPairPartialsBoth(it, prefixes))
+      .mapPartitions(it => IndexBuilder.prefixPairPartialsBoth(it, pairPrefixes))
       .toDF("k1", "k2", "sprox", "partial")
       .persist(StorageLevel.MEMORY_AND_DISK)
     val merged = transient(
@@ -756,106 +759,158 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
       onlyFields.fold(base)(fs => base.where($"field".isin(fs: _*))), transient)
   }
 
-  /** Refresh every derived table after `Updates.addDocuments` merged a
-    * batch's base tables: the prefix dictionary, the prefix posting tables
-    * (#4, #5, the prefix-position table and both prefix-pair tables) and
-    * the two facet level trees. Each refresh is a step on `dag` that
-    * starts once its inputs are in place: `merged(t)` names the step after
-    * which base table `t` holds the merged rows.
-    *
-    * Prefix DIFF — the Spark twin of the reference's new/deleted-prefix
-    * computation (`update/words_prefixes_fst.rs:43-96`): only prefixes
-    * whose rows could have changed are rebuilt, and every other file
-    * carries over byte-for-byte. Affected = prefixes of the batch's words
-    * (`batchWords`, the delta's vocabulary on the driver; a prefix row
-    * aggregates word rows, and only batch words' rows changed) ∪ prefixes
-    * added to ∪ removed from the recomputed dictionary; with no prefix
-    * dictionary yet, the prefix tables rebuild whole. Both prefix-pair tables
-    * refresh from ONE scan of the merged pair table. Facet levels rebuild
-    * only the FIELDS in the batch. A small batch pays for its own
-    * vocabulary, not the index. A table the settings keep empty
-    * ([[staysEmpty]]) is not refreshed once it exists. */
-  private[index] def refreshDerivedTables(dag: DagRunner, dir: String,
-      deltaDir: String, merged: String => String,
-      writeOver: (DataFrame, String) => Unit,
-      batchWords: DagRunner.Value[Array[String]]): Unit = {
-    def exists(p: String) = new java.io.File(p).exists()
-    def prefixes(path: String): Set[String] =
-      read(path).select($"prefix").as[String].collect().toSet
-    // a driver-side relation: later table swaps cannot re-evaluate it
-    def relation(prefixes: Set[String]): DataFrame = prefixes.toSeq.toDF("prefix")
+  /** Register the prefix dictionary's side of an `addDocuments` batch on
+    * `dag`, the Spark twin of the reference's prefix-FST diff into common,
+    * new and deleted prefixes (`update/words_prefixes_fst.rs:43-96`,
+    * `index_documents/mod.rs:431-602`):
+    *  - `refresh:old_prefixes`, at once: the current dictionary, or None
+    *    when the index has none;
+    *  - `refresh:batch_prefixes`, once `batchWords` (the delta's vocabulary
+    *    on the driver) is in: the batch's prefixes in the current
+    *    dictionary (none without one), on the driver;
+    *  - `refresh:prefix_dict`, once `deltaBuilt` has finished: the new
+    *    dictionary over the live term_dict's words ∪ the delta's, written
+    *    over the live one, and the prefixes it gained or lost.
+    * The dictionary step reads the live term_dict, so the caller registers
+    * the term_dict merge after it. */
+  private[index] def refreshPrefixDict(dag: DagRunner, dir: String,
+      deltaDir: String, deltaBuilt: String,
+      batchWords: DagRunner.Value[Array[String]]): IndexBuilder.PrefixRefresh = {
     val dictPath = s"$dir/${T.PrefixDict}"
-    // the diff's inputs the merge leaves alone — the current dictionary and
-    // the batch's prefixes — are read while term_dict merges
-    var oldDict: Option[Set[String]] = None
-    var batchPrefixes = Set.empty[String]
-    dag.step("refresh:batch_prefixes", Seq(batchWords.step)) {
-      if (exists(dictPath)) {
-        oldDict = Some(prefixes(dictPath))
-        batchPrefixes = batchWords.get.iterator
-          .flatMap(IndexBuilder.prefixesOf(_, settings.maxPrefixLength)).toSet
-      }
+    val old = dag.value("refresh:old_prefixes") {
+      if (new java.io.File(dictPath).exists()) Some(dictPrefixes(dir)) else None
     }
-    // None until the dict step runs, and after it when the index had no
-    // dictionary: every prefix table is then rebuilt whole
-    var affected: Option[Set[String]] = None
-    val dictStep = "refresh:" + T.PrefixDict
-    dag.step(dictStep, Seq(merged(T.TermDict), "refresh:batch_prefixes")) {
-      writeOver(buildPrefixDict(dir), dictPath)
-      affected = oldDict.map { old =>
-        val now = prefixes(dictPath)
-        batchPrefixes ++ (now -- old) ++ (old -- now)
-      }
+    val batch = dag.value("refresh:batch_prefixes", Seq(old.step, batchWords.step)) {
+      old.get.fold(Set.empty[String])(o => batchWords.get.iterator
+        .flatMap(IndexBuilder.prefixesOf(_, settings.maxPrefixLength)).filter(o).toSet)
     }
+    val diff = dag.value("refresh:" + T.PrefixDict, Seq(deltaBuilt, batch.step)) {
+      val words = Seq(dir, deltaDir).map(d => s"$d/${T.TermDict}")
+        .filter(new java.io.File(_).exists()).map(read(_).select($"word"))
+        .reduce(_ unionByName _).distinct()
+      TableIO.writeOver(spark)(buildPrefixDictFrom(words), dictPath)
+      IndexBuilder.PrefixDiff(old.get, dictPrefixes(dir))
+    }
+    IndexBuilder.PrefixRefresh(batch, diff)
+  }
 
-    // O(touched files): only files whose footer prefix interval intersects
-    // the affected set are opened — in them, affected prefixes' rows are
-    // replaced by the rebuild (prefixes dropped from the dict vanish:
-    // removed ⊆ affected), every other FILE carries over byte-for-byte.
-    // The prefix tables are written prefix-sorted precisely so this (and
-    // serving point reads) can footer-prune. `only` None: replace whole.
-    def replace(name: String, sortCols: Seq[String], only: Option[Set[String]],
-        rebuilt: DataFrame): Unit = {
-      val path = s"$dir/$name"
-      only match {
-        case None => writeOver(rebuilt, path)
-        case Some(aff) =>
-          TableIO.mergeTouchedFiles(spark, path, relation(aff), "prefix", aff) {
-            (touchedDf, a) =>
-              touchedDf.join(broadcast(a), Seq("prefix"), "left_anti")
-                .unionByName(rebuilt)
-                .repartitionByRange(sortCols.map(col): _*)
-                .sortWithinPartitions(sortCols.head, sortCols.tail: _*)
-          }
+  /** Refresh every derived table of an `addDocuments` batch on `dag`: the
+    * prefix posting tables (#4, #5, the prefix-position table and both
+    * prefix-pair tables) and the two facet level trees. `deltaBuilt` names
+    * the step after which every delta table under `deltaDir` has
+    * committed, `merged(t)` the step after which live base table `t` holds
+    * the batch, and `prefixes` the dictionary steps of [[refreshPrefixDict]].
+    *
+    * A prefix row aggregates word rows, the base merges are unions and a
+    * batch always brings fresh docids, so a prefix in both the old and the
+    * new dictionary ends as its old row ∪ its row over the batch alone
+    * (milli's `execute_prefix_databases`, `word_prefix_docids.rs:40-136`):
+    *  - `refresh:<table>` ORs the delta-derived rows of the batch's
+    *    prefixes in the OLD dictionary into the touched files of the live
+    *    table. It reads the delta, not a live base table, and waits for
+    *    neither the merges nor the new dictionary.
+    *  - `rebuild:<table>` then replaces the rows of the prefixes the
+    *    dictionary gained or lost with rows from the merged base: a lost
+    *    prefix's rows vanish, its OR included. With an unchanged
+    *    dictionary it launches no job.
+    * An index without a dictionary or without the table rebuilds it whole
+    * in `rebuild:<table>`, after the merge. Both prefix-pair tables come
+    * from one pair-table pass per step. Facet levels rebuild only the
+    * FIELDS in the batch. A table the settings keep empty ([[staysEmpty]])
+    * is not refreshed once it exists. */
+  private[index] def refreshDerivedTables(dag: DagRunner, dir: String,
+      deltaDir: String, deltaBuilt: String, merged: String => String,
+      prefixes: IndexBuilder.PrefixRefresh): Unit = {
+    def exists(p: String) = new java.io.File(p).exists()
+    def path(name: String) = s"$dir/$name"
+    def writeOver(df: DataFrame, path: String): Unit = TableIO.writeOver(spark)(df, path)
+    val IndexBuilder.PrefixRefresh(batch, diff) = prefixes
+    val incremental = exists(path(T.PrefixDict))
+
+    // O(touched files): only files whose footer prefix interval meets
+    // `keys` are opened, every other FILE carries over byte-for-byte. The
+    // prefix tables are written prefix-sorted precisely so this (and
+    // serving point reads) can footer-prune.
+    def mergeInto(name: String, sortCols: Seq[String], keys: Set[String],
+        rows: DataFrame)(merge: DataFrame => DataFrame): Unit =
+      TableIO.mergeTouchedFiles(spark, path(name), rows, "prefix", keys) { (touched, _) =>
+        merge(touched).repartitionByRange(sortCols.map(col): _*)
+          .sortWithinPartitions(sortCols.head, sortCols.tail: _*)
       }
-    }
-    def refresh(name: String, base: String, sortCols: Seq[String],
-        build: Option[DataFrame] => DataFrame): Unit =
-      if (!(staysEmpty(facetOverride = false).contains(name) && exists(s"$dir/$name")))
-        dag.step("refresh:" + name, Seq(merged(base), dictStep)) {
-          val only = affected.filter(_ => exists(s"$dir/$name"))
-          replace(name, sortCols, only, build(only.map(relation)))
+    // the keys' rows OR the delta's in, in the live column order
+    def orInto(name: String, sortCols: Seq[String], keys: Set[String],
+        rows: DataFrame): Unit =
+      mergeInto(name, sortCols, keys, rows) { touched =>
+        val cols = touched.columns.toSeq
+        touched.unionByName(rows)
+          .groupBy(cols.filter(_ != "docids").map(col): _*)
+          .agg(F.bitmap_union_agg($"docids").as("docids"))
+          .select(cols.map(col): _*)
+      }
+    // the keys' rows give way to `rows`
+    def replaceIn(name: String, sortCols: Seq[String], keys: Set[String],
+        rows: DataFrame): Unit =
+      mergeInto(name, sortCols, keys, rows) { touched =>
+        touched.join(broadcast(keys.toSeq.toDF("prefix")), Seq("prefix"), "left_anti")
+          .unionByName(rows)
+      }
+
+    def prefixTable(name: String, base: String, sortCols: Seq[String],
+        build: (String, Set[String]) => DataFrame): Unit =
+      if (!(staysEmpty(facetOverride = false).contains(name) && exists(path(name)))) {
+        if (incremental && exists(path(name))) {
+          dag.step("refresh:" + name, Seq(deltaBuilt, batch.step)) {
+            val keys = batch.get
+            if (keys.nonEmpty) orInto(name, sortCols, keys, build(deltaDir, keys))
+          }
+          dag.step("rebuild:" + name, Seq("refresh:" + name, merged(base), diff.step)) {
+            val d = diff.get
+            if (d.changed.nonEmpty)
+              replaceIn(name, sortCols, d.changed, build(dir, d.changed intersect d.now))
+          }
+        } else dag.step("rebuild:" + name, Seq(merged(base), diff.step)) {
+          writeOver(build(dir, diff.get.now), path(name))
         }
-    refresh(T.WordPrefixDocids, T.WordDocids, Seq("prefix"),
-      buildWordPrefixDocids(dir, _))
-    refresh(T.ExactWordPrefixDocids, T.ExactWordDocids, Seq("prefix"),
-      buildExactWordPrefixDocids(dir, _))
-    refresh(T.WordPrefixPositionDocids, T.WordPositionDocids,
-      Seq("prefix", "position"), buildWordPrefixPositionDocids(dir, _))
-    // both prefix-pair tables from one pass; a missing side rebuilds both
-    val (wordPrefix, prefixWord) =
-      (T.WordPrefixPairProximityDocids, T.PrefixWordPairProximityDocids)
-    var pairOnly: Option[Set[String]] = None
-    var pairs: (DataFrame, DataFrame) = null
-    dag.step("refresh:prefix_pairs", Seq(merged(T.WordPairProximityDocids), dictStep)) {
-      pairOnly = affected.filter(_ =>
-        exists(s"$dir/$wordPrefix") && exists(s"$dir/$prefixWord"))
-      pairs = buildPrefixPairTablesBoth(dir, pairOnly.map(relation))
+      }
+    prefixTable(T.WordPrefixDocids, T.WordDocids, Seq("prefix"),
+      buildWordPrefixDocids)
+    prefixTable(T.ExactWordPrefixDocids, T.ExactWordDocids, Seq("prefix"),
+      buildExactWordPrefixDocids)
+    prefixTable(T.WordPrefixPositionDocids, T.WordPositionDocids,
+      Seq("prefix", "position"), buildWordPrefixPositionDocids)
+
+    // both prefix-pair tables (prefixes of ≤ 2 characters) from one pass
+    // per step; a missing side rebuilds both
+    val pairTables = Seq(T.WordPrefixPairProximityDocids -> Seq("prefix", "w1", "prox"),
+      T.PrefixWordPairProximityDocids -> Seq("prefix", "w2", "prox"))
+    def pairs(base: String, keys: Set[String]): Seq[DataFrame] = {
+      val (wordPrefix, prefixWord) = buildPrefixPairTablesBoth(base, keys)
+      Seq(wordPrefix, prefixWord)
     }
-    dag.step("refresh:" + wordPrefix, Seq("refresh:prefix_pairs"))(
-      replace(wordPrefix, Seq("prefix", "w1", "prox"), pairOnly, pairs._1))
-    dag.step("refresh:" + prefixWord, Seq("refresh:prefix_pairs"))(
-      replace(prefixWord, Seq("prefix", "w2", "prox"), pairOnly, pairs._2))
+    val pairBase = merged(T.WordPairProximityDocids)
+    if (incremental && pairTables.forall(t => exists(path(t._1)))) {
+      val fromDelta = dag.value("refresh:prefix_pairs", Seq(deltaBuilt, batch.step)) {
+        val keys = IndexBuilder.pairPrefixes(batch.get)
+        if (keys.isEmpty) Map.empty[String, DataFrame]
+        else pairTables.map(_._1).zip(pairs(deltaDir, keys)).toMap
+      }
+      pairTables.foreach { case (name, sortCols) =>
+        dag.step("refresh:" + name, Seq(fromDelta.step)) {
+          fromDelta.get.get(name).foreach(
+            orInto(name, sortCols, IndexBuilder.pairPrefixes(batch.get), _))
+        }
+      }
+      dag.step("rebuild:prefix_pairs",
+          pairTables.map("refresh:" + _._1) ++ Seq(pairBase, diff.step)) {
+        val d = diff.get
+        val keys = IndexBuilder.pairPrefixes(d.changed)
+        if (keys.nonEmpty) pairTables.zip(pairs(dir, keys intersect d.now))
+          .foreach { case ((name, sortCols), rows) => replaceIn(name, sortCols, keys, rows) }
+      }
+    } else dag.step("rebuild:prefix_pairs", Seq(pairBase, diff.step)) {
+      pairTables.zip(pairs(dir, diff.get.now))
+        .foreach { case ((name, _), rows) => writeOver(rows, path(name)) }
+    }
 
     // facet levels: VALUE-level incremental merge (FacetIncremental —
     // the reference's FacetsUpdateIncremental re-expressed set-based):
@@ -934,11 +989,45 @@ object IndexBuilder extends Serializable {
     * and restores the session; `finish` writes a full build's manifest. */
   private[index] final case class BuildRun(release: () => Unit, finish: () => Manifest)
 
+  /** The prefix dictionary before a batch (None: the index had none) and
+    * after it. */
+  private[index] final case class PrefixDiff(old: Option[Set[String]], now: Set[String]) {
+    /** The prefixes the dictionary gained or lost. */
+    def changed: Set[String] = old.fold(Set.empty[String])(o => (now -- o) ++ (o -- now))
+  }
+
+  /** The dictionary steps of an `addDocuments` refresh, by their results:
+    * the batch's prefixes in the old dictionary, and the dictionary diff. */
+  private[index] final case class PrefixRefresh(
+      batch: DagRunner.Value[Set[String]], diff: DagRunner.Value[PrefixDiff])
+
+  /** The prefixes the prefix-pair tables keep: those of at most 2 code
+    * points (prefix_word_pairs/mod.rs:17-18). */
+  private[index] def pairPrefixes(prefixes: Set[String]): Set[String] =
+    prefixes.filter(p => p.codePointCount(0, p.length) <= 2)
+
   /** The prefixes of `word` of 1 to `maxLen` characters, counted in code
     * points as Spark's `length` and `substr` count them. */
   private[index] def prefixesOf(word: String, maxLen: Int): Iterator[String] = {
     val n = math.min(word.codePointCount(0, word.length), maxLen)
     Iterator.range(1, n + 1).map(i => word.substring(0, word.offsetByCodePoints(0, i)))
+  }
+
+  /** [[graft.core.Facets.normalizeFacet]] over a string column, null kept:
+    * the `norm` of `doc_facet_strings` is the filter's own normalization. */
+  private val normalizeFacetUdf = udf((s: String) =>
+    if (s == null) null else graft.core.Facets.normalizeFacet(s))
+
+  /** Target rows per file of a facet level table: a tree of up to 65,536
+    * rows writes one file, a larger one fans out up to the shuffle
+    * parallelism. */
+  @volatile private[index] var FacetLevelRowsPerFile: Long = 65536 // var: specs shrink it
+
+  /** Test hook: run `f` with [[FacetLevelRowsPerFile]] at `n`, restored after. */
+  private[index] def withFacetLevelRowsPerFile[A](n: Long)(f: => A): A = {
+    val saved = FacetLevelRowsPerFile
+    FacetLevelRowsPerFile = n
+    try f finally FacetLevelRowsPerFile = saved
   }
 
   /** The schema of `geo_cells`. */
@@ -1852,11 +1941,9 @@ object IndexBuilder extends Serializable {
     // spark.sql.shuffle.partitions — a 20k-row tree writes one file, a
     // 10^8-row tree still fans out up to the configured parallelism.
     val totalL0 = n0.values.sum
-    val rowsPerFile = spark.conf
-      .get("spark.graft.facetLevels.rowsPerFile", "65536").toLong
     val outParts = math.max(1L, math.min(
       spark.sessionState.conf.numShufflePartitions.toLong,
-      ceilDiv(totalL0 * 4 / 3 + 1, rowsPerFile))).toInt
+      ceilDiv(totalL0 * 4 / 3 + 1, FacetLevelRowsPerFile))).toInt
     all.repartitionByRange(outParts, col("field"), col("level"), col("bound"))
       .sortWithinPartitions("field", "level", "bound")
   }

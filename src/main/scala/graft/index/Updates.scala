@@ -20,9 +20,10 @@ import graft.index.IndexSettings.T
   *    then merge each into its live table on its own (`bitmap_union_agg`
   *    or a file append) — the distributed TypedChunk merge
   *    (`milli/src/update/index_documents/typed_chunk.rs:45-216`)
-  *    — and refresh the derived tables from the merged bases, all as one
-  *    [[DagRunner]] DAG. Replace semantics: docids of replaced external
-  *    ids are tombstoned first (`transform.rs:141-294`).
+  *    — and refresh the derived tables, the prefix tables from the
+  *    delta's own rows, all as one [[DagRunner]] DAG. Replace semantics:
+  *    docids of replaced external ids are tombstoned first
+  *    (`transform.rs:141-294`).
   */
 class Updates(spark: SparkSession, settings: IndexSettings) {
   import spark.implicits._
@@ -143,11 +144,14 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
     * first, ahead of the DAG (the lookup reads `documents` before the
     * append). In the DAG, a delta build writes only the base tables
     * ([[deltaStages]]) into a scratch dir; once all have committed, each
-    * merges into its live table on its own ([[mergeSteps]]), and each
-    * derived table refreshes once the merged tables it reads are in place
-    * ([[IndexBuilder.refreshDerivedTables]]). On a failure the call waits
-    * for the running steps, deletes the delta and rethrows: a batch that
-    * fails to build leaves the live tables as they were.
+    * merges into its live table on its own ([[mergeSteps]]); the prefix
+    * dictionary is rebuilt and each derived table refreshes, the prefix
+    * tables from the delta ([[IndexBuilder.refreshPrefixDict]],
+    * [[IndexBuilder.refreshDerivedTables]]). Each step's ready, start and
+    * end times go to the manifest as `__update_step__` lines. On a
+    * failure the call waits for the running steps, deletes the delta and
+    * rethrows: a batch that fails to build leaves the live tables as they
+    * were.
     *
     * After the commit, tables whose parquet file count crossed
     * `autoCompactFiles` are compacted in the same call (the Iceberg
@@ -159,6 +163,12 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
     * and a compacted table restarts the count near 1. */
   def addDocuments(dir: String, newDocs: DataFrame, replace: Boolean = true,
       autoCompactFiles: Int = Updates.DefaultAutoCompactFiles): Unit = {
+    addBatch(dir, newDocs, replace, autoCompactFiles); ()
+  }
+
+  /** [[addDocuments]], returning the batch's prefix dictionary diff. */
+  private[index] def addBatch(dir: String, newDocs: DataFrame, replace: Boolean = true,
+      autoCompactFiles: Int = Updates.DefaultAutoCompactFiles): IndexBuilder.PrefixDiff = {
     val pk = settings.primaryKey
     // replaced ids: same primary key in the existing documents table
     if (replace && new java.io.File(s"$dir/${T.Documents}").exists() &&
@@ -173,7 +183,7 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
     val builder = new IndexBuilder(spark, settings)
     val delta = java.nio.file.Files.createTempDirectory("graft-delta").toString
     val dag = new DagRunner
-    try {
+    val diff = try {
       val deltaBuild = builder.buildOn(dag, newDocs, delta, resume = false,
         facetOverride = None, tables = deltaStages(builder, dir))
       try {
@@ -186,9 +196,15 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
         // no live table changes before the whole delta has committed: a
         // batch that fails to build leaves the index as it was
         dag.barrier(Updates.DeltaBuilt)
-        mergeSteps(dag, dir, delta, batchWords)
-        builder.refreshDerivedTables(dag, dir, delta, Updates.merged, writeOver, batchWords)
+        val prefixes = builder.refreshPrefixDict(dag, dir, delta, Updates.DeltaBuilt,
+          batchWords)
+        // the new prefix dictionary reads the live term_dict before it merges
+        mergeSteps(dag, dir, delta, batchWords, termDictAfter = prefixes.diff.step)
+        builder.refreshDerivedTables(dag, dir, delta, Updates.DeltaBuilt, Updates.merged,
+          prefixes)
         dag.run()
+        dag.timeline.foreach(t => Manifest.appendLine(dir, Updates.stepJson(t)))
+        prefixes.diff.get
       } finally deltaBuild.release()
     } finally {
       // the delta index is per-batch scratch (appendFiles copies its doc-
@@ -203,6 +219,7 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
     }
     Manifest.recordUpdate(dir, "add_documents", s"replace=$replace")
     if (autoCompactFiles > 0) compact(dir, maxFiles = autoCompactFiles)
+    diff
   }
 
   /** The build stages an `addDocuments` delta writes for the index at `dir`:
@@ -215,15 +232,17 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
         .filter(t => new java.io.File(s"$dir/$t").exists())
 
   /** One step per base table, named [[Updates.merged]]: it merges the delta
-    * table into the live one once the whole delta build has committed. A
+    * table into the live one once the whole delta build has committed
+    * (term_dict also once step `termDictAfter`, which reads it, ends). A
     * table the delta lacks stays as it is; a table the index lacks is
     * copied from the delta. Word-keyed tables touch the files that hold a
     * word of `batchWords`. */
   private def mergeSteps(dag: DagRunner, dir: String, delta: String,
-      batchWords: DagRunner.Value[Array[String]]): Unit = {
+      batchWords: DagRunner.Value[Array[String]], termDictAfter: String): Unit = {
     def exists(p: String) = new java.io.File(p).exists()
     def step(name: String)(merge: (String, String) => Unit): Unit =
-      dag.step(Updates.merged(name), Seq(Updates.DeltaBuilt)) {
+      dag.step(Updates.merged(name), Updates.DeltaBuilt +:
+          (if (name == T.TermDict) Seq(termDictAfter) else Nil)) {
         val oldPath = s"$dir/$name"; val newPath = s"$delta/$name"
         if (exists(newPath)) {
           if (!exists(oldPath)) writeOver(read(newPath), oldPath)
@@ -406,7 +425,7 @@ object Updates {
   val DefaultAutoCompactFiles: Int = 64
 
   /** Tables derived from the base tables: `addDocuments` refreshes them
-    * from the merged bases rather than building them into its delta. */
+    * rather than building them into its delta. */
   private val DerivedTables: Seq[String] = Seq(T.PrefixDict, T.WordPrefixDocids,
     T.ExactWordPrefixDocids, T.WordPrefixPositionDocids,
     T.WordPrefixPairProximityDocids, T.PrefixWordPairProximityDocids,
@@ -420,4 +439,13 @@ object Updates {
 
   /** The `addDocuments` step after which live table `table` holds the batch. */
   private def merged(table: String): String = s"merge:$table"
+
+  /** One `addDocuments` step's timing as a manifest line. Its `__` table
+    * name keeps the readers that list the manifest's tables off it. */
+  private def stepJson(t: DagRunner.StepTime): String = {
+    def s(x: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, x)
+    s"""{"table":"__update_step__","name":"${t.name}",""" +
+      s""""deps":${t.deps.map(d => s""""$d"""").mkString("[", ",", "]")},""" +
+      s""""ready_s":${s(t.readyS)},"start_s":${s(t.startS)},"end_s":${s(t.endS)}}"""
+  }
 }

@@ -201,7 +201,7 @@ object FilterEvaluator {
             .as("docid"))
       case FIn(field, values) =>
         // IN = OR of equalities (filter.rs:270-278) — one pushdown per form
-        val norms = values.map(_.trim.toLowerCase)
+        val norms = values.map(graft.core.Facets.normalizeFacet)
         val nums = values.flatMap(_.toDoubleOption)
         val byStr = index.facetStrings
           .where($"field" === field && $"norm".isin(norms: _*)).select($"docid")
@@ -284,7 +284,7 @@ object FilterEvaluator {
         }
       case FCond(field, op, value) =>
         val num = value.toDoubleOption
-        val norm = value.trim.toLowerCase
+        val norm = graft.core.Facets.normalizeFacet(value)
         op match {
           case "=" =>
             val byStr = index.facetStrings

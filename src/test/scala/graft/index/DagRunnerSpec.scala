@@ -26,6 +26,29 @@ class DagRunnerSpec extends AnyFunSuite with Matchers {
     seen.last shouldBe "d"
   }
 
+  test("the timeline holds every step, each started no earlier than " +
+      "each of its dependencies ended") {
+    val dag = new DagRunner
+    dag.step("a") { Thread.sleep(30) }
+    dag.step("b") { Thread.sleep(10) }
+    dag.step("c", Seq("a", "b")) { Thread.sleep(10) }
+    dag.barrier("all")
+    dag.step("d", Seq("all")) { () }
+    dag.run()
+    val steps = dag.timeline
+    steps.map(_.name) shouldBe Seq("a", "b", "c", "all", "d")
+    val byName = steps.map(t => t.name -> t).toMap
+    steps.foreach { t =>
+      t.readyS should be <= t.startS
+      t.startS should be <= t.endS
+      t.deps.foreach(d => withClue(s"${t.name} after $d: ") {
+        t.readyS should be >= byName(d).endS
+      })
+    }
+    byName("c").deps shouldBe Seq("a", "b")
+    byName("a").endS - byName("a").startS should be >= 0.03
+  }
+
   test("a value step's result reaches the steps that depend on it") {
     val dag = new DagRunner
     val words = dag.value("words") { Thread.sleep(50); Seq("a", "b") }

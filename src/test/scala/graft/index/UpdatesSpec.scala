@@ -88,19 +88,30 @@ class UpdatesSpec extends AnyFunSuite with Matchers {
     * compare a ranked query, BM25 and EVERY table with a from-scratch
     * build of `all` — including the derived prefix tables and facet level
     * trees refreshed after the merge (stale derived data is the
-    * incremental-index time bomb). */
+    * incremental-index time bomb). A batch document whose primary key is
+    * already indexed replaces it: the scratch build keeps both versions,
+    * and the docids the batch tombstoned (`replaced`) are tombstoned in
+    * it too. Also checks the batch's step timeline in the manifest: the
+    * prefix tables' delta steps wait for no merge, and term_dict merges
+    * after the new prefix dictionary read it. Returns the batch's prefix
+    * dictionary diff. */
   private def assertIncrementalParity(settings: IndexSettings,
-      all: org.apache.spark.sql.DataFrame): Unit = {
+      all: org.apache.spark.sql.DataFrame,
+      replaced: Set[Int] = Set.empty): IndexBuilder.PrefixDiff = {
     val spark = TestSpark.spark
     val first = all.where(org.apache.spark.sql.functions.col("docid") < 200)
     val second = all.where(org.apache.spark.sql.functions.col("docid") >= 200)
 
     val incDir = freshDir()
     new IndexBuilder(spark, settings).build(first, incDir, resume = false)
-    new Updates(spark, settings).addDocuments(incDir, second)
+    val updates = new Updates(spark, settings)
+    val diff = updates.addBatch(incDir, second)
+    updates.deletedBitmap(incDir).toArray.toSet shouldBe replaced
+    assertUpdateSteps(incDir)
 
     val fullDir = freshDir()
     new IndexBuilder(spark, settings).build(all, fullDir, resume = false)
+    if (replaced.nonEmpty) updates.softDelete(fullDir, replaced.toSeq)
 
     val qInc = new Search(GraftIndex(spark, incDir, settings))
       .execute(SearchRequest(query = Some("w2 w7"), limit = 50))
@@ -146,6 +157,35 @@ class UpdatesSpec extends AnyFunSuite with Matchers {
     tables.foreach { t =>
       withClue(s"table $t: ") { canon(incDir, t) shouldBe canon(fullDir, t) }
     }
+    diff
+  }
+
+  /** The last `addDocuments` step timeline in `dir`'s manifest: every step
+    * of the prefix refresh is there, the prefix tables' delta steps depend
+    * on the delta and the old dictionary, never on a merge, and term_dict
+    * merges after the new dictionary was computed from it. */
+  private def assertUpdateSteps(dir: String): Unit = {
+    val src = scala.io.Source.fromFile(s"$dir/_graft_manifest.jsonl")
+    val lines = try src.getLines().filter(_.contains("\"__update_step__\"")).toSeq
+      finally src.close()
+    val deps = lines.map { l =>
+      val name = """"name":"([^"]*)"""".r.findFirstMatchIn(l).get.group(1)
+      val ds = """"deps":\[([^\]]*)\]""".r.findFirstMatchIn(l).get.group(1)
+        .split(',').map(_.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty).toSeq
+      name -> ds
+    }.toMap
+    val T = IndexSettings.T
+    val deltaSteps = Seq(T.WordPrefixDocids, T.WordPrefixPositionDocids)
+      .map("refresh:" + _) :+ "refresh:prefix_pairs"
+    (deltaSteps ++ Seq("refresh:prefix_dict", s"merge:${T.TermDict}",
+      "rebuild:prefix_pairs")).foreach(n => deps.keySet should contain(n))
+    deltaSteps.foreach { n =>
+      withClue(s"step $n: ") {
+        deps(n) should contain("delta:built")
+        deps(n).filter(_.startsWith("merge:")) shouldBe empty
+      }
+    }
+    deps(s"merge:${T.TermDict}") should contain("refresh:prefix_dict")
   }
 
   test("incremental add-documents merge equals from-scratch build") {
@@ -202,6 +242,40 @@ class UpdatesSpec extends AnyFunSuite with Matchers {
       spark.conf.set("spark.sql.shuffle.partitions", oldParts)
       spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", oldCoalesce)
     }
+  }
+
+  test("a batch that adds dictionary prefixes equals a from-scratch build") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{concat, lit, when}
+    // a low threshold: the batch's three `qx…` words make `q` and `qx`
+    // dictionary prefixes, and `qx` reaches the prefix-pair tables too
+    val settings = IndexSettings(searchableFields = Seq("text"), primaryKey = "url",
+      prefixThreshold = 3)
+    val all = WebPages.generate(spark, 260)
+      .withColumn("text", when($"docid" >= 200,
+        concat($"text", lit(" qxa w3 qxb the qxc"))).otherwise($"text"))
+      .cache()
+    val diff = assertIncrementalParity(settings, all)
+    diff.old.get should not contain "qx"
+    diff.now should contain("qx")
+    diff.changed should contain allOf("q", "qx")
+  }
+
+  test("a batch with replacements equals a from-scratch build of both " +
+      "versions with the old ones tombstoned") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{concat, lit}
+    val settings = IndexSettings(searchableFields = Seq("text"),
+      filterableFields = Set("lang"), primaryKey = "url")
+    val pages = WebPages.generate(spark, 400)
+    // docs 0..19 come back as 400..419 under the same url, with new text
+    val replacements = pages.where($"docid" < 20)
+      .withColumn("docid", $"docid" + 400)
+      .withColumn("text", concat(lit("w2 revised w7 "), $"text"))
+    val all = pages.unionByName(replacements).cache()
+    assertIncrementalParity(settings, all, replaced = (0 until 20).toSet)
   }
 
   test("a failed addDocuments leaves every live table unchanged, no " +
@@ -346,20 +420,20 @@ class UpdatesSpec extends AnyFunSuite with Matchers {
       // level-table partitioning is data-derived (one file for a tree this
       // small); shrink the per-file row target so the carry-over fixture
       // still gets the multi-file layout it exercises
-      spark.conf.set("spark.graft.facetLevels.rowsPerFile", "64")
-      new IndexBuilder(spark, settings)
-        .build(docs(0, 200, withScore = true), dir, resume = false)
-      val before = parts(IndexSettings.T.FacetNumberLevels)
-      before.size should be > 2
-      // the batch facets only `price` (score all-null): level files whose
-      // field interval is entirely `score` must carry over BY NAME
-      new Updates(spark, settings).addDocuments(dir, docs(1000, 20, withScore = false))
-      val after = parts(IndexSettings.T.FacetNumberLevels)
-      (before intersect after).size should be > 0
+      IndexBuilder.withFacetLevelRowsPerFile(64) {
+        new IndexBuilder(spark, settings)
+          .build(docs(0, 200, withScore = true), dir, resume = false)
+        val before = parts(IndexSettings.T.FacetNumberLevels)
+        before.size should be > 2
+        // the batch facets only `price` (score all-null): level files whose
+        // field interval is entirely `score` must carry over BY NAME
+        new Updates(spark, settings).addDocuments(dir, docs(1000, 20, withScore = false))
+        val after = parts(IndexSettings.T.FacetNumberLevels)
+        (before intersect after).size should be > 0
+      }
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", oldParts)
       spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", oldCoalesce)
-      spark.conf.unset("spark.graft.facetLevels.rowsPerFile")
     }
     val idx = GraftIndex(spark, dir, settings)
     def brute(field: String, lo: Double, hi: Double): Set[Int] =

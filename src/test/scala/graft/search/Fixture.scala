@@ -140,11 +140,11 @@ object Fixture {
             if (f != field) exFields += f
             if (leaf.isNumber) {
               numRows += Row(f, d.docid, leaf.asDouble())
-              strRows += Row(f, d.docid, leaf.asText().trim.toLowerCase, leaf.asText())
+              strRows += Row(f, d.docid, graft.core.Facets.normalizeFacet(leaf.asText()), leaf.asText())
             } else if (leaf.isTextual) {
               val s = leaf.asText()
               s.toDoubleOption.foreach(x => numRows += Row(f, d.docid, x))
-              strRows += Row(f, d.docid, s.trim.toLowerCase, s)
+              strRows += Row(f, d.docid, graft.core.Facets.normalizeFacet(s), s)
             } else if (leaf.isBoolean) {
               strRows += Row(f, d.docid, leaf.asText(), leaf.asText())
             }
