@@ -815,8 +815,8 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
     *    dictionary it launches no job.
     * An index without a dictionary or without the table rebuilds it whole
     * in `rebuild:<table>`, after the merge. Both prefix-pair tables come
-    * from one pair-table pass per step. Facet levels rebuild only the
-    * FIELDS in the batch. A table the settings keep empty ([[staysEmpty]])
+    * from one pair-table pass per step. A facet level tree rebuilds the
+    * batch's fields in bulk. A table the settings keep empty ([[staysEmpty]])
     * is not refreshed once it exists. */
   private[index] def refreshDerivedTables(dag: DagRunner, dir: String,
       deltaDir: String, deltaBuilt: String, merged: String => String,
@@ -912,44 +912,34 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
         .foreach { case ((name, _), rows) => writeOver(rows, path(name)) }
     }
 
-    // facet levels: VALUE-level incremental merge (FacetIncremental —
-    // the reference's FacetsUpdateIncremental re-expressed set-based):
-    // small deltas union into their containing groups per level with
-    // splits; fields whose delta is large (the reference's 1/50
-    // criterion), new fields, and top-level growth take the bulk
-    // field-grain rebuild instead
-    def refreshLevels(name: String, deltaBase: String, boundCol: String,
+    // facet levels: each field in the batch rebuilds whole with the bulk
+    // builder over the merged doc_facet table, so a refreshed tree has the
+    // shape a from-scratch build gives it. milli's value-incremental insert
+    // (incremental.rs) saves work only where single keys can be written; a
+    // parquet table must read every level of a touched field anyway, so
+    // the bulk rebuild is both the simpler and the cheaper path here. The
+    // level tables are field-major sorted: only files whose footer field
+    // interval meets the batch's fields are opened, and the files of every
+    // other field carry over byte-for-byte. A batch with no value for the
+    // table (its delta footers count no row) launches no job.
+    def refreshLevels(name: String, deltaBase: String,
         build: Option[Seq[String]] => DataFrame): Unit =
       dag.step("refresh:" + name, Seq(merged(deltaBase))) {
         val path = s"$dir/$name"
-        if (!exists(path) || !exists(s"$deltaDir/$deltaBase"))
-          writeOver(build(None), path)
-        else {
-          val delta = read(s"$deltaDir/$deltaBase")
-            .select($"field", col(boundCol).as("bound"), $"docid")
-          // O(touched files): the level tables are field-major sorted, so
-          // only files whose footer field interval meets the batch's
-          // fields (collected once) are opened — fields absent from the
-          // batch (heterogeneous-schema corpora) carry their files over
-          // byte-for-byte, and a batch with no faceted field keeps every
-          // row. A touched field's rows live entirely inside the touched
-          // files, so the merge's 1/50 bulk-vs-incremental criterion still
-          // sees full field sizes.
-          val fields = delta.select($"field").distinct().as[String].collect()
-          TableIO.mergeTouchedFiles(spark, path, delta, "field", fields) { (touchedDf, _) =>
-            val m = FacetIncremental.merge(spark, touchedDf, delta)
-            val out =
-              if (m.rebuildFields.isEmpty) m.rows
-              else m.rows.unionByName(build(Some(m.rebuildFields)))
-            out.repartitionByRange(col("field"), col("level"), col("bound"))
+        val deltaPath = s"$deltaDir/$deltaBase"
+        if (!exists(path)) writeOver(build(None), path)
+        else if (Manifest.parquetRowCount(spark, deltaPath) > 0) {
+          val delta = read(deltaPath).select($"field")
+          val fields = delta.distinct().as[String].collect().toSeq
+          TableIO.mergeTouchedFiles(spark, path, delta, "field", fields) { (touched, _) =>
+            touched.where(!$"field".isin(fields: _*)).unionByName(build(Some(fields)))
+              .repartitionByRange(col("field"), col("level"), col("bound"))
               .sortWithinPartitions("field", "level", "bound")
           }
         }
       }
-    refreshLevels(T.FacetNumberLevels, T.DocFacetNumbers, "value",
-      buildFacetNumberLevels(dir, _))
-    refreshLevels(T.FacetStringLevels, T.DocFacetStrings, "norm",
-      buildFacetStringLevels(dir, _))
+    refreshLevels(T.FacetNumberLevels, T.DocFacetNumbers, buildFacetNumberLevels(dir, _))
+    refreshLevels(T.FacetStringLevels, T.DocFacetStrings, buildFacetStringLevels(dir, _))
   }
 
   private def finishBuild(

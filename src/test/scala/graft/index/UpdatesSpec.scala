@@ -84,23 +84,24 @@ class UpdatesSpec extends AnyFunSuite with Matchers {
       .count() shouldBe 0
   }
 
-  /** Build `all`'s first 200 docs, add the rest with `addDocuments`, and
-    * compare a ranked query, BM25 and EVERY table with a from-scratch
-    * build of `all` — including the derived prefix tables and facet level
-    * trees refreshed after the merge (stale derived data is the
+  /** Build `all`'s docs below docid `split`, add the rest with
+    * `addDocuments`, and compare a ranked query, BM25 and EVERY table with
+    * a from-scratch build of `all` — including the derived prefix tables
+    * and facet level trees refreshed after the merge (stale derived data is the
     * incremental-index time bomb). A batch document whose primary key is
     * already indexed replaces it: the scratch build keeps both versions,
     * and the docids the batch tombstoned (`replaced`) are tombstoned in
     * it too. Also checks the batch's step timeline in the manifest: the
     * prefix tables' delta steps wait for no merge, and term_dict merges
     * after the new prefix dictionary read it. Returns the batch's prefix
-    * dictionary diff. */
+    * dictionary diff and the incrementally built index's directory. */
   private def assertIncrementalParity(settings: IndexSettings,
       all: org.apache.spark.sql.DataFrame,
-      replaced: Set[Int] = Set.empty): IndexBuilder.PrefixDiff = {
+      replaced: Set[Int] = Set.empty,
+      split: Int = 200): (IndexBuilder.PrefixDiff, String) = {
     val spark = TestSpark.spark
-    val first = all.where(org.apache.spark.sql.functions.col("docid") < 200)
-    val second = all.where(org.apache.spark.sql.functions.col("docid") >= 200)
+    val first = all.where(org.apache.spark.sql.functions.col("docid") < split)
+    val second = all.where(org.apache.spark.sql.functions.col("docid") >= split)
 
     val incDir = freshDir()
     new IndexBuilder(spark, settings).build(first, incDir, resume = false)
@@ -157,7 +158,7 @@ class UpdatesSpec extends AnyFunSuite with Matchers {
     tables.foreach { t =>
       withClue(s"table $t: ") { canon(incDir, t) shouldBe canon(fullDir, t) }
     }
-    diff
+    (diff, incDir)
   }
 
   /** The last `addDocuments` step timeline in `dir`'s manifest: every step
@@ -256,10 +257,29 @@ class UpdatesSpec extends AnyFunSuite with Matchers {
       .withColumn("text", when($"docid" >= 200,
         concat($"text", lit(" qxa w3 qxb the qxc"))).otherwise($"text"))
       .cache()
-    val diff = assertIncrementalParity(settings, all)
+    val (diff, _) = assertIncrementalParity(settings, all)
     diff.old.get should not contain "qx"
     diff.now should contain("qx")
     diff.changed should contain allOf("q", "qx")
+  }
+
+  test("a 20-doc batch onto a 3,000-value facet equals a scratch build") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    // 3,000 distinct values and a 20-doc batch, a batch milli's db/50
+    // rule would insert value by value: every level table row, group
+    // sizes and bounds included, must match the scratch build's tree
+    val settings = IndexSettings(searchableFields = Seq("text"),
+      filterableFields = Set("n"), primaryKey = "id")
+    val all = ((0 until 3000).map(i => (i, i, s"doc w$i", i.toDouble)) ++
+      (3000 until 3020).map(i => (i, i, s"doc w$i", i + 0.5)))
+      .toDF("docid", "id", "text", "n").cache()
+    val (_, dir) = assertIncrementalParity(settings, all, split = 3000)
+    val idx = GraftIndex(spark, dir, settings)
+    graft.search.FilterEvaluator
+      .candidates(idx, graft.search.FilterParser.parse("n 2995 TO 3015.5"))
+      .select($"docid").as[Int].collect().toSet shouldBe
+      ((2995 to 2999) ++ (3000 to 3015)).toSet
   }
 
   test("a batch with replacements equals a from-scratch build of both " +
