@@ -42,13 +42,17 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
   /** Tombstone the given docids (idempotent, unioned with prior deletes). */
   def softDelete(dir: String, docids: Seq[Int]): RoaringBitmap = {
     val merged = Bitmaps.or(deletedBitmap(dir), Bitmaps.fromInts(docids))
-    val bytes = Bitmaps.cboSerialize(merged)
-    // write via temp + move for atomicity of the tiny tombstone table
-    Seq(bytes).toDF("docids").coalesce(1)
-      .write.mode("overwrite").parquet(deletedPath(dir))
+    writeTombstone(dir, merged)
     Manifest.recordUpdate(dir, "soft_delete", s"n=${docids.length}")
     merged
   }
+
+  /** Replace the tombstone table with `docids`. The write goes to a side
+    * dir that is swapped in, so a write that fails keeps the earlier
+    * tombstones: an in-place overwrite deletes them before it writes. */
+  private def writeTombstone(dir: String, docids: RoaringBitmap): Unit =
+    writeOver(Seq(Bitmaps.cboSerialize(docids)).toDF("docids").coalesce(1),
+      deletedPath(dir))
 
   /** Purge soft-deleted docids from every posting table (bitmap tables get
     * `bitmap_and_not`; forward tables get an anti-filter), then clear the
@@ -120,9 +124,7 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
           s"$dir/${T.PrefixDict}")
     }
     dag.run()
-    // clear tombstone
-    Seq(Bitmaps.cboSerialize(new RoaringBitmap())).toDF("docids").coalesce(1)
-      .write.mode("overwrite").parquet(deletedPath(dir))
+    writeTombstone(dir, new RoaringBitmap())
     Manifest.recordUpdate(dir, "hard_delete", s"n=${deleted.getLongCardinality}")
   }
 
@@ -234,9 +236,9 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
   /** One step per base table, named [[Updates.merged]]: it merges the delta
     * table into the live one once the whole delta build has committed
     * (term_dict also once step `termDictAfter`, which reads it, ends). A
-    * table the delta lacks stays as it is; a table the index lacks is
-    * copied from the delta. Word-keyed tables touch the files that hold a
-    * word of `batchWords`. */
+    * table the delta lacks, or whose delta footers count no row, stays as
+    * it is (no job); a table the index lacks is copied from the delta.
+    * Word-keyed tables touch the files that hold a word of `batchWords`. */
   private def mergeSteps(dag: DagRunner, dir: String, delta: String,
       batchWords: DagRunner.Value[Array[String]], termDictAfter: String): Unit = {
     def exists(p: String) = new java.io.File(p).exists()
@@ -246,7 +248,7 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
         val oldPath = s"$dir/$name"; val newPath = s"$delta/$name"
         if (exists(newPath)) {
           if (!exists(oldPath)) writeOver(read(newPath), oldPath)
-          else merge(oldPath, newPath)
+          else if (hasRows(newPath)) merge(oldPath, newPath)
         }
       }
     def mergeWordKeyed(oldPath: String, newPath: String, keyCol: String)(

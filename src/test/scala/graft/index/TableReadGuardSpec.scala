@@ -72,3 +72,41 @@ class LruGuardSpec extends AnyFunSuite with Matchers {
     ).foreach(src => accessOrdered.findFirstIn(src) shouldBe empty)
   }
 }
+
+/** Index tables are written through `TableIO.writeParquet`, the one place
+  * that sets their codec, row-group cap and page markers. A raw
+  * `.write … .parquet(` in the index or search code writes Spark's default
+  * snappy, and an overwrite in place deletes the table before the new rows
+  * are written. */
+class TableWriteGuardSpec extends AnyFunSuite with Matchers {
+
+  /** `.write` then any chain of calls (arguments nested one level deep),
+    * then `.parquet(`, over line breaks */
+  private val rawWrite =
+    """\.write(\s*\.\s*\w+\s*\((?:[^()]|\([^()]*\))*\))*\s*\.\s*parquet\(""".r
+
+  test("graft/index and graft/search write parquet only in TableIO") {
+    val files = SourceGuard.sources("index", "search")
+    SourceGuard.offenders(files, rawWrite, Set("TableIO.scala")) shouldBe empty
+    withClue("the pattern no longer finds TableIO's own write: ")(
+      SourceGuard.offenders(files.filter(_.getName == "TableIO.scala"), rawWrite,
+        Set.empty) should have size 1)
+  }
+
+  test("the write pattern finds the shapes it guards against") {
+    Seq(
+      // the tombstone writes this guard replaced
+      """Seq(bytes).toDF("docids").coalesce(1)
+        |      .write.mode("overwrite").parquet(deletedPath(dir))""".stripMargin,
+      """Seq(Bitmaps.cboSerialize(new RoaringBitmap())).toDF("docids").coalesce(1)
+        |      .write.mode("overwrite").parquet(deletedPath(dir))""".stripMargin,
+      "df.write\n  .option(\"parquet.block.size\", (4 << 20).toString)\n  .parquet(p)",
+      "df.write.parquet(p)"
+    ).foreach(src => rawWrite.findFirstIn(src) should not be empty)
+    Seq(
+      "java.nio.file.Files.write(path, bytes)\n  spark.read.parquet(p)",
+      "TableIO.writeParquet(df, p)",
+      "spark.read.parquet(p)"
+    ).foreach(src => rawWrite.findFirstIn(src) shouldBe empty)
+  }
+}

@@ -332,6 +332,33 @@ class UpdatesSpec extends AnyFunSuite with Matchers {
     sideDirs(new java.io.File(dir)) shouldBe empty
   }
 
+  test("a tombstone write that fails leaves the earlier tombstones readable") {
+    val spark = TestSpark.spark
+    val settings = IndexSettings(searchableFields = Seq("text"))
+    val dir = freshDir()
+    new IndexBuilder(spark, settings).build(WebPages.generate(spark, 60), dir,
+      resume = false)
+    val updates = new Updates(spark, settings)
+    updates.softDelete(dir, Seq(4, 9))
+    def tombstones(): Seq[Int] = {
+      GraftIndex(spark, dir, settings).deletedDocids.toArray.toSeq shouldBe
+        updates.deletedBitmap(dir).toArray.toSeq
+      updates.deletedBitmap(dir).toArray.toSeq
+    }
+    val key = "spark.sql.sources.commitProtocolClass"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, classOf[FailingTombstoneCommit].getName)
+    try {
+      an[Exception] should be thrownBy updates.softDelete(dir, Seq(17))
+      tombstones() shouldBe Seq(4, 9)
+      an[Exception] should be thrownBy updates.hardDelete(dir)
+      tombstones() shouldBe Seq(4, 9)
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    // the side dir a failed write leaves does not block the next write
+    updates.softDelete(dir, Seq(17))
+    tombstones() shouldBe Seq(4, 9, 17)
+  }
+
   test("on text-only settings addDocuments leaves the tables the settings " +
       "keep empty byte-identical") {
     val spark = TestSpark.spark
@@ -360,6 +387,28 @@ class UpdatesSpec extends AnyFunSuite with Matchers {
     updates.hardDelete(dir)
     Manifest.parquetRowCount(spark, s"$dir/${T.Documents}") shouldBe 258L
     updates.compact(dir, maxFiles = 0).map(_._1) should contain(T.Documents)
+    snapshot() shouldBe before
+  }
+
+  test("a delta table with no rows leaves its live table byte-identical") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val settings = IndexSettings(searchableFields = Seq("text"),
+      filterableFields = Set("lang"), primaryKey = "url")
+    val T = IndexSettings.T
+    val dir = freshDir()
+    val all = WebPages.generate(spark, 230).cache()
+    new IndexBuilder(spark, settings).build(all.where($"docid" < 200), dir, resume = false)
+    // no field of these pages has few enough words for a word count, and
+    // no facet is numeric: the batch's delta rows are empty as well
+    val empty = Seq(T.FidWordCountDocids, T.DocFidWordCounts, T.DocFacetNumbers)
+    def snapshot() = empty.map(t => t -> digests(s"$dir/$t")).toMap
+    val before = snapshot()
+    empty.foreach(t => withClue(s"table $t: ") {
+      Manifest.parquetRowCount(spark, s"$dir/$t") shouldBe 0L
+    })
+    new Updates(spark, settings).addDocuments(dir, all.where($"docid" >= 200))
+    Manifest.parquetRowCount(spark, s"$dir/${T.Documents}") shouldBe 230L
     snapshot() shouldBe before
   }
 
@@ -652,5 +701,17 @@ class UpdatesSpec extends AnyFunSuite with Matchers {
     val r = new Search(GraftIndex(spark, dir, settings))
       .execute(SearchRequest(query = Some("zzzunique "), limit = 10))
     r.documentsIds shouldBe Seq(100)
+  }
+}
+
+/** A commit protocol whose job setup fails for the tombstone table: Spark
+  * sets a write up after an overwrite has deleted the target dir. */
+class FailingTombstoneCommit(jobId: String, path: String, dynamicOverwrite: Boolean)
+    extends org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol(
+      jobId, path, dynamicOverwrite) {
+  override def setupJob(job: org.apache.hadoop.mapreduce.JobContext): Unit = {
+    if (path.contains(IndexSettings.T.DeletedDocids))
+      throw new java.io.IOException("injected tombstone write fault")
+    super.setupJob(job)
   }
 }
