@@ -180,7 +180,9 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
 
   /** Build every index table under `dir`. `docs` must already carry an
     * `docid` int column (see [[assignDocids]]). Completed tables recorded
-    * in the manifest are skipped when `resume` is true.
+    * in the manifest are skipped when `resume` is true and `dir` holds the
+    * current format stamp ([[IndexFormat]]); without it every table is
+    * rebuilt.
     *
     * Facet inputs can be overridden (the milli-fixture corpus needs
     * JSON-aware extraction); by default they derive from the doc columns.
@@ -209,19 +211,15 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
       resume: Boolean,
       facetOverride: Option[(DataFrame, DataFrame, DataFrame)],
       tables: Set[String]): IndexBuilder.BuildRun = {
+    // a dir without the current stamp keeps no table: its manifest goes,
+    // so every table rebuilds, and the stamp is written before the first
+    // stage, so a resume after a crash trusts only this build's records
+    if (!IndexFormat.isCurrent(dir)) Manifest.drop(dir)
+    IndexFormat.stamp(dir)
     val manifest = Manifest.load(dir)
     val t0 = System.nanoTime()
     def pending(name: String): Boolean =
       tables(name) && !(resume && manifest.isDone(name, dir))
-    // format marker (evaluated BEFORE any stage can record): the serving
-    // point-read path (GraftIndex.prefixPairDict) requires BOTH prefix-pair
-    // tables to carry the full prox 1..7 range (older builds capped at 4).
-    // Written after the build only when both tables are fresh from this
-    // builder (or the dir is already marked) — a resume over an old dir
-    // keeps the marker off and serving on its fallback paths.
-    val ppFreshBoth =
-      Seq(T.WordPrefixPairProximityDocids, T.PrefixWordPairProximityDocids)
-        .forall(pending)
 
     // Every bitmap table aggregates millions of (key → roaring bitmap)
     // groups through ObjectHashAggregate; Spark's default sort-based
@@ -583,8 +581,6 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
         spark.sparkContext.removeSparkListener(listener)
       },
       finish = () => {
-        val ppMarker = new java.io.File(s"$dir/${IndexBuilder.PrefixPairsProx7Marker}")
-        if (ppFreshBoth && !ppMarker.exists()) ppMarker.createNewFile()
         finishBuild(manifest, taskAgg, stageGroup, dir, t0)
         manifest
       })
@@ -763,11 +759,10 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
     * `dag`, the Spark twin of the reference's prefix-FST diff into common,
     * new and deleted prefixes (`update/words_prefixes_fst.rs:43-96`,
     * `index_documents/mod.rs:431-602`):
-    *  - `refresh:old_prefixes`, at once: the current dictionary, or None
-    *    when the index has none;
+    *  - `refresh:old_prefixes`, at once: the current dictionary;
     *  - `refresh:batch_prefixes`, once `batchWords` (the delta's vocabulary
     *    on the driver) is in: the batch's prefixes in the current
-    *    dictionary (none without one), on the driver;
+    *    dictionary, on the driver;
     *  - `refresh:prefix_dict`, once `deltaBuilt` has finished: the new
     *    dictionary over the live term_dict's words ∪ the delta's, written
     *    over the live one, and the prefixes it gained or lost.
@@ -777,16 +772,13 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
       deltaDir: String, deltaBuilt: String,
       batchWords: DagRunner.Value[Array[String]]): IndexBuilder.PrefixRefresh = {
     val dictPath = s"$dir/${T.PrefixDict}"
-    val old = dag.value("refresh:old_prefixes") {
-      if (new java.io.File(dictPath).exists()) Some(dictPrefixes(dir)) else None
-    }
+    val old = dag.value("refresh:old_prefixes")(dictPrefixes(dir))
     val batch = dag.value("refresh:batch_prefixes", Seq(old.step, batchWords.step)) {
-      old.get.fold(Set.empty[String])(o => batchWords.get.iterator
-        .flatMap(IndexBuilder.prefixesOf(_, settings.maxPrefixLength)).filter(o).toSet)
+      batchWords.get.iterator
+        .flatMap(IndexBuilder.prefixesOf(_, settings.maxPrefixLength)).filter(old.get).toSet
     }
     val diff = dag.value("refresh:" + T.PrefixDict, Seq(deltaBuilt, batch.step)) {
-      val words = Seq(dir, deltaDir).map(d => s"$d/${T.TermDict}")
-        .filter(new java.io.File(_).exists()).map(read(_).select($"word"))
+      val words = Seq(dir, deltaDir).map(d => read(s"$d/${T.TermDict}").select($"word"))
         .reduce(_ unionByName _).distinct()
       TableIO.writeOver(spark)(buildPrefixDictFrom(words), dictPath)
       IndexBuilder.PrefixDiff(old.get, dictPrefixes(dir))
@@ -813,19 +805,14 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
     *    dictionary gained or lost with rows from the merged base: a lost
     *    prefix's rows vanish, its OR included. With an unchanged
     *    dictionary it launches no job.
-    * An index without a dictionary or without the table rebuilds it whole
-    * in `rebuild:<table>`, after the merge. Both prefix-pair tables come
-    * from one pair-table pass per step. A facet level tree rebuilds the
-    * batch's fields in bulk. A table the settings keep empty ([[staysEmpty]])
-    * is not refreshed once it exists. */
+    * Both prefix-pair tables come from one pair-table pass per step. A
+    * facet level tree rebuilds the batch's fields in bulk. A table the
+    * settings keep empty ([[staysEmpty]]) is not refreshed. */
   private[index] def refreshDerivedTables(dag: DagRunner, dir: String,
       deltaDir: String, deltaBuilt: String, merged: String => String,
       prefixes: IndexBuilder.PrefixRefresh): Unit = {
-    def exists(p: String) = new java.io.File(p).exists()
     def path(name: String) = s"$dir/$name"
-    def writeOver(df: DataFrame, path: String): Unit = TableIO.writeOver(spark)(df, path)
     val IndexBuilder.PrefixRefresh(batch, diff) = prefixes
-    val incremental = exists(path(T.PrefixDict))
 
     // O(touched files): only files whose footer prefix interval meets
     // `keys` are opened, every other FILE carries over byte-for-byte. The
@@ -857,19 +844,15 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
 
     def prefixTable(name: String, base: String, sortCols: Seq[String],
         build: (String, Set[String]) => DataFrame): Unit =
-      if (!(staysEmpty(facetOverride = false).contains(name) && exists(path(name)))) {
-        if (incremental && exists(path(name))) {
-          dag.step("refresh:" + name, Seq(deltaBuilt, batch.step)) {
-            val keys = batch.get
-            if (keys.nonEmpty) orInto(name, sortCols, keys, build(deltaDir, keys))
-          }
-          dag.step("rebuild:" + name, Seq("refresh:" + name, merged(base), diff.step)) {
-            val d = diff.get
-            if (d.changed.nonEmpty)
-              replaceIn(name, sortCols, d.changed, build(dir, d.changed intersect d.now))
-          }
-        } else dag.step("rebuild:" + name, Seq(merged(base), diff.step)) {
-          writeOver(build(dir, diff.get.now), path(name))
+      if (!staysEmpty(facetOverride = false).contains(name)) {
+        dag.step("refresh:" + name, Seq(deltaBuilt, batch.step)) {
+          val keys = batch.get
+          if (keys.nonEmpty) orInto(name, sortCols, keys, build(deltaDir, keys))
+        }
+        dag.step("rebuild:" + name, Seq("refresh:" + name, merged(base), diff.step)) {
+          val d = diff.get
+          if (d.changed.nonEmpty)
+            replaceIn(name, sortCols, d.changed, build(dir, d.changed intersect d.now))
         }
       }
     prefixTable(T.WordPrefixDocids, T.WordDocids, Seq("prefix"),
@@ -880,36 +863,30 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
       Seq("prefix", "position"), buildWordPrefixPositionDocids)
 
     // both prefix-pair tables (prefixes of ≤ 2 characters) from one pass
-    // per step; a missing side rebuilds both
+    // per step
     val pairTables = Seq(T.WordPrefixPairProximityDocids -> Seq("prefix", "w1", "prox"),
       T.PrefixWordPairProximityDocids -> Seq("prefix", "w2", "prox"))
     def pairs(base: String, keys: Set[String]): Seq[DataFrame] = {
       val (wordPrefix, prefixWord) = buildPrefixPairTablesBoth(base, keys)
       Seq(wordPrefix, prefixWord)
     }
-    val pairBase = merged(T.WordPairProximityDocids)
-    if (incremental && pairTables.forall(t => exists(path(t._1)))) {
-      val fromDelta = dag.value("refresh:prefix_pairs", Seq(deltaBuilt, batch.step)) {
-        val keys = IndexBuilder.pairPrefixes(batch.get)
-        if (keys.isEmpty) Map.empty[String, DataFrame]
-        else pairTables.map(_._1).zip(pairs(deltaDir, keys)).toMap
+    val fromDelta = dag.value("refresh:prefix_pairs", Seq(deltaBuilt, batch.step)) {
+      val keys = IndexBuilder.pairPrefixes(batch.get)
+      if (keys.isEmpty) Map.empty[String, DataFrame]
+      else pairTables.map(_._1).zip(pairs(deltaDir, keys)).toMap
+    }
+    pairTables.foreach { case (name, sortCols) =>
+      dag.step("refresh:" + name, Seq(fromDelta.step)) {
+        fromDelta.get.get(name).foreach(
+          orInto(name, sortCols, IndexBuilder.pairPrefixes(batch.get), _))
       }
-      pairTables.foreach { case (name, sortCols) =>
-        dag.step("refresh:" + name, Seq(fromDelta.step)) {
-          fromDelta.get.get(name).foreach(
-            orInto(name, sortCols, IndexBuilder.pairPrefixes(batch.get), _))
-        }
-      }
-      dag.step("rebuild:prefix_pairs",
-          pairTables.map("refresh:" + _._1) ++ Seq(pairBase, diff.step)) {
-        val d = diff.get
-        val keys = IndexBuilder.pairPrefixes(d.changed)
-        if (keys.nonEmpty) pairTables.zip(pairs(dir, keys intersect d.now))
-          .foreach { case ((name, sortCols), rows) => replaceIn(name, sortCols, keys, rows) }
-      }
-    } else dag.step("rebuild:prefix_pairs", Seq(pairBase, diff.step)) {
-      pairTables.zip(pairs(dir, diff.get.now))
-        .foreach { case ((name, _), rows) => writeOver(rows, path(name)) }
+    }
+    dag.step("rebuild:prefix_pairs", pairTables.map("refresh:" + _._1) ++
+        Seq(merged(T.WordPairProximityDocids), diff.step)) {
+      val d = diff.get
+      val keys = IndexBuilder.pairPrefixes(d.changed)
+      if (keys.nonEmpty) pairTables.zip(pairs(dir, keys intersect d.now))
+        .foreach { case ((name, sortCols), rows) => replaceIn(name, sortCols, keys, rows) }
     }
 
     // facet levels: each field in the batch rebuilds whole with the bulk
@@ -925,13 +902,11 @@ class IndexBuilder(spark: SparkSession, settings: IndexSettings) extends Seriali
     def refreshLevels(name: String, deltaBase: String,
         build: Option[Seq[String]] => DataFrame): Unit =
       dag.step("refresh:" + name, Seq(merged(deltaBase))) {
-        val path = s"$dir/$name"
         val deltaPath = s"$deltaDir/$deltaBase"
-        if (!exists(path)) writeOver(build(None), path)
-        else if (Manifest.parquetRowCount(spark, deltaPath) > 0) {
+        if (Manifest.parquetRowCount(spark, deltaPath) > 0) {
           val delta = read(deltaPath).select($"field")
           val fields = delta.distinct().as[String].collect().toSeq
-          TableIO.mergeTouchedFiles(spark, path, delta, "field", fields) { (touched, _) =>
+          TableIO.mergeTouchedFiles(spark, path(name), delta, "field", fields) { (touched, _) =>
             touched.where(!$"field".isin(fields: _*)).unionByName(build(Some(fields)))
               .repartitionByRange(col("field"), col("level"), col("bound"))
               .sortWithinPartitions("field", "level", "bound")
@@ -979,11 +954,10 @@ object IndexBuilder extends Serializable {
     * and restores the session; `finish` writes a full build's manifest. */
   private[index] final case class BuildRun(release: () => Unit, finish: () => Manifest)
 
-  /** The prefix dictionary before a batch (None: the index had none) and
-    * after it. */
-  private[index] final case class PrefixDiff(old: Option[Set[String]], now: Set[String]) {
+  /** The prefix dictionary before a batch and after it. */
+  private[index] final case class PrefixDiff(old: Set[String], now: Set[String]) {
     /** The prefixes the dictionary gained or lost. */
-    def changed: Set[String] = old.fold(Set.empty[String])(o => (now -- o) ++ (o -- now))
+    def changed: Set[String] = (now -- old) ++ (old -- now)
   }
 
   /** The dictionary steps of an `addDocuments` refresh, by their results:
@@ -1022,11 +996,6 @@ object IndexBuilder extends Serializable {
 
   /** The schema of `geo_cells`. */
   private val GeoCellsDdl = "cell bigint, docid int, lat double, lng double"
-
-  /** Root marker: this index's prefix-pair tables (#8/#9) carry the full
-    * stored prox range 1..7 — the serving point-read path requires it
-    * (older builds capped at prox ≤ 4 and must use the fallback paths). */
-  val PrefixPairsProx7Marker = "_graft_prefix_pairs_prox7"
 
   /** Distinct-key cap at which [[pairProximityPartials]] and
     * [[wordPositionPartials]] flush their per-partition map: 4M packed-long

@@ -62,6 +62,9 @@ object Manifest {
 
   private def path(dir: String) = Paths.get(s"$dir/_graft_manifest.jsonl")
 
+  /** Delete the manifest of `dir`: a later load lists no table. */
+  private[index] def drop(dir: String): Unit = Files.deleteIfExists(path(dir))
+
   def load(dir: String): Manifest = {
     val m = mutable.LinkedHashMap.empty[String, Entry]
     val p = path(dir)

@@ -2,6 +2,9 @@ package graft.index
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
+import org.roaringbitmap.RoaringBitmap
+
+import graft.core.Bitmaps
 
 /** File-granular parquet table maintenance shared by [[Updates]] and the
   * derived-table refresh: atomic swap-in replaces, footer-stats touched-file
@@ -21,46 +24,17 @@ object TableIO {
     * bitmap fetches decode only the groups whose interval matches. */
   val RowGroupBytes: Int = 4 << 20
 
-  /** Page-row cap for the forward index (doc_word_positions). The word
-    * column is sorted + RLE'd so tiny that at the default page sizing one
-    * PAGE spans a whole row group — parquet's column index then can't
-    * prune inside a group and a direct point read of a few words decodes
-    * every row. Capping pages at 1k rows makes the column index's
-    * per-page word [min,max] the effective pruning unit: a word band
-    * decodes ~1–2 pages (~1–2k rows) instead of ~400k. Costs ~0.4% file
-    * size in page headers; full-scan throughput unchanged (measured). */
+  /** Page-row cap for the forward index (doc_word_positions) and the
+    * pair-proximity table. Their key column (word, w1) is sorted + RLE'd
+    * so tiny that at the default page sizing one PAGE spans a whole row
+    * group — parquet's column index then can't prune inside a group and a
+    * direct point read of a few words decodes every row. Capping pages at
+    * 1k rows makes the column index's per-page key [min,max] the effective
+    * pruning unit: a word band decodes ~1–2 pages (~1–2k rows) instead of
+    * ~400k, and the cells' cold pair-bitmap read of a frequent left word
+    * decodes its own pages, not whole 4 MB groups. Costs ~0.4% file size
+    * in page headers; full-scan throughput unchanged (measured). */
   val DwpPageRows: Int = 1024
-
-  /** Marker file: present in a doc_word_positions dir whose files were
-    * written under [[DwpPageRows]] — the serving direct point reader keys
-    * off it (older coarse-paged dirs keep the Spark scan, where a direct
-    * read would decode whole row groups). */
-  val DwpPageMarker = "_graft_dwp_paged"
-
-  /** Same treatment for the pair-proximity table: its w1 column is sorted
-    * + RLE'd into one page per group at default sizing, so the cells'
-    * cold pair-bitmap point read (a frequent word's fat band) decoded
-    * whole 4 MB groups. 1k-row pages let the column index prune a left
-    * word's rows to its own pages. */
-  val PairPageMarker = "_graft_pair_paged"
-
-  /** Page-row cap of dirs whose marker predates marker CONTENT (empty
-    * `createNewFile` markers): those files were written while the default
-    * was 1024 and no override path existed, so the value is known. */
-  val LegacyPageRows = 1024L
-
-  /** The page-row cap `dir`'s files were committed under. Absent marker →
-    * None (dir is not fine-paged; direct point reads must not engage).
-    * Present-but-empty / unparsable → [[LegacyPageRows]]. ONE helper on
-    * purpose: three divergent inline parses previously disagreed on the
-    * empty-marker case, under-pricing the serving volume gate. */
-  def readPageMarker(dir: String, name: String): Option[Long] = {
-    val f = new java.io.File(dir, name)
-    if (!f.exists()) None
-    else Some(scala.util.Try(new String(
-      java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").trim.toLong)
-      .toOption.filter(_ > 0).getOrElse(LegacyPageRows))
-  }
 
   /** Read index-table parquet `paths` (table dirs or files of one table)
     * with the Spark row schema stored in the first file's footer: no
@@ -73,12 +47,22 @@ object TableIO {
       case None    => spark.read.parquet(paths: _*)
     }
 
+  /** The soft-deleted docids of the index at `dir`, the one reader of its
+    * tombstone table. An index nobody deleted from has no such table and
+    * reads as none. */
+  def deletedDocids(spark: SparkSession, dir: String): RoaringBitmap = {
+    val path = s"$dir/${IndexSettings.T.DeletedDocids}"
+    if (!new java.io.File(path).exists()) new RoaringBitmap()
+    else read(spark, path).select("docids").collect().headOption
+      .map(r => Bitmaps.cboDeserialize(r.getAs[Array[Byte]](0)))
+      .getOrElse(new RoaringBitmap())
+  }
+
   /** Column-chunk codec of every index-table write, at parquet's default
     * level. Most of the index's bytes are the pair family's cbo bitmaps,
     * and the index is about 23% smaller than under Spark's default snappy.
-    * Readers need no setting (parquet records the codec per column
-    * chunk), so a table may mix snappy files from older writes with zstd
-    * ones. */
+    * Readers need no setting: parquet records the codec per column
+    * chunk. */
   private val Compression = "zstd"
 
   /** The one writer of index tables: zstd ([[Compression]]), the serving
@@ -88,24 +72,16 @@ object TableIO {
     // tmp side dirs ("<table>__tmp") from writeOver/merge/compact must
     // keep their table's options — the dir is renamed in wholesale
     val base = path.stripSuffix("/").stripSuffix("__tmp")
-    val dwp = base.endsWith("/" + IndexSettings.T.DocWordPositions)
-    val pair = base.endsWith("/" + IndexSettings.T.WordPairProximityDocids)
+    val paged = Seq(IndexSettings.T.DocWordPositions, IndexSettings.T.WordPairProximityDocids)
+      .exists(t => base.endsWith("/" + t))
     val pageRows =
-      if (dwp || pair) Map("parquet.page.row.count.limit" -> DwpPageRows.toString)
+      if (paged) Map("parquet.page.row.count.limit" -> DwpPageRows.toString)
       else Map.empty[String, String]
     df.write.mode("overwrite")
       .option("compression", Compression)
       .option("parquet.block.size", RowGroupBytes.toString)
       .options(pageRows)
       .parquet(path)
-    // the marker CONTENT records the page-row cap the files were written
-    // under: the serving volume gate prices page-bounded decodes with it.
-    // Empty/older markers fall back to the serve default.
-    def mark(name: String): Unit =
-      java.nio.file.Files.write(java.nio.file.Paths.get(path, name),
-        DwpPageRows.toString.getBytes("UTF-8"))
-    if (dwp) mark(DwpPageMarker)
-    if (pair) mark(PairPageMarker)
   }
 
   /** Table replace: write to a side dir, then swap it in. A write that
@@ -234,23 +210,6 @@ object TableIO {
       if (touchedF.isEmpty) read(spark, oldPath).limit(0)
       else read(spark, touchedF.map(_._1): _*)
     writeParquet(merge(touchedDf, deltaDf), tmp)
-    // untouched files carry over byte-for-byte, so the fresh marker
-    // writeParquet just wrote can misdescribe them two ways: (a) the old
-    // dir had NO marker (pre-marker coarse pages spanning whole row
-    // groups) — a marker appearing now would turn direct point reads ON
-    // over those files, the exact regression the gate exists to prevent,
-    // so drop it unless every old file was rewritten; (b) the old files
-    // used a LARGER cap — keep the max so the volume gate never
-    // under-prices them.
-    Seq(DwpPageMarker, PairPageMarker).foreach { m =>
-      val newF = new java.io.File(tmp, m)
-      (readPageMarker(oldPath, m), readPageMarker(tmp, m)) match {
-        case (None, Some(_)) if keepF.nonEmpty => newF.delete()
-        case (Some(o), Some(n)) if o > n =>
-          java.nio.file.Files.write(newF.toPath, o.toString.getBytes("UTF-8"))
-        case _ => ()
-      }
-    }
     keepF.foreach { case (f, _) =>
       val src = java.nio.file.Paths.get(f)
       java.nio.file.Files.copy(src,
@@ -311,21 +270,6 @@ object TableIO {
       java.nio.file.Files.copy(f.toPath,
         java.nio.file.Paths.get(oldPath, s"inc-$stamp-${f.getName}"),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-    // page-marker content = the page-row cap the dir's files were written
-    // under; after mixing in delta files written under a LARGER cap the
-    // live marker must record the max, or the serving volume gate would
-    // under-price page-bounded decodes on the new files. readPageMarker
-    // maps legacy EMPTY markers to their known 1024, so an old empty
-    // marker still loses to a raised delta cap. An old dir with NO marker
-    // stays unmarked (its own coarse files must keep direct reads off).
-    Seq(DwpPageMarker, PairPageMarker).foreach { m =>
-      (readPageMarker(oldPath, m), readPageMarker(newPath, m)) match {
-        case (Some(o), Some(n)) if n > o =>
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(oldPath, m), n.toString.getBytes("UTF-8"))
-        case _ => ()
-      }
     }
     invalidate(spark, oldPath)
     true

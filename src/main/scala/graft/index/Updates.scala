@@ -32,15 +32,11 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
 
   private def deletedPath(dir: String) = s"$dir/${T.DeletedDocids}"
 
-  def deletedBitmap(dir: String): RoaringBitmap = {
-    val p = new java.io.File(deletedPath(dir))
-    if (!p.exists()) new RoaringBitmap()
-    else read(deletedPath(dir)).select($"docids").as[Array[Byte]]
-      .collect().headOption.map(Bitmaps.cboDeserialize).getOrElse(new RoaringBitmap())
-  }
+  def deletedBitmap(dir: String): RoaringBitmap = TableIO.deletedDocids(spark, dir)
 
   /** Tombstone the given docids (idempotent, unioned with prior deletes). */
   def softDelete(dir: String, docids: Seq[Int]): RoaringBitmap = {
+    IndexFormat.check(dir)
     val merged = Bitmaps.or(deletedBitmap(dir), Bitmaps.fromInts(docids))
     writeTombstone(dir, merged)
     Manifest.recordUpdate(dir, "soft_delete", s"n=${docids.length}")
@@ -58,13 +54,14 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
     * `bitmap_and_not`; forward tables get an anti-filter), then clear the
     * tombstone. Each table rewrite is an independent atomic commit. */
   def hardDelete(dir: String): Unit = {
+    IndexFormat.check(dir)
     val deleted = deletedBitmap(dir)
     if (deleted.isEmpty) return
     // foldable-literal operands: the tombstone set is deserialized once per
     // task by the bitmap expressions, never per row
     val delLit = lit(Bitmaps.cboSerialize(deleted))
 
-    // a missing or zero-row table has nothing to purge
+    // a zero-row table has nothing to purge
     def rewriteBitmapTable(name: String): Unit = {
       val path = s"$dir/$name"
       if (!hasRows(path)) return
@@ -109,19 +106,15 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
     // (delete_documents.rs purges word-level metadata the same way): a
     // stale df skews BM25 idf and the serving-gate estimates. prefix_dict
     // n_words follows from the recounted dictionary.
-    val dwpPath = s"$dir/${T.DocWordPositions}"
-    val recount = new java.io.File(dwpPath).exists() &&
-      new java.io.File(s"$dir/${T.TermDict}").exists()
     val exactFids = settings.exactAttributes.flatMap(
       settings.searchableFields.zipWithIndex.toMap.get).toSet
     dag.step(T.TermDict, Seq(T.DocWordPositions)) {
-      if (recount) writeOver(IndexBuilder.termDictFromDwp(
-        spark, read(dwpPath), exactFids), s"$dir/${T.TermDict}")
+      writeOver(IndexBuilder.termDictFromDwp(
+        spark, read(s"$dir/${T.DocWordPositions}"), exactFids), s"$dir/${T.TermDict}")
     }
     dag.step(T.PrefixDict, Seq(T.TermDict)) {
-      if (recount && new java.io.File(s"$dir/${T.PrefixDict}").exists())
-        writeOver(new IndexBuilder(spark, settings).buildPrefixDict(dir),
-          s"$dir/${T.PrefixDict}")
+      writeOver(new IndexBuilder(spark, settings).buildPrefixDict(dir),
+        s"$dir/${T.PrefixDict}")
     }
     dag.run()
     writeTombstone(dir, new RoaringBitmap())
@@ -153,7 +146,7 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
     * end times go to the manifest as `__update_step__` lines. On a
     * failure the call waits for the running steps, deletes the delta and
     * rethrows: a batch that fails to build leaves the live tables as they
-    * were.
+    * were. A directory with no index gets a build of the batch.
     *
     * After the commit, tables whose parquet file count crossed
     * `autoCompactFiles` are compacted in the same call (the Iceberg
@@ -171,10 +164,16 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
   /** [[addDocuments]], returning the batch's prefix dictionary diff. */
   private[index] def addBatch(dir: String, newDocs: DataFrame, replace: Boolean = true,
       autoCompactFiles: Int = Updates.DefaultAutoCompactFiles): IndexBuilder.PrefixDiff = {
+    IndexFormat.check(dir)
+    val builder = new IndexBuilder(spark, settings)
+    if (!IndexFormat.holdsIndex(dir)) {
+      builder.build(newDocs, dir, resume = false)
+      Manifest.recordUpdate(dir, "add_documents", s"replace=$replace")
+      return IndexBuilder.PrefixDiff(Set.empty, builder.dictPrefixes(dir))
+    }
     val pk = settings.primaryKey
     // replaced ids: same primary key in the existing documents table
-    if (replace && new java.io.File(s"$dir/${T.Documents}").exists() &&
-        newDocs.columns.contains(pk)) {
+    if (replace && newDocs.columns.contains(pk)) {
       val existing = read(s"$dir/${T.Documents}")
       if (existing.columns.contains(pk)) {
         val replaced = existing.join(newDocs.select(col(pk)), Seq(pk), "left_semi")
@@ -182,12 +181,11 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
         if (replaced.nonEmpty) softDelete(dir, replaced.toSeq)
       }
     }
-    val builder = new IndexBuilder(spark, settings)
     val delta = java.nio.file.Files.createTempDirectory("graft-delta").toString
     val dag = new DagRunner
     val diff = try {
       val deltaBuild = builder.buildOn(dag, newDocs, delta, resume = false,
-        facetOverride = None, tables = deltaStages(builder, dir))
+        facetOverride = None, tables = deltaStages(builder))
       try {
         // the batch vocabulary, collected once on the driver: every word of
         // the delta's term_dict, a superset of the keys of every word-keyed
@@ -224,32 +222,26 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
     diff
   }
 
-  /** The build stages an `addDocuments` delta writes for the index at `dir`:
-    * the base tables [[mergeSteps]] merges, not the derived ones refreshed
-    * from them. A table the settings keep empty ([[IndexBuilder.staysEmpty]])
-    * is skipped too once the index has it. */
-  private def deltaStages(builder: IndexBuilder, dir: String): Set[String] =
+  /** The build stages an `addDocuments` delta writes: the base tables
+    * [[mergeSteps]] merges, not the derived ones refreshed from them, and
+    * not the tables the settings keep empty ([[IndexBuilder.staysEmpty]]). */
+  private def deltaStages(builder: IndexBuilder): Set[String] =
     T.buildStages.toSet -- Updates.DerivedTables --
       builder.staysEmpty(facetOverride = false).keys
-        .filter(t => new java.io.File(s"$dir/$t").exists())
 
   /** One step per base table, named [[Updates.merged]]: it merges the delta
     * table into the live one once the whole delta build has committed
     * (term_dict also once step `termDictAfter`, which reads it, ends). A
     * table the delta lacks, or whose delta footers count no row, stays as
-    * it is (no job); a table the index lacks is copied from the delta.
-    * Word-keyed tables touch the files that hold a word of `batchWords`. */
+    * it is (no job). Word-keyed tables touch the files that hold a word of
+    * `batchWords`. */
   private def mergeSteps(dag: DagRunner, dir: String, delta: String,
       batchWords: DagRunner.Value[Array[String]], termDictAfter: String): Unit = {
-    def exists(p: String) = new java.io.File(p).exists()
     def step(name: String)(merge: (String, String) => Unit): Unit =
       dag.step(Updates.merged(name), Updates.DeltaBuilt +:
           (if (name == T.TermDict) Seq(termDictAfter) else Nil)) {
         val oldPath = s"$dir/$name"; val newPath = s"$delta/$name"
-        if (exists(newPath)) {
-          if (!exists(oldPath)) writeOver(read(newPath), oldPath)
-          else if (hasRows(newPath)) merge(oldPath, newPath)
-        }
+        if (hasRows(newPath)) merge(oldPath, newPath)
       }
     def mergeWordKeyed(oldPath: String, newPath: String, keyCol: String)(
         merge: (DataFrame, DataFrame) => DataFrame): Unit =
@@ -306,16 +298,13 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
             .unionByName(read(newPath), allowMissingColumns = true), oldPath)
       })
     // term_dict: recompute df by summing per-shard dfs (words disjoint by
-    // doc); ttf sums the same way. `coalesce(ttf, df)` tolerates an index
-    // written before the ttf column existed (≥1 occurrence per posting row
-    // is the conservative floor). Touched-file merge: every existing row
+    // doc); ttf sums the same way. Touched-file merge: every existing row
     // for a batch word lives in a file whose [min,max] word interval
     // contains it, so summing over (touched ∪ delta) is exact; files for
     // out-of-batch words carry over.
     step(T.TermDict) { (oldPath, newPath) =>
       mergeWordKeyed(oldPath, newPath, "word") { (a, b) =>
-        a.unionByName(b, allowMissingColumns = true)
-          .withColumn("ttf", coalesce(col("ttf"), $"df".cast("long")))
+        a.unionByName(b)
           .groupBy($"word")
           .agg(sum($"df").as("df"), min(when($"exact_only", 1).otherwise(0)).as("eo"),
             sum($"ttf").as("ttf"))
@@ -369,30 +358,27 @@ class Updates(spark: SparkSession, settings: IndexSettings) {
     * neutral; returns (table, file count before) for each compacted
     * table. */
   def compact(dir: String, maxFiles: Int = 32): Seq[(String, Int)] = {
+    IndexFormat.check(dir)
     def fileCount(path: String): Int =
       Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
         .count(f => f.isFile && f.getName.endsWith(".parquet"))
     val done = Seq.newBuilder[(String, Int)]
     canonicalSort.foreach { case (name, sortCols) =>
       val path = s"$dir/$name"
-      if (new java.io.File(path).exists()) {
-        val n = fileCount(path)
-        if (n > maxFiles && hasRows(path)) {
-          writeOver(read(path)
-            .repartitionByRange(sortCols.map(col): _*)
-            .sortWithinPartitions(sortCols.head, sortCols.tail: _*), path)
-          done += (name -> n)
-        }
+      val n = fileCount(path)
+      if (n > maxFiles && hasRows(path)) {
+        writeOver(read(path)
+          .repartitionByRange(sortCols.map(col): _*)
+          .sortWithinPartitions(sortCols.head, sortCols.tail: _*), path)
+        done += (name -> n)
       }
     }
     val pb = s"$dir/${T.PostingBlocks}"
-    if (new java.io.File(pb).exists()) {
-      val n = fileCount(pb)
-      if (n > maxFiles && hasRows(pb)) {
-        writeOver(IndexBuilder.buildPostingBlocksFromTf(spark,
-          decodeTf(read(pb))), pb)
-        done += (T.PostingBlocks -> n)
-      }
+    val n = fileCount(pb)
+    if (n > maxFiles && hasRows(pb)) {
+      writeOver(IndexBuilder.buildPostingBlocksFromTf(spark,
+        decodeTf(read(pb))), pb)
+      done += (T.PostingBlocks -> n)
     }
     val res = done.result()
     if (res.nonEmpty)

@@ -56,13 +56,8 @@ object FacetLevels {
     import spark.implicits._
     private val key = (numeric, field)
 
-    val exists: Boolean = new java.io.File(
-      s"${index.dir}/${if (numeric) T.FacetNumberLevels else T.FacetStringLevels}")
-      .exists()
-
     lazy val maxLevel: Int =
-      if (!exists) -1
-      else index.facetLevelMax.getOrElseUpdate(key, {
+      index.facetLevelMax.getOrElseUpdate(key, {
         val row = levelTable(index, numeric).where($"field" === field)
           .agg(max($"level")).collect()(0)
         if (row.isNullAt(0)) 0 else row.getInt(0)
@@ -85,8 +80,7 @@ object FacetLevels {
       else cmpStr(a.asInstanceOf[String], b.asInstanceOf[String])
 
     val upper: Option[Map[Int, Array[Row]]] =
-      if (!exists) None
-      else index.facetLevelPins.getOrElseUpdate(key, {
+      index.facetLevelPins.getOrElseUpdate(key, {
         val rows = levelTable(index, numeric).where($"field" === field && $"level" >= 1)
         if (rows.count() > MaxPinnedRows) None
         else {
@@ -146,7 +140,6 @@ object FacetLevels {
       lo: Option[Any], hi: Option[Any],
       loIncl: Boolean, hiIncl: Boolean): Option[RangeResult] = {
     val tree = new FieldTree(index, numeric, field)
-    if (!tree.exists) return None
     val maxLevel = tree.maxLevel
     if (maxLevel <= 0) return None
     import tree.cmp
@@ -246,7 +239,6 @@ object FacetLevels {
     def walkTree(numeric: Boolean): Unit = {
       if (bailed || emitted >= take || remaining.isEmpty) return
       val tree = new FieldTree(index, numeric, field)
-      if (!tree.exists || tree.maxLevel < 0) return
       import tree.cmp
 
       def emit(bm: RoaringBitmap): Unit = {

@@ -243,7 +243,7 @@ object FilterEvaluator {
             }
           }
         lngBand match {
-          case Some((lngLo, lngHi)) if index.hasGeoCells =>
+          case Some((lngLo, lngHi)) =>
             // cell-level pruning (the R-tree path): cover the bounding box
             // with O(cells) Morton ranges over the cell-sorted geo_cells
             // table — the scan reads only row groups intersecting the
@@ -260,7 +260,7 @@ object FilterEvaluator {
                 $"lat", $"lng", lit(lat), lit(lng)) <= lit(radius))
               .select($"docid").distinct()
           case _ =>
-            // polar / antimeridian-wrapping radius (or a pre-cell index):
+            // polar / antimeridian-wrapping radius:
             // latitude-band scan over the value-sorted facet table
             val lngs0 = index.facetNumbers.where($"field" === "_geo.lng")
             val lngs = lngBand

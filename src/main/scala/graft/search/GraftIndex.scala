@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.roaringbitmap.RoaringBitmap
 
 import graft.core.{Bitmaps, Typo}
-import graft.index.{IndexSettings, TableIO}
+import graft.index.{IndexFormat, IndexSettings, TableIO}
 import graft.index.IndexSettings.T
 
 /** Read-side handle on a built index directory: lazy table access plus the
@@ -18,9 +18,14 @@ import graft.index.IndexSettings.T
   * scans more than the posting rows the query touches (except typo
   * derivation, which is a predicate scan of the term dictionary — the
   * FST-free candidate expansion of the north rule).
+  *
+  * The directory must hold the current format stamp ([[IndexFormat]]):
+  * every table then exists in the one layout the readers below assume.
   */
 class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSettings) {
   import spark.implicits._
+
+  IndexFormat.check(dir)
 
   graft.functions.GraftFunctions.registerAll(spark)
 
@@ -80,8 +85,6 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
   lazy val facetExists: DataFrame = table(T.FacetExistsDocids)
   lazy val docStats: DataFrame = table(T.DocStats)
   lazy val geoCells: DataFrame = table(T.GeoCells)
-  /** geo_cells exists AND has rows-worth of files (older indexes lack it). */
-  lazy val hasGeoCells: Boolean = new java.io.File(s"$dir/${T.GeoCells}").exists()
   lazy val docFidWordCounts: DataFrame = table(T.DocFidWordCounts)
   lazy val postingBlocks: DataFrame = table(T.PostingBlocks)
 
@@ -127,8 +130,7 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
       T.WordPrefixPairProximityDocids -> "prefix",
       T.PrefixWordPairProximityDocids -> "prefix",
       T.WordPositionDocids -> "word", T.WordPrefixPositionDocids -> "prefix")
-    val fs = tables.filter(t => new java.io.File(s"$dir/${t._1}").exists())
-      .map { case (t, k) => Future(footersFor(t, k)) }
+    val fs = tables.map { case (t, k) => Future(footersFor(t, k)) }
     fs.foreach(f =>
       scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
     // (searchable fid, word count) bitmaps — the exactness strata's rank-0
@@ -167,38 +169,34 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     // bitmaps (ns p/q) and the rank path's forward rows per prefix range —
     // the latter sized via dictionary prefix sums against a quarter of the
     // dwp budget so the word-head prewarm above survives.
-    var headPfxs: Seq[String] = Nil
-    if (new java.io.File(s"$dir/${T.PrefixDict}").exists()) {
-      val pd: Seq[(String, Long)] = table(T.PrefixDict)
-        .orderBy(col("n_words").desc).limit(maxWords)
-        .select(col("prefix"), col("n_words").cast("long"))
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-      val pfxs = pd.map(_._1)
-      headPfxs = pfxs
-      pfxs.grouped(1024).foreach { b =>
-        bitmapCache.get("p", b)(ks =>
-          bitmapRowsT(T.WordPrefixDocids, wordPrefixDocids, ks, "prefix"))
-        bitmapCache.get("q", b)(ks =>
-          bitmapRowsT(T.ExactWordPrefixDocids, exactWordPrefixDocids, ks, "prefix"))
-      }
-      dictIndex.foreach { case (ws, cum, _) =>
-        var used = 0L
-        val keep = Seq.newBuilder[String]
-        pd.foreach { case (p, _) =>
-          val est = (cum(lowerBound(ws, p + Character.MAX_VALUE)) -
-            cum(lowerBound(ws, p))) * 40L + 64L
-          // skip single prefixes that would flood the cache (a 1-char
-          // prefix covers most of the corpus) but keep scanning smaller
-          // ones; stop at a quarter of the budget overall
-          if (est <= dwpCache.budgetBytes / 16 &&
-              used + est <= dwpCache.budgetBytes / 4) {
-            used += est
-            keep += p
-          }
+    val pd: Seq[(String, Long)] = table(T.PrefixDict)
+      .orderBy(col("n_words").desc).limit(maxWords)
+      .select(col("prefix"), col("n_words").cast("long"))
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    val headPfxs = pd.map(_._1)
+    headPfxs.grouped(1024).foreach { b =>
+      bitmapCache.get("p", b)(ks =>
+        bitmapRowsT(T.WordPrefixDocids, wordPrefixDocids, ks, "prefix"))
+      bitmapCache.get("q", b)(ks =>
+        bitmapRowsT(T.ExactWordPrefixDocids, exactWordPrefixDocids, ks, "prefix"))
+    }
+    dictIndex.foreach { case (ws, cum, _) =>
+      var used = 0L
+      val keep = Seq.newBuilder[String]
+      pd.foreach { case (p, _) =>
+        val est = (cum(lowerBound(ws, p + Character.MAX_VALUE)) -
+          cum(lowerBound(ws, p))) * 40L + 64L
+        // skip single prefixes that would flood the cache (a 1-char
+        // prefix covers most of the corpus) but keep scanning smaller
+        // ones; stop at a quarter of the budget overall
+        if (est <= dwpCache.budgetBytes / 16 &&
+            used + est <= dwpCache.budgetBytes / 4) {
+          used += est
+          keep += p
         }
-        val ks = keep.result()
-        ks.grouped(64).foreach(b => dwpCache.get(Nil, b))
       }
+      val ks = keep.result()
+      ks.grouped(64).foreach(b => dwpCache.get(Nil, b))
     }
     // pair-proximity bitmaps for head × head word pairs — the proximity
     // cell drain's point reads (one pruned scan; absent combinations cache
@@ -313,13 +311,7 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
 
   /** Soft-deleted tombstones, subtracted from every query
     * (`search/mod.rs:252`). */
-  lazy val deletedDocids: RoaringBitmap = {
-    val p = new java.io.File(s"$dir/${T.DeletedDocids}")
-    if (!p.exists()) new RoaringBitmap()
-    else table(T.DeletedDocids).select($"docids").as[Array[Byte]]
-      .collect().headOption.map(Bitmaps.cboDeserialize)
-      .getOrElse(new RoaringBitmap())
-  }
+  lazy val deletedDocids: RoaringBitmap = TableIO.deletedDocids(spark, dir)
 
   // ------------------------------------------------------- serving caches
 
@@ -402,22 +394,20 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
       }
     })
 
-  /** docid → (lat, lng) pinned from the geo cell table (None: no cell
-    * table, too big, or duplicate points — rank distributed). */
+  /** docid → (lat, lng) pinned from the geo cell table (None: too big,
+    * or duplicate points — rank distributed). */
   private[search] lazy val geoLocal
-      : Option[java.util.HashMap[Integer, (Double, Double)]] =
-    if (!hasGeoCells) None
+      : Option[java.util.HashMap[Integer, (Double, Double)]] = {
+    val rows = geoCells.select($"docid", $"lat", $"lng")
+      .limit(MaxSortPinRows + 1).as[(Int, Double, Double)].collect()
+    if (rows.length > MaxSortPinRows) None
     else {
-      val rows = geoCells.select($"docid", $"lat", $"lng")
-        .limit(MaxSortPinRows + 1).as[(Int, Double, Double)].collect()
-      if (rows.length > MaxSortPinRows) None
-      else {
-        val m = new java.util.HashMap[Integer, (Double, Double)](rows.length * 2)
-        var dup = false
-        rows.foreach { case (d, la, ln) => if (m.put(d, (la, ln)) != null) dup = true }
-        if (dup) None else Some(m)
-      }
+      val m = new java.util.HashMap[Integer, (Double, Double)](rows.length * 2)
+      var dup = false
+      rows.foreach { case (d, la, ln) => if (m.put(d, (la, ln)) != null) dup = true }
+      if (dup) None else Some(m)
     }
+  }
 
   // ------------------------------------------- pinned facet string rows
 
@@ -564,20 +554,11 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
   private val TermDictLocalMax = 2000000L
   /** (word, exactOnly, df, ttf) rows pinned driver-side for small
     * dictionaries — derivations AND posting-size estimation cost zero
-    * Spark jobs. ttf (total position count) falls back to df on indexes
-    * written before the column existed. */
-  private lazy val termDictLocalFull: Option[Array[(String, Boolean, Long, Long)]] = {
-    val cols = termDict.columns.toSet
-    val n = termDict.count()
-    if (n > TermDictLocalMax) None
-    else {
-      val eoCol = if (cols("exact_only")) $"exact_only" else lit(false)
-      val ttfCol = if (cols("ttf")) coalesce($"ttf", $"df").cast("long")
-        else $"df".cast("long")
-      Some(termDict.select($"word", eoCol, $"df".cast("long"), ttfCol)
-        .as[(String, Boolean, Long, Long)].collect())
-    }
-  }
+    * Spark jobs. ttf is the word's total position count. */
+  private lazy val termDictLocalFull: Option[Array[(String, Boolean, Long, Long)]] =
+    if (termDict.count() > TermDictLocalMax) None
+    else Some(termDict.select($"word", $"exact_only", $"df".cast("long"),
+      $"ttf".cast("long")).as[(String, Boolean, Long, Long)].collect())
   private lazy val termDictLocal: Option[Array[(String, Boolean)]] =
     termDictLocalFull.map(_.map { case (w, eo, _, _) => (w, eo) })
 
@@ -727,11 +708,8 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
           if (prefix) length($"word") >= w.length - t
           else length($"word").between(w.length - t, w.length + t)
         }.reduce(_ || _)
-        val hasExactOnly = termDict.columns.contains("exact_only")
-        if (hasExactOnly)
-          termDict.where(coarse).select($"word", $"exact_only")
-            .as[(String, Boolean)].collect()
-        else termDict.where(coarse).select($"word").as[String].collect().map((_, false))
+        termDict.where(coarse).select($"word", $"exact_only")
+          .as[(String, Boolean)].collect()
     }
     keySeq.map { case key @ (w, prefix, t) =>
       val ds = words.iterator.flatMap { case (cand, exactOnly) =>
@@ -808,31 +786,6 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     try f finally activeQueries.decrementAndGet()
   }
 
-  /** True when the committed forward index was written with fine-grained
-    * pages ([[graft.index.TableIO.DwpPageRows]] marker) — the unit the
-    * direct point reader prunes at. Coarse-paged dirs (pre-marker builds)
-    * keep the Spark scan: their word-column pages span whole row groups,
-    * so a direct read would decode ~400k rows per touched group. */
-  private[search] lazy val dwpDirectPaged: Boolean =
-    new java.io.File(
-      s"$dir/${T.DocWordPositions}", graft.index.TableIO.DwpPageMarker).exists()
-
-  /** Page-row cap the committed forward index was actually WRITTEN under
-    * (marker content; legacy empty markers → 1024). The volume gate must
-    * price decodes with the build-time value, not today's
-    * [[graft.index.TableIO.DwpPageRows]] (1024): a dir written with 16k-row
-    * pages would otherwise under-estimate page-bounded decodes 16×. */
-  private[search] lazy val dwpPageRows: Long =
-    graft.index.TableIO.readPageMarker(
-      s"$dir/${T.DocWordPositions}", graft.index.TableIO.DwpPageMarker)
-      .getOrElse(graft.index.TableIO.DwpPageRows.toLong)
-
-  /** Pair-table twin of [[dwpDirectPaged]]. */
-  private[search] lazy val pairDirectPaged: Boolean =
-    new java.io.File(
-      s"$dir/${T.WordPairProximityDocids}",
-      graft.index.TableIO.PairPageMarker).exists()
-
   /** Direct page-pruned forward-index point read: rows whose word is in
     * `words` (or extends a prefix in `prefixes`), optionally restricted to
     * `docs` — zero Spark jobs, zero Catalyst. The table is (word, docid)
@@ -843,7 +796,6 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     * None → caller runs the Spark scan (fallback AND source of truth). */
   private[search] def directDwpRows(words: Seq[String], prefixes: Seq[String],
       docs: Option[Array[Int]]): Option[Array[(Int, String, Array[Int])]] = {
-    if (!dwpDirectPaged) return None
     // docid POINT pruning for restricted fetches: within one word's run
     // the rows are docid-sorted, so an In over the chosen docids keeps
     // ~1 page per (word, docid) — a 200k-row stop-word run restricted to
@@ -864,7 +816,7 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     val estimate: Option[Long] = docPoints match {
       case Some(ds) =>
         dictIndex.map { _ =>
-          val perWordCap = (ds.length.toLong + 2) * dwpPageRows
+          val perWordCap = (ds.length.toLong + 2) * TableIO.DwpPageRows
           val m = dfLocal.get
           words.iterator.map { w =>
             math.min(Option(m.get(w)).map(_.longValue()).getOrElse(0L), perWordCap)
@@ -923,13 +875,11 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     // direct reader decodes row-group chunks in parallel (own reader per
     // chunk), so the crossover vs the fully parallel Spark scan sits far
     // beyond the old per-file-serial ~24 (measured: 60 groups direct in
-    // ~250 ms vs a ~650 ms Spark pair-scan job at 300k docs). Fine-paged
-    // dirs (PairPageMarker) prune PAGES inside each group, so the per-
-    // group decode is band-bounded and the cap can sit much higher.
-    val groupCap = if (pairDirectPaged) 512 else 96
+    // ~250 ms vs a ~650 ms Spark pair-scan job at 300k docs). The pair
+    // table's 1k-row pages prune inside each group, so the per-group
+    // decode is band-bounded and the cap sits much higher.
     val bands = DirectParquet.keyBands(lefts)
-    val nGroups = DirectParquet.bandGroupCount(fts, bands)
-    if (nGroups > groupCap) return None
+    if (DirectParquet.bandGroupCount(fts, bands) > GraftIndex.PairMaxGroups) return None
     // conjunctive page band over the rights' span: every wanted row has
     // w2 ∈ rightSet ⊆ [min, max], and w2 is sorted inside each w1 run —
     // a narrow span (one prefix's extensions) prunes a stop word's run to
@@ -1170,20 +1120,11 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     * (#8/#9): the len ≤ 2 slice of the prefix dictionary — their exact key
     * set (the builder derives both from `prefixSet(maxLen = 2)`). The
     * prefix dict is df-thresholded and length-capped like the reference's
-    * prefix FST, so this is thousands of entries even at web scale. Empty
-    * when the tables (older index) or the dict are missing → callers keep
-    * the extension/ranged paths. */
-  private lazy val prefixPairDict: Set[String] = {
-    val haveTables =
-      new java.io.File(s"$dir/${T.WordPrefixPairProximityDocids}").exists() &&
-      new java.io.File(s"$dir/${T.PrefixWordPairProximityDocids}").exists() &&
-      new java.io.File(s"$dir/${T.PrefixDict}").exists() &&
-      new java.io.File( // full-prox format guard (old builds capped at 4)
-        s"$dir/${graft.index.IndexBuilder.PrefixPairsProx7Marker}").exists()
-    if (!haveTables) Set.empty
-    else table(T.PrefixDict).where(length($"prefix") <= 2)
+    * prefix FST, so this is thousands of entries even at web scale. A
+    * prefix outside it keeps the extension/ranged paths. */
+  private lazy val prefixPairDict: Set[String] =
+    table(T.PrefixDict).where(length($"prefix") <= 2)
       .select($"prefix").as[String].collect().toSet
-  }
 
   private lazy val wordPrefixPairProx: DataFrame =
     table(T.WordPrefixPairProximityDocids)
@@ -1351,8 +1292,7 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
         val (lo, hi) = DirectParquet.keyBands(Seq(word)).head
         (Seq(DirectParquet.prefixBand(prefix)), ("w2", lo, hi))
       }
-    val groupCap = if (pairDirectPaged) 512 else 96
-    if (DirectParquet.bandGroupCount(fts, bands) > groupCap) return None
+    if (DirectParquet.bandGroupCount(fts, bands) > GraftIndex.PairMaxGroups) return None
     val byProx = scala.collection.mutable.HashMap.empty[Int, RoaringBitmap]
     val ok = DirectParquet.scanBands(fts, bands, Some(second)) { g =>
       // surviving pages carry neighbouring rows — re-check both sides
@@ -1395,9 +1335,6 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
   private lazy val wordPositionDocids: DataFrame = table(T.WordPositionDocids)
   private lazy val wordPrefixPositionDocids: DataFrame =
     table(T.WordPrefixPositionDocids)
-  private lazy val hasPositionTables: Boolean =
-    new java.io.File(s"$dir/${T.WordPositionDocids}").exists() &&
-      new java.io.File(s"$dir/${T.WordPrefixPositionDocids}").exists()
 
   /** `w:<word>` / `p:<prefix>` → ascending (position → docids) rows:
     * `None` = too big to point-read, `Some(empty)` = absent. Its misses
@@ -1419,8 +1356,6 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
       : (Map[String, Option[IndexedSeq[(Int, RoaringBitmap)]]],
          Map[String, Option[IndexedSeq[(Int, RoaringBitmap)]]]) = {
     type Rows = IndexedSeq[(Int, RoaringBitmap)]
-    if (!hasPositionTables)
-      return (words.map(_ -> None).toMap, prefixes.map(_ -> None).toMap)
     // untagged missed keys of one table → their cache entries, tagged
     def fetch(misses: Seq[String], tableName: String, df: => DataFrame,
         keyCol: String, live: Seq[String] => Seq[String],
@@ -1504,8 +1439,7 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     * the dict's prefixes). Thousands of entries even at web scale (the dict
     * is df-thresholded + length-capped like the reference FST). */
   private[search] lazy val prefixDictSet: Set[String] =
-    if (!new java.io.File(s"$dir/${T.PrefixDict}").exists()) Set.empty
-    else table(T.PrefixDict).select($"prefix").as[String].collect().toSet
+    table(T.PrefixDict).select($"prefix").as[String].collect().toSet
 
   // --------------------------------- fid_word_count_docids point reads
 
@@ -1517,8 +1451,7 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     * combinations cache as None). Called from warmServing. */
   private[search] def prewarmFidWordCounts(): Unit = {
     val fids = settings.searchableFields.indices.toSeq
-    if (fids.isEmpty ||
-        !new java.io.File(s"$dir/${T.FidWordCountDocids}").exists()) return
+    if (fids.isEmpty) return
     val keys = for (f <- fids; n <- 1 to 10) yield s"$f $n"
     bitmapCache.get("f", keys) { misses =>
       val missSet = misses.toSet
@@ -1634,6 +1567,11 @@ object GraftIndex {
     * group — cheap for a drain page's ~20–60 docs, not for a 8k-doc
     * verification slice). */
   private[search] val DwpDocPointsMax: Int = 256
+
+  /** Row-group cap of a direct pair-table read (pair rows and the ranged
+    * prefix-pair fallback); a band set over more groups keeps the Spark
+    * scan. */
+  private val PairMaxGroups: Int = 512
 
   /** Driver-pinned per-field sort values: min/max numeric value and min/max
     * string norm per docid (keep-first facet-sort semantics: asc reads the

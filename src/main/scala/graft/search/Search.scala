@@ -1114,19 +1114,12 @@ class Search(index: GraftIndex,
     // geo sort: join the point coordinates once
     val needsGeo = criteria.contains(Criterion.Sort) && sorts.exists(_.geoPoint.isDefined)
     if (!needsGeo) withFacets
-    else if (index.hasGeoCells)
+    else
       // one narrow table carries both coordinates — a single left join
       // instead of two facet-band scans + a docid join
       withFacets.join(index.geoCells
         .select($"docid", $"lat".as("geo__lat"), $"lng".as("geo__lng")),
         Seq("docid"), "left")
-    else {
-      val lat = index.facetNumbers.where($"field" === "_geo.lat")
-        .select($"docid", $"value".as("geo__lat"))
-      val lng = index.facetNumbers.where($"field" === "_geo.lng")
-        .select($"docid", $"value".as("geo__lng"))
-      withFacets.join(lat, Seq("docid"), "left").join(lng, Seq("docid"), "left")
-    }
   }
 
   /** sort columns for one criterion (missing values last, milli

@@ -110,3 +110,38 @@ class TableWriteGuardSpec extends AnyFunSuite with Matchers {
     ).foreach(src => rawWrite.findFirstIn(src) shouldBe empty)
   }
 }
+
+/** The on-disk format is known in one place, its stamp: a `"_graft_…"`
+  * file-name literal in the index or search code other than the manifest
+  * and the stamp is a second format marker that a reader would branch
+  * on. */
+class FormatGuardSpec extends AnyFunSuite with Matchers {
+
+  /** a string literal naming a `_graft_` file other than the manifest and
+    * the stamp */
+  private val marker =
+    """"[^"\n]*_graft_(?!(?:manifest\.jsonl|format)")[^"\n]*"""".r
+
+  test("graft/index and graft/search name no _graft_ file but the manifest and the stamp") {
+    val files = SourceGuard.sources("index", "search")
+    SourceGuard.offenders(files, marker, allowed = Set.empty) shouldBe empty
+    withClue("the stamp is named in IndexFormat: ")(
+      SourceGuard.offenders(files.filter(_.getName == "IndexFormat.scala"),
+        """"_graft_format"""".r, Set.empty) should have size 1)
+  }
+
+  test("the format pattern finds the removed markers") {
+    Seq(
+      """val DwpPageMarker = "_graft_dwp_paged"""",
+      """val PairPageMarker = "_graft_pair_paged"""",
+      """val PrefixPairsProx7Marker = "_graft_prefix_pairs_prox7"""",
+      """new java.io.File(s"$dir/_graft_prefix_pairs_prox7").exists()"""
+    ).foreach(src => marker.findFirstIn(src) should not be empty)
+    Seq(
+      """val StampFile = "_graft_format"""",
+      """Paths.get(s"$dir/_graft_manifest.jsonl")""",
+      """new java.io.File(s"$dir/_graft_manifest.jsonl")""",
+      "// `_graft_manifest.json` → a re-run resumes"
+    ).foreach(src => marker.findFirstIn(src) shouldBe empty)
+  }
+}

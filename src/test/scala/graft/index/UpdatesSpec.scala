@@ -11,22 +11,9 @@ import graft.webgen.WebPages
   * results; hard delete purges tables; an incremental batch-merged index
   * answers like a from-scratch index over the union corpus. */
 class UpdatesSpec extends AnyFunSuite with Matchers {
+  import UpdatesSpec._
 
   private def freshDir() = graft.TestSpark.tempDir("graft-upd")
-
-  /** Every file under `root`, by path relative to it → its bytes' SHA-256. */
-  private def digests(root: String): Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    val r = java.nio.file.Paths.get(root)
-    val files = java.nio.file.Files.walk(r)
-    try files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
-      .map { f =>
-        val md = java.security.MessageDigest.getInstance("SHA-256")
-        r.relativize(f).toString ->
-          md.digest(java.nio.file.Files.readAllBytes(f)).map("%02x".format(_)).mkString
-      }.toMap
-    finally files.close()
-  }
 
   test("soft delete removes docs from search; hard delete purges tables") {
     val spark = TestSpark.spark
@@ -114,50 +101,7 @@ class UpdatesSpec extends AnyFunSuite with Matchers {
     new IndexBuilder(spark, settings).build(all, fullDir, resume = false)
     if (replaced.nonEmpty) updates.softDelete(fullDir, replaced.toSeq)
 
-    val qInc = new Search(GraftIndex(spark, incDir, settings))
-      .execute(SearchRequest(query = Some("w2 w7"), limit = 50))
-    val qFull = new Search(GraftIndex(spark, fullDir, settings))
-      .execute(SearchRequest(query = Some("w2 w7"), limit = 50))
-    qInc.documentsIds shouldBe qFull.documentsIds
-    qInc.candidates shouldBe qFull.candidates
-
-    // BM25 agrees too (term_dict dfs + posting blocks merged correctly)
-    val bmInc = new graft.search.Bm25(GraftIndex(spark, incDir, settings))
-      .topK(Seq("w2", "w7"), 10)
-    val bmFull = new graft.search.Bm25(GraftIndex(spark, fullDir, settings))
-      .topK(Seq("w2", "w7"), 10)
-    bmInc.map(_._1).toSeq shouldBe bmFull.map(_._1).toSeq
-    bmInc.zip(bmFull).foreach { case ((_, a), (_, b)) => a shouldBe b +- 1e-9 }
-
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, concat_ws}
-    val tables = new java.io.File(fullDir).listFiles().filter(_.isDirectory)
-      .map(_.getName).filterNot(_.startsWith("_")).sorted.toSeq
-    tables should contain allElementsOf IndexSettings.T.buildStages
-    def canon(dir: String, t: String): Seq[String] = {
-      val df = spark.read.parquet(s"$dir/$t")
-      // posting_blocks: physical block fragmentation depends on the salted
-      // (word, docid) range boundaries — partitioning-dependent by design
-      // (hot-word skew split) — so compare the DECODED logical postings
-      if (t == IndexSettings.T.PostingBlocks)
-        return df.select($"word", $"bytes").as[(String, Array[Byte])]
-          .flatMap { case (w, b) =>
-            graft.core.PostingBlocks.decode(b).iterator.map(p => s"$w|${p._1}|${p._2}") }
-          .collect().sorted.toSeq
-      val cols = df.schema.fields.sortBy(_.name).map { f =>
-        val c = col(f.name)
-        f.name match {
-          case "docids" => graft.functions.GraftFunctions.bitmap_to_array(c).cast("string")
-          case _ if f.dataType == org.apache.spark.sql.types.BinaryType =>
-            org.apache.spark.sql.functions.hex(c)
-          case _ => c.cast("string")
-        }
-      }
-      df.select(concat_ws("|", cols.toSeq: _*)).as[String].collect().sorted.toSeq
-    }
-    tables.foreach { t =>
-      withClue(s"table $t: ") { canon(incDir, t) shouldBe canon(fullDir, t) }
-    }
+    assertSameTables(settings, incDir, fullDir)
     (diff, incDir)
   }
 
@@ -258,7 +202,7 @@ class UpdatesSpec extends AnyFunSuite with Matchers {
         concat($"text", lit(" qxa w3 qxb the qxc"))).otherwise($"text"))
       .cache()
     val (diff, _) = assertIncrementalParity(settings, all)
-    diff.old.get should not contain "qx"
+    diff.old should not contain "qx"
     diff.now should contain("qx")
     diff.changed should contain allOf("q", "qx")
   }
@@ -701,6 +645,74 @@ class UpdatesSpec extends AnyFunSuite with Matchers {
     val r = new Search(GraftIndex(spark, dir, settings))
       .execute(SearchRequest(query = Some("zzzunique "), limit = 10))
     r.documentsIds shouldBe Seq(100)
+  }
+}
+
+object UpdatesSpec extends Matchers {
+
+  /** Every file under `root`, by path relative to it → its bytes' SHA-256. */
+  def digests(root: String): Map[String, String] = {
+    import scala.jdk.CollectionConverters._
+    val r = java.nio.file.Paths.get(root)
+    val files = java.nio.file.Files.walk(r)
+    try files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+      .map { f =>
+        val md = java.security.MessageDigest.getInstance("SHA-256")
+        r.relativize(f).toString ->
+          md.digest(java.nio.file.Files.readAllBytes(f)).map("%02x".format(_)).mkString
+      }.toMap
+    finally files.close()
+  }
+
+  /** The indexes at `dirA` and `dirB` answer a ranked and a BM25 query
+    * alike, and every build table of `dirB` holds the same rows in
+    * `dirA`. */
+  def assertSameTables(settings: IndexSettings, dirA: String, dirB: String): Unit = {
+    val spark = TestSpark.spark
+    val qA = new Search(GraftIndex(spark, dirA, settings))
+      .execute(SearchRequest(query = Some("w2 w7"), limit = 50))
+    val qB = new Search(GraftIndex(spark, dirB, settings))
+      .execute(SearchRequest(query = Some("w2 w7"), limit = 50))
+    qA.documentsIds shouldBe qB.documentsIds
+    qA.candidates shouldBe qB.candidates
+
+    // BM25 agrees too (term_dict dfs + posting blocks merged correctly)
+    val bmA = new graft.search.Bm25(GraftIndex(spark, dirA, settings))
+      .topK(Seq("w2", "w7"), 10)
+    val bmB = new graft.search.Bm25(GraftIndex(spark, dirB, settings))
+      .topK(Seq("w2", "w7"), 10)
+    bmA.map(_._1).toSeq shouldBe bmB.map(_._1).toSeq
+    bmA.zip(bmB).foreach { case ((_, a), (_, b)) => a shouldBe b +- 1e-9 }
+
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, concat_ws}
+    val tables = new java.io.File(dirB).listFiles().filter(_.isDirectory)
+      .map(_.getName).filterNot(_.startsWith("_")).sorted.toSeq
+    tables should contain allElementsOf IndexSettings.T.buildStages
+    def canon(dir: String, t: String): Seq[String] = {
+      val df = spark.read.parquet(s"$dir/$t")
+      // posting_blocks: physical block fragmentation depends on the salted
+      // (word, docid) range boundaries — partitioning-dependent by design
+      // (hot-word skew split) — so compare the DECODED logical postings
+      if (t == IndexSettings.T.PostingBlocks)
+        return df.select($"word", $"bytes").as[(String, Array[Byte])]
+          .flatMap { case (w, b) =>
+            graft.core.PostingBlocks.decode(b).iterator.map(p => s"$w|${p._1}|${p._2}") }
+          .collect().sorted.toSeq
+      val cols = df.schema.fields.sortBy(_.name).map { f =>
+        val c = col(f.name)
+        f.name match {
+          case "docids" => graft.functions.GraftFunctions.bitmap_to_array(c).cast("string")
+          case _ if f.dataType == org.apache.spark.sql.types.BinaryType =>
+            org.apache.spark.sql.functions.hex(c)
+          case _ => c.cast("string")
+        }
+      }
+      df.select(concat_ws("|", cols.toSeq: _*)).as[String].collect().sorted.toSeq
+    }
+    tables.foreach { t =>
+      withClue(s"table $t: ") { canon(dirA, t) shouldBe canon(dirB, t) }
+    }
   }
 }
 

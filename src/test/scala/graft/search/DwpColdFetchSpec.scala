@@ -106,26 +106,21 @@ class DwpColdFetchSpec extends AnyFunSuite with Matchers {
     def canon(m: Map[String, Array[(Int, String, Array[Int])]]) =
       m.map { case (k, a) => k -> a.map(r => (r._1, r._2, r._3.toSeq)).toSeq }
 
-    val direct = GraftIndex(spark, d, stg)
-    direct.dwpDirectPaged shouldBe true
     val before = DirectParquet.reads.get()
-    val (wA, pA) = direct.dwpCache.get(words, pfxs)
+    val (wA, pA) = GraftIndex(spark, d, stg).dwpCache.get(words, pfxs)
     withClue("direct path did not engage: ")(
       DirectParquet.reads.get() should be > before)
 
-    // strip the page marker: a fresh handle must take the Spark scan
-    new java.io.File(s"$d/${graft.index.IndexSettings.T.DocWordPositions}",
-      graft.index.TableIO.DwpPageMarker).delete() shouldBe true
-    val viaSpark = GraftIndex(spark, d, stg)
-    viaSpark.dwpDirectPaged shouldBe false
-    val (wB, pB) = viaSpark.dwpCache.get(words, pfxs)
+    // a zero volume gate refuses the direct read: a fresh handle takes the
+    // Spark scan
+    val (wB, pB) = GraftIndex.withDwpMaxRows(0L) {
+      GraftIndex(spark, d, stg).dwpCache.get(words, pfxs)
+    }
     canon(wA) shouldBe canon(wB)
     canon(pA) shouldBe canon(pB)
 
     // restricted parity on fresh handles (cold caches both sides)
     val docids = wB("the").map(_._1).distinct.sorted.take(30)
-    new java.io.File(s"$d/${graft.index.IndexSettings.T.DocWordPositions}",
-      graft.index.TableIO.DwpPageMarker).createNewFile() shouldBe true
     val (rwA, rpA) = GraftIndex(spark, d, stg).dwpCache
       .getForDocs(words, pfxs, docids, asyncFillMinBytes = 0L)
     rwA.keySet shouldBe wB.keySet
